@@ -137,25 +137,16 @@ def main():
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
-    # "closure" (default, r8+): the timer covers build() + the noop
-    # write, because build() is NOT metadata-cheap — under AQE even a
-    # LAZY localCheckpoint materializes every upstream query stage
-    # (Dataset.checkpoint calls queryExecution.toRdd, and
-    # AdaptiveSparkPlanExec.doExecute executes the stages), so the
-    # staged pipelines ran their whole map/shuffle work at build()
-    # time, outside the r1-r7 timed region; auto-K count()s and probe
-    # scalars were likewise untimed (VERDICT r7 item 3/4).  "write"
-    # reproduces the legacy r1-r7 region for round-over-round
-    # comparison (BENCH_local_r08_writeonly.json).
-    timed_region = os.environ.get("SPARK_GRAFT_TIMED_REGION", "closure")
-
+    # The timer covers build() + the noop write, because build() is
+    # NOT metadata-cheap — under AQE even a LAZY localCheckpoint
+    # materializes every upstream query stage (Dataset.checkpoint calls
+    # queryExecution.toRdd, and AdaptiveSparkPlanExec.doExecute executes
+    # the stages), so timing the write alone would leave the staged
+    # pipelines' map/shuffle work, auto-K count()s and probe scalars
+    # untimed (the r1-r7 region; VERDICT r7 item 3/4).
     def run_once(name: str) -> float:
-        if timed_region == "closure":
-            t0 = time.perf_counter()
-            df = REGISTRY[name].build(spark, sf_dir)
-        else:
-            df = REGISTRY[name].build(spark, sf_dir)
-            t0 = time.perf_counter()
+        t0 = time.perf_counter()
+        df = REGISTRY[name].build(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
@@ -209,13 +200,9 @@ def main():
             "samples_per_query": 3,
             "statistic": "min",
             "warmup": "all plans once at sf0.001",
-            "timed_action": (
-                "build() + noop write (no driver collect); r8 change: timer covers build-time Spark jobs (staged-pipeline stages, auto-K counts, probe scalars) that r1-r7 excluded"
-                if timed_region == "closure"
-                else "noop write only (legacy r1-r7 region, SPARK_GRAFT_TIMED_REGION=write)"
-            ),
-            "fanout_layout": os.environ.get("SPARK_GRAFT_FANOUT", "key"),
-            "fanout_note": "bench-mode fact-table fan-out: 'key' = hash-clustered on each table's natural key (assumes production tables are written key-clustered); 'roundrobin' = unclustered",
+            "timed_action": "build() + noop write (no driver collect); r8 change: timer covers build-time Spark jobs (staged-pipeline stages, auto-K counts, probe scalars) that r1-r7 excluded",
+            "fanout_layout": "key",
+            "fanout_note": "bench-mode fact-table fan-out: 'key' = hash-clustered on each table's natural key (assumes production tables are written key-clustered)",
             "caveat": "cross-session totals drift 1.2-1.7x with host load; same-session diffs only",
         },
     }
@@ -232,8 +219,7 @@ def main():
     # full 60+-entry per-query map outgrew that window in r6 (BENCH_r06
     # "parsed": null, tail started mid-JSON).  The stdout line therefore
     # carries only the headline + the top-8 slowest queries; the full
-    # map and [min, med, max] spread live in the sidecar above and in
-    # the committed BENCH_local_rN.json artifacts.
+    # map and [min, med, max] spread live in the sidecar above.
     top8 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:8])
     compact = {**doc, "queries": top8, "queries_note": "top-8 of n_queries; full map in BENCH_SPREAD.json"}
     line = json.dumps(compact)

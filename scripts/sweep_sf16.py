@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """One-shot helper: oracle-check the whole registry against the
 synthesized sf1.6 tables (scripts/scaling_curve.py --keep must have
-run), excluding entries whose ORACLE SQL is infeasible at that
-density (documented quadratic baselines and unbounded recursions —
-the Spark side of those has separate at-scale evidence).  Chunked
-subprocesses so one heavy query cannot wedge the sweep.
+run).  Entries whose full-density ORACLE SQL is infeasible at that
+density (quadratic baselines, unbounded recursions) are checked by
+scripts/invariant_check.py instead: exact staged replays or an
+induced subgraph.  No entry is skipped.  Chunked subprocesses so one
+heavy query cannot wedge the sweep.
 
 Usage: python scripts/sweep_sf16.py [chunk_timeout_sec]
 
@@ -25,23 +26,7 @@ sys.path.insert(0, str(REPO))
 
 SF_DIR = "/tmp/spark_graft_scale/sf1.6"
 
-#: oracle-side infeasible at sf1.6 density (reason in parentheses).
-#: History: 23 (r3) → 12 (r4, each reason measured via CTAS
-#: materialization so DuckDB cannot projection-prune) → 8 → 6 (r5):
-#: the components/pagerank/representative recursion blockers AND the
-#: composed ladder moved to REPLAY below (exact staged oracles, not
-#: exclusions); neardup_source_overlap's ">40 min" reason was
-#: re-measured at 3.9 s (it predated the fast prefix-filtered MinHash
-#: pair SQL) so it rejoins the normal sweep; and
-#: fuzzy_neardup_distance's oracle was rewritten on the prefix-
-#: filtered PPJoin candidate SQL (provably identical output — pinned
-#: in tests/test_training_ops.py::test_fuzzy_oracle_prefix_matches_
-#: naive) so it rejoins as a HEAVY entry.  → 3 (r6): the triangle
-#: r7: EMPTY.  The last three exclusions moved to SUBGRAPH — the
-#: exclusion list's terminal state is zero entries.
-EXCLUDE: dict[str, str] = {}
-
-#: r6: the triangle-census trio left EXCLUDE — their full-density
+#: r6: the triangle-census trio left the exclusion list — their full-density
 #: wedge-join oracles remain measured-infeasible (>50 GB spill at
 #: 13.9M pairs), but invariant_check value-checks each on the
 #: deterministic induced subgraph doc_id % 8 = 0 (~1/64 of the pair
@@ -120,7 +105,7 @@ def main() -> int:
 
     light = [
         n for n in REGISTRY
-        if n not in EXCLUDE and n not in HEAVY and n not in REPLAY
+        if n not in HEAVY and n not in REPLAY
         and n not in SUBGRAPH and n not in SUBGRAPH_R7
     ]
     heavy = [n for n in REGISTRY if n in HEAVY]
@@ -148,11 +133,11 @@ def main() -> int:
     ]
     chunks += [("check_correctness.py", light[i : i + 18]) for i in range(0, len(light), 18)]
     chunks += [("check_correctness.py", [n]) for n in heavy]
-    # every non-excluded entry must be scheduled exactly once — a
-    # REPLAY/SUBGRAPH name missing from the hand-built chunks above
+    # every entry must be scheduled exactly once — a REPLAY/SUBGRAPH
+    # name missing from the hand-built chunks above
     # would otherwise be silently skipped (not even a no-result row)
     covered = [n for _, chunk in chunks for n in chunk]
-    missing = [n for n in REGISTRY if n not in EXCLUDE and n not in covered]
+    missing = [n for n in REGISTRY if n not in covered]
     assert not missing, f"entries not scheduled in any chunk: {missing}"
     assert len(covered) == len(set(covered)), "entry scheduled twice"
     ok, fail, timed_out = [], [], []
@@ -196,7 +181,7 @@ def main() -> int:
         for name, line in fail:
             print("  " + line, flush=True)
 
-    print(f"\nok={len(ok)} fail={len(fail)} no-result={len(timed_out)} excluded={len(EXCLUDE)}")
+    print(f"\nok={len(ok)} fail={len(fail)} no-result={len(timed_out)}")
     if timed_out:
         print("no-result (chunk timeout before reaching them):", ", ".join(timed_out))
     for name, line in fail:

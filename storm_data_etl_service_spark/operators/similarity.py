@@ -355,9 +355,10 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd k-means: centroids seeded from the k lowest
     vec_ids, a FIXED number of assign/update rounds (no convergence
-    randomness), exact decimal means.  Each round is one broadcast
-    crossJoin + one argmin window + one grouped mean — all
-    partition-parallel; rounds don't grow the plan (localCheckpoint).
+    randomness), exact decimal means.  Each round is one map-only
+    broadcast ``array_min`` assignment fold (``_assign_cells``) + one
+    grouped mean — all partition-parallel; rounds don't grow the plan
+    (localCheckpoint).
 
     ``train_n`` bounds the Lloyd rounds to the train_n lowest-vec_id
     vectors (deterministic sample; a TakeOrdered, never a full sort) —
@@ -1446,6 +1447,14 @@ def _matryoshka_bucket_kernel(
         order = np.argsort(ids)
         V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
         m, d = V.shape
+        # the widest audit width is the "full" reference: a shorter
+        # vector has no such prefix, a longer one would be audited
+        # against a truncation of itself
+        if d != widths[-1]:
+            raise ValueError(
+                f"Matryoshka audit needs {widths[-1]}-dim embeddings "
+                f"(the widest audit width), got {d}-dim"
+            )
         if m < 2:
             return pd.DataFrame(
                 {"d": pd.Series([], dtype="int32"), "n": [], "sad": [], "win": [], "scq": []}

@@ -151,18 +151,15 @@ def _read_table(spark, sf_dir: str, name: str):
     # SPARK_GRAFT_SCAN_PARTITIONS opts into a post-scan repartition for
     # local benchmarking; real multi-file datasets parallelize at the
     # scan and don't need (or want) this extra shuffle.
-    # SPARK_GRAFT_FANOUT picks the fan-out layout: "key" (default)
-    # hash-clusters each fact table on its natural key — the layout a
-    # production deployment would write the tables in — while
-    # "roundrobin" leaves them unclustered (the r1–r6 fixture shape).
-    # The bench protocol block names the active layout so the
-    # measured numbers carry their layout assumption explicitly: the
-    # key-clustered read removes the downstream exchange that an
-    # unclustered 100 TB parquet layout would pay.
+    # Each fact table is hash-clustered on its natural key — the layout
+    # a production deployment would write the tables in — and the bench
+    # protocol block records that layout so the measured numbers carry
+    # the assumption explicitly: the key-clustered read removes the
+    # downstream exchange that an unclustered 100 TB parquet layout
+    # would pay.
     scan_parts = int(os.environ.get("SPARK_GRAFT_SCAN_PARTITIONS", "0"))
     if scan_parts > 0 and name not in _SMALL_TABLES:
-        fanout = os.environ.get("SPARK_GRAFT_FANOUT", "key")
-        key = _REPARTITION_KEYS.get(name) if fanout == "key" else None
+        key = _REPARTITION_KEYS.get(name)
         df = df.repartition(scan_parts, F.col(key)) if key else df.repartition(scan_parts)
     return df
 

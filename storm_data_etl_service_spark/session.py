@@ -104,12 +104,9 @@ def get_spark(
         # simply preserves the seeded parallelism for small-byte/
         # high-CPU exchanges, while at 100 TB every real exchange is
         # orders of magnitude above ANY floor and the setting is inert.
-        # Env-tunable for clusters whose scheduling latency makes
-        # small tasks expensive.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "16k"),
-        )
+        # Clusters whose scheduling latency makes small tasks expensive
+        # can raise it through SPARK_GRAFT_EXTRA_CONF.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -2181,6 +2181,27 @@ def test_matryoshka_full_width_is_reference(spark, sf_dir):
         assert -1.0 <= r["mean_cosine"] <= 1.0
 
 
+def test_matryoshka_rejects_off_width_embeddings():
+    """The widest audit width must equal the vector dim: a 48-dim
+    input has no 64-prefix reference and an 80-dim one would be
+    audited against its own truncation, so both raise naming the
+    two widths instead of a bare KeyError or a silent wrong answer."""
+    import numpy as np
+    import pandas as pd
+
+    from storm_data_etl_service_spark.operators.similarity import (
+        _matryoshka_bucket_kernel,
+    )
+
+    kernel = _matryoshka_bucket_kernel()
+    for dim in (48, 80):
+        pdf = pd.DataFrame(
+            {"vec_id": [0, 1], "v": [np.ones(dim), np.arange(1.0, dim + 1)]}
+        )
+        with pytest.raises(ValueError, match=f"64-dim .* got {dim}-dim"):
+            kernel(pdf)
+
+
 def test_label_fid_python_model(spark):
     """Exact equality against an independent Python evaluation of the
     quantized diagonal-Fréchet pipeline, on vectors engineered so two
