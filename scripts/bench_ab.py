@@ -6,9 +6,10 @@ r5→r6: 24 queries flagged on byte-identical untouched code), so
 round-over-round diffs taken across sessions can neither confirm nor
 rule out code regressions.  This harness retires that caveat BY
 CONSTRUCTION: each arm is a git worktree (or the live tree), and arms
-run INTERLEAVED in one session — arm1, arm2, ..., armN, then the next
-round — so any host drift lands on every arm equally and the per-query
-paired ratio isolates the code delta.
+run INTERLEAVED in one session in ABBA order — arm1, ..., armN on even
+rounds, armN, ..., arm1 on odd ones — so any host drift lands on every
+arm equally, no arm always runs first, and the per-query paired ratio
+isolates the code delta.
 
 Per invocation each arm's own ``bench.py`` already takes best-of-3 per
 query (after an sf0.001 codegen warmup); this harness repeats the
@@ -104,11 +105,14 @@ def main() -> None:
     schedule = []
     t_session0 = time.time()
     for rnd in range(args.rounds):
-        for name, path in arms.items():
+        order = list(arms.items())
+        if rnd % 2:
+            order.reverse()
+        for slot, (name, path) in enumerate(order):
             t0 = time.time()
             spread = run_arm(path, queries, args.sf_dir,
                              f"/tmp/bench_ab_{name}_{rnd}.json")
-            schedule.append({"round": rnd, "arm": name,
+            schedule.append({"round": rnd, "slot": slot, "arm": name,
                              "t_start_s": round(t0 - t_session0, 1),
                              "wall_s": round(time.time() - t0, 1)})
             for q in queries:
@@ -146,7 +150,7 @@ def main() -> None:
 
     doc = {
         "protocol": {
-            "design": "interleaved same-session paired arms",
+            "design": "interleaved same-session paired arms, ABBA order",
             "rounds": args.rounds,
             "statistic": "per-arm min over rounds AND median of per-round best-of-3 minima; regression requires both ratios > threshold",
             "threshold": THRESHOLD,

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from storm_data_etl_service_spark.operators import stage
+
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
@@ -380,15 +382,12 @@ def global_row_number(df: DataFrame, order_cols, rn_name: str = "_grn", n_parts:
 
     The locally-numbered frame is consumed twice (offsets side and
     probe side) and its ``_pid`` comes from the PHYSICAL partition
-    layout, so it must be materialized ONCE: without the lazy
-    ``localCheckpoint``, AQE may coalesce the two plan instances of
-    the range exchange differently and the offsets join against the
-    wrong partition ids (observed at the x16 scale step as unstable,
-    uneven buckets; invisible at oracle scale).
+    layout, so it must be staged: unstaged, AQE may coalesce the two
+    plan instances of the range exchange differently and the offsets
+    join against the wrong partition ids (observed at the x16 scale
+    step as unstable, uneven buckets; invisible at oracle scale).
     """
-    local = _local_range_numbered(df, order_cols, n_parts).localCheckpoint(
-        eager=False
-    )
+    local = stage(_local_range_numbered(df, order_cols, n_parts))
     counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
     # unpartitioned window — but over n_parts rows, not the data
     ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)

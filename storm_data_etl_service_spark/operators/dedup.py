@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from storm_data_etl_service_spark.operators import stage
 from storm_data_etl_service_spark.operators.text import min_tokens_pred, tokens_col
 
 #: MinHash configuration: 12 permutations in 4 bands of 3.
@@ -304,21 +305,13 @@ def _ranked_shingles(sh: DataFrame) -> DataFrame:
     # identical (df, s) values row-for-row.
     ex = sh.select("doc_id", F.explode("shingles").alias("s")).repartition("s")
     counts = ex.groupBy("s").agg(F.count("*").alias("df")).hint("shuffle_hash")
-    return (
+    # Staged: the shared exchange dedups the SHUFFLE, but each of the
+    # 3-5 consumers would still re-run the post-shuffle collect_list +
+    # sort_array aggregate (~150 ms each at sf0.1) and add an AQE stage.
+    return stage(
         ex.join(counts, "s")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("df", "s"))).alias("ordered"))
-        # Lazy localCheckpoint (the ccnet/dsir staging pattern): the
-        # shared exchange dedups the SHUFFLE, but each of the 3-5
-        # consumers still re-runs the post-shuffle collect_list +
-        # sort_array aggregate (~150 ms each at sf0.1) and adds an AQE
-        # stage.  The checkpoint materializes the doc-level (doc_id,
-        # ordered) relation once per query run — corpus-sized rows but
-        # one per DOCUMENT, tiny next to the shingle stream.  Same
-        # lineage-recovery trade as the other staged pipelines
-        # (executor loss ⇒ query retry), documented in VERDICT r6 as
-        # acceptable.
-        .localCheckpoint(eager=False)
     )
 
 

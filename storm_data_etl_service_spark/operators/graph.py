@@ -19,9 +19,8 @@ Scale design:
 * rounds = graph diameter.  Near-dup graphs are dense clumps with
   tiny diameters (pairs all share shingles), so a handful of rounds
   converge; the cap + convergence check make termination explicit;
-* lineage is cut every round (``localCheckpoint``) so the plan does
-  not grow with iterations — on a real cluster with a checkpoint dir,
-  ``checkpoint`` swaps in transparently;
+* every round's labels are staged (``operators.stage``), so the plan
+  does not grow with iterations;
 * the convergence test is a single count(*) over changed labels —
   the only driver-side value per round.
 """
@@ -33,17 +32,17 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storm_data_etl_service_spark.operators import stage
+
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Both orientations of an undirected edge list as (u, v), deduped
     — the shared adjacency form every graph op here starts from.
-    Lineage is cut because every consumer iterates or multi-references
-    it."""
-    return (
+    Staged because every consumer iterates or multi-references it."""
+    return stage(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint()
     )
 
 
@@ -62,9 +61,11 @@ def connected_components(
     large-star/small-star variant rather than silently mislabel.
     """
     sym = _symmetrize(edges, src, dst)
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint()
+    labels = stage(
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+    )
 
     for _ in range(max_rounds):
         neighbor_min = (
@@ -72,9 +73,8 @@ def connected_components(
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        new_labels = stage(
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
@@ -83,7 +83,6 @@ def connected_components(
                     "_changed"
                 ),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
@@ -135,17 +134,16 @@ def pagerank(
     and never oracle-hash).
 
     Scale: one join (edges ⨝ ranks on src) + one keyed aggregation
-    per round — the textbook distributed PageRank shape; lineage is
-    cut per round (localCheckpoint) like connected_components.  The
+    per round — the textbook distributed PageRank shape; each round is
+    staged like connected_components.  The
     symmetric edge list has no dangling nodes, so no dangling-mass
     redistribution term is needed.
     """
     import math
 
     sym = _symmetrize(edges, src, dst)
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count("*").alias("deg")
-    ).localCheckpoint()  # cut lineage: every round's action re-reads deg
+    # every round re-reads deg
+    deg = stage(sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("deg")))
     n_nodes = deg.count()
     if n_nodes == 0:
         # empty candidate graph: no ranks to compute (1/n is undefined)
@@ -163,16 +161,14 @@ def pagerank(
                 / F.lit(1e9)
             ).alias("s")
         )
-        ranks = (
-            deg.join(agg, deg["node"] == agg["v"])
-            .select(
+        ranks = stage(
+            deg.join(agg, deg["node"] == agg["v"]).select(
                 "node",
                 "deg",
                 (
                     F.floor((F.lit(base) + F.lit(damping) * F.col("s")) * 1e9) / 1e9
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -235,40 +231,35 @@ def triangle_census(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") ->
     CLOSED neighborhood by definition, and same-class pairs are
     filtered) — no pre-dedup pass is needed on multigraph-ish pair
     sources."""
-    # Lazy localCheckpoints at the three fan-out points (the ranked-
-    # shingles staging pattern): the edge list feeds sym/qe/the census
-    # output, cls_map feeds node_cls+weights (consumed 3x/4x below),
-    # and qe feeds qsym + the x<y<z three-way enumeration (5 plan
-    # references).  Without them every reference re-inlines the whole
+    # Staged at the three fan-out points: the edge list feeds sym/qe/the
+    # census output, cls_map feeds node_cls+weights (consumed 3x/4x
+    # below), and qe feeds qsym + the x<y<z three-way enumeration (5
+    # plan references).  Unstaged, every reference re-inlines the whole
     # upstream subtree — for the LSH candidate graph that is the full
-    # MinHash pair build, measured 4+ copies and a >250-codegen-unit
-    # plan whose AQE/scheduling overhead dominated the wall clock.
-    # All three relations are pair- or class-cardinality (never
-    # corpus-sized), so the materialization is small by construction.
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=False
-    )
+    # MinHash pair build, measured 4+ copies and a >250-codegen-unit plan.
+    e = stage(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     closed = (
         sym.groupBy(F.col("a").alias("n"))
         .agg(F.collect_set("b").alias("nb"))
         .select("n", F.sort_array(F.array_union("nb", F.array("n"))).alias("nbh"))
     )
-    cls_map = closed.groupBy("nbh").agg(
-        F.min("n").alias("cls"),
-        F.collect_list("n").alias("members"),
-        F.count("*").alias("w"),
-    ).localCheckpoint(eager=False)
+    cls_map = stage(
+        closed.groupBy("nbh").agg(
+            F.min("n").alias("cls"),
+            F.collect_list("n").alias("members"),
+            F.count("*").alias("w"),
+        )
+    )
     node_cls = cls_map.select(F.explode("members").alias("node"), "cls")
     weights = cls_map.select("cls", "w")
 
-    qe = (
+    qe = stage(
         e.join(node_cls.select(F.col("node").alias("a"), F.col("cls").alias("ca")), "a")
         .join(node_cls.select(F.col("node").alias("b"), F.col("cls").alias("cb")), "b")
         .filter(F.col("ca") != F.col("cb"))
         .select(F.least("ca", "cb").alias("qa"), F.greatest("ca", "cb").alias("qb"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     # weighted neighbor sums over the quotient: s = Σ w_B, s2 = Σ C(w_B, 2)
@@ -384,11 +375,8 @@ def _triangle_estimate_edges(e: DataFrame, sample_mod: int) -> DataFrame:
         1,
         1,
     )
-    kept = e if sample_mod == 1 else e.filter(nibble.isin(*allowed))
-    # the census AND the n_edges_kept count both consume the kept
-    # edges; staging them lazily (materialized inside the first timed
-    # action) runs the upstream pair build once instead of per branch
-    kept = kept.localCheckpoint(eager=False)
+    # the census AND the n_edges_kept count both consume the kept edges
+    kept = stage(e if sample_mod == 1 else e.filter(nibble.isin(*allowed)))
     census = triangle_census(kept, "doc_a", "doc_b")
     totals = census.agg(
         F.coalesce((F.sum("n_triangles") / 3).cast("long"), F.lit(0).cast("long")).alias(
@@ -499,10 +487,8 @@ def triangle_stats(t, wedge_cutover: int = WEDGE_CUTOVER) -> DataFrame:
     logic itself — not just each rung — is oracle-checked."""
     from storm_data_etl_service_spark.operators.dedup import dedup_minhash_lsh
 
-    # materialize the pair list once: the probe AND the chosen rung
-    # both consume it, and recomputing MinHash+LSH twice would cost
-    # more than the probe saves (pair-scale, so checkpointing is cheap)
-    edges = dedup_minhash_lsh(t).select("doc_a", "doc_b").localCheckpoint()
+    # the probe AND the chosen rung both consume the pair list
+    edges = stage(dedup_minhash_lsh(t).select("doc_a", "doc_b"))
     wedges = int(quotient_wedge_probe(edges).first()["quotient_wedges"])
     mod = 1 if wedges <= wedge_cutover else 4
     return _triangle_estimate_edges(edges, mod).select(
@@ -642,8 +628,9 @@ FROM reach GROUP BY node"""
     # safety valve — raising it must not leak to other queries on the
     # shared session.  The conf is read at EXECUTION time, so restore
     # it only after eagerly materializing the (small, #docs-bounded)
-    # component table; localCheckpoint truncates lineage so later
-    # actions never re-run the recursion under the restored limit.
+    # component table — the one eager stage in the package (see
+    # ``operators.stage``): it truncates lineage so later actions never
+    # re-run the recursion under the restored limit.
     with _raised_recursion_limit(spark):
         return df.localCheckpoint(eager=True)
 

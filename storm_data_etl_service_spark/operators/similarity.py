@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from storm_data_etl_service_spark.operators import stage
+
 TOPK = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors in the canonical query
 #: Pair-similarity threshold for "near duplicate".  Real text-embedding
@@ -357,8 +359,8 @@ def kmeans_centroids(
     vec_ids, a FIXED number of assign/update rounds (no convergence
     randomness), exact decimal means.  Each round is one map-only
     broadcast ``array_min`` assignment fold (``_assign_cells``) + one
-    grouped mean — all partition-parallel; rounds don't grow the plan
-    (localCheckpoint).
+    grouped mean — all partition-parallel; each round is staged, so
+    rounds don't grow the plan.
 
     ``train_n`` bounds the Lloyd rounds to the train_n lowest-vec_id
     vectors (deterministic sample; a TakeOrdered, never a full sort) —
@@ -371,7 +373,7 @@ def kmeans_centroids(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
     )
     for _ in range(iters):
-        cent = _update_centroids(_assign_cells(train, cent)).localCheckpoint()
+        cent = stage(_update_centroids(_assign_cells(train, cent)))
     return cent
 
 

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from storm_data_etl_service_spark.operators import stage
+
 #: Tiny per-language stopword probes for the n-gram heuristic.
 LANG_PATTERNS = {
     "en": r"\b(the|and|of|to|is)\b",
@@ -742,20 +744,11 @@ def bigram_surprisal_scores(t) -> DataFrame:
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
     tf = pairs.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("c"))
-    # Lazy localCheckpoint on the bigram model: its two consumers (the
-    # probe join and the ``starts`` re-aggregation) would otherwise
-    # each re-inline the whole explode→tf→bg subtree — the SQL tab
-    # showed the 29 k-row (w1,w2) exchange and its 6–10 s aggregation
-    # task time running TWICE (stages planned separately; column
-    # pruning de-canonicalizes the copies, so ReusedExchange cannot
-    # fire).  The checkpointed relation is the MODEL — vocabulary²-
-    # bounded by construction (the docstring's scale contract), never
-    # corpus-sized — so this is the cheapest of the staged pipelines.
-    bg = (
-        tf.groupBy("w1", "w2")
-        .agg(F.sum("c").alias("c_bigram"))
-        .localCheckpoint(eager=False)
-    )
+    # The bigram model feeds the probe join and the ``starts``
+    # re-aggregation.  Column pruning de-canonicalizes the two copies,
+    # so ReusedExchange cannot fire and, unstaged, its aggregation runs
+    # twice.
+    bg = stage(tf.groupBy("w1", "w2").agg(F.sum("c").alias("c_bigram")))
     starts = bg.groupBy("w1").agg(F.sum("c_bigram").alias("c_start"))
     vocab = (
         t["documents"]
@@ -1290,23 +1283,17 @@ def ccnet_perplexity_buckets(t) -> DataFrame:
     excluded, as in CCNet.
     """
     # The scored frame feeds BOTH the histogram side and the final
-    # probe side.  An explicit staging exchange does NOT get reused
-    # here: column pruning projects each consumer's column set below
-    # the exchange (histogram keeps (lang, bin), probe keeps doc_id
-    # too), so the two plan instances differ and AQE recomputes the
-    # whole bigram model — its (doc, w1, w2) aggregation, the
-    # dominant shuffle — twice.  A lazy localCheckpoint (the
-    # global_row_number pattern, analytics.py) materializes the
-    # doc-level scores ONCE (one row per document, tiny vs the token
-    # stream) and both consumers read that.
-    scored = (
+    # probe side.  Column pruning projects each consumer's column set
+    # below a shared exchange (histogram keeps (lang, bin), probe keeps
+    # doc_id too), so it is not reused; staging runs the bigram model
+    # once.
+    scored = stage(
         bigram_surprisal_scores(t)
         .join(t["documents"].select("doc_id", "lang"), "doc_id")
         .withColumn(
             "ppl_bin",
             F.floor(F.col("avg_surprisal") * CCNET_BIN_SCALE).cast("long"),
         )
-        .localCheckpoint(eager=False)
     )
     hist = scored.groupBy("lang", "ppl_bin").agg(F.count("*").alias("n"))
     w = Window.partitionBy("lang").orderBy("ppl_bin")
@@ -1391,20 +1378,13 @@ def dsir_importance_weights(t) -> DataFrame:
         bucket.alias("bucket"),
     )
     # the (doc, bucket) count table feeds THREE consumers (raw model,
-    # target model, probe); column pruning projects different column
-    # sets below the exchange so AQE would recompute the bigram
-    # explode+agg — the dominant work — per consumer.  The lazy
-    # localCheckpoint (the ccnet_perplexity_buckets pattern)
-    # materializes it once; it is doc×bucket-sized, tiny vs the token
-    # stream.
-    doc_counts = (
-        feats.groupBy("doc_id", "bucket")
-        .agg(
+    # target model, probe)
+    doc_counts = stage(
+        feats.groupBy("doc_id", "bucket").agg(
             F.count("*").alias("c"),
             # every row of a doc shares one lang; max() keeps it through the agg
             F.max("lang").alias("lang"),
         )
-        .localCheckpoint(eager=False)
     )
     raw_model = doc_counts.groupBy("bucket").agg(F.sum("c").alias("c_raw"))
     tgt_model = (
@@ -1586,16 +1566,12 @@ def source_divergence_matrix(t) -> DataFrame:
     is corpus-sized.
     """
     # the (source, token) count table feeds THREE consumers (per-token
-    # source map, per-source totals, joint-vocab count); staged once
-    # (lazy localCheckpoint, the dsir_importance_weights pattern) so
-    # the corpus-sized explode+agg runs once — everything after it is
-    # vocab-sized.
-    tf = (
+    # source map, per-source totals, joint-vocab count)
+    tf = stage(
         t["documents"]
         .select("source", F.explode(tokens_col(F.col("text"))).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
     )
     tok_map = tf.groupBy("token").agg(
         F.map_from_entries(F.collect_list(F.struct("source", "n"))).alias("m")

@@ -48,9 +48,13 @@ def read_json_records(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_json_fixture(df: DataFrame, path: str) -> None:
-    """S8 — JSON fixture sink (reference cmd/genmock/main.go:182-192;
-    indentation there is cosmetic — the contract is the records)."""
-    df.write.mode("overwrite").json(path)
+    """S8 — JSON fixture sink: one whole-file JSON array of the records,
+    the shape ``read_json_records`` scans (reference
+    cmd/genmock/main.go:182-192; indentation there is cosmetic — the
+    contract is the records).  The array is built by one task, so this
+    is a fixture-sized sink, not a table writer."""
+    doc = df.select(F.to_json(F.collect_list(F.struct(*df.columns))).alias("value"))
+    doc.write.mode("overwrite").text(path)
 
 
 def write_partitioned_parquet(

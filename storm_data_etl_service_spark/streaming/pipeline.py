@@ -307,6 +307,13 @@ def parquet_dlq(dlq_dir: str):
     return write
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS existence check, so any supported scheme works."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
 def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
     """foreachBatch kernel for STREAMING corpus dedup against a
     persisted LSH index — the production loop around
@@ -340,11 +347,6 @@ def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
 
     from storm_data_etl_service_spark.operators.dedup import lsh_band_keys
 
-    def _index_exists(spark) -> bool:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(index_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
-
     def process(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bands = lsh_band_keys({"documents": batch_df}).persist()
@@ -359,7 +361,7 @@ def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
                 .filter(F.col("matched_doc_id") < F.col("doc_id"))
                 .select("doc_id", "matched_doc_id")
             )
-            if _index_exists(spark):
+            if _path_exists(spark, index_dir):
                 # cross-batch: anything already indexed is from an
                 # earlier batch — a valid partner regardless of id order
                 matches = matches.unionByName(
@@ -419,11 +421,6 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
         bloom_bit_positions,
     )
 
-    def _bits_exist(spark) -> bool:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(bits_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
-
     def process(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         hashed = batch_df.select(
@@ -433,7 +430,7 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
             probes = hashed.select(
                 "doc_id", F.explode(bloom_bit_positions(F.col("h"))).alias("bit")
             )
-            if _bits_exist(spark):
+            if _path_exists(spark, bits_dir):
                 # ONLY earlier batches' bits: a replayed batch must not
                 # probe against bits it appended itself last attempt
                 idx = (

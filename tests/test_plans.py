@@ -646,6 +646,56 @@ def test_dsir_doc_bucket_table_computed_once(spark, sf_dir):
     assert "split(" not in plan, plan[:1500]
 
 
+def test_operators_stage_through_one_primitive():
+    """Multi-consumer relations are staged through ``operators.stage``
+    only.  The one direct ``localCheckpoint(`` left outside it is the
+    eager stage in ``neardup_components_sql``, which must finish the
+    recursion before its raised row limit is restored."""
+    import ast
+    from pathlib import Path
+
+    import storm_data_etl_service_spark.operators as ops
+
+    sites = set()
+    for path in sorted(Path(ops.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        defs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
+        for i, line in enumerate(src.splitlines(), start=1):
+            if "localCheckpoint(" not in line:
+                continue
+            owner = next(
+                (d.name for d in defs if d.lineno <= i <= d.end_lineno), None
+            )
+            sites.add((path.name, owner))
+    assert sites == {
+        ("__init__.py", "stage"),
+        ("graph.py", "neardup_components_sql"),
+    }, sites
+
+
+def test_stage_is_lazy(spark):
+    """``stage`` defers the materialization of a shuffle-free frame to
+    its first consumer: creating it submits no job, and its plan reads
+    the staged RDD instead of the upstream operators."""
+    from pyspark.sql import functions as F
+
+    from storm_data_etl_service_spark.operators import stage
+
+    sc = spark.sparkContext
+    group = "test_stage_is_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        staged = stage(spark.range(1000).select((F.col("id") * 2).alias("x")))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
+    plan = staged._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan, plan
+    assert staged.agg(F.sum("x")).first()[0] == 999 * 1000
+
+
 def test_topk_windows_are_limit_bounded(spark, sf_dir):
     """The three single-partition ranking windows the bench tail warns
     about (zipf_slope_fit, bpe_first_merges, join_skew_report) must
