@@ -230,14 +230,22 @@ def triangle_census(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") ->
     list is ``distinct``) and to self-loops (a node is in its own
     CLOSED neighborhood by definition, and same-class pairs are
     filtered) — no pre-dedup pass is needed on multigraph-ish pair
-    sources."""
-    # Staged at the three fan-out points: the edge list feeds sym/qe/the
-    # census output, cls_map feeds node_cls+weights (consumed 3x/4x
-    # below), and qe feeds qsym + the x<y<z three-way enumeration (5
-    # plan references).  Unstaged, every reference re-inlines the whole
-    # upstream subtree — for the LSH candidate graph that is the full
-    # MinHash pair build, measured 4+ copies and a >250-codegen-unit plan.
+    sources.  The probe and the census share one quotient
+    (``_twin_quotient``), so ``triangle_stats`` contracts once for
+    both."""
+    # the contraction reads the edge list three times
     e = stage(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    return _census(*_twin_quotient(e))
+
+
+def _twin_quotient(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Twin-class contraction of an ``(a, b)`` edge list (see
+    ``triangle_census``): (node_cls, weights, qe).  cls_map feeds
+    node_cls+weights (consumed 3x/4x by the census) and qe feeds the
+    probe, qsym and the x<y<z enumeration, so both are staged:
+    unstaged, every reference re-inlines the whole upstream subtree —
+    for the LSH candidate graph the full MinHash pair build, measured
+    4+ copies and a >250-codegen-unit plan."""
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     closed = (
         sym.groupBy(F.col("a").alias("n"))
@@ -252,8 +260,6 @@ def triangle_census(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") ->
         )
     )
     node_cls = cls_map.select(F.explode("members").alias("node"), "cls")
-    weights = cls_map.select("cls", "w")
-
     qe = stage(
         e.join(node_cls.select(F.col("node").alias("a"), F.col("cls").alias("ca")), "a")
         .join(node_cls.select(F.col("node").alias("b"), F.col("cls").alias("cb")), "b")
@@ -261,7 +267,25 @@ def triangle_census(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") ->
         .select(F.least("ca", "cb").alias("qa"), F.greatest("ca", "cb").alias("qb"))
         .distinct()
     )
+    return node_cls, cls_map.select("cls", "w"), qe
 
+
+def _quotient_wedges(qe: DataFrame) -> DataFrame:
+    """Σ d·(d−1)/2 over quotient degrees: one row (quotient_wedges)."""
+    qsym = qe.union(qe.select(F.col("qb").alias("qa"), F.col("qa").alias("qb")))
+    return (
+        qsym.groupBy("qa")
+        .agg(F.count("*").alias("d"))
+        .agg(
+            F.coalesce(F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0))
+            .cast("long")
+            .alias("quotient_wedges")
+        )
+    )
+
+
+def _census(node_cls: DataFrame, weights: DataFrame, qe: DataFrame) -> DataFrame:
+    """``triangle_census``'s arithmetic over a given twin quotient."""
     # weighted neighbor sums over the quotient: s = Σ w_B, s2 = Σ C(w_B, 2)
     qsym = qe.union(qe.select(F.col("qb").alias("qa"), F.col("qa").alias("qb")))
     nbr_sums = (
@@ -353,32 +377,30 @@ def neardup_triangle_estimate(t, sample_mod: int = 4) -> DataFrame:
     by the mod-4 arithmetic: 40503+69061 ≡ 0 (mod 4))."""
     from storm_data_etl_service_spark.operators.dedup import dedup_minhash_lsh
 
-    e = dedup_minhash_lsh(t).select("doc_a", "doc_b")
+    e = dedup_minhash_lsh(t).select("doc_a", "doc_b").toDF("a", "b")
     return _triangle_estimate_edges(e, sample_mod)
 
 
 def _triangle_estimate_edges(e: DataFrame, sample_mod: int) -> DataFrame:
-    """``neardup_triangle_estimate`` body over a precomputed edge set —
-    shared with ``triangle_stats`` so the probe and the chosen rung
-    reuse one candidate-pair relation.  ``sample_mod=1`` keeps every
-    edge (no md5 evaluated), making the "estimate" the exact census
-    total with a 1³ scale-up — the dispatcher's exact branch."""
+    """``neardup_triangle_estimate`` body over a precomputed ``(a, b)``
+    edge set — shared with ``triangle_stats``, whose DOULION branch
+    samples the pair list it already staged for the probe."""
     if sample_mod not in (1, 2, 4, 8, 16):
         raise ValueError("sample_mod must divide 16 (one md5 hex nibble)")
     allowed = "0123456789abcdef"[: 16 // sample_mod]
     nibble = F.substring(
-        F.md5(
-            F.concat_ws(
-                "|", F.col("doc_a").cast("string"), F.col("doc_b").cast("string")
-            )
-        ),
+        F.md5(F.concat_ws("|", F.col("a").cast("string"), F.col("b").cast("string"))),
         1,
         1,
     )
-    # the census AND the n_edges_kept count both consume the kept edges
-    kept = stage(e if sample_mod == 1 else e.filter(nibble.isin(*allowed)))
-    census = triangle_census(kept, "doc_a", "doc_b")
-    totals = census.agg(
+    # the contraction AND the n_edges_kept count both consume the kept edges
+    kept = stage(e.filter(nibble.isin(*allowed)))
+    return _census_estimate(kept, _twin_quotient(kept), sample_mod)
+
+
+def _census_estimate(kept: DataFrame, quotient: tuple, sample_mod: int) -> DataFrame:
+    """The estimate row from ``quotient``, the twin quotient of ``kept``."""
+    totals = _census(*quotient).agg(
         F.coalesce((F.sum("n_triangles") / 3).cast("long"), F.lit(0).cast("long")).alias(
             "n_tri_sampled"
         )
@@ -431,39 +453,12 @@ def quotient_wedge_probe(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     WEDGES (open triples) in the twin-class quotient graph — the exact
     quantity the contracted census's two-join enumeration materializes,
     computed in closed form from quotient degrees (Σ d·(d−1)/2) with
-    zero wedge rows built.  Costs one pass over the edge list (the
-    same O(E) neighborhood/class prep the census itself starts with),
-    so probing before censusing roughly doubles the linear prep while
-    saving the potentially-quadratic enumeration on degenerate
-    densities.  One row out: (quotient_wedges)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    closed = (
-        sym.groupBy(F.col("a").alias("n"))
-        .agg(F.collect_set("b").alias("nb"))
-        .select("n", F.sort_array(F.array_union("nb", F.array("n"))).alias("nbh"))
-    )
-    cls_map = closed.groupBy("nbh").agg(
-        F.min("n").alias("cls"), F.collect_list("n").alias("members")
-    )
-    node_cls = cls_map.select(F.explode("members").alias("node"), "cls")
-    qe = (
-        e.join(node_cls.select(F.col("node").alias("a"), F.col("cls").alias("ca")), "a")
-        .join(node_cls.select(F.col("node").alias("b"), F.col("cls").alias("cb")), "b")
-        .filter(F.col("ca") != F.col("cb"))
-        .select(F.least("ca", "cb").alias("qa"), F.greatest("ca", "cb").alias("qb"))
-        .distinct()
-    )
-    qsym = qe.union(qe.select(F.col("qb").alias("qa"), F.col("qa").alias("qb")))
-    return (
-        qsym.groupBy("qa")
-        .agg(F.count("*").alias("d"))
-        .agg(
-            F.coalesce(F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0))
-            .cast("long")
-            .alias("quotient_wedges")
-        )
-    )
+    zero wedge rows built, off the twin quotient the census consumes
+    (``_twin_quotient``).  ``triangle_stats`` contracts once for both,
+    so its probe adds one quotient-degree aggregate, not a second O(E)
+    prep, while saving the potentially-quadratic enumeration on
+    degenerate densities.  One row out: (quotient_wedges)."""
+    return _quotient_wedges(_twin_quotient(edges.select(src, dst).toDF("a", "b"))[2])
 
 
 def triangle_stats(t, wedge_cutover: int = WEDGE_CUTOVER) -> DataFrame:
@@ -473,9 +468,10 @@ def triangle_stats(t, wedge_cutover: int = WEDGE_CUTOVER) -> DataFrame:
     census when wedges ≤ ``wedge_cutover``, the DOULION mod-4 estimate
     past it (degenerate near-clique densities where even the contracted
     census is wedge-bound; see WEDGE_CUTOVER for the measured cutover).
-    The exact branch is the estimate machinery at sample_mod=1 — every
-    edge kept, 1³ scale-up — so both branches share one plan shape and
-    one output contract: (branch, quotient_wedges, sample_mod,
+    The exact branch is the estimate machinery at sample_mod=1 over
+    the probe's own quotient — every edge kept, 1³ scale-up; only the
+    DOULION branch contracts again, over its sample — so both branches
+    share one output contract: (branch, quotient_wedges, sample_mod,
     n_edges_kept, n_tri_sampled, est_triangles); on the exact branch
     est_triangles IS the exact global triangle count.
 
@@ -487,12 +483,14 @@ def triangle_stats(t, wedge_cutover: int = WEDGE_CUTOVER) -> DataFrame:
     logic itself — not just each rung — is oracle-checked."""
     from storm_data_etl_service_spark.operators.dedup import dedup_minhash_lsh
 
-    # the probe AND the chosen rung both consume the pair list
-    edges = stage(dedup_minhash_lsh(t).select("doc_a", "doc_b"))
-    wedges = int(quotient_wedge_probe(edges).first()["quotient_wedges"])
-    mod = 1 if wedges <= wedge_cutover else 4
-    return _triangle_estimate_edges(edges, mod).select(
-        F.lit("exact_census" if mod == 1 else "doulion_estimate").alias("branch"),
+    # the contraction, n_edges_kept and the DOULION sample read the pairs
+    edges = stage(dedup_minhash_lsh(t).select("doc_a", "doc_b").toDF("a", "b"))
+    quotient = _twin_quotient(edges)
+    wedges = int(_quotient_wedges(quotient[2]).first()["quotient_wedges"])
+    exact = wedges <= wedge_cutover
+    out = _census_estimate(edges, quotient, 1) if exact else _triangle_estimate_edges(edges, 4)
+    return out.select(
+        F.lit("exact_census" if exact else "doulion_estimate").alias("branch"),
         F.lit(wedges).cast("long").alias("quotient_wedges"),
         "*",
     )

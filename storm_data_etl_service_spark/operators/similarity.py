@@ -34,10 +34,6 @@ N_QUERIES = 5  # vec_id < 5 are the query vectors in the canonical query
 #: fixture actually has signal — the operators are threshold-agnostic.
 NEAR_DUP_COSINE = 0.40
 
-#: Random-hyperplane LSH: planes are deterministic sha256-derived
-#: pseudo-vectors so both engines (and every cluster run) agree.
-LSH_PLANES = 8
-
 
 def _vec(c: Column) -> Column:
     return c.cast("array<double>")
@@ -122,19 +118,22 @@ def plane_components(plane: int, dim: int = EMBEDDING_DIM) -> list[float]:
     return out
 
 
-def lsh_bucket_col(v: Column, n_planes: int = LSH_PLANES) -> Column:
-    """Sign-bit bucket string over deterministic random hyperplanes —
-    the map-only half of bucketed ANN."""
-    bits = []
-    for p in range(n_planes):
+def lsh_bucket_col(v: Column, bits: int) -> Column:
+    """Sign-bit bucket string over the first ``bits`` random
+    hyperplanes — the map-only half of bucketed ANN.  Planes are
+    deterministic sha256-derived pseudo-vectors (so both engines, and
+    every cluster run, agree) and independent, so a key's first k
+    characters are the k-plane key."""
+    signs = []
+    for p in range(bits):
         plane = F.array(*[F.lit(c) for c in plane_components(p)])
         proj = F.aggregate(
             F.zip_with(v, plane, lambda x, c: x * c),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+        signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return F.concat(*signs)
 
 
 def ann_lsh_buckets(t, bits: int | None = None) -> DataFrame:
@@ -146,17 +145,15 @@ def ann_lsh_buckets(t, bits: int | None = None) -> DataFrame:
     derives the bucket width from one cheap count via ``knn_auto_bits``
     so the expected bucket population stays near KNN_TARGET_BUCKET as
     n grows — the same auto-width promotion ``knn_graph_lsh`` got; a
-    fixed width would make every bucket's population ∝ n.  Planes
-    beyond LSH_PLANES are derived on demand, and the DuckDB oracle
-    derives the identical width from ``count(*)``."""
+    fixed width would make every bucket's population ∝ n.  Exactly
+    ``bits`` planes are hashed, and the DuckDB oracle derives the
+    identical width from ``count(*)``."""
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
     if bits is None:
         bits = knn_auto_bits(emb.count())
     return emb.select(
         "vec_id",
-        F.substring(
-            lsh_bucket_col(F.col("v"), n_planes=max(LSH_PLANES, bits)), 1, bits
-        ).alias("bucket"),
+        lsh_bucket_col(F.col("v"), bits).alias("bucket"),
     )
 
 
@@ -206,9 +203,7 @@ def ann_lsh_search(t, bits: int | None = None) -> DataFrame:
     bucketed = emb.select(
         "vec_id",
         "v",
-        F.substring(
-            lsh_bucket_col(F.col("v"), n_planes=max(LSH_PLANES, bits)), 1, bits
-        ).alias("pfx"),
+        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
     )
     q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -357,7 +352,8 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd k-means: centroids seeded from the k lowest
     vec_ids, a FIXED number of assign/update rounds (no convergence
-    randomness), exact decimal means.  Each round is one map-only
+    randomness), means as a vec_id-ordered double fold
+    (``_update_centroids``).  Each round is one map-only
     broadcast ``array_min`` assignment fold (``_assign_cells``) + one
     grouped mean — all partition-parallel; each round is staged, so
     rounds don't grow the plan.
@@ -1072,7 +1068,7 @@ KNN_TARGET_BUCKET = 64
 #: bucket size grows ∝ n again and this constant must be raised (the
 #: oracle embeds the same plane count, so raise both together).  The
 #: ceiling exists only to bound the static plane literals in plans and
-#: oracle SQL — planes beyond LSH_PLANES are derived on demand.
+#: oracle SQL — Spark hashes only the ``bits`` planes a width needs.
 MAX_LSH_PLANES = 16
 
 
@@ -1080,11 +1076,10 @@ def knn_auto_bits(n: int) -> int:
     """Prefix bit-width holding expected bucket size near
     KNN_TARGET_BUCKET — the knob that keeps per-bucket pair work
     O(n·target) instead of n²/2^bits growing super-linearly (the
-    semdedup_auto_k rule transposed to hyperplane LSH).  Derives MORE
-    planes than the fixed LSH_PLANES=8 when n needs them (consumers
-    hash with ``max(LSH_PLANES, bits)`` planes), so bucket size stays
-    constant up to the documented 2^MAX_LSH_PLANES·target ≈ 4.2M-vector
-    bound instead of growing linearly past 2^8·target ≈ 16k."""
+    semdedup_auto_k rule transposed to hyperplane LSH).  Consumers
+    hash exactly ``bits`` planes (``lsh_bucket_col``), so bucket size
+    stays constant up to the documented 2^MAX_LSH_PLANES·target ≈
+    4.2M-vector bound instead of growing linearly with n."""
     import math
 
     if n <= KNN_TARGET_BUCKET:
@@ -1210,9 +1205,9 @@ def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
     (the default, and what the registry/oracle now exercise) derives
     the prefix width from one cheap count so bucket size — and with
     it per-bucket quadratic work — stays constant as n grows, up to
-    the documented 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET bound; planes
-    beyond LSH_PLANES are derived on demand so the width is never
-    silently clamped below what n needs.  The DuckDB oracle derives
+    the documented 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET bound; exactly
+    ``bits`` planes are hashed, so the width is never silently
+    clamped below what n needs.  The DuckDB oracle derives
     the identical width from ``count(*)`` (closed form), so the
     auto form is itself hash-checked at every gate scale.
 
@@ -1226,9 +1221,7 @@ def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
     bucketed = emb.select(
         "vec_id",
         "v",
-        F.substring(
-            lsh_bucket_col(F.col("v"), n_planes=max(LSH_PLANES, bits)), 1, bits
-        ).alias("pfx"),
+        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
     )
     # ONE exploded projection instead of a members ∪ probers union: the
     # union form inlined ``bucketed`` into both branches, so the plane
@@ -1282,8 +1275,8 @@ def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
     bucket size — never train × train — and ``bits=None`` (the
     default, and what the registry/oracle now exercise) derives the
     prefix width from one cheap count to hold bucket size constant
-    up to 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET vectors, deriving
-    planes beyond LSH_PLANES on demand.  The DuckDB oracle derives
+    up to 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET vectors, hashing
+    exactly ``bits`` planes.  The DuckDB oracle derives
     the identical width from ``count(*)``; recall is bounded by the
     hamming-1 probe radius like every sign-LSH entry here.
     """
@@ -1297,9 +1290,7 @@ def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
         "vec_id",
         "v",
         "t0",
-        F.substring(
-            lsh_bucket_col(F.col("v"), n_planes=max(LSH_PLANES, bits)), 1, bits
-        ).alias("pfx"),
+        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
     )
     # ONE exploded projection instead of a members ∪ probers union
     # (the knn_graph_lsh rationale: the union inlined ``bucketed`` into
@@ -1395,9 +1386,7 @@ def matryoshka_truncation_audit(t) -> DataFrame:
     bv = emb.select(
         "vec_id",
         "v",
-        F.substring(
-            lsh_bucket_col(F.col("v"), n_planes=max(LSH_PLANES, bits)), 1, bits
-        ).alias("bucket"),
+        lsh_bucket_col(F.col("v"), bits).alias("bucket"),
     )
     # Per-bucket blocked Arrow kernel (the _cell_pairs_kernel /
     # _bucket_topk_kernel contract: dim loop outside the numpy

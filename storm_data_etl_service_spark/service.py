@@ -42,12 +42,7 @@ def build_pipeline(
     if source_dir:
         raw = file_source(spark, source_dir)
     else:
-        raw = kafka_source(
-            spark,
-            ",".join(cfg.kafka_brokers),
-            cfg.kafka_source_topic,
-            batch_size=cfg.batch_size,
-        )
+        raw = kafka_source(spark, cfg.kafka_source_options())
     if sink_dir:
         sink = retry_with_backoff(parquet_sink(sink_dir))
     else:

@@ -46,25 +46,12 @@ from storm_data_etl_service_spark.functions.enrich import (
 from storm_data_etl_service_spark.schemas import RAW_EVENT_SCHEMA
 
 
-def kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    batch_size: int = 50,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
+def kafka_source(spark: SparkSession, options: dict[str, str]) -> DataFrame:
     """S1 — Kafka micro-batch source (reference
     internal/adapter/kafka/reader.go:22-72): consumer-group reads,
-    earliest start, per-trigger batch bound."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("maxOffsetsPerTrigger", str(batch_size))
-        .option("includeHeaders", "true")
-        .load()
-    )
+    earliest start, per-trigger batch bound.  ``options`` is
+    ``Config.kafka_source_options()``, their one definition."""
+    return spark.readStream.format("kafka").options(**options).load()
 
 
 def file_source(spark: SparkSession, path: str) -> DataFrame:

@@ -52,6 +52,7 @@ def test_kafka_pipeline_end_to_end(spark, topics, tmp_path):
     batch-produce to the source topic, run the streaming pipeline
     (kafka_source → enrich → kafka sink frame), consume the sink topic
     and assert the reference's own integration matrix."""
+    from storm_data_etl_service_spark.config import Config
     from storm_data_etl_service_spark.sources.storm_fixture import FROZEN_CLOCK
     from storm_data_etl_service_spark.streaming.pipeline import (
         PipelineMetrics,
@@ -91,7 +92,16 @@ def test_kafka_pipeline_end_to_end(spark, topics, tmp_path):
         )
 
     pipe = StormStreamPipeline(
-        kafka_source(spark, BOOTSTRAP, src_topic, batch_size=500),
+        kafka_source(
+            spark,
+            Config.load(
+                {
+                    "KAFKA_BROKERS": BOOTSTRAP,
+                    "KAFKA_SOURCE_TOPIC": src_topic,
+                    "BATCH_SIZE": "500",
+                }
+            ).kafka_source_options(),
+        ),
         sink_writer=sink,
         dlq_writer=None,
         metrics=metrics,

@@ -618,12 +618,11 @@ def test_ccnet_surprisal_model_computed_once(spark, sf_dir):
     scores TWICE (histogram side + probe side).  A staging exchange
     can't be shared here — column pruning projects each consumer's
     column set below the exchange, so the plan instances differ —
-    hence the scored frame is materialized via lazy localCheckpoint
-    (the global_row_number pattern).  After execution, the finalized
-    plan must read the checkpointed RDD on both sides and contain
-    ZERO instances of the bigram-model pipeline (its tokenizing
-    split() would otherwise appear — recomputing the dominant
-    (doc, w1, w2) aggregation twice)."""
+    hence the scored frame is staged through ``operators.stage``.
+    After execution, the finalized plan must read the checkpointed
+    RDD on both sides and contain ZERO instances of the bigram-model
+    pipeline (its tokenizing split() would otherwise appear —
+    recomputing the dominant (doc, w1, w2) aggregation twice)."""
     df = REGISTRY["ccnet_perplexity_buckets"].build(spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -635,10 +634,10 @@ def test_dsir_doc_bucket_table_computed_once(spark, sf_dir):
     """DSIR's (doc, bucket) count table feeds THREE consumers (raw
     model, target model, probe); like the CCNet scored frame, column
     pruning below an exchange would make the plan instances differ
-    and recompute the bigram explode+agg per consumer — hence the
-    lazy localCheckpoint.  The finalized plan must read the
-    checkpointed RDD on every side and contain ZERO instances of the
-    tokenizing pipeline (its split() would betray a recompute)."""
+    and recompute the bigram explode+agg per consumer — hence it is
+    staged through ``operators.stage``.  The finalized plan must read
+    the checkpointed RDD on every side and contain ZERO instances of
+    the tokenizing pipeline (its split() would betray a recompute)."""
     df = REGISTRY["dsir_importance_weights"].build(spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -694,6 +693,26 @@ def test_stage_is_lazy(spark):
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan, plan
     assert staged.agg(F.sum("x")).first()[0] == 999 * 1000
+
+
+def test_triangle_stats_contracts_once(spark, sf_dir):
+    """``triangle_stats`` stages its candidate pairs once and builds
+    one twin-class quotient for both the wedge probe and the exact
+    census, so its build plus collect stays within the job count
+    measured for that shape on the sf_dir fixture (20-21).  Contracting
+    twice, once for the probe and once for the census, submitted 27
+    (18 in build + 9 in collect)."""
+    sc = spark.sparkContext
+    group = "test_triangle_stats_contracts_once"
+    sc.setJobGroup(group, group)
+    try:
+        rows = REGISTRY["triangle_stats"].build(spark, sf_dir).collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows[0]["branch"] == "exact_census", rows
+    assert len(jobs) <= 21, len(jobs)
 
 
 def test_topk_windows_are_limit_bounded(spark, sf_dir):

@@ -110,6 +110,26 @@ def test_file_service_pipeline_end_to_end(spark, workdir):
     assert "id" in out.columns
 
 
+def test_kafka_service_source_carries_group_id(monkeypatch):
+    """The Kafka source the service builds carries every validated
+    source setting, KAFKA_GROUP_ID included — no broker or connector
+    jar needed, the source constructor is replaced."""
+    import storm_data_etl_service_spark.service as service
+
+    seen = {}
+
+    def fake_source(spark, options):
+        seen.update(options)
+        return "raw"
+
+    monkeypatch.setattr(service, "kafka_source", fake_source)
+    cfg = Config.load(env={"KAFKA_GROUP_ID": "g1"})
+    pipe = build_pipeline(None, cfg)
+    assert pipe.raw_stream == "raw"
+    assert seen["kafka.group.id"] == "g1"
+    assert seen == cfg.kafka_source_options()
+
+
 def test_observe_metrics_piggyback_on_single_pass(spark):
     """D9 via DataFrame.observe: exact counters ride the existing
     action (CollectMetrics), matching independently-computed values."""

@@ -1576,9 +1576,9 @@ def test_knn_auto_bits_holds_bucket_size():
     assert knn_auto_bits(500) == SEARCH_PREFIX_BITS  # driver-gate scales
     assert knn_auto_bits(KNN_TARGET_BUCKET * 2**SEARCH_PREFIX_BITS) == SEARCH_PREFIX_BITS
     assert knn_auto_bits(80_000) > SEARCH_PREFIX_BITS
-    # past LSH_PLANES=8 the width keeps growing (planes derived on
-    # demand) instead of silently clamping — bucket size stays at the
-    # target up to 2^MAX_LSH_PLANES · KNN_TARGET_BUCKET vectors
+    # past 8 bits the width keeps growing (lsh_bucket_col hashes
+    # exactly ``bits`` planes) instead of silently clamping — bucket size
+    # stays at the target up to 2^MAX_LSH_PLANES · KNN_TARGET_BUCKET vectors
     assert knn_auto_bits(2**9 * KNN_TARGET_BUCKET) == 9
     assert knn_auto_bits(10**10) == MAX_LSH_PLANES  # documented hard bound
     assert all(
