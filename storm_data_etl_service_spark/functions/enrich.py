@@ -150,12 +150,13 @@ def generate_id(
     return F.when(event_type == "", digest).otherwise(F.concat_ws("-", event_type, digest))
 
 
-def normalize_unit(unit: Column, event_type: Column) -> Column:
-    """P8 — lower+trim; when empty, default by type: hail→in,
-    wind→mph, tornado→f_scale, else ""
-    (reference internal/domain/transform.go:177-193)."""
-    u = F.lower(F.trim(unit))
-    return F.when(u != "", u).otherwise(
+def normalize_unit(event_type: Column) -> Column:
+    """P8 — the per-type default unit: hail→in, wind→mph,
+    tornado→f_scale, else "" (reference
+    internal/domain/transform.go:177-193).  The raw CSV carries no
+    unit column, so the reference's lower+trim of a given unit always
+    sees "" and falls through to this default."""
+    return (
         F.when(event_type == "hail", F.lit("in"))
         .when(event_type == "wind", F.lit("mph"))
         .when(event_type == "tornado", F.lit("f_scale"))
@@ -236,16 +237,14 @@ def derive_time_bucket(event_time: Column) -> Column:
 
 def enrich(
     df: DataFrame,
-    base_ts_col: str = "kafka_timestamp",
     processed_at: Column | None = None,
-    unit_col: Column | None = None,
     passthrough: tuple = (),
 ) -> DataFrame:
     """Full enrichment: raw CSV-shaped columns → nested StormEvent.
 
     Input columns: the 11 ``RAW_CSV_SCHEMA`` fields plus
-    ``base_ts_col`` (per-row base timestamp for HHMM expansion — the
-    Kafka message timestamp in streaming).  ``processed_at`` defaults
+    ``kafka_timestamp`` (per-row base timestamp for HHMM expansion —
+    the Kafka message timestamp in streaming).  ``processed_at`` defaults
     to ``current_timestamp()``; pass ``F.lit(<ts>)`` for frozen-clock
     golden tests (mirror of the reference's ``SetClock``,
     internal/domain/clock.go:7-16).
@@ -255,7 +254,7 @@ def enrich(
     """
     if processed_at is None:
         processed_at = F.current_timestamp()
-    base_ts = F.col(base_ts_col)
+    base_ts = F.col("kafka_timestamp")
 
     # Missing JSON keys arrive as nulls; Go's unmarshal gives "" — pin
     # zero-value semantics here (also keeps concat_ws pre-images exact,
@@ -285,9 +284,7 @@ def enrich(
                     F.col("_et"), s("Size"), s("F_Scale"), s("Speed")
                 )
             ),
-            "_unit": normalize_unit(
-                unit_col if unit_col is not None else F.lit(""), F.col("_et")
-            ),
+            "_unit": normalize_unit(F.col("_et")),
             "_event_time": parse_event_time(F.col("_time_raw"), base_ts),
         }
     )

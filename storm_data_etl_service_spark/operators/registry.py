@@ -681,6 +681,73 @@ SELECT ev.vec_id, best.dst_id AS nearest_train_id, best.cosine AS max_cosine,
 FROM ev LEFT JOIN best ON best.src_id = ev.vec_id"""
 
 
+def _l2_sql(a: str, b: str, dim: int) -> str:
+    """Squared L2 distance over ``dim`` components as a sequential left
+    fold — the twin of similarity._l2sq, bit-equal to it."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, {dim}),"
+        f" i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), (x,y) -> x+y)"
+    )
+
+
+def _lloyd_ctes(
+    k: int | str, dim: int, train: str = "e", corpus: str = "e", tag: str = ""
+) -> list[str]:
+    """The twin of similarity.kmeans_centroids + _assign_cells as CTEs:
+    seed ``c{tag}0`` = the k lowest vec_ids of ``train``, KMEANS_ITERS
+    assign (``a{tag}i``) / update (``c{tag}i+1``) rounds over
+    ``train``, and ``af{tag}`` = the final assignment of ``corpus``.
+    A string ``k`` names the column of a ``kq`` CTE the caller defines
+    (auto-K forms); the rounds are K-agnostic past the seed.
+
+    Assignment is the window argmin by (distance, cid); the update
+    folds each dimension in vec_id order and divides by the count,
+    the IEEE order of the Spark side's vector-wise fold."""
+    from storm_data_etl_service_spark.operators.similarity import KMEANS_ITERS
+
+    def assign(cent: str, src: str) -> str:
+        return f"""SELECT vec_id, v, cid FROM (
+  SELECT e.vec_id, e.v, c.cid,
+    row_number() OVER (PARTITION BY e.vec_id
+                       ORDER BY {_l2_sql('e.v', 'c.cv', dim)}, c.cid) AS rk
+  FROM {src} e, {cent} c) WHERE rk = 1"""
+
+    def update(best: str) -> str:
+        return f"""SELECT cid, list(m ORDER BY pos) AS cv FROM (
+  SELECT cid, pos,
+    list_reduce(list(val ORDER BY vec_id), (x,y) -> x+y) / count(*) AS m
+  FROM (SELECT cid, vec_id, r.pos AS pos, v[r.pos] AS val
+        FROM {best}, range(1, {dim + 1}) r(pos))
+  GROUP BY cid, pos) GROUP BY cid"""
+
+    seed_from = f"{train}, kq" if isinstance(k, str) else train
+    ctes = [
+        f"c{tag}0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv"
+        f" FROM {seed_from} WHERE vec_id < {k})"
+    ]
+    for i in range(KMEANS_ITERS):
+        ctes.append(f"a{tag}{i} AS ({assign(f'c{tag}{i}', train)})")
+        ctes.append(f"c{tag}{i + 1} AS ({update(f'a{tag}{i}')})")
+    ctes.append(f"af{tag} AS ({assign(f'c{tag}{KMEANS_ITERS}', corpus)})")
+    return ctes
+
+
+def _label_mean_ctes(src: str = "embeddings") -> str:
+    """Per-label centroid CTEs ``ex`` (label, vec_id, pos, val) and
+    ``per_dim`` (label, pos, mv, cnt) over an embeddings-shaped
+    relation — the twin of similarity._centroid_dims: floor(val·1e9)
+    fixed-point sums, exact and partition-order-independent."""
+    return f"""ex AS (
+  SELECT label, vec_id, i AS pos, cast(embedding[i] AS DOUBLE) AS val
+  FROM {src}, unnest(generate_series(1, len(embedding))) AS u(i)),
+per_dim AS (
+  SELECT label, pos,
+    cast(sum(cast(floor(val * 1e9) AS DECIMAL(25,0))) AS DOUBLE)
+      / (count(*) * 1e9) AS mv,
+    count(*) AS cnt
+  FROM ex GROUP BY label, pos)"""
+
+
 def _semdedup_pairs_ctes(auto_k: bool = False) -> str:
     """Shared SemDeDup CTE chain (seeded Lloyd unroll → final
     assignments ``af`` → within-cell pairs ≥ NEAR_DUP_COSINE as
@@ -689,38 +756,13 @@ def _semdedup_pairs_ctes(auto_k: bool = False) -> str:
     count K = max(KMEANS_K, ⌈n / SEMDEDUP_TARGET_CELL⌉) from
     count(*) inside the SQL — the same closed form as
     similarity.semdedup_auto_k, so the oracle replays the production
-    K ∝ n knob at any scale (the Lloyd unroll is K-agnostic past the
-    seed CTE: assignment/update handle any centroid count)."""
+    K ∝ n knob at any scale."""
     from storm_data_etl_service_spark.operators.similarity import (
         EMBEDDING_DIM,
-        KMEANS_ITERS,
         KMEANS_K,
         NEAR_DUP_COSINE,
         SEMDEDUP_TARGET_CELL,
     )
-
-    n = EMBEDDING_DIM
-
-    def l2(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(generate_series(1, {n}),"
-            f" i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), (x,y) -> x+y)"
-        )
-
-    def assign(cent: str) -> str:
-        return f"""SELECT vec_id, v, cid FROM (
-  SELECT e.vec_id, e.v, c.cid,
-    row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {l2('e.v', 'c.cv')}, c.cid) AS rk
-  FROM e, {cent} c) WHERE rk = 1"""
-
-    def update(best: str) -> str:
-        return f"""SELECT cid, list(m ORDER BY pos) AS cv FROM (
-  SELECT cid, pos,
-    list_reduce(list(val ORDER BY vec_id), (x,y) -> x+y) / count(*) AS m
-  FROM (SELECT cid, vec_id, r.pos AS pos, v[r.pos] AS val
-        FROM {best}, range(1, {n + 1}) r(pos))
-  GROUP BY cid, pos) GROUP BY cid"""
 
     ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
     if auto_k:
@@ -729,27 +771,15 @@ def _semdedup_pairs_ctes(auto_k: bool = False) -> str:
             f"kq AS (SELECT greatest({KMEANS_K}, cast(ceil(count(*)"
             f" / {SEMDEDUP_TARGET_CELL}.0) AS BIGINT)) AS k FROM e)"
         )
-        ctes.append(
-            "c0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv"
-            " FROM e, kq WHERE vec_id < k)"
-        )
-    else:
-        ctes.append(
-            f"c0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv FROM e"
-            f" WHERE vec_id < {KMEANS_K})"
-        )
-    for i in range(KMEANS_ITERS):
-        ctes.append(f"a{i} AS ({assign(f'c{i}')})")
-        ctes.append(f"c{i + 1} AS ({update(f'a{i}')})")
-    ctes += [
-        f"af AS ({assign(f'c{KMEANS_ITERS}')})",
+    ctes += _lloyd_ctes("k" if auto_k else KMEANS_K, EMBEDDING_DIM)
+    ctes.append(
         f"""pairs AS (
   SELECT cid, id_a, id_b, cos FROM (
     SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
       {_COSINE_SQL.format(a='a.v', b='b.v')} AS cos
     FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-  WHERE cos >= {NEAR_DUP_COSINE})""",
-    ]
+  WHERE cos >= {NEAR_DUP_COSINE})"""
+    )
     return ",\n".join(ctes)
 
 
@@ -1649,31 +1679,7 @@ def _ivf_oracle(auto_k: bool = False) -> str:
         TOPK,
     )
 
-    n = EMBEDDING_DIM
-
-    def l2(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(generate_series(1, {n}),"
-            f" i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), (x,y) -> x+y)"
-        )
-
-    def assign(cent: str, src: str = "e") -> str:
-        return f"""SELECT vec_id, v, cid FROM (
-  SELECT e.vec_id, e.v, c.cid,
-    row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {l2('e.v', 'c.cv')}, c.cid) AS rk
-  FROM {src} e, {cent} c) WHERE rk = 1"""
-
-    def update(best: str) -> str:
-        return f"""SELECT cid, list(m ORDER BY pos) AS cv FROM (
-  SELECT cid, pos,
-    list_reduce(list(val ORDER BY vec_id), (x,y) -> x+y) / count(*) AS m
-  FROM (SELECT cid, vec_id, r.pos AS pos, v[r.pos] AS val
-        FROM {best}, range(1, {n + 1}) r(pos))
-  GROUP BY cid, pos) GROUP BY cid"""
-
     ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
-    train_src = "e"
     if auto_k:
         ctes += [
             f"kq AS (SELECT greatest({KMEANS_K}, least("
@@ -1686,26 +1692,17 @@ def _ivf_oracle(auto_k: bool = False) -> str:
             "tr AS (SELECT vec_id, v FROM ("
             "SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn"
             " FROM e), kq WHERE rn <= s)",
-            "c0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv"
-            " FROM tr, kq WHERE vec_id < k)",
         ]
-        train_src = "tr"
-    else:
-        ctes.append(
-            f"c0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv FROM e"
-            f" WHERE vec_id < {KMEANS_K})"
-        )
-    for i in range(KMEANS_ITERS):
-        ctes.append(f"a{i} AS ({assign(f'c{i}', train_src)})")
-        ctes.append(f"c{i + 1} AS ({update(f'a{i}')})")
+    ctes += _lloyd_ctes(
+        "k" if auto_k else KMEANS_K, EMBEDDING_DIM, train="tr" if auto_k else "e"
+    )
     final_c = f"c{KMEANS_ITERS}"
     ctes += [
-        f"af AS ({assign(final_c)})",
         f"q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES})",
         f"""probes AS (SELECT query_id, qv, cid FROM (
   SELECT q.query_id, q.qv, c.cid,
     row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY {l2('q.qv', 'c.cv')}, c.cid) AS prk
+                       ORDER BY {_l2_sql('q.qv', 'c.cv', EMBEDDING_DIM)}, c.cid) AS prk
   FROM q, {final_c} c) WHERE prk <= {IVF_NPROBE})""",
         """cand AS (SELECT p.query_id, p.qv, a.vec_id, a.v
   FROM probes p JOIN af a ON p.cid = a.cid WHERE a.vec_id <> p.query_id)""",
@@ -1757,55 +1754,25 @@ def _pq_oracle() -> str:
         TOPK,
     )
 
-    n = PQ_SUBDIM
-
-    def l2(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(generate_series(1, {n}),"
-            f" i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), (x,y) -> x+y)"
-        )
-
-    def assign(src: str, cent: str) -> str:
-        return f"""SELECT vec_id, v, cid FROM (
-  SELECT e.vec_id, e.v, c.cid,
-    row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {l2('e.v', 'c.cv')}, c.cid) AS rk
-  FROM {src} e, {cent} c) WHERE rk = 1"""
-
-    def update(best: str) -> str:
-        return f"""SELECT cid, list(m ORDER BY pos) AS cv FROM (
-  SELECT cid, pos,
-    list_reduce(list(val ORDER BY vec_id), (x,y) -> x+y) / count(*) AS m
-  FROM (SELECT cid, vec_id, r.pos AS pos, v[r.pos] AS val
-        FROM {best}, range(1, {n + 1}) r(pos))
-  GROUP BY cid, pos) GROUP BY cid"""
-
     ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
     for m in range(PQ_M):
         lo, hi = m * PQ_SUBDIM + 1, (m + 1) * PQ_SUBDIM
         ctes.append(
             f"e{m} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)"
         )
-        ctes.append(
-            f"c{m}_0 AS (SELECT cast(vec_id AS INTEGER) AS cid, v AS cv"
-            f" FROM e{m} WHERE vec_id < {PQ_K})"
-        )
-        for i in range(KMEANS_ITERS):
-            ctes.append(f"a{m}_{i} AS ({assign(f'e{m}', f'c{m}_{i}')})")
-            ctes.append(f"c{m}_{i + 1} AS ({update(f'a{m}_{i}')})")
-        ctes.append(
-            f"af{m} AS (SELECT vec_id, cid AS cid{m}"
-            f" FROM ({assign(f'e{m}', f'c{m}_{KMEANS_ITERS}')}))"
+        ctes += _lloyd_ctes(
+            PQ_K, PQ_SUBDIM, train=f"e{m}", corpus=f"e{m}", tag=f"{m}_"
         )
         ctes.append(
             f"""lut{m} AS (
-  SELECT q.vec_id AS query_id, c.cid AS cid{m}, {l2(f'q.v[{lo}:{hi}]', 'c.cv')} AS d{m}
+  SELECT q.vec_id AS query_id, c.cid AS cid{m}, {_l2_sql(f'q.v[{lo}:{hi}]', 'c.cv', PQ_SUBDIM)} AS d{m}
   FROM e q, c{m}_{KMEANS_ITERS} c WHERE q.vec_id < {N_QUERIES})"""
         )
+    code_cols = ", ".join(f"af{m}_.cid AS cid{m}" for m in range(PQ_M))
     code_join = " JOIN ".join(
-        ["af0"] + [f"af{m} USING (vec_id)" for m in range(1, PQ_M)]
+        ["af0_"] + [f"af{m}_ USING (vec_id)" for m in range(1, PQ_M)]
     )
-    ctes.append(f"codes AS (SELECT * FROM {code_join})")
+    ctes.append(f"codes AS (SELECT vec_id, {code_cols} FROM {code_join})")
     lut_join = " JOIN ".join(
         ["codes JOIN lut0 USING (cid0)"]
         + [f"lut{m} USING (query_id, cid{m})" for m in range(1, PQ_M)]
@@ -2183,15 +2150,7 @@ REGISTRY["embedding_label_centroids"] = QuerySpec(
     # r5 gate error class).  S.embedding_label_centroids keeps the
     # array-assembling API for Python callers.
     _t(S.embedding_label_centroid_dims),
-    """WITH ex AS (
-  SELECT label, vec_id, i AS pos, cast(embedding[i] AS DOUBLE) AS val
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(i)),
-per_dim AS (
-  SELECT label, pos,
-    cast(sum(cast(floor(val * 1e9) AS DECIMAL(25,0))) AS DOUBLE)
-      / (count(*) * 1e9) AS mv,
-    count(*) AS cnt
-  FROM ex GROUP BY label, pos)
+    f"""WITH {_label_mean_ctes()}
 SELECT label, cast(pos - 1 AS INTEGER) AS pos, mv AS value,
   cnt AS n_vectors
 FROM per_dim""",
@@ -2352,14 +2311,7 @@ GROUP BY bin""",
 
 REGISTRY["centroid_similarity_matrix"] = QuerySpec(
     _t(S.centroid_similarity_matrix),
-    """WITH ex AS (
-  SELECT label, i AS pos, cast(embedding[i] AS DOUBLE) AS val
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(i)),
-per_dim AS (
-  SELECT label, pos,
-    cast(sum(cast(floor(val * 1e9) AS DECIMAL(25,0))) AS DOUBLE)
-      / (count(*) * 1e9) AS mv
-  FROM ex GROUP BY label, pos),
+    f"""WITH {_label_mean_ctes()},
 pair AS (
   SELECT a.label AS label_a, b.label AS label_b, a.mv AS av, b.mv AS bv
   FROM per_dim a JOIN per_dim b ON a.pos = b.pos AND a.label < b.label)
@@ -2979,26 +2931,15 @@ GROUP BY from_type""",
 def _nearest_centroid_oracle() -> str:
     from storm_data_etl_service_spark.operators.similarity import EMBEDDING_DIM
 
-    n = EMBEDDING_DIM
-    l2 = (
-        f"list_reduce(list_transform(generate_series(1, {n}),"
-        f" i -> (t.v[i]-c.cv[i])*(t.v[i]-c.cv[i])), (x,y) -> x+y)"
-    )
-    return f"""WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-train AS (SELECT * FROM e WHERE vec_id % 2 = 0),
-test AS (SELECT * FROM e WHERE vec_id % 2 = 1),
-ex AS (
-  SELECT label, i AS pos, v[i] AS val
-  FROM train, unnest(generate_series(1, {n})) AS u(i)),
-per_dim AS (
-  SELECT label, pos,
-    cast(sum(cast(floor(val * 1e9) AS DECIMAL(25,0))) AS DOUBLE)
-      / (count(*) * 1e9) AS mv
-  FROM ex GROUP BY label, pos),
+    l2 = _l2_sql("t.v", "c.cv", EMBEDDING_DIM)
+    return f"""WITH train AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0),
+{_label_mean_ctes('train')},
 cent AS (
   SELECT label AS pred_label, list(mv ORDER BY pos) AS cv
   FROM per_dim GROUP BY label),
+test AS (
+  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
+  WHERE vec_id % 2 = 1),
 scored AS (
   SELECT t.vec_id, t.label, c.pred_label,
     row_number() OVER (PARTITION BY t.vec_id
@@ -3661,14 +3602,7 @@ GROUP BY sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))""",
 
 REGISTRY["label_separability_report"] = QuerySpec(
     _t(S.label_separability_report),
-    """WITH ex AS (
-  SELECT label, vec_id, i AS pos, cast(embedding[i] AS DOUBLE) AS val
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(i)),
-per_dim AS (
-  SELECT label, pos,
-    cast(sum(cast(floor(val * 1e9) AS DECIMAL(25,0))) AS DOUBLE)
-      / (count(*) * 1e9) AS mv
-  FROM ex GROUP BY label, pos),
+    f"""WITH {_label_mean_ctes()},
 intra AS (
   SELECT label,
     cast(sum(d2q) AS DOUBLE) / (count(*) * 1e9) AS intra_mean_d2,

@@ -268,22 +268,16 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 
 def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: argmin by (distance, cid), 100%
-    map-only.  The K-row centroid table collapses to ONE
+    """Nearest-centroid assignment: ``emb``'s columns plus the ``cid``
+    of its nearest ``(cid, cv)`` centroid, argmin by (distance, cid),
+    100% map-only.  The K-row centroid table collapses to ONE
     array-of-structs row, broadcast across the vector scan, and each
     vector takes ``array_min`` over the per-centroid (distance, cid)
     structs — struct ordering compares distance first, cid second, so
-    this is exactly the old window's argmin by (asc _d, asc cid).
-
-    The previous form fanned every vector out to K rows (crossJoin)
-    and ran a row_number window partitioned by vec_id — a full
-    shuffle + sort of n·K rows each carrying the d-dim vector, per
-    assignment pass (and k-means runs one per Lloyd round).  The
-    distance fold itself (``_l2sq``, the sequential left fold both
-    engines reproduce bit-for-bit) is unchanged, so every distance —
-    and therefore every assignment — is bit-identical; only the
-    argmin mechanism moved from a shuffle to a per-row fold.  At any
-    corpus size this stage now pipelines with the scan."""
+    ties break on the lower cid.  Distances are the ``_l2sq``
+    sequential left fold both engines reproduce bit-for-bit, so every
+    assignment matches the DuckDB oracle's window argmin.  No shuffle:
+    at any corpus size this stage pipelines with the scan."""
     cents = cent.agg(
         F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias(
             "_cents"
@@ -295,44 +289,37 @@ def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
             _l2sq(F.col("v"), c["cv"]).alias("d"), c["cid"].alias("cid")
         ),
     )
-    return (
-        emb.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", F.array_min(scored)["cid"].alias("cid"))
+    return emb.crossJoin(F.broadcast(cents)).select(
+        *emb.columns, F.array_min(scored)["cid"].alias("cid")
     )
 
 
 def _update_centroids(best: DataFrame) -> DataFrame:
-    """Element-wise mean per cell, computed as a vec_id-ordered left
-    fold over the member values (NOT a plain double sum, which is
-    partition-order-dependent, and NOT a decimal sum — DuckDB's
-    double→decimal(38,18) cast is itself double-rounded, so decimal
-    staging diverges at full float precision).  The ordered fold gives
-    one well-defined IEEE addition order that both engines and every
-    cluster layout reproduce exactly."""
-    ex = best.selectExpr("cid", "vec_id", "posexplode(v) AS (pos, val)")
-    means = (
-        ex.groupBy("cid", "pos")
-        .agg(
-            F.collect_list(F.struct("vec_id", "val")).alias("_mv"),
-            F.count("*").alias("_n"),
-        )
-        .select(
-            "cid",
-            "pos",
-            (
-                F.aggregate(
-                    F.transform(F.array_sort(F.col("_mv")), lambda s: s["val"]),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.col("_n")
-            ).alias("m"),
-        )
+    """Element-wise mean per cell in ONE ``groupBy("cid")`` pass: the
+    cell's ``(vec_id, v)`` structs are sorted by vec_id and folded
+    vector-wise, ``acc ← zip_with(acc, v, +)`` from a zero vector, then
+    divided by the member count.  Each dimension therefore sees the
+    sequential IEEE additions ((0 + v₁) + v₂) + … in vec_id order —
+    the order the DuckDB oracle's ``list_reduce(list(val ORDER BY
+    vec_id))`` uses — NOT a plain double sum (partition-order-
+    dependent) and NOT a decimal sum (DuckDB's double→decimal cast is
+    itself double-rounded).
+
+    Row-size bound: a cell's members travel as ONE aggregate row, so
+    the largest row is |cell| × d doubles — at auto-K about
+    SEMDEDUP_TARGET_CELL × 64 doubles ≈ 2 MiB, and the auto-K IVF form
+    trains on at most IVF_TRAIN_PER_CELL·K rows in total."""
+    cells = best.groupBy("cid").agg(
+        F.array_sort(F.collect_list(F.struct("vec_id", "v"))).alias("_mv"),
+        F.count("*").alias("_n"),
     )
-    return means.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("cv")
+    total = F.aggregate(
+        F.col("_mv"),
+        F.transform(F.col("_mv")[0]["v"], lambda _: F.lit(0.0)),
+        lambda acc, s: F.zip_with(acc, s["v"], lambda a, x: a + x),
+    )
+    return cells.select(
+        "cid", F.transform(total, lambda x: x / F.col("_n")).alias("cv")
     )
 
 
@@ -345,30 +332,28 @@ IVF_TRAIN_PER_CELL = 32
 
 
 def kmeans_centroids(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    train_n: int | None = None,
+    emb: DataFrame, k: int = KMEANS_K, train_n: int | None = None
 ) -> DataFrame:
     """Deterministic Lloyd k-means: centroids seeded from the k lowest
-    vec_ids, a FIXED number of assign/update rounds (no convergence
-    randomness), means as a vec_id-ordered double fold
-    (``_update_centroids``).  Each round is one map-only
-    broadcast ``array_min`` assignment fold (``_assign_cells``) + one
-    grouped mean — all partition-parallel; each round is staged, so
-    rounds don't grow the plan.
+    vec_ids, KMEANS_ITERS assign/update rounds (no convergence
+    randomness).  Each round is one map-only broadcast ``array_min``
+    assignment fold (``_assign_cells``) plus one ``groupBy("cid")``
+    mean (``_update_centroids``: members sorted by vec_id and folded
+    vector-wise, so every dimension adds in vec_id order), and is
+    staged, so rounds don't grow the plan.  A round's grouped row
+    holds one whole cell (|cell| × d doubles).
 
     ``train_n`` bounds the Lloyd rounds to the train_n lowest-vec_id
     vectors (deterministic sample; a TakeOrdered, never a full sort) —
     the scale path for K ∝ √n cell counts, where full-corpus rounds
-    would cost iters · n · K."""
+    would cost KMEANS_ITERS · n · K."""
     train = emb
     if train_n is not None:
         train = emb.orderBy("vec_id").limit(train_n)
     cent = train.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
     )
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         cent = stage(_update_centroids(_assign_cells(train, cent)))
     return cent
 
@@ -498,10 +483,11 @@ def ann_pq_search(t) -> DataFrame:
     )
 
 
-def _centroid_dims(t) -> DataFrame:
-    """(label, pos, mv, cnt) per-dimension centroid components with
-    fixed-point-deterministic means (see embedding_label_centroids)."""
-    ex = t["embeddings"].select(
+def _centroid_dims(embeddings: DataFrame) -> DataFrame:
+    """(label, pos, mv, cnt) per-dimension centroid components of an
+    ``embeddings``-shaped frame, with fixed-point-deterministic means
+    (see embedding_label_centroids)."""
+    ex = embeddings.select(
         "label", "vec_id", F.posexplode(_vec(F.col("embedding"))).alias("pos", "val")
     )
     fixed = F.floor(F.col("val") * 1e9).cast("decimal(25,0)")
@@ -528,9 +514,15 @@ def embedding_label_centroids(t) -> DataFrame:
     both engines compute bit-identically, making the mean exact,
     partition-order-independent, and oracle-hashable.
     """
-    per_dim = _centroid_dims(t)
+    return _label_centroids(t["embeddings"]).orderBy("label")
+
+
+def _label_centroids(embeddings: DataFrame) -> DataFrame:
+    """(label, centroid, n_vectors): ``_centroid_dims`` assembled into
+    one pos-ordered vector per label."""
     return (
-        per_dim.groupBy("label")
+        _centroid_dims(embeddings)
+        .groupBy("label")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "mv"))),
@@ -538,7 +530,6 @@ def embedding_label_centroids(t) -> DataFrame:
             ).alias("centroid"),
             F.max("cnt").alias("n_vectors"),
         )
-        .orderBy("label")
     )
 
 
@@ -555,7 +546,7 @@ def embedding_label_centroid_dims(t) -> DataFrame:
     array-returning Python API for callers that want the vector.
     Values and determinism discipline are identical — this is
     ``_centroid_dims`` without the final array assembly."""
-    per_dim = _centroid_dims(t)
+    per_dim = _centroid_dims(t["embeddings"])
     return per_dim.select(
         "label",
         "pos",
@@ -575,7 +566,7 @@ def centroid_similarity_matrix(t) -> DataFrame:
     driver-side matrix.  Products are floor-quantized (×1e12) before
     the decimal sum, so cosines are partition-order-independent and
     engine-exact; sqrt is correctly rounded IEEE, hence identical."""
-    dims = _centroid_dims(t).select("label", "pos", "mv")
+    dims = _centroid_dims(t["embeddings"]).select("label", "pos", "mv")
     a, b = dims.alias("a"), dims.alias("b")
     pair = a.join(
         b,
@@ -691,35 +682,20 @@ def nearest_centroid_accuracy(t) -> DataFrame:
     and the evaluation half of what embedding_label_centroids
     produces.
 
-    Determinism: fixed-point centroid means (see
-    embedding_label_centroids), sequential-fold L2 distances (the
-    IVF-proven bit-equal shape), argmin tie-broken on predicted
-    label.  Scale: K-row centroid table broadcast across the test
-    scan; per-vector argmin window over K candidate rows."""
-    emb = t["embeddings"].select(
+    Determinism: fixed-point centroid means (``_label_centroids`` over
+    the even split, see embedding_label_centroids), sequential-fold L2
+    distances, argmin tie-broken on predicted label
+    (``_assign_cells``, the IVF assignment: K-row centroid table
+    broadcast across the test scan, map-only ``array_min`` fold)."""
+    emb = t["embeddings"]
+    cent = _label_centroids(emb.filter(F.col("vec_id") % 2 == 0)).select(
+        F.col("label").alias("cid"), F.col("centroid").alias("cv")
+    )
+    test = emb.filter(F.col("vec_id") % 2 == 1).select(
         "vec_id", "label", _vec(F.col("embedding")).alias("v")
     )
-    train = emb.filter(F.col("vec_id") % 2 == 0)
-    test = emb.filter(F.col("vec_id") % 2 == 1)
-
-    ex = train.select("label", F.posexplode("v").alias("pos", "val"))
-    fixed = F.floor(F.col("val") * 1e9).cast("decimal(25,0)")
-    per_dim = ex.groupBy("label", "pos").agg(
-        (F.sum(fixed).cast("double") / (F.count("*") * F.lit(1e9))).alias("mv")
-    )
-    cent = per_dim.groupBy(F.col("label").alias("pred_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mv"))), lambda s: s.mv
-        ).alias("cv")
-    )
-    scored = test.crossJoin(F.broadcast(cent)).withColumn(
-        "_d", _l2sq(F.col("v"), F.col("cv"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("_d"), F.asc("pred_label"))
-    best = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("vec_id", "label", "pred_label")
+    best = _assign_cells(test, cent).select(
+        "label", F.col("cid").alias("pred_label")
     )
     return (
         best.groupBy("label")
@@ -959,7 +935,7 @@ def label_separability_report(t) -> DataFrame:
     table (|labels|×dims rows); the centroid-pair matrix is
     |labels|² — both trivial next to the vector scan.
     """
-    per_dim = _centroid_dims(t)  # label, pos, mv, cnt
+    per_dim = _centroid_dims(t["embeddings"])  # label, pos, mv, cnt
     ex = t["embeddings"].select(
         "label", "vec_id", F.posexplode(_vec(F.col("embedding"))).alias("pos", "val")
     )

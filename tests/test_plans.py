@@ -731,3 +731,32 @@ def test_topk_windows_are_limit_bounded(spark, sf_dir):
         assert w < tk, (
             f"{q}: Window is not fed by the TakeOrdered limit:\n{plan[:1500]}"
         )
+
+
+def test_lloyd_round_is_one_cid_exchange(spark, sf_dir):
+    """One Lloyd round — the broadcast ``array_min`` assignment plus the
+    vector-wise, vec_id-ordered mean — plans as a single grouped pass
+    over cid: no Generate (posexplode) node and exactly one hash
+    exchange keyed on cid."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from storm_data_etl_service_spark.operators.similarity import (
+        KMEANS_K,
+        _assign_cells,
+        _update_centroids,
+    )
+    from storm_data_etl_service_spark.schemas import load_tables
+
+    emb = load_tables(spark, sf_dir)["embeddings"].select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    seed = emb.filter(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
+    )
+    df = _update_centroids(_assign_cells(emb, seed))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan, plan
+    hashed = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert len(hashed) == 1 and hashed[0].startswith("cid#"), hashed

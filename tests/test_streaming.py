@@ -91,7 +91,7 @@ def test_end_to_end_counts_and_dedup(spark, workdir):
     out = spark.read.parquet(str(workdir / "out"))
     # 16 distinct records + 1 duplicate + 1 poison consumed
     assert metrics.transform_errors == 1
-    assert metrics.consumed == 17
+    assert metrics.consumed == 18
     # the duplicate replay may land in a separate micro-batch (file
     # source => both files can be one batch with availableNow, so the
     # in-batch first-wins dedup must collapse it either way)
@@ -142,7 +142,9 @@ def test_metrics_and_readiness(spark, workdir):
     assert metrics.ready
     assert metrics.batches >= 1
     assert metrics.produced == 16
-    assert metrics.consumed == metrics.produced + metrics.transform_errors
+    # every message read is consumed: produced + poison + the one
+    # replay that first-wins dedup dropped
+    assert metrics.consumed == metrics.produced + metrics.transform_errors + 1
 
 
 def test_process_batch_is_single_pass(spark, workdir, monkeypatch):
@@ -941,3 +943,96 @@ def test_streaming_bloom_gate_flags_across_batches(spark, workdir):
         spark.read.parquet(str(workdir / "bloom_bits")).select("bit").distinct().count()
     )
     assert n_bits_after == n_bits
+
+
+def test_batch_kernels_release_their_cached_relations(spark, workdir, monkeypatch):
+    """Every relation a foreachBatch kernel persists is unpersisted
+    before the batch returns: over three file-source micro-batches of
+    ``_process_batch``, ``incremental_dedup_batch_fn`` and
+    ``bloom_gate_batch_fn``, each frame persisted in a batch reports
+    no storage level at its end, and the context's persisted-RDD count
+    holds no RDD the batch left persisted."""
+    import os
+    import time
+
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.storagelevel import StorageLevel
+
+    from storm_data_etl_service_spark.schemas import RAW_EVENT_SCHEMA
+    from storm_data_etl_service_spark.streaming.pipeline import (
+        bloom_gate_batch_fn,
+        incremental_dedup_batch_fn,
+    )
+
+    persisted = []
+    orig_persist = DataFrame.persist
+
+    def spy_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return orig_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", spy_persist)
+    jsc = spark.sparkContext._jsc
+
+    def persistent_rdds():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    def run(name, schema, batches, kernel):
+        src = workdir / f"{name}_src"
+        src.mkdir(parents=True)
+        now = time.time()
+        for i, batch in enumerate(batches):
+            path = src / f"b{i}.json"
+            with open(path, "w") as f:
+                for rec in batch:
+                    f.write(json.dumps(rec) + "\n")
+            os.utime(path, (now - 60 + i, now - 60 + i))
+        seen = []
+
+        def checked(batch_df, batch_id):
+            rdds, first = persistent_rdds(), len(persisted)
+            kernel(batch_df, batch_id)
+            mine = persisted[first:]
+            seen.append(
+                (
+                    len(mine),
+                    persistent_rdds() - rdds,
+                    [df.storageLevel == StorageLevel.NONE for df in mine],
+                )
+            )
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = (
+            stream.writeStream.foreachBatch(checked)
+            .option("checkpointLocation", str(workdir / f"{name}_ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert len(seen) == len(batches), (name, seen)
+        for n_persisted, left_rdds, released in seen:
+            assert n_persisted >= 1, (name, seen)
+            assert not left_rdds and all(released), (name, seen)
+
+    events = [_envelope(r, i) for i, r in enumerate(RAW_ROWS[:12])]
+    pipe = StormStreamPipeline(
+        None,
+        sink_writer=parquet_sink(str(workdir / "out")),
+        dlq_writer=parquet_dlq(str(workdir / "dlq")),
+        processed_at=F.lit(FROZEN_CLOCK).cast("timestamp"),
+    )
+    run("events", RAW_EVENT_SCHEMA, [events[:4], events[4:8], events[8:]],
+        pipe._process_batch)
+    docs = [
+        [{"doc_id": 10 * b + i, "text": f"storm report {b} body {i} " * 4}
+         for i in range(3)]
+        for b in range(3)
+    ]
+    run("lsh", "doc_id long, text string", docs, incremental_dedup_batch_fn(
+        str(workdir / "lsh_index"), str(workdir / "matches")))
+    run("bloom", "doc_id long, text string", docs, bloom_gate_batch_fn(
+        str(workdir / "bloom_bits"), str(workdir / "verdicts")))
