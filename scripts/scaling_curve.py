@@ -36,7 +36,15 @@ and the marginal scaling exponent on the largest step
 (log t-ratio / log data-ratio; 1.0 = perfectly linear, <1 =
 overhead-amortizing, >1.2 flagged).
 
+``--only q1,q2`` re-measures just those queries at the same scales and
+merges their rows (and, for dedup rungs, their natural-corpus rows)
+into the committed SCALING.json — for a change that touches a handful
+of operators, where a full pass (~50 queries at four scales, ~2 h) is
+overkill.  Other rows keep their previous measurements; the merge is
+noted under ``merged_rounds``.  It keeps the scaled corpora.
+
 Usage: python scripts/scaling_curve.py [--replicas N] [--keep]
+       [--only q1,q2] [--render SCALING.json]
 """
 
 from __future__ import annotations
@@ -314,18 +322,46 @@ DEDUP_FAMILY = [
 ]
 
 
+def _row(times: list, top_ratio: float) -> tuple[dict, bool]:
+    """One query's row — its time at each scale and the marginal
+    exponent of the top step — and whether that step is flagged
+    super-linear (more than 1.3x the data ratio)."""
+    t_prev, t_top = times[-2], times[-1]
+    measured = bool(t_prev and t_top and t_prev > 0)
+    exponent = (
+        round(math.log(t_top / t_prev) / math.log(top_ratio), 3) if measured else None
+    )
+    flag = measured and t_top > (top_ratio * 1.3) * t_prev
+    return {"times_sec": times, "top_step_exponent": exponent}, flag
+
+
+def _natural_row(t_small, t_nat, top_ratio: float) -> dict:
+    """A dedup rung's natural-density row: sf0.1 against the scaled
+    natural corpus."""
+    return {
+        "sf0.1_sec": t_small,
+        "natural_sf_sec": t_nat,
+        "exponent": (
+            round(math.log(t_nat / t_small) / math.log(top_ratio), 3)
+            if t_small and t_nat
+            else None
+        ),
+    }
+
+
+def _arg(flag: str) -> str | None:
+    return sys.argv[sys.argv.index(flag) + 1] if flag in sys.argv else None
+
+
 def main() -> int:
-    replicas = 16
-    keep = "--keep" in sys.argv
-    if "--replicas" in sys.argv:
-        replicas = int(sys.argv[sys.argv.index("--replicas") + 1])
     if "--render" in sys.argv:
-        summary = json.loads(
-            Path(sys.argv[sys.argv.index("--render") + 1]).read_text()
-        )
-        render_md(summary)
+        render_md(json.loads(Path(_arg("--render")).read_text()))
         print("re-rendered SCALING.md from cached JSON")
         return 0
+    only = _arg("--only").split(",") if "--only" in sys.argv else None
+    # a subset run re-measures rows of the committed summary, at its scales
+    summary = json.loads((REPO / "SCALING.json").read_text()) if only else {}
+    replicas = summary.get("replicas") or int(_arg("--replicas") or 16)
 
     scaled_sf = round(0.1 * replicas, 2)
     scaled_dir = SCRATCH / f"sf{scaled_sf}"
@@ -339,65 +375,55 @@ def main() -> int:
         ("/root/testdata/sf0.1", 0.1),
         (str(scaled_dir), scaled_sf),
     ]
-    results = {}
-    for sf_dir, sf in scales:
-        print(f"bench @ sf{sf} ...", flush=True)
-        results[str(sf)] = run_bench(sf_dir)
-        print(f"  total {results[str(sf)]['value']} s", flush=True)
-
     sfs = [str(s) for _, s in scales]
     top_ratio = scales[-1][1] / scales[-2][1]
-    queries = list(results[sfs[0]]["queries"])
-    rows = {}
-    flagged = []
+    per_sf = {}
+    for sf_dir, sf in scales:
+        print(f"bench @ sf{sf} ...", flush=True)
+        per_sf[str(sf)] = run_bench(sf_dir, only)["queries"]
+
+    queries = only or list(per_sf[sfs[0]])
+    rows = summary.setdefault("queries", {})
+    flagged = set(summary.get("flagged_superlinear", []))
     for q in queries:
-        times = [results[s]["queries"].get(q) for s in sfs]
-        t_prev, t_top = times[-2], times[-1]
-        exponent = (
-            math.log(t_top / t_prev) / math.log(top_ratio)
-            if t_prev and t_top and t_prev > 0
-            else None
-        )
-        rows[q] = {"times_sec": times, "top_step_exponent": (
-            round(exponent, 3) if exponent is not None else None)}
-        if exponent is not None and t_top > (top_ratio * 1.3) * t_prev:
-            flagged.append(q)
+        rows[q], flag = _row([per_sf[s].get(q) for s in sfs], top_ratio)
+        flagged.discard(q)
+        if flag:
+            flagged.add(q)
+        print(f"  {q}: {rows[q]}", flush=True)
 
     # second corpus: natural-density replicas for the dedup rungs
+    nat_queries = [q for q in DEDUP_FAMILY if q in queries]
     natural_dir = SCRATCH / f"sf{scaled_sf}_natural"
-    if not (natural_dir / "documents.parquet").exists():
+    if nat_queries and not (natural_dir / "documents.parquet").exists():
         print(f"synthesizing natural-density x{replicas} -> {natural_dir}", flush=True)
         build_scaled("/root/testdata/sf0.1", natural_dir, replicas, mode="natural")
-    print(f"bench dedup family @ sf{scaled_sf} natural corpus ...", flush=True)
-    nat = run_bench(str(natural_dir), DEDUP_FAMILY)
-    natural_rows = {}
-    for q in DEDUP_FAMILY:
-        t_small = results["0.1"]["queries"].get(q)
-        t_nat = nat["queries"].get(q)
-        natural_rows[q] = {
-            "sf0.1_sec": t_small,
-            "natural_sf_sec": t_nat,
-            "exponent": (
-                round(math.log(t_nat / t_small) / math.log(top_ratio), 3)
-                if t_small and t_nat
-                else None
-            ),
-        }
+    if nat_queries:
+        print(f"bench dedup family @ sf{scaled_sf} natural corpus ...", flush=True)
+        nat = run_bench(str(natural_dir), nat_queries)["queries"]
+        natural = summary.setdefault("natural_corpus", {})
+        for q in nat_queries:
+            natural[q] = _natural_row(per_sf["0.1"].get(q), nat.get(q), top_ratio)
 
-    summary = {
-        "scales": sfs,
-        "replicas": replicas,
-        "top_step_data_ratio": top_ratio,
-        "totals_sec": {s: results[s]["value"] for s in sfs},
-        "flagged_superlinear": flagged,
-        "queries": rows,
-        "natural_corpus": natural_rows,
-    }
+    summary.update(
+        scales=sfs,
+        replicas=replicas,
+        top_step_data_ratio=top_ratio,
+        totals_sec={
+            s: round(sum(r["times_sec"][i] or 0 for r in rows.values()), 4)
+            for i, s in enumerate(sfs)
+        },
+        flagged_superlinear=sorted(flagged),
+    )
+    if only:
+        summary.setdefault("merged_rounds", []).append(
+            {"queries": only, "note": "subset re-measure via scaling_curve.py --only"}
+        )
     (REPO / "SCALING.json").write_text(json.dumps(summary, indent=1))
     render_md(summary)
-    print(f"\nwrote SCALING.md / SCALING.json; flagged={flagged}")
+    print(f"\nwrote SCALING.md / SCALING.json; flagged={sorted(flagged)}")
 
-    if not keep:
+    if not (only or "--keep" in sys.argv):
         shutil.rmtree(SCRATCH, ignore_errors=True)
     return 0
 

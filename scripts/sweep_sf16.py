@@ -5,7 +5,9 @@ run).  Entries whose full-density ORACLE SQL is infeasible at that
 density (quadratic baselines, unbounded recursions) are checked by
 scripts/invariant_check.py instead: exact staged replays or an
 induced subgraph.  No entry is skipped.  Chunked subprocesses so one
-heavy query cannot wedge the sweep.
+heavy query cannot wedge the sweep.  It stays separate from
+``scaling_curve.py``: this is a correctness sweep that needs
+per-chunk subprocess isolation, not a timing run.
 
 Usage: python scripts/sweep_sf16.py [chunk_timeout_sec]
 

@@ -27,7 +27,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from storm_data_etl_service_spark.operators import stage
-from storm_data_etl_service_spark.operators.text import min_tokens_pred, tokens_col
+from storm_data_etl_service_spark.operators.text import (
+    min_tokens_pred,
+    sha_int,
+    tokens_col,
+)
 
 #: MinHash configuration: 12 permutations in 4 bands of 3.
 MINHASH_SEEDS = 12
@@ -451,11 +455,7 @@ def shingle_base_hashes(shingles: Column) -> Column:
     """One sha256-derived integer hash per shingle, reduced mod p —
     computed ONCE and staged as a column (inlining it into every
     permutation would re-run the sha256 per seed: 12× the work)."""
-    return F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.sha2(s, 256), 1, 15), 16, 10).cast("long")
-        % MINHASH_P,
-    )
+    return F.transform(shingles, lambda s: sha_int(s, width=15) % MINHASH_P)
 
 
 def minhash_signature(base_hashes: Column, n_seeds: int = MINHASH_SEEDS) -> Column:
@@ -621,12 +621,7 @@ def dedup_simhash(t) -> DataFrame:
     """
     def token_half(offset: int):
         # factory closure: see the lambda-default-arg note above
-        return F.transform(
-            F.col("_toks"),
-            lambda x: F.conv(F.substring(F.sha2(x, 256), offset, 8), 16, 10).cast(
-                "long"
-            ),
-        )
+        return F.transform(F.col("_toks"), lambda x: sha_int(x, offset))
 
     def bit_vote(half: Column, shift: int) -> Column:
         return F.aggregate(
@@ -914,15 +909,7 @@ def bloom_bit_positions(h: Column, m: int = BLOOM_BITS) -> Column:
     sha256-prefix hashes (the cms_token_frequencies idiom), so the
     DuckDB oracle reproduces every position bit-for-bit."""
     return F.array(
-        *[
-            F.conv(
-                F.substring(F.sha2(F.concat(F.lit(f"bloom{i}|"), h), 256), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % m
-            for i in range(BLOOM_HASHES)
-        ]
+        *[sha_int(F.concat(F.lit(f"bloom{i}|"), h)) % m for i in range(BLOOM_HASHES)]
     )
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from storm_data_etl_service_spark.operators.text import tokens_col
+from storm_data_etl_service_spark.operators.text import bigrams_col, sha_int, tokens_col
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\b\d{3}[-.]\d{3}[-.]\d{4}\b"
@@ -23,18 +23,7 @@ def dataset_split_assign(t) -> DataFrame:
     else test.  Hash-based splits are reproducible across runs,
     clusters, and engines — the property a shuffled random split
     loses the moment the data moves."""
-    h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split|"), F.col("doc_id").cast("string")), 256),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = _sha_key("split|", F.col("doc_id")) % 100
     split = (
         F.when(h < 80, "train").when(h < 90, "valid").otherwise("test")
     )
@@ -69,24 +58,10 @@ def ngram_counts(t, min_count: int = 40) -> DataFrame:
     """Corpus bigram frequencies above a support threshold — the
     n-gram statistics pass of a data pipeline (explode → one shuffle
     on the bigram, map-side combine first)."""
-    toks = F.col("_toks")
-    n = F.size(toks)
-    # zip-of-slices, not element_at-over-sequence (see
-    # dedup.shingles_col: the sequence form is O(tokens²) when the
-    # optimizer inlines the token tree into each element access)
-    m = n - 1
-    bigrams = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(toks, 1, m),
-            F.slice(toks, 2, m),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
         t["documents"]
         .select(tokens_col(F.col("text")).alias("_toks"))
-        .select(F.explode(bigrams).alias("bigram"))
+        .select(F.explode(bigrams_col(F.col("_toks"))).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= min_count)
@@ -164,13 +139,7 @@ def per_source_cap_sample(t, cap: int = 10) -> DataFrame:
     per source partition — the shuffle is on the low-cardinality
     source key; at scale skewed mega-domains are exactly the rows this
     operator is there to cut."""
-    h = F.conv(
-        F.substring(
-            F.sha2(F.concat(F.lit("cap|"), F.col("doc_id").cast("string")), 256), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _sha_key("cap|", F.col("doc_id"))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("source").orderBy(F.col("_h"), F.col("doc_id"))
@@ -193,13 +162,7 @@ def sequence_pack_assign(t, budget: int = 2000, n_buckets: int = 8) -> DataFrame
     parallel with reproducible layout."""
     from pyspark.sql.window import Window
 
-    h = F.conv(
-        F.substring(
-            F.sha2(F.concat(F.lit("pack|"), F.col("doc_id").cast("string")), 256), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _sha_key("pack|", F.col("doc_id"))
     w = (
         Window.partitionBy("bucket")
         .orderBy(F.col("_h"), F.col("doc_id"))
@@ -395,18 +358,7 @@ def corpus_curation_pipeline(t) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    split_h = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split|"), F.col("doc_id").cast("string")), 256),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    split_h = _sha_key("split|", F.col("doc_id")) % 100
     split = F.when(split_h < 80, "train").when(split_h < 90, "valid").otherwise("test")
     return (
         canonical.withColumn("split", split)
@@ -577,7 +529,6 @@ def corpus_dataset_card(t) -> DataFrame:
     no collects; at 100 TB each leg is one partial-aggregated pass.
     """
     from storm_data_etl_service_spark.operators.dedup import dedup_minhash_lsh
-    from storm_data_etl_service_spark.operators.text import tokens_col
 
     docs = t["documents"]
     base = docs.agg(
@@ -675,20 +626,9 @@ def mixture_sample_assign(t) -> DataFrame:
     from the assignment spec alone, no stored RNG state.
     """
     rates = source_mixture_weights(t).select("source", "boost")
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(F.lit("mix|"), F.col("doc_id").cast("string")), 256
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000000
-    ).cast("double") / F.lit(1000000000.0)
+    u = (_sha_key("mix|", F.col("doc_id")) % 1000000000).cast("double") / F.lit(
+        1000000000.0
+    )
     extra = F.when(u < F.col("boost") - F.floor(F.col("boost")), 1).otherwise(0)
     n_copies = (F.floor(F.col("boost")) + extra).cast("long")
     return (
@@ -715,9 +655,7 @@ def _sha_key(prefix: str, *cols) -> Column:
         if i:
             parts.append(F.lit("|"))
         parts.append(c.cast("string"))
-    return F.conv(
-        F.substring(F.sha2(F.concat(*parts), 256), 1, 8), 16, 10
-    ).cast("long")
+    return sha_int(F.concat(*parts))
 
 
 def _grouped_contiguous_pos(keyed: DataFrame, group_col: str, order_cols) -> DataFrame:
@@ -800,17 +738,7 @@ def length_bucket_batches(
     """
     from pyspark.sql.window import Window
 
-    s = F.conv(
-        F.substring(
-            F.sha2(
-                F.concat(F.lit("lbb|"), F.col("doc_id").cast("string")), 256
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    s = _sha_key("lbb|", F.col("doc_id"))
     laid = t["documents"].select(
         "doc_id",
         "n_chars",
@@ -870,17 +798,7 @@ def stratified_sample(t, k: int = 10, n_salts: int = 4) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    h = F.conv(
-        F.substring(
-            F.sha2(
-                F.concat(F.lit("strat|"), F.col("doc_id").cast("string")), 256
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _sha_key("strat|", F.col("doc_id"))
     keyed = t["documents"].select(
         "doc_id", "source", h.alias("_h"), (h % n_salts).alias("_salt")
     )
@@ -1008,11 +926,7 @@ def token_budget_waterfill(t) -> DataFrame:
         .groupBy("source")
         .agg(F.sum(F.size("_toks").cast("long")).alias("n_tokens"))
     )
-    cap_mult = (
-        F.conv(F.substring(F.sha2(F.col("source"), 256), 1, 8), 16, 10).cast("long")
-        % 3
-        + 1
-    )
+    cap_mult = sha_int(F.col("source")) % 3 + 1
     capped = counts.select(
         "source",
         "n_tokens",

@@ -16,6 +16,7 @@ Oracle-SQL dialect notes (DuckDB 1.0):
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -299,11 +300,68 @@ def _enrich_events_oracle() -> str:
 # oracles for the training-data operators (dedup / text / similarity)
 # --------------------------------------------------------------------------
 
+def _re2_sql(java_regex: str) -> str:
+    r"""A Spark (Java) regex as a DuckDB (RE2) string literal.  Java's
+    ``\s`` is ``[ \t\n\x0B\f\r]``; RE2's lacks ``\x0B``, and RE2's
+    ``[:space:]`` is exactly Java's class, so every ``\s`` is rewritten
+    to it (inside a bracket class or standalone)."""
+    re2 = re.sub(
+        r"\[[^\]]*\]|\\s",
+        lambda m: m[0].replace(r"\s", "[:space:]") if m[0][0] == "[" else "[[:space:]]",
+        java_regex,
+    )
+    return "'" + re2.replace("'", "''") + "'"
+
+
+_WS_RUN_SQL = _re2_sql(r"\s+")
+
+
+def _tokens_sql(text: str = "text") -> str:
+    """DuckDB twin of ``text.tokens_col``: whitespace tokens, empties
+    dropped."""
+    return f"list_filter(regexp_split_to_array({text}, {_WS_RUN_SQL}), x -> x != '')"
+
+
+def _bigrams_sql(ts: str) -> str:
+    """DuckDB twin of ``text.bigrams_col``: adjacent tokens joined by a
+    space; ``[]`` under two tokens (``generate_series(1, 0)`` is empty)."""
+    return (
+        f"list_transform(generate_series(1, len({ts}) - 1),"
+        f" i -> {ts}[i] || ' ' || {ts}[i + 1])"
+    )
+
+
+def _sha_int_sql(expr: str, start: int = 1, width: int = 8) -> str:
+    """DuckDB twin of ``text.sha_int``: ``width`` hex chars of
+    ``sha256(expr)`` from ``start``, as a BIGINT."""
+    return f"('0x' || substr(sha256({expr}), {start}, {width}))::BIGINT"
+
+
+_BPE_SQL = _re2_sql(X.BPE_PATTERN)
+_WS_ONLY_SQL = _re2_sql(r"^\s+$")
+
+
+def _bpe_count_sql(text: str = "text") -> str:
+    """DuckDB twin of ``text.bpe_count_col``."""
+    return (
+        f"len(list_filter(regexp_extract_all({text}, {_BPE_SQL}),"
+        f" x -> NOT regexp_matches(x, {_WS_ONLY_SQL})))"
+    )
+
+
+def _norm_text_sql(text: str = "text") -> str:
+    """DuckDB twin of ``dedup.normalized_text_col``."""
+    return f"trim(regexp_replace(lower({text}), {_WS_RUN_SQL}, ' ', 'g'))"
+
+
+#: pipeline_ops' train/valid/test bucket, ``_sha_key("split|", doc_id) % 100``
+_SPLIT_BUCKET_SQL = _sha_int_sql("'split|' || cast(doc_id AS VARCHAR)") + " % 100"
+
+
 #: Shared CTE prefix: whitespace tokens and distinct word-3-gram
 #: shingles — the DuckDB twin of text.tokens_col / dedup.shingles_col.
-_TOKS_CTE = r"""toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
+_TOKS_CTE = f"""toks AS (
+  SELECT doc_id, text, {_tokens_sql()} AS t
   FROM documents),
 sh AS (
   SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
@@ -408,7 +466,7 @@ def _minhash_oracle() -> str:
     return f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id, list_transform(shingles,
-    s -> ('0x' || substr(sha256(s), 1, 15))::BIGINT % {MINHASH_P}) AS base
+    s -> {_sha_int_sql('s', width=15)} % {MINHASH_P}) AS base
   FROM shf),
 sig AS (SELECT doc_id, [{perms}] AS mh FROM hashed),
 bands AS (
@@ -443,8 +501,8 @@ def _simhash_oracle() -> str:
     return f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 1, 8))::BIGINT) AS h1,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 9, 8))::BIGINT) AS h2
+    list_transform(t, x -> {_sha_int_sql('x')}) AS h1,
+    list_transform(t, x -> {_sha_int_sql('x', 9)}) AS h2
   FROM toks WHERE len(t) > 0)
 SELECT doc_id, {hex_expr} AS simhash FROM hashed"""
 
@@ -486,7 +544,7 @@ FROM documents"""
 _FINGERPRINT_ORACLE = f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 1, 15))::BIGINT % 2147483647) AS hs
+    list_transform(t, x -> {_sha_int_sql('x', width=15)} % 2147483647) AS hs
   FROM toks)
 SELECT doc_id,
   CASE WHEN len(hs) = 0 THEN 0
@@ -1026,11 +1084,9 @@ ORDER BY revenue DESC, l_orderkey LIMIT 10""",
     ),
     "dataset_split_assign": QuerySpec(
         _t(P.dataset_split_assign),
-        "SELECT doc_id,"
-        " ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " % 100 AS bucket,"
-        " CASE WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'"
-        "      WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'"
+        f"SELECT doc_id, {_SPLIT_BUCKET_SQL} AS bucket,"
+        f" CASE WHEN {_SPLIT_BUCKET_SQL} < 80 THEN 'train'"
+        f"      WHEN {_SPLIT_BUCKET_SQL} < 90 THEN 'valid'"
         "      ELSE 'test' END AS split"
         " FROM documents",
         ("pipeline", "split"),
@@ -1051,14 +1107,8 @@ FROM documents""",
     ),
     "ngram_counts": QuerySpec(
         _t(P.ngram_counts),
-        r"""WITH toks AS (
-  SELECT list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
-bi AS (
-  SELECT unnest(CASE WHEN len(t) >= 2
-    THEN list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])
-    ELSE [] END) AS bigram
-  FROM toks)
+        f"""WITH toks AS (SELECT {_tokens_sql()} AS t FROM documents),
+bi AS (SELECT unnest({_bigrams_sql('t')}) AS bigram FROM toks)
 SELECT bigram, count(*) AS n FROM bi GROUP BY bigram HAVING count(*) >= 40""",
         ("pipeline", "text"),
     ),
@@ -1255,10 +1305,7 @@ FROM documents""",
     ),
     "duplicated_span_report": QuerySpec(
         _t(D.duplicated_span_report),
-        r"""WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
+        f"""WITH toks AS (SELECT doc_id, {_tokens_sql()} AS t FROM documents),
 g AS (
   SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 9),
          i -> struct_pack(pos := i, span := array_to_string(t[i:i+9], ' ')))) AS u
@@ -1283,15 +1330,9 @@ FROM gg GROUP BY span HAVING count(DISTINCT doc_id) >= 2""",
     ),
     "text_token_count": QuerySpec(
         _t(X.text_token_count),
-        r"""WITH toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents)
-SELECT doc_id, len(t) AS n_ws_tokens,
-  len(list_filter(
-    regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+'),
-    x -> NOT regexp_matches(x, '^\s+$'))) AS n_bpe_tokens
-FROM toks""",
+        f"""SELECT doc_id, len({_tokens_sql()}) AS n_ws_tokens,
+  {_bpe_count_sql()} AS n_bpe_tokens
+FROM documents""",
         ("text",),
     ),
     "asof_join_last_click": QuerySpec(
@@ -1497,10 +1538,7 @@ FROM events e JOIN dim USING (event_type) GROUP BY e.event_type""",
     ),
     "text_repetition_stats": QuerySpec(
         _t(X.text_repetition_stats),
-        r"""WITH toks AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
+        f"""WITH toks AS (SELECT doc_id, {_tokens_sql()} AS t FROM documents),
 nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
 freq AS (
   SELECT doc_id, max(c) AS top, sum(c) AS total, count(*) AS dist FROM (
@@ -1509,8 +1547,7 @@ freq AS (
   GROUP BY doc_id),
 bi AS (
   SELECT doc_id, len(t) - 1 AS n_bi,
-    len(list_distinct(list_transform(generate_series(1, len(t) - 1),
-                                     i -> t[i] || ' ' || t[i+1]))) AS d_bi
+    len(list_distinct({_bigrams_sql('t')})) AS d_bi
   FROM nz)
 SELECT f.doc_id, CAST(total AS BIGINT) AS n_tokens,
   cast(top AS DOUBLE) / total AS top_token_share,
@@ -1522,10 +1559,10 @@ FROM freq f JOIN bi USING (doc_id)""",
     ),
     "per_source_cap_sample": QuerySpec(
         _t(P.per_source_cap_sample),
-        """WITH ranked AS (
+        f"""WITH ranked AS (
   SELECT doc_id, source,
     cast(row_number() OVER (PARTITION BY source ORDER BY
-      ('0x' || substr(sha256('cap|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+      {_sha_int_sql("'cap|' || cast(doc_id AS VARCHAR)")},
       doc_id) AS INTEGER) AS sample_rank
   FROM documents)
 SELECT doc_id, source, sample_rank FROM ranked WHERE sample_rank <= 10""",
@@ -1533,9 +1570,9 @@ SELECT doc_id, source, sample_rank FROM ranked WHERE sample_rank <= 10""",
     ),
     "sequence_pack_assign": QuerySpec(
         _t(P.sequence_pack_assign),
-        """WITH h AS (
+        f"""WITH h AS (
   SELECT doc_id, n_chars,
-    ('0x' || substr(sha256('pack|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT AS _h
+    {_sha_int_sql("'pack|' || cast(doc_id AS VARCHAR)")} AS _h
   FROM documents),
 laid AS (
   SELECT doc_id, _h % 8 AS bucket,
@@ -1618,7 +1655,7 @@ FROM staged""",
     ),
     "corpus_curation_pipeline": QuerySpec(
         _t(P.corpus_curation_pipeline),
-        """WITH gated AS (
+        f"""WITH gated AS (
   SELECT * FROM documents WHERE n_chars >= 150 AND lang <> 'zh'),
 canonical AS (
   SELECT * FROM (
@@ -1626,8 +1663,8 @@ canonical AS (
     FROM gated) WHERE _rn = 1),
 assigned AS (
   SELECT lang, n_chars,
-    CASE WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-         WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
+    CASE WHEN {_SPLIT_BUCKET_SQL} < 80 THEN 'train'
+         WHEN {_SPLIT_BUCKET_SQL} < 90 THEN 'valid'
          ELSE 'test' END AS split
   FROM canonical)
 SELECT lang, split, count(*) AS n_docs,
@@ -2010,11 +2047,8 @@ ORDER BY numwait DESC, s_name LIMIT 25""",
 # Corpus vocabulary / TF-IDF + full-outer reconciliation
 # --------------------------------------------------------------------------
 
-_TOKEN_CTE = r"""toks AS (
-  SELECT doc_id,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents)"""
+_TOKEN_CTE = f"""toks AS (
+  SELECT doc_id, unnest({_tokens_sql()}) AS token FROM documents)"""
 
 REGISTRY["vocab_top_tokens"] = QuerySpec(
     _t(X.vocab_top_tokens),
@@ -2053,7 +2087,7 @@ REGISTRY["cms_token_frequencies"] = QuerySpec(
 tf AS (SELECT token, count(*) AS exact_n FROM toks GROUP BY token),
 cells AS (
   SELECT token, exact_n, r,
-         ('0x' || substr(sha256('cms' || r || '|' || token), 1, 8))::BIGINT % 256 AS c
+         {_sha_int_sql("'cms' || r || '|' || token")} % 256 AS c
   FROM tf CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r)),
 sketch AS (
   SELECT r, c, CAST(sum(exact_n) AS BIGINT) AS cell_n
@@ -2467,10 +2501,8 @@ REGISTRY["props_extract_variant"] = QuerySpec(
 )
 
 
-_TOKEN_LIST_CTE = r"""toks_list AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents)"""
+_TOKEN_LIST_CTE = f"""toks_list AS (
+  SELECT doc_id, source, {_tokens_sql()} AS t FROM documents)"""
 
 REGISTRY["token_spans_udtf"] = QuerySpec(
     lambda spark, sf_dir: X.token_spans_udtf(spark, load_tables(spark, sf_dir)),
@@ -2497,8 +2529,7 @@ FROM m""",
 
 REGISTRY["boilerplate_prefix_report"] = QuerySpec(
     _t(X.boilerplate_prefix_report),
-    f"""WITH {_TOKEN_LIST_CTE.replace('FROM documents',
-                                      ', source FROM documents')},
+    f"""WITH {_TOKEN_LIST_CTE},
 per AS (
   SELECT source, array_to_string(t[1:3], ' ') AS prefix, count(*) AS n
   FROM toks_list GROUP BY source, prefix)
@@ -3097,14 +3128,8 @@ FROM scored ORDER BY score DESC, doc_id LIMIT 10""",
 )
 
 
-_BIGRAM_CTE = r"""tl AS (
-  SELECT list_filter(regexp_split_to_array(trim(text), '\s+'),
-                     x -> x != '') AS ts
-  FROM documents),
-bg AS (
-  SELECT unnest(list_transform(generate_series(1, len(ts) - 1),
-                               i -> ts[i] || ' ' || ts[i+1])) AS token
-  FROM tl WHERE len(ts) >= 2)"""
+_BIGRAM_CTE = f"""tl AS (SELECT {_tokens_sql()} AS ts FROM documents),
+bg AS (SELECT unnest({_bigrams_sql('ts')}) AS token FROM tl)"""
 
 REGISTRY["heavy_hitter_bigrams"] = QuerySpec(
     _t(X.heavy_hitter_bigrams),
@@ -3340,7 +3365,7 @@ REGISTRY["mixture_sample_assign"] = QuerySpec(
     # doc_id draw — bit-identical in both engines, so the oracle
     # re-derives every copy count.
     _t(P.mixture_sample_assign),
-    """WITH counts AS (
+    f"""WITH counts AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
 staged AS (
   SELECT source, n_docs,
@@ -3353,7 +3378,7 @@ rates AS (
   FROM staged),
 drawn AS (
   SELECT doc_id, d.source, boost,
-    CAST(('0x' || substr(sha256('mix|' || doc_id), 1, 8))::BIGINT % 1000000000
+    CAST({_sha_int_sql("'mix|' || doc_id")} % 1000000000
          AS DOUBLE) / 1000000000.0 AS u
   FROM documents d JOIN rates USING (source))
 SELECT doc_id, source, boost,
@@ -3367,26 +3392,17 @@ FROM drawn""",
 
 
 _QUALITY_WEIGHT_SQL = (
-    "((('0x' || substr(sha256('qw|' || "
-    "(('0x' || substr(sha256('qf|' || x), 1, 8))::BIGINT % 4096)"
-    "), 1, 8))::BIGINT % 17) - 8)"
+    "(("
+    + _sha_int_sql("'qw|' || (" + _sha_int_sql("'qf|' || x") + " % 4096)")
+    + " % 17) - 8)"
 )
 
 REGISTRY["quality_linear_score"] = QuerySpec(
     # Hashed-feature linear classifier: integer bucket weights are a
     # pure sha256 function, so the oracle re-derives every logit.
     _t(X.quality_linear_score),
-    rf"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
-fl AS (
-  SELECT doc_id,
-    list_concat(
-      ts,
-      list_transform(generate_series(1, len(ts) - 1),
-                     i -> ts[i] || ' ' || ts[i + 1])) AS feats
-  FROM tl),
+    f"""WITH tl AS (SELECT doc_id, {_tokens_sql()} AS ts FROM documents),
+fl AS (SELECT doc_id, list_concat(ts, {_bigrams_sql('ts')}) AS feats FROM tl),
 scored AS (
   SELECT doc_id,
     cast(len(feats) AS BIGINT) AS n_feats,
@@ -3422,13 +3438,11 @@ batch AS (SELECT doc_id, h FROM docs, s WHERE doc_id >= t0),
 ks AS (SELECT unnest([{", ".join(str(i) for i in range(D.BLOOM_HASHES))}]) AS i),
 idx AS (
   SELECT DISTINCT
-    ('0x' || substr(sha256('bloom' || i || '|' || h), 1, 8))::BIGINT
-      % {D.BLOOM_BITS} AS bit
+    {_sha_int_sql("'bloom' || i || '|' || h")} % {D.BLOOM_BITS} AS bit
   FROM existing CROSS JOIN ks),
 probes AS (
   SELECT doc_id, h,
-    ('0x' || substr(sha256('bloom' || i || '|' || h), 1, 8))::BIGINT
-      % {D.BLOOM_BITS} AS bit
+    {_sha_int_sql("'bloom' || i || '|' || h")} % {D.BLOOM_BITS} AS bit
   FROM batch CROSS JOIN ks),
 hits AS (
   SELECT p.doc_id, p.h, count(idx.bit) AS n_set
@@ -3447,16 +3461,13 @@ FROM hits LEFT JOIN seen ON hits.h = seen.h""",
 )
 
 
-REGISTRY["bigram_surprisal_scores"] = QuerySpec(
-    _t(X.bigram_surprisal_scores),
-    r"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
+#: The add-one bigram LM per document — ``bigram_surprisal_scores``'s
+#: oracle, and the scoring half of ``ccnet_perplexity_buckets``.
+_CCNET_DOC_SURPRISAL = f"""tl AS (SELECT doc_id, {_tokens_sql()} AS ts FROM documents),
 pairs AS (
   SELECT doc_id,
     unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> {'w1': ts[i], 'w2': ts[i+1]})) AS p
+                          i -> {{'w1': ts[i], 'w2': ts[i+1]}})) AS p
   FROM tl WHERE len(ts) >= 2),
 tf AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2, count(*) AS c
        FROM pairs GROUP BY doc_id, p.w1, p.w2),
@@ -3471,10 +3482,16 @@ scored AS (
   SELECT tf.doc_id, tf.c,
     -cast(floor(ln(cast(c_bigram + 1 AS DOUBLE) / (c_start + v)) * 1e6)
           AS BIGINT) AS s_q
-  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab)
-SELECT doc_id, cast(sum(c) AS BIGINT) AS n_bigrams,
-  cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
-FROM scored GROUP BY doc_id""",
+  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab),
+doc AS (
+  SELECT doc_id, cast(sum(c) AS BIGINT) AS n_bigrams,
+    cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
+  FROM scored GROUP BY doc_id)"""
+
+REGISTRY["bigram_surprisal_scores"] = QuerySpec(
+    _t(X.bigram_surprisal_scores),
+    f"""WITH {_CCNET_DOC_SURPRISAL}
+SELECT doc_id, n_bigrams, avg_surprisal FROM doc""",
     ("text", "quality", "language-model"),
 )
 
@@ -3495,8 +3512,7 @@ base AS (
   SELECT count(*) AS n_docs,
     count(DISTINCT source) AS n_sources,
     count(DISTINCT lang) AS n_langs,
-    cast(sum(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             x -> x != ''))) AS BIGINT) AS total_tokens,
+    cast(sum(len({_tokens_sql()})) AS BIGINT) AS total_tokens,
     cast(sum(length(text)) AS BIGINT) AS total_chars,
     cast(min(length(text)) AS BIGINT) AS min_chars,
     cast(max(length(text)) AS BIGINT) AS max_chars
@@ -3518,10 +3534,7 @@ FROM base, dup, nd, ic""",
 
 REGISTRY["doc_chunk_windows"] = QuerySpec(
     _t(X.doc_chunk_windows),
-    rf"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
+    f"""WITH tl AS (SELECT doc_id, {_tokens_sql()} AS ts FROM documents),
 sized AS (
   SELECT doc_id, ts, len(ts) AS n,
     CASE WHEN len(ts) = 0 THEN 0
@@ -3590,12 +3603,11 @@ WHERE (p.lat - slat) * (p.lat - slat) + (p.lon - slon) * (p.lon - slon)
 
 REGISTRY["dedup_exact_normalized"] = QuerySpec(
     _t(D.dedup_exact_normalized),
-    r"""SELECT sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-    AS content_hash,
+    f"""SELECT sha256({_norm_text_sql()}) AS content_hash,
   min(doc_id) AS keep_doc_id, count(*) AS n_copies,
   count(DISTINCT text) AS n_raw_variants
 FROM documents
-GROUP BY sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))""",
+GROUP BY content_hash""",
     ("dedup", "normalization"),
 )
 
@@ -3646,8 +3658,7 @@ norm AS (
   SELECT count(*) AS n FROM (
     SELECT doc_id FROM (
       SELECT doc_id,
-        count(*) OVER (PARTITION BY
-          sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) AS n
+        count(*) OVER (PARTITION BY sha256({_norm_text_sql()})) AS n
       FROM documents) WHERE n > 1)),
 jd AS (SELECT count(*) AS n FROM
   (SELECT doc_a AS d FROM jp UNION SELECT doc_b FROM jp)),
@@ -3686,11 +3697,7 @@ REGISTRY["label_top_terms"] = QuerySpec(
     rf"""WITH lab AS (
   SELECT d.doc_id, e.label, d.text
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
-toks AS (
-  SELECT label,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM lab),
+toks AS (SELECT label, unnest({_tokens_sql()}) AS token FROM lab),
 lab_tf AS (SELECT label, token, count(*) AS tf FROM toks GROUP BY label, token),
 lab_n AS (SELECT label, cast(sum(tf) AS BIGINT) AS n_label
           FROM lab_tf GROUP BY label),
@@ -3882,11 +3889,8 @@ FROM cells JOIN mx USING (event_type) JOIN my USING (dow), tot""",
 
 REGISTRY["source_token_entropy"] = QuerySpec(
     _t(X.source_token_entropy),
-    rf"""WITH toks AS (
-  SELECT source,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
+    f"""WITH toks AS (
+  SELECT source, unnest({_tokens_sql()}) AS token FROM documents),
 tf AS (SELECT source, token, count(*) AS n_t FROM toks GROUP BY source, token),
 per AS (
   SELECT source, token, n_t,
@@ -3912,16 +3916,11 @@ FROM agg""",
 
 REGISTRY["vocab_growth_curve"] = QuerySpec(
     _t(X.vocab_growth_curve),
-    rf"""WITH toks AS (
-  SELECT doc_id,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
+    f"""WITH {_TOKEN_CTE},
 first_seen AS (SELECT token, min(doc_id) AS first_doc FROM toks GROUP BY token),
 deciled AS (
   SELECT doc_id, ntile(10) OVER (ORDER BY doc_id) AS decile,
-    len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != ''))
-      AS n_toks
+    len({_tokens_sql()}) AS n_toks
   FROM documents),
 bounds AS (
   SELECT decile, max(doc_id) AS max_doc, count(*) AS n_docs,
@@ -3984,14 +3983,10 @@ REGISTRY["tpch_q6_shared_sql"].oracle = REGISTRY["tpch_q6_forecast_revenue"].ora
 
 REGISTRY["tokenizer_fertility_by_lang"] = QuerySpec(
     _t(X.tokenizer_fertility_by_lang),
-    r"""WITH per_doc AS (
+    f"""WITH per_doc AS (
   SELECT lang, length(text) AS n_chars,
-    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                    x -> x != '')) AS n_words,
-    len(list_filter(
-      regexp_extract_all(text,
-        '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+'),
-      x -> NOT regexp_matches(x, '^\s+$'))) AS n_bpe
+    len({_tokens_sql()}) AS n_words,
+    {_bpe_count_sql()} AS n_bpe
   FROM documents)
 SELECT lang, count(*) AS n_docs,
   cast(sum(n_chars) AS BIGINT) AS total_chars,
@@ -4006,9 +4001,9 @@ FROM per_doc GROUP BY lang""",
 
 REGISTRY["global_shuffle_order"] = QuerySpec(
     _t(P.global_shuffle_order),
-    """WITH h AS (
+    f"""WITH h AS (
   SELECT doc_id,
-    ('0x' || substr(sha256('shuffle|r3|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int_sql("'shuffle|r3|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM documents),
 sharded AS (
@@ -4024,10 +4019,10 @@ FROM sharded""",
 
 REGISTRY["length_bucket_batches"] = QuerySpec(
     _t(P.length_bucket_batches),
-    """WITH laid AS (
+    f"""WITH laid AS (
   SELECT doc_id, n_chars,
     CAST(length(bin(n_chars)) - 1 AS INTEGER) AS len_bucket,
-    ('0x' || substr(sha256('lbb|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4
+    {_sha_int_sql("'lbb|' || cast(doc_id AS VARCHAR)")} % 4
       AS stream
   FROM documents),
 batched AS (
@@ -4053,7 +4048,7 @@ FROM per_batch GROUP BY len_bucket""",
 
 REGISTRY["curriculum_order"] = QuerySpec(
     _t(P.curriculum_order),
-    """WITH ranked AS (
+    f"""WITH ranked AS (
   SELECT doc_id,
     row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS rn,
     count(*) OVER () AS n
@@ -4061,7 +4056,7 @@ REGISTRY["curriculum_order"] = QuerySpec(
 banded AS (
   SELECT doc_id,
     CAST((rn * 8) // n AS INTEGER) AS band,
-    ('0x' || substr(sha256('curr|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int_sql("'curr|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM ranked)
 SELECT doc_id, band,
@@ -4076,7 +4071,7 @@ FROM banded""",
 
 REGISTRY["epoch_stream_order"] = QuerySpec(
     _t(P.epoch_stream_order),
-    """WITH counts AS (
+    f"""WITH counts AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
 staged AS (
   SELECT source, n_docs,
@@ -4090,7 +4085,7 @@ rates AS (
 drawn AS (
   SELECT doc_id,
     CAST(floor(boost) + (CASE WHEN
-      CAST(('0x' || substr(sha256('mix|' || doc_id), 1, 8))::BIGINT % 1000000000
+      CAST({_sha_int_sql("'mix|' || doc_id")} % 1000000000
            AS DOUBLE) / 1000000000.0 < boost - floor(boost) THEN 1 ELSE 0 END)
       AS BIGINT) AS n_copies
   FROM documents d JOIN rates USING (source)),
@@ -4099,9 +4094,8 @@ expanded AS (
   FROM drawn WHERE n_copies > 0),
 keyed AS (
   SELECT doc_id, CAST(copy AS INTEGER) AS copy,
-    ('0x' || substr(sha256(
-       'epoch|' || cast(copy AS VARCHAR) || '|' || cast(doc_id AS VARCHAR)
-     ), 1, 8))::BIGINT AS _h
+    {_sha_int_sql("'epoch|' || cast(copy AS VARCHAR) || '|' || cast(doc_id AS VARCHAR)")}
+      AS _h
   FROM expanded)
 SELECT doc_id, copy,
   CAST((_h * 16) // 4294967296 AS INTEGER) AS shard,
@@ -4114,9 +4108,9 @@ FROM keyed""",
 
 REGISTRY["stratified_sample"] = QuerySpec(
     _t(P.stratified_sample),
-    """WITH h AS (
+    f"""WITH h AS (
   SELECT doc_id, source,
-    ('0x' || substr(sha256('strat|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int_sql("'strat|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM documents),
 ranked AS (
@@ -4131,9 +4125,9 @@ SELECT source, sample_rank, doc_id FROM ranked WHERE sample_rank <= 10""",
 
 REGISTRY["gopher_quality_flags"] = QuerySpec(
     _t(X.gopher_quality_flags),
-    r"""WITH d AS (
+    f"""WITH d AS (
   SELECT source,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts,
+    {_tokens_sql()} AS ts,
     length(text) - length(replace(text, '#', '')) AS hash_chars,
     (length(text) - length(replace(text, '...', ''))) // 3 AS ell
   FROM documents),
@@ -4167,34 +4161,6 @@ FROM flags GROUP BY source""",
     ("text", "quality", "curation", "gopher"),
 )
 
-_CCNET_DOC_SURPRISAL = r"""tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
-pairs AS (
-  SELECT doc_id,
-    unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> {'w1': ts[i], 'w2': ts[i+1]})) AS p
-  FROM tl WHERE len(ts) >= 2),
-tf AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2, count(*) AS c
-       FROM pairs GROUP BY doc_id, p.w1, p.w2),
-bg AS (SELECT w1, w2, cast(sum(c) AS BIGINT) AS c_bigram
-       FROM tf GROUP BY w1, w2),
-starts AS (SELECT w1, cast(sum(c_bigram) AS BIGINT) AS c_start
-           FROM bg GROUP BY w1),
-vocab AS (
-  SELECT count(DISTINCT token) AS v FROM (
-    SELECT unnest(ts) AS token FROM tl)),
-scored AS (
-  SELECT tf.doc_id, tf.c,
-    -cast(floor(ln(cast(c_bigram + 1 AS DOUBLE) / (c_start + v)) * 1e6)
-          AS BIGINT) AS s_q
-  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab),
-doc AS (
-  SELECT doc_id,
-    cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
-  FROM scored GROUP BY doc_id)"""
-
 REGISTRY["ccnet_perplexity_buckets"] = QuerySpec(
     _t(X.ccnet_perplexity_buckets),
     f"""WITH {_CCNET_DOC_SURPRISAL},
@@ -4221,22 +4187,16 @@ FROM sd JOIN cuts USING (lang)""",
     ("text", "quality", "language-model", "ccnet", "histogram-quantile"),
 )
 
-_TOKENS_CTE = r"""tl AS (
-  SELECT doc_id, lang, source,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents)"""
+_TOKENS_CTE = f"""tl AS (
+  SELECT doc_id, lang, source, {_tokens_sql()} AS ts FROM documents)"""
 
 REGISTRY["dsir_importance_weights"] = QuerySpec(
     _t(X.dsir_importance_weights),
     f"""WITH {_TOKENS_CTE},
 bigrams AS (
-  SELECT doc_id, lang,
-    unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> ts[i] || ' ' || ts[i+1])) AS bigram
-  FROM tl WHERE len(ts) >= 2),
+  SELECT doc_id, lang, unnest({_bigrams_sql('ts')}) AS bigram FROM tl),
 dc AS (
-  SELECT doc_id,
-    ('0x' || substr(sha256(bigram), 1, 8))::BIGINT % 4096 AS bucket,
+  SELECT doc_id, {_sha_int_sql('bigram')} % 4096 AS bucket,
     count(*) AS c, max(lang) AS lang
   FROM bigrams GROUP BY 1, 2),
 raw AS (SELECT bucket, cast(sum(c) AS BIGINT) AS c_raw FROM dc GROUP BY bucket),
@@ -4260,10 +4220,8 @@ GROUP BY doc_id""",
 
 REGISTRY["zipf_slope_fit"] = QuerySpec(
     _t(X.zipf_slope_fit),
-    r"""WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS token
-  FROM documents),
+    f"""WITH tok AS (
+  SELECT unnest({_tokens_sql()}) AS token FROM documents),
 counts AS (SELECT token, count(*) AS freq FROM tok GROUP BY token),
 ranked AS (
   SELECT freq, row_number() OVER (ORDER BY freq DESC, token ASC) AS rank
@@ -4299,10 +4257,8 @@ FROM sums""",
 
 REGISTRY["bpe_first_merges"] = QuerySpec(
     _t(X.bpe_first_merges),
-    r"""WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS word
-  FROM documents),
+    f"""WITH tok AS (
+  SELECT unnest({_tokens_sql()}) AS word FROM documents),
 words AS (SELECT word, count(*) AS wc FROM tok GROUP BY word),
 pairs AS (
   SELECT wc, unnest(list_transform(generate_series(1, length(word) - 1),
@@ -4325,9 +4281,8 @@ counts AS (
   FROM tl GROUP BY source),
 capped AS (
   SELECT source, n_tokens,
-    ('0x' || substr(sha256(source), 1, 8))::BIGINT % 3 + 1 AS cap_mult,
-    (('0x' || substr(sha256(source), 1, 8))::BIGINT % 3 + 1) * n_tokens
-      AS cap_tokens
+    {_sha_int_sql('source')} % 3 + 1 AS cap_mult,
+    ({_sha_int_sql('source')} % 3 + 1) * n_tokens AS cap_tokens
   FROM counts),
 staged AS (
   SELECT *,
@@ -4372,11 +4327,8 @@ FROM alloc""",
 
 REGISTRY["source_divergence_matrix"] = QuerySpec(
     _t(X.source_divergence_matrix),
-    r"""WITH tl AS (
-  SELECT source,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
+    f"""WITH tl AS (
+  SELECT source, unnest({_tokens_sql()}) AS token FROM documents),
 tc AS (SELECT source, token, count(*) AS n FROM tl GROUP BY 1, 2),
 totals AS (
   SELECT source, cast(sum(n) AS BIGINT) AS n_tok, count(*) AS v_src
@@ -4482,7 +4434,7 @@ REGISTRY["quality_gate_agreement"] = QuerySpec(
 qs AS ({REGISTRY["quality_linear_score"].oracle}),
 gdoc AS (
   SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ts,
+    {_tokens_sql()} AS ts,
     length(text) - length(replace(text, '#', '')) AS hash_chars,
     (length(text) - length(replace(text, '...', ''))) // 3 AS ell
   FROM documents),
@@ -4588,11 +4540,10 @@ FROM terms GROUP BY label_a, label_b""",
 
 REGISTRY["context_fill_efficiency"] = QuerySpec(
     _t(P.context_fill_efficiency),
-    r"""WITH lens AS (
+    f"""WITH lens AS (
   SELECT * FROM (VALUES (512), (2048), (8192)) AS l(context_len)),
 ntok AS (
-  SELECT cast(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              x -> x != '')) AS BIGINT) AS n_tok
+  SELECT cast(len({_tokens_sql()}) AS BIGINT) AS n_tok
   FROM documents),
 graded AS (
   SELECT context_len, n_tok,

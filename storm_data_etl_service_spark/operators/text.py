@@ -39,6 +39,14 @@ STOPWORD_PATTERN = r"\b(the|a|and|of|to|in|is|it)\b"
 FP_MOD = 2147483647
 
 
+def _strip_ws(text: Column) -> Column:
+    r"""Boundary whitespace removed.  Whitespace is Java's ``\s``,
+    ``[ \t\n\x0B\f\r]`` — the class every tokenizer twin (the DuckDB
+    oracle's ``registry._tokens_sql``, ``token_spans_udtf``) splits on;
+    ``trim`` would remove only the space character."""
+    return F.regexp_replace(text, r"^\s+|\s+$", "")
+
+
 def tokens_col(text: Column) -> Column:
     """Whitespace tokens with empties dropped ('' → 0 tokens).
 
@@ -53,7 +61,7 @@ def tokens_col(text: Column) -> Column:
     filter existed only to drop boundary empties), but the interpreted
     per-element lambda is gone: the old form cost ~0.7 s of a 1.2 s
     tokenize-and-explode bench query at sf0.1 on its own."""
-    stripped = F.regexp_replace(text, r"^\s+|\s+$", "")
+    stripped = _strip_ws(text)
     return F.when(stripped == "", F.array().cast("array<string>")).otherwise(
         F.split(stripped, r"\s+")
     )
@@ -76,10 +84,20 @@ def min_tokens_pred(text: Column, n: int) -> Column:
     ``stripped != ''`` for n = 1 and ``size(split) >= n`` for n >= 2."""
     if n <= 0:
         return F.lit(True)
-    stripped = F.regexp_replace(text, r"^\s+|\s+$", "")
+    stripped = _strip_ws(text)
     if n == 1:
         return stripped != ""
     return (stripped != "") & (F.size(F.split(stripped, r"\s+")) >= n)
+
+
+def token_count_col(text: Column) -> Column:
+    """Whitespace token count: ``size(tokens_col(text))``, and 0 for
+    null text.  After the boundary strip the ``\\s+`` split emits no
+    empty tokens, so its size is the count.  Pure codegen."""
+    stripped = _strip_ws(text)
+    return F.when(F.coalesce(stripped, F.lit("")) == "", F.lit(0)).otherwise(
+        F.size(F.split(stripped, r"\s+"))
+    )
 
 
 def text_stats(t) -> DataFrame:
@@ -143,16 +161,33 @@ def text_lang_id(t) -> DataFrame:
     )
 
 
+def sha_int(col: Column, start: int = 1, width: int = 8) -> Column:
+    """The reference's deterministic SHA-256 hashing read as an
+    integer: ``width`` hex chars of ``sha256(col)`` from ``start``, as
+    a BIGINT (``width <= 15`` keeps it non-negative).  DuckDB twin:
+    ``registry._sha_int_sql``."""
+    return F.conv(F.substring(F.sha2(col, 256), start, width), 16, 10).cast("long")
+
+
 def token_hash(tok: Column) -> Column:
-    """Portable 60-bit token hash: first 15 hex chars of sha256 as an
-    integer (DuckDB twin: ``('0x' || substr(sha256(t),1,15))::BIGINT``)."""
-    return F.conv(F.substring(F.sha2(tok, 256), 1, 15), 16, 10).cast("long")
+    """Portable 60-bit token hash: the first 15 hex chars of sha256."""
+    return sha_int(tok, width=15)
 
 
 #: BPE-ish pre-tokenizer regex (GPT-2 style, lookahead-free so it runs
-#: identically under Java regex and RE2): contraction suffixes,
-#: space-prefixed letter runs, digit runs, punctuation runs.
+#: under Java regex and RE2; the oracle widens RE2's ``\s`` to Java's):
+#: contraction suffixes, space-prefixed letter runs, digit runs,
+#: punctuation runs.
 BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+"
+
+
+def bpe_count_col(text: Column) -> Column:
+    """BPE-ish pre-token count: ``BPE_PATTERN`` matches that are not
+    whitespace-only.  DuckDB twin: ``registry._bpe_count_sql``."""
+    # idx=0: whole matches (Spark defaults to capture group 1, and the
+    # pattern's only group is non-capturing)
+    matches = F.regexp_extract_all(text, F.lit(BPE_PATTERN), 0)
+    return F.size(F.filter(matches, lambda x: ~x.rlike(r"^\s+$"))).cast("long")
 
 
 def text_token_count(t) -> DataFrame:
@@ -161,12 +196,7 @@ def text_token_count(t) -> DataFrame:
     budget estimate).  Whitespace-only matches are excluded from the
     BPE count."""
     ws = F.size(F.col("_toks")).cast("long")
-    # idx=0: whole matches (Spark defaults to capture group 1, and the
-    # pattern's only group is non-capturing)
-    bpe_matches = F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0)
-    bpe = F.size(
-        F.filter(bpe_matches, lambda x: ~x.rlike(r"^\s+$"))
-    ).cast("long")
+    bpe = bpe_count_col(F.col("text"))
     return (
         t["documents"]
         .withColumn("_toks", tokens_col(F.col("text")))
@@ -358,11 +388,7 @@ def cms_token_frequencies(t, top_n: int = 20) -> DataFrame:
     tf = toks.groupBy("token").agg(F.count("*").alias("exact_n"))
 
     def cell(r: int) -> Column:
-        h = F.conv(
-            F.substring(F.sha2(F.concat(F.lit(f"cms{r}|"), F.col("token")), 256), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        h = sha_int(F.concat(F.lit(f"cms{r}|"), F.col("token")))
         return F.struct(F.lit(r).cast("int").alias("r"), (h % CMS_WIDTH).alias("c"))
 
     cells = tf.select(
@@ -445,12 +471,18 @@ def token_spans_udtf(spark, t) -> DataFrame:
     (``ArrowEvalPythonUDTF``, not row-pickled ``BatchEvalPythonUDTF``).
     Runs distributed: the UDTF maps over partitions like any
     projection; no shuffle."""
+    import re
+
     from pyspark.sql.functions import udtf
+
+    # runs of non-whitespace under Java's \s, the class tokens_col
+    # splits on (str.split() would also split on \xa0, \x1c-\x1f, \x85)
+    token_re = re.compile(r"[^ \t\n\x0B\f\r]+")
 
     @udtf(returnType="pos int, token string, token_len int", useArrow=True)
     class TokenSpans:
         def eval(self, text: str):
-            for i, tok in enumerate((text or "").split(), 1):
+            for i, tok in enumerate(token_re.findall(text or ""), 1):
                 yield i, tok, len(tok)
 
     spark.udtf.register("token_spans", TokenSpans)
@@ -528,22 +560,15 @@ def bm25_doc_ranking(t, terms=BM25_QUERY_TERMS) -> DataFrame:
     explode→groupBy(doc_id, token) subtree, so the plan tokenized and
     aggregated the full corpus 4× (SQL-tab: four 270 k-row Generates,
     the tf hash builds costing 1.6–9.6 s of task time at sf0.1).  Now:
-    dl ≡ size(tokens) is computed as a pure-codegen scan projection
-    (``trim != '' ? size(split(trim, \s+)) : 0`` — after trim the split
-    emits no boundary empties, so this equals the interpreted-HOF token
-    count exactly; docs with no tokens get dl = 0 where they previously
+    dl ≡ size(tokens) is ``token_count_col``, a pure-codegen scan
+    projection (docs with no tokens get dl = 0 where they previously
     had no dl row, which is value-identical in both uses: they can never
     match a query term, and they add 0 to tot_dl), carried THROUGH the
     explode so no doc_id join is needed; df for the query terms is
     counted from qtf itself (# of (doc, term) rows per term — the same
     number the full-vocabulary df table gave after its isin filter);
     and tot_dl/n_docs fold into one map-only aggregate over the scan."""
-    _stripped = F.regexp_replace(F.col("text"), r"^\s+|\s+$", "")
-    dl_col = (
-        F.when(F.coalesce(_stripped, F.lit("")) == "", F.lit(0))
-        .otherwise(F.size(F.split(_stripped, r"\s+")))
-        .cast("bigint")
-    )
+    dl_col = token_count_col(F.col("text")).cast("bigint")
     base = t["documents"].select("doc_id", dl_col.alias("dl"), "text")
     tot = base.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("tot_dl")
@@ -666,15 +691,10 @@ def heavy_hitter_bigrams(t) -> DataFrame:
     )
     candidates = bigrams.mapInPandas(_mg_candidates, schema="token string").distinct()
     # n_total ≡ Σ_doc max(n_tokens − 1, 0): counting bigram INSTANCES
-    # needs no explode at all — a pure-codegen scan projection (the
-    # bm25 dl recipe: after trim the \s+ split emits no boundary
-    # empties, so its size equals the HOF token count) summed map-only.
-    # This removes the third Generate branch (265 k rows re-tokenized
-    # and re-exploded just to be counted) from the plan.
-    _stripped = F.regexp_replace(F.col("text"), r"^\s+|\s+$", "")
-    n_toks = F.when(F.coalesce(_stripped, F.lit("")) == "", F.lit(0)).otherwise(
-        F.size(F.split(_stripped, r"\s+"))
-    )
+    # needs no explode at all — the pure-codegen token count summed
+    # map-only.  This removes the third Generate branch (265 k rows
+    # re-tokenized and re-exploded just to be counted) from the plan.
+    n_toks = token_count_col(F.col("text"))
     total = t["documents"].agg(
         F.sum(F.greatest(n_toks - 1, F.lit(0)).cast("bigint")).alias("n_total")
     )
@@ -1029,14 +1049,11 @@ def tokenizer_fertility_by_lang(t) -> DataFrame:
 
     Exact integer totals per language, two double divisions at the
     end; one scan, one tiny groupBy."""
-    bpe_matches = F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0)
     per_doc = t["documents"].select(
         "lang",
         F.length("text").cast("long").alias("n_chars"),
         F.size(tokens_col(F.col("text"))).cast("long").alias("n_words"),
-        F.size(
-            F.filter(bpe_matches, lambda x: ~x.rlike(r"^\s+$"))
-        ).cast("long").alias("n_bpe"),
+        bpe_count_col(F.col("text")).alias("n_bpe"),
     )
     return (
         per_doc.groupBy("lang")
@@ -1108,21 +1125,9 @@ def _linear_gate_exprs() -> tuple[Column, Column, Column, Column]:
     Gopher rules in ONE projection instead of two scans + a join)."""
 
     def weight(x: Column) -> Column:
-        bucket = (
-            F.conv(
-                F.substring(F.sha2(F.concat(F.lit("qf|"), x), 256), 1, 8), 16, 10
-            ).cast("long")
-            % QUALITY_BUCKETS
-        )
+        bucket = sha_int(F.concat(F.lit("qf|"), x)) % QUALITY_BUCKETS
         return (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("qw|"), bucket.cast("string")), 256), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % QUALITY_WEIGHT_SPAN
+            sha_int(F.concat(F.lit("qw|"), bucket.cast("string"))) % QUALITY_WEIGHT_SPAN
         ) - (QUALITY_WEIGHT_SPAN // 2)
 
     n_feats = F.size("_feats").cast("long")
@@ -1354,24 +1359,12 @@ def dsir_importance_weights(t) -> DataFrame:
     shuffle of 4096 rows, one per-doc agg.
     """
     docs = t["documents"].withColumn("_toks", tokens_col(F.col("text")))
-    m = F.size("_toks") - 1
     pairs = docs.select(
         "doc_id",
         F.col("lang"),
-        F.explode(
-            F.when(
-                F.size("_toks") >= 2,
-                F.zip_with(
-                    F.slice(F.col("_toks"), 1, m),
-                    F.slice(F.col("_toks"), 2, m),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bigram"),
+        F.explode(bigrams_col(F.col("_toks"))).alias("bigram"),
     )
-    bucket = F.conv(F.substring(F.sha2(F.col("bigram"), 256), 1, 8), 16, 10).cast(
-        "long"
-    ) % F.lit(DSIR_BUCKETS)
+    bucket = sha_int(F.col("bigram")) % F.lit(DSIR_BUCKETS)
     feats = pairs.select(
         "doc_id",
         "lang",

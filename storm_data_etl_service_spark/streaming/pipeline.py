@@ -288,7 +288,10 @@ def stop_gracefully(query, timeout_ms: int = 10_000) -> bool:
 
 
 def parquet_sink(out_dir: str):
-    """Simple exactly-once-per-batch parquet sink for tests/batch jobs."""
+    """Simple appending parquet sink for tests/batch jobs.  At-least-once:
+    a checkpoint retry re-appends its batch, the reference's contract —
+    the deterministic SHA-256 ``event_id`` lets consumers drop the
+    replayed rows by key."""
 
     def write(df: DataFrame, batch_id: int) -> None:
         flatten(df).write.mode("append").parquet(out_dir)
@@ -310,6 +313,27 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def _write_batch_state(df: DataFrame, root: str, batch_id: int) -> None:
+    """Write one micro-batch's state as ``<root>/batch_id=N``, with
+    overwrite: a checkpoint retry rewrites its own partition instead of
+    appending a second copy.  Pairs with ``_earlier_batch_state``."""
+    df.write.mode("overwrite").parquet(f"{root}/batch_id={batch_id}")
+
+
+def _earlier_batch_state(spark: SparkSession, root: str, batch_id: int):
+    """The state written by batches before ``batch_id`` (None before the
+    first write).  Reading only ``batch_id < N`` makes a replayed batch
+    probe exactly its pre-batch state, never the rows it wrote itself
+    on the failed attempt.  The read is gated on an explicit
+    filesystem existence check (Hadoop FS, so any supported scheme
+    works), NOT a blanket except: a corrupt or transiently-unreadable
+    state raises and fails the batch, which the streaming checkpoint
+    then retries — silently probing nothing is the one wrong outcome."""
+    if not _path_exists(spark, root):
+        return None
+    return spark.read.parquet(root).filter(F.col("batch_id") < batch_id)
+
+
 def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
     """foreachBatch kernel for STREAMING corpus dedup against a
     persisted LSH index — the production loop around
@@ -323,21 +347,21 @@ def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
          matches (matched_doc_id < doc_id) — the same contract as
          ``dedup_incremental_minhash``, so a duplicate pair arriving
          inside one micro-batch is still caught;
-      3. append matches to ``matches_dir`` and the batch's own band
+      3. write matches to ``matches_dir`` and the batch's own band
          keys to ``index_dir`` — so later batches (and later runs:
          the index is durable) dedup against everything before them.
 
-    The index read is gated on an explicit filesystem existence check
-    (Hadoop FS, so any supported scheme works), NOT a blanket except:
-    a corrupt or transiently-unreadable index raises and fails the
-    batch, which the streaming checkpoint then retries — silently
-    dropping that batch's matches is the one wrong outcome.
-
     At 100 TB the index is a bucketed table on (band, key); per-batch
-    cost scales with the batch, never the corpus.  Exactly-once comes
-    from the streaming checkpoint (reprocessed batches re-derive the
-    same deterministic band keys; downstream consumers drop duplicate
-    (doc_id, matched_doc_id) rows by key).
+    cost scales with the batch, never the corpus.  Checkpoint retries
+    are REPLAY-STABLE, by the rule ``bloom_gate_batch_fn`` uses: both
+    relations are written (overwrite) as ``batch_id=N`` partitions and
+    the probe reads only ``batch_id < N``, so a batch replayed after
+    its index write committed rewrites identical matches instead of
+    matching its own band keys.  On-disk layout: ``index_dir`` and
+    ``matches_dir`` hold one ``batch_id=N`` directory per batch (read
+    back with a ``batch_id`` column); an index written flat by the
+    earlier append-only kernel must be moved under ``batch_id=-1``
+    before it is resumed.
     """
     from pyspark.sql import functions as F
 
@@ -357,18 +381,18 @@ def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
                 .filter(F.col("matched_doc_id") < F.col("doc_id"))
                 .select("doc_id", "matched_doc_id")
             )
-            if _path_exists(spark, index_dir):
-                # cross-batch: anything already indexed is from an
-                # earlier batch — a valid partner regardless of id order
+            index = _earlier_batch_state(spark, index_dir, batch_id)
+            if index is not None:
+                # cross-batch: anything in an earlier batch's index is a
+                # valid partner regardless of id order
                 matches = matches.unionByName(
-                    spark.read.parquet(index_dir)
-                    .withColumnRenamed("doc_id", "matched_doc_id")
+                    index.withColumnRenamed("doc_id", "matched_doc_id")
                     .join(bands, ["band", "key"])
                     .filter(F.col("matched_doc_id") != F.col("doc_id"))
                     .select("doc_id", "matched_doc_id")
                 )
-            matches.distinct().write.mode("append").parquet(matches_dir)
-            bands.write.mode("append").parquet(index_dir)
+            _write_batch_state(matches.distinct(), matches_dir, batch_id)
+            _write_batch_state(bands, index_dir, batch_id)
         finally:
             bands.unpersist()
 
@@ -390,25 +414,22 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
       3. catch exact duplicates WITHIN the batch via a self-join on
          the content hash (``dup_of_in_batch`` = earliest partner),
          since the index only covers batches before this one;
-      4. write verdicts to a batch_id-keyed partition directory and
-         append the batch's distinct new bits to the index — later
-         batches (and later runs: the bits are durable) gate against
-         everything before them.
+      4. write verdicts and the batch's distinct bits, each to its
+         batch_id-keyed partition directory — later batches (and later
+         runs: the bits are durable) gate against everything before
+         them.
 
-    The index read is gated on a filesystem existence check, not a
-    blanket except (same rationale as ``incremental_dedup_batch_fn``:
-    a transiently-unreadable index must fail-and-retry the batch, not
-    silently pass everything as new).  State is O(m bits) forever —
-    the whole point versus the LSH index's per-document rows; at
-    100 TB the (bit) relation compacts to an m/8-byte bitmap merged
-    by OR and broadcast to executors.  Checkpoint retries are
-    REPLAY-STABLE on both relations: each writes (overwrite) its own
-    ``batch_id=N`` partition, and the probe reads only partitions
-    with ``batch_id < N`` — so a batch replayed after its bits commit
-    (verdict commit failed last time) still probes exactly the
-    pre-batch index and rewrites byte-identical verdicts, instead of
-    flipping its own first-seen docs to ``bloom_hit`` by seeing its
-    own bits.
+    State is O(m bits) forever — the whole point versus the LSH
+    index's per-document rows; at 100 TB the (bit) relation compacts
+    to an m/8-byte bitmap merged by OR and broadcast to executors.
+    Checkpoint retries are REPLAY-STABLE on both relations
+    (``_write_batch_state`` / ``_earlier_batch_state``): each writes
+    (overwrite) its own ``batch_id=N`` partition, and the probe reads
+    only partitions with ``batch_id < N`` — so a batch replayed after
+    its bits commit (verdict commit failed last time) still probes
+    exactly the pre-batch index and rewrites byte-identical verdicts,
+    instead of flipping its own first-seen docs to ``bloom_hit`` by
+    seeing its own bits.
     """
     from pyspark.sql import functions as F
 
@@ -426,16 +447,9 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
             probes = hashed.select(
                 "doc_id", F.explode(bloom_bit_positions(F.col("h"))).alias("bit")
             )
-            if _path_exists(spark, bits_dir):
-                # ONLY earlier batches' bits: a replayed batch must not
-                # probe against bits it appended itself last attempt
-                idx = (
-                    spark.read.parquet(bits_dir)
-                    .filter(F.col("batch_id") < batch_id)
-                    .select("bit")
-                    .distinct()
-                    .withColumn("_set", F.lit(1))
-                )
+            bits = _earlier_batch_state(spark, bits_dir, batch_id)
+            if bits is not None:
+                idx = bits.select("bit").distinct().withColumn("_set", F.lit(1))
                 n_set = (
                     probes.join(idx, "bit", "left")
                     .groupBy("doc_id")
@@ -451,7 +465,7 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
                 .groupBy("doc_id")
                 .agg(F.min("earlier_id").alias("dup_of_in_batch"))
             )
-            (
+            verdicts = (
                 hashed.join(n_set, "doc_id")
                 .join(within, "doc_id", "left")
                 .select(
@@ -459,12 +473,9 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
                     (F.col("n_set") == BLOOM_HASHES).alias("bloom_hit"),
                     "dup_of_in_batch",
                 )
-                .write.mode("overwrite")
-                .parquet(f"{verdicts_dir}/batch_id={batch_id}")
             )
-            probes.select("bit").distinct().write.mode("overwrite").parquet(
-                f"{bits_dir}/batch_id={batch_id}"
-            )
+            _write_batch_state(verdicts, verdicts_dir, batch_id)
+            _write_batch_state(probes.select("bit").distinct(), bits_dir, batch_id)
         finally:
             hashed.unpersist()
 

@@ -645,31 +645,78 @@ def test_dsir_doc_bucket_table_computed_once(spark, sf_dir):
     assert "split(" not in plan, plan[:1500]
 
 
+def _owners(path, lines):
+    """(file name, enclosing top-level function) of each 1-based line."""
+    import ast
+
+    defs = [
+        n for n in ast.parse(path.read_text()).body if isinstance(n, ast.FunctionDef)
+    ]
+    return {
+        (path.name, next((d.name for d in defs if d.lineno <= i <= d.end_lineno), None))
+        for i in lines
+    }
+
+
+def _sites(path, needle):
+    """``_owners`` of the lines of ``path`` that contain ``needle``."""
+    lines = path.read_text().splitlines()
+    return _owners(path, [i for i, ln in enumerate(lines, 1) if needle in ln])
+
+
 def test_operators_stage_through_one_primitive():
     """Multi-consumer relations are staged through ``operators.stage``
     only.  The one direct ``localCheckpoint(`` left outside it is the
     eager stage in ``neardup_components_sql``, which must finish the
     recursion before its raised row limit is restored."""
-    import ast
     from pathlib import Path
 
     import storm_data_etl_service_spark.operators as ops
 
     sites = set()
     for path in sorted(Path(ops.__file__).parent.glob("*.py")):
-        src = path.read_text()
-        defs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
-        for i, line in enumerate(src.splitlines(), start=1):
-            if "localCheckpoint(" not in line:
-                continue
-            owner = next(
-                (d.name for d in defs if d.lineno <= i <= d.end_lineno), None
-            )
-            sites.add((path.name, owner))
+        sites |= _sites(path, "localCheckpoint(")
     assert sites == {
         ("__init__.py", "stage"),
         ("graph.py", "neardup_components_sql"),
     }, sites
+
+
+def test_text_kernels_are_spelled_once():
+    """The whitespace tokenizer, its boundary strip and the sha256
+    hex-prefix integer are each spelled once per engine, inside their
+    builder — every other site calls it, so the Spark side and its
+    DuckDB oracle twin cannot drift apart."""
+    import ast
+    from pathlib import Path
+
+    import storm_data_etl_service_spark.operators as ops
+
+    root = Path(ops.__file__).parent
+    registry, text = root / "registry.py", root / "text.py"
+    assert _sites(registry, "regexp_split_to_array(") == {("registry.py", "_tokens_sql")}
+    assert _sites(registry, "('0x' || substr(sha256(") == {
+        ("registry.py", "_sha_int_sql")
+    }
+    assert _sites(text, 'r"^\\s+|\\s+$"') == {("text.py", "_strip_ws")}
+
+    def is_f(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+
+    hash_sites = set()
+    for path in sorted(root.glob("*.py")):
+        convs = [n for n in ast.walk(ast.parse(path.read_text())) if is_f(n, "conv")]
+        lines = [
+            c.lineno for c in convs if any(is_f(n, "sha2") for n in ast.walk(c))
+        ]
+        hash_sites |= _owners(path, lines)
+    assert hash_sites == {("text.py", "sha_int")}, hash_sites
 
 
 def test_stage_is_lazy(spark):

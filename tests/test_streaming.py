@@ -798,6 +798,35 @@ def test_streaming_incremental_dedup_matches_across_batches(spark, workdir):
         == {1, 2, 11, 12, 13}
 
 
+def test_incremental_dedup_replay_is_stable(spark, workdir):
+    """A checkpoint retry re-runs a batch after its index write
+    committed: the replay must rewrite the same matches, not match the
+    batch against its own band keys (which would flag the canonical
+    first copy as a duplicate of the later one)."""
+    from storm_data_etl_service_spark.streaming.pipeline import (
+        incremental_dedup_batch_fn,
+    )
+
+    text = "the storm report crossed three counties before the river crest"
+    kernel = incremental_dedup_batch_fn(
+        str(workdir / "lsh_index"), str(workdir / "matches")
+    )
+
+    def run(rows, batch_id):
+        kernel(spark.createDataFrame(rows, "doc_id long, text string"), batch_id)
+        return {
+            (r["doc_id"], r["matched_doc_id"])
+            for r in spark.read.parquet(str(workdir / "matches")).collect()
+        }
+
+    batch0 = [(1, text), (2, text), (3, "an unrelated note about hail size bins")]
+    first = run(batch0, 0)
+    assert first == {(2, 1)}
+    assert run(batch0, 0) == first  # the replay
+    # a later batch still probes batch 0's index
+    assert run([(11, text)], 1) == first | {(11, 1), (11, 2)}
+
+
 def test_late_rows_dropped_by_watermark_are_counted(spark, workdir):
     """A row older than the watermark must be dropped from a closed
     window AND show up in progress_state_report's late counter."""
