@@ -551,26 +551,48 @@ SELECT doc_id,
        ELSE list_reduce(hs, (acc, x) -> (acc * 131 + x) % 2147483647) END AS fingerprint
 FROM hashed"""
 
-_COSINE_SQL = """list_reduce(list_transform(generate_series(1, len({b})), i -> {a}[i]*{b}[i]), (x,y) -> x+y)
-   / (sqrt(list_reduce(list_transform(generate_series(1, len({a})), i -> {a}[i]*{a}[i]), (x,y) -> x+y))
-      * sqrt(list_reduce(list_transform(generate_series(1, len({b})), i -> {b}[i]*{b}[i]), (x,y) -> x+y)))"""
+def _fold_sql(n: str, term: str) -> str:
+    """Σ ``term`` over i = 1..``n`` as a sequential left fold: the one
+    DuckDB spelling of the dimension loop.  It adds in the same IEEE
+    order (acc ← acc + termᵢ) as the Spark ``F.aggregate`` folds and
+    the Arrow kernels' ``similarity._cosine_core``, so they agree bit
+    for bit."""
+    return f"list_reduce(list_transform(generate_series(1, {n}), i -> {term}), (x,y) -> x+y)"
 
-_ANN_TOPK_ORACLE = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+
+def _dot_sql(a: str, b: str) -> str:
+    """a·b over ``len(b)`` components — the twin of similarity._dot."""
+    return _fold_sql(f"len({b})", f"{a}[i]*{b}[i]")
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """The twin of similarity.cosine, bit-equal to it."""
+    return f"""{_dot_sql(a, b)}
+   / (sqrt({_dot_sql(a, a)})
+      * sqrt({_dot_sql(b, b)}))"""
+
+
+#: The embeddings as DOUBLE[] vectors: the ``e`` CTE every vector
+#: oracle starts from.
+_EMB_CTE = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
+_ANN_TOPK_ORACLE = f"""WITH {_EMB_CTE},
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
 p AS (
   SELECT query_id, vec_id,
-    {_COSINE_SQL.format(a='qv', b='v')} AS cosine
+    {_cosine_sql('qv', 'v')} AS cosine
   FROM q, e WHERE vec_id != query_id)
 SELECT query_id, vec_id, cosine, rk FROM (
   SELECT *, cast(row_number() OVER (PARTITION BY query_id
              ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk FROM p)
 WHERE rk <= 10"""
 
-_NEAR_DUP_ORACLE = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+_NEAR_DUP_ORACLE = f"""WITH {_EMB_CTE}
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-  {_COSINE_SQL.format(a='a.v', b='b.v')} AS cosine
+  {_cosine_sql('a.v', 'b.v')} AS cosine
 FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE {_COSINE_SQL.format(a='a.v', b='b.v')} >= {S.NEAR_DUP_COSINE}"""
+WHERE {_cosine_sql('a.v', 'b.v')} >= {S.NEAR_DUP_COSINE}"""
 
 
 def _bucket_sql(n_planes: int) -> str:
@@ -579,10 +601,7 @@ def _bucket_sql(n_planes: int) -> str:
     bits = []
     for p in range(n_planes):
         lits = ", ".join(repr(c) for c in plane_components(p))
-        proj = (
-            f"list_reduce(list_transform(generate_series(1, len(v)),"
-            f" i -> v[i] * ([{lits}]::DOUBLE[])[i]), (x,y) -> x+y)"
-        )
+        proj = _fold_sql("len(v)", f"v[i] * ([{lits}]::DOUBLE[])[i]")
         bits.append(f"(CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END)")
     return " || ".join(bits)
 
@@ -594,7 +613,7 @@ def _lsh_buckets_oracle() -> str:
     (``_auto_bits_cte``) — fixed widths make bucket population ∝ n."""
     from storm_data_etl_service_spark.operators.similarity import MAX_LSH_PLANES
 
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
 fb AS (SELECT vec_id, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e)
 SELECT vec_id, substr(fullpfx, 1, bits) AS bucket FROM fb, nb"""
@@ -609,7 +628,7 @@ def _lsh_search_oracle() -> str:
         N_QUERIES,
     )
 
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
 fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e),
 bucketed AS (SELECT vec_id, v, substr(fullpfx, 1, bits) AS pfx FROM fb, nb),
@@ -626,23 +645,12 @@ q AS (
         FROM q0, nb)),
 cands AS (
   SELECT query_id, b.vec_id,
-    {_COSINE_SQL.format(a='qv', b='b.v')} AS cosine
+    {_cosine_sql('qv', 'b.v')} AS cosine
   FROM q JOIN bucketed b ON b.pfx = q.probe_pfx AND b.vec_id != q.query_id)
 SELECT query_id, vec_id, cosine, rk FROM (
   SELECT *, cast(row_number() OVER (PARTITION BY query_id
              ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk FROM cands)
 WHERE rk <= 5"""
-
-
-_SQNORM_SQL = (
-    "list_reduce(list_transform(generate_series(1, len({v})),"
-    " i -> {v}[i]*{v}[i]), (x,y) -> x+y)"
-)
-
-_DOT_SQL = (
-    "list_reduce(list_transform(generate_series(1, len({b})),"
-    " i -> {a}[i]*{b}[i]), (x,y) -> x+y)"
-)
 
 
 def _auto_bits_cte() -> str:
@@ -688,17 +696,17 @@ def _knn_graph_oracle() -> str:
         MAX_LSH_PLANES,
     )
 
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
 fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx,
-         sqrt({_SQNORM_SQL.format(v='v')}) AS nrm
+         sqrt({_dot_sql('v', 'v')}) AS nrm
        FROM e),
 bucketed AS (SELECT vec_id, v, nrm, substr(fullpfx, 1, bits) AS pfx
              FROM fb, nb),
 {_dyn_probe_cte('bucketed')},
 cands AS (
   SELECT src_id, b.vec_id AS dst_id,
-    {_DOT_SQL.format(a='qv', b='b.v')} / (qn * b.nrm) AS cosine
+    {_dot_sql('qv', 'b.v')} / (qn * b.nrm) AS cosine
   FROM q JOIN bucketed b ON b.pfx = q.probe_pfx AND b.vec_id != q.src_id)
 SELECT src_id, dst_id, cosine, rk FROM (
   SELECT *, cast(row_number() OVER (PARTITION BY src_id
@@ -713,12 +721,12 @@ def _semantic_contam_oracle() -> str:
         NEAR_DUP_COSINE,
     )
 
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
 s AS (SELECT cast(floor((max(vec_id) + 1) * {INCREMENTAL_SPLIT}) AS BIGINT)
         AS t0 FROM e),
 fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx,
-         sqrt({_SQNORM_SQL.format(v='v')}) AS nrm
+         sqrt({_dot_sql('v', 'v')}) AS nrm
        FROM e),
 bucketed AS (SELECT vec_id, v, nrm, substr(fullpfx, 1, bits) AS pfx
              FROM fb, nb),
@@ -727,7 +735,7 @@ ev AS (SELECT b.* FROM bucketed b, s WHERE vec_id >= t0),
 {_dyn_probe_cte('ev')},
 cands AS (
   SELECT src_id, t.vec_id AS dst_id,
-    {_DOT_SQL.format(a='qv', b='t.v')} / (qn * t.nrm) AS cosine
+    {_dot_sql('qv', 't.v')} / (qn * t.nrm) AS cosine
   FROM q JOIN train t ON t.pfx = q.probe_pfx),
 best AS (
   SELECT src_id, dst_id, cosine FROM (
@@ -742,10 +750,7 @@ FROM ev LEFT JOIN best ON best.src_id = ev.vec_id"""
 def _l2_sql(a: str, b: str, dim: int) -> str:
     """Squared L2 distance over ``dim`` components as a sequential left
     fold — the twin of similarity._l2sq, bit-equal to it."""
-    return (
-        f"list_reduce(list_transform(generate_series(1, {dim}),"
-        f" i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), (x,y) -> x+y)"
-    )
+    return _fold_sql(str(dim), f"({a}[i]-{b}[i])*({a}[i]-{b}[i])")
 
 
 def _lloyd_ctes(
@@ -822,7 +827,7 @@ def _semdedup_pairs_ctes(auto_k: bool = False) -> str:
         SEMDEDUP_TARGET_CELL,
     )
 
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
+    ctes = [_EMB_CTE]
     if auto_k:
         # ceil division is exact: n / 4096.0 is a power-of-two divide
         ctes.append(
@@ -834,7 +839,7 @@ def _semdedup_pairs_ctes(auto_k: bool = False) -> str:
         f"""pairs AS (
   SELECT cid, id_a, id_b, cos FROM (
     SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
-      {_COSINE_SQL.format(a='a.v', b='b.v')} AS cos
+      {_cosine_sql('a.v', 'b.v')} AS cos
     FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id)
   WHERE cos >= {NEAR_DUP_COSINE})"""
     )
@@ -1716,7 +1721,7 @@ def _ivf_oracle(auto_k: bool = False) -> str:
         TOPK,
     )
 
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
+    ctes = [_EMB_CTE]
     if auto_k:
         ctes += [
             f"kq AS (SELECT greatest({KMEANS_K}, least("
@@ -1744,7 +1749,7 @@ def _ivf_oracle(auto_k: bool = False) -> str:
         """cand AS (SELECT p.query_id, p.qv, a.vec_id, a.v
   FROM probes p JOIN af a ON p.cid = a.cid WHERE a.vec_id <> p.query_id)""",
         f"""scored AS (SELECT query_id, vec_id,
-  {_COSINE_SQL.format(a='qv', b='v')} AS cosine FROM cand)""",
+  {_cosine_sql('qv', 'v')} AS cosine FROM cand)""",
     ]
     joined = ",\n".join(ctes)
     return f"""WITH {joined}
@@ -1791,7 +1796,7 @@ def _pq_oracle() -> str:
         TOPK,
     )
 
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
+    ctes = [_EMB_CTE]
     for m in range(PQ_M):
         lo, hi = m * PQ_SUBDIM + 1, (m + 1) * PQ_SUBDIM
         ctes.append(
@@ -2793,7 +2798,7 @@ def _power_iteration_oracle() -> str:
     n = EMBEDDING_DIM
     v0 = "[" + ", ".join(["0.125"] * n) + "]"
     ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
+        _EMB_CTE,
         f"v0 AS (SELECT {v0}::DOUBLE[] AS l)",
     ]
     prev = "v0"
@@ -4477,11 +4482,9 @@ def _matryoshka_oracle() -> str:
         MAX_LSH_PLANES,
     )
 
-    cos_full = _COSINE_SQL.format(a="va", b="vb")
-    cos_d = _COSINE_SQL.format(
-        a="list_slice(va, 1, d)", b="list_slice(vb, 1, d)"
-    )
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    cos_full = _cosine_sql("va", "vb")
+    cos_d = _cosine_sql("list_slice(va, 1, d)", "list_slice(vb, 1, d)")
+    return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
 fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e),
 bk AS (SELECT vec_id, v, substr(fullpfx, 1, bits) AS bucket FROM fb, nb),

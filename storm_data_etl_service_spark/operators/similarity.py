@@ -126,12 +126,7 @@ def lsh_bucket_col(v: Column, bits: int) -> Column:
     characters are the k-plane key."""
     signs = []
     for p in range(bits):
-        plane = F.array(*[F.lit(c) for c in plane_components(p)])
-        proj = F.aggregate(
-            F.zip_with(v, plane, lambda x, c: x * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = _dot(v, F.array(*[F.lit(c) for c in plane_components(p)]))
         signs.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*signs)
 
@@ -769,15 +764,89 @@ def semdedup_auto_k(n_vectors: int, target_cell: int = SEMDEDUP_TARGET_CELL) -> 
 SEMDEDUP_CELL_BLOCK = 2048
 
 
+def _cosine_core():
+    """The one blocked-cosine core of the three Arrow pair kernels
+    (``_cell_pairs_kernel``, ``_bucket_topk_kernel``,
+    ``_matryoshka_bucket_kernel``), as a ``(stack, cosine_blocks)``
+    pair of closures.
+
+    ``stack(pdf)`` sorts a frame by vec_id and stacks its ``v`` column
+    as float64: ``(ids, V)``.  ``cosine_blocks(rows, cols, B, widths)``
+    yields ``(r0, c0, cos)`` for every B×B block of rows × cols (only
+    the upper block triangle when ``rows is cols``); ``cos`` holds one
+    cosine matrix per prefix width in ``widths`` (ascending; default
+    the full dim).  Vectorized ACROSS pairs with the exact per-pair
+    SEQUENTIAL fold of the Column-expression twin (``_dot``/``_norm``:
+    acc ← acc + xᵢyᵢ over i = 1..d, acc₀ = 0.0): the dim loop runs
+    outside, numpy broadcasts each step over the whole block, so every
+    scalar is produced by the same IEEE ops in the same order as
+    ``F.aggregate``/DuckDB ``list_reduce`` — bit-identical to the
+    oracle.  A shorter width's cosine is a snapshot of the same loop
+    (the fold over the first w elements is the prefix of the fold over
+    all d).  The B×B accumulator bounds the working set at B²·8 B.
+
+    A zero-norm vector raises as soon as it enters a computed pair,
+    i.e. has a partner with another vec_id (the ANSI Column twin raises
+    DIVIDE_BY_ZERO there; a silent numpy NaN would diverge from it and
+    from the oracle's NULL).  Alone, or probing only itself, it yields
+    no cosine and no error, like both twins.
+
+    Called by each kernel factory, so the kernel closure captures the
+    returned closures and cloudpickle ships them by value with it."""
+
+    def stack(pdf):
+        import numpy as np
+
+        ids = pdf["vec_id"].to_numpy()
+        order = np.argsort(ids)
+        return ids[order], np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+
+    def cosine_blocks(rows, cols, B, widths=None):
+        import numpy as np
+
+        (rid, R), (cid, C) = rows, cols
+        d = R.shape[1]
+        widths = (d,) if widths is None else widths
+
+        def norms(ids, X, partners):
+            acc, out = np.zeros(len(X)), {}
+            for i in range(d):
+                acc += X[:, i] * X[:, i]
+                if i + 1 in widths:
+                    bad = ids[acc == 0]
+                    bad = bad[(bad[:, None] != partners[None, :]).any(axis=1)]
+                    if bad.size:
+                        raise ValueError(
+                            f"zero-norm embedding(s) vec_id={bad[:5].tolist()} "
+                            f"over the first {i + 1} dims: cosine is undefined "
+                            "(ANSI twin raises DIVIDE_BY_ZERO)"
+                        )
+                    # a lone zero vector's only cosine is its own, never emitted
+                    out[i + 1] = np.sqrt(np.where(acc == 0, 1.0, acc))
+            return out
+
+        tri = rows is cols
+        nr = norms(rid, R, cid)
+        nc = nr if tri else norms(cid, C, rid)
+        for r0 in range(0, len(R), B):
+            for c0 in range(r0 if tri else 0, len(C), B):
+                dot = np.zeros((min(B, len(R) - r0), min(B, len(C) - c0)))
+                cos = []
+                for i in range(d):
+                    dot += R[r0 : r0 + B, i][:, None] * C[c0 : c0 + B, i][None, :]
+                    if i + 1 in nr:
+                        rn, cn = nr[i + 1][r0 : r0 + B], nc[i + 1][c0 : c0 + B]
+                        cos.append(dot / (rn[:, None] * cn[None, :]))
+                yield r0, c0, cos
+
+    return stack, cosine_blocks
+
+
 def _cell_pairs_kernel(threshold: float = None, block: int = None):
-    """Factory for the within-cell pair-cosine kernel: vectorized
-    ACROSS pairs with the exact per-pair SEQUENTIAL fold order of the
-    Column-expression twin (``_dot``/``_norm``: acc ← acc + xᵢyᵢ over
-    i = 1..d, acc₀ = 0.0): the dim loop runs outside, numpy broadcasts
-    each step over the whole block, so every scalar is produced by the
-    same IEEE ops in the same order as ``F.aggregate``/DuckDB
-    ``list_reduce`` — the kernel is bit-identical to the oracle, just
-    ~d-wide vectorized.
+    """Factory for the within-cell pair-cosine kernel: every
+    upper-triangle pair (id_a < id_b) of the cell with cosine ≥
+    ``threshold``, computed block by block in ``_cosine_core`` —
+    bit-identical to the Column-expression ``cosine()`` and the oracle.
 
     Replaces the pair self-join that materialized every candidate row
     with BOTH 64-dim vectors in the shuffle (32 M pairs ≈ tens of GB
@@ -787,50 +856,29 @@ def _cell_pairs_kernel(threshold: float = None, block: int = None):
     value — executors need no import path to this module."""
     thr = NEAR_DUP_COSINE if threshold is None else threshold
     B = SEMDEDUP_CELL_BLOCK if block is None else block
+    stack, cosine_blocks = _cosine_core()
 
     def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        m, d = V.shape
-        cid = int(pdf["cid"].iloc[0])
-        # sequential-fold squared norms: acc += x*x, dim order
-        nrm = np.zeros(m)
-        for i in range(d):
-            nrm += V[:, i] * V[:, i]
-        if not nrm.all():
-            # fail loudly like the ANSI Column twin (DIVIDE_BY_ZERO)
-            # instead of silently emitting NaN the oracle would drop
-            bad = ids[nrm == 0]
-            raise ValueError(
-                f"zero-norm embedding(s) vec_id={bad[:5].tolist()}: "
-                "cosine is undefined (ANSI twin raises DIVIDE_BY_ZERO)"
-            )
-        nrm = np.sqrt(nrm)
+        vecs = stack(pdf)
+        ids = vecs[0]
         out_a, out_b, out_c = [], [], []
-        for r0 in range(0, m, B):
-            r1 = min(r0 + B, m)
-            for c0 in range(r0, m, B):
-                c1 = min(c0 + B, m)
-                dot = np.zeros((r1 - r0, c1 - c0))
-                for i in range(d):
-                    dot += V[r0:r1, i][:, None] * V[c0:c1, i][None, :]
-                cos = dot / (nrm[r0:r1][:, None] * nrm[c0:c1][None, :])
-                ra, ca = np.nonzero(cos >= thr)
-                ga, gb = ra + r0, ca + c0
-                keep = ga < gb  # upper triangle: id_a < id_b after sort
-                out_a.append(ga[keep])
-                out_b.append(gb[keep])
-                out_c.append(cos[ra[keep], ca[keep]])
-        ga = np.concatenate(out_a) if out_a else np.array([], dtype=np.int64)
-        gb = np.concatenate(out_b) if out_b else np.array([], dtype=np.int64)
-        cs = np.concatenate(out_c) if out_c else np.array([], dtype=np.float64)
+        for r0, c0, (cos,) in cosine_blocks(vecs, vecs, B):
+            ra, ca = np.nonzero(cos >= thr)
+            ga, gb = ra + r0, ca + c0
+            keep = ga < gb  # upper triangle: id_a < id_b after sort
+            out_a.append(ga[keep])
+            out_b.append(gb[keep])
+            out_c.append(cos[ra[keep], ca[keep]])
         return pd.DataFrame(
-            {"cid": cid, "id_a": ids[ga], "id_b": ids[gb], "cos": cs}
+            {
+                "cid": int(pdf["cid"].iloc[0]),
+                "id_a": ids[np.concatenate(out_a)],
+                "id_b": ids[np.concatenate(out_b)],
+                "cos": np.concatenate(out_c),
+            }
         )
 
     return kernel
@@ -1069,101 +1117,67 @@ def knn_auto_bits(n: int) -> int:
 def _bucket_topk_kernel(k: int | None = None, block: int | None = None):
     """Factory for the per-bucket kNN partial kernel: for every
     prober routed to this bucket, cosine against all bucket members
-    and keep the local top-k by (cos desc, id asc).  Same
-    bit-exactness contract as ``_cell_pairs_kernel``: the dim loop
-    runs outside the numpy broadcast, so every scalar follows the
-    sequential fold order of the Column-expression ``cosine()`` and
-    DuckDB ``list_reduce`` — partials merge into the oracle's global
-    top-k exactly.  BOTH axes are blocked (probers AND members), so
-    the working set is ≤ B²·8 B regardless of bucket size: per
-    member-block top-k partials merge into the per-prober-block
-    top-k, which is exact because top-k of concatenated per-block
-    top-ks equals global top-k under the total (cos desc, id asc)
-    order.  Zero-norm vectors are rejected loudly (the Column twin
-    raises DIVIDE_BY_ZERO under ANSI mode for them, and the DuckDB
-    oracle would silently NULL-drop — a silent numpy NaN here would
-    diverge from both).  Closure-shipped via cloudpickle."""
+    (itself excluded) and keep the local top-k by (cos desc, id asc).
+    Cosines come from ``_cosine_core``, bit-identical to the
+    Column-expression ``cosine()`` and DuckDB ``list_reduce``, so
+    partials merge into the oracle's global top-k exactly.  BOTH axes
+    are blocked (probers AND members), so the working set is ≤ B²·8 B
+    regardless of bucket size: per member-block top-k partials merge
+    into the per-prober top-k, which is exact because top-k of
+    concatenated per-block top-ks equals global top-k under the total
+    (cos desc, id asc) order.  Closure-shipped via cloudpickle."""
     kk = KNN_K if k is None else k
     B = SEMDEDUP_CELL_BLOCK if block is None else block
+    stack, cosine_blocks = _cosine_core()
 
     def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "src_id": pd.Series([], dtype="int64"),
-                "dst_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-        mem = pdf[pdf["is_member"]]
-        prb = pdf[pdf["is_prober"]]
-        if mem.empty or prb.empty:
-            return empty
-        mids = mem["vec_id"].to_numpy()
-        order = np.argsort(mids)
-        mids = mids[order]
-        M = np.stack(mem["v"].to_numpy()[order]).astype(np.float64)
-        pids = prb["vec_id"].to_numpy()
-        P = np.stack(prb["v"].to_numpy()).astype(np.float64)
-        d = M.shape[1]
-
-        def seq_norm(V, who):
-            acc = np.zeros(V.shape[0])
-            for i in range(d):
-                acc += V[:, i] * V[:, i]
-            if not acc.all():
-                bad = (mids if who == "member" else pids)[acc == 0]
-                raise ValueError(
-                    f"zero-norm {who} embedding(s) vec_id={bad[:5].tolist()}: "
-                    "cosine is undefined (ANSI twin raises DIVIDE_BY_ZERO)"
-                )
-            return np.sqrt(acc)
-
-        mn, pn = seq_norm(M, "member"), seq_norm(P, "prober")
-        out_s, out_d, out_c = [], [], []
-        for r0 in range(0, P.shape[0], B):
-            r1 = min(r0 + B, P.shape[0])
-            # per-(prober, member-block) top-k partials, merged below
-            part_i, part_d, part_c = [], [], []
-            for c0 in range(0, M.shape[0], B):
-                c1 = min(c0 + B, M.shape[0])
-                dot = np.zeros((r1 - r0, c1 - c0))
-                for i in range(d):
-                    dot += P[r0:r1, i][:, None] * M[c0:c1, i][None, :]
-                cos = dot / (pn[r0:r1][:, None] * mn[c0:c1][None, :])
-                bids = mids[c0:c1]
-                for j in range(r1 - r0):
-                    keep = bids != pids[r0 + j]
-                    row, ids = cos[j][keep], bids[keep]
-                    top = np.lexsort((ids, -row))[:kk]
-                    part_i.append(np.full(len(top), j))
-                    part_d.append(ids[top])
-                    part_c.append(row[top])
-            if not part_i:
-                continue
-            pj = np.concatenate(part_i)
-            pd_ids = np.concatenate(part_d)
-            pc = np.concatenate(part_c)
-            for j in range(r1 - r0):
-                sel = pj == j
-                row, ids = pc[sel], pd_ids[sel]
-                top = np.lexsort((ids, -row))[:kk]
-                out_s.append(np.full(len(top), pids[r0 + j]))
-                out_d.append(ids[top])
-                out_c.append(row[top])
-        if not out_s:
-            return empty
-        return pd.DataFrame(
-            {
-                "src_id": np.concatenate(out_s).astype(np.int64),
-                "dst_id": np.concatenate(out_d).astype(np.int64),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        src, dst, cs = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+        mem, prb = pdf[pdf["is_member"]], pdf[pdf["is_prober"]]
+        if len(mem) and len(prb):
+            P, M = stack(prb), stack(mem)
+            for r0, c0, (cos,) in cosine_blocks(P, M, B):
+                pid = P[0][r0 : r0 + len(cos), None]
+                mid = np.broadcast_to(M[0][c0 : c0 + cos.shape[1]], cos.shape)
+                # per-(prober, member-block) top-k by (cos desc, id asc);
+                # the self pair sorts last and is dropped
+                neg = np.where(mid == pid, np.inf, -cos)
+                top = np.lexsort((mid, neg))[:, :kk]
+                keep = np.take_along_axis(neg, top, 1) < np.inf
+                src.append(np.broadcast_to(pid, top.shape)[keep])
+                dst.append(np.take_along_axis(mid, top, 1)[keep])
+                cs.append(np.take_along_axis(cos, top, 1)[keep])
+        src, dst, cs = (np.concatenate(x) for x in (src, dst, cs))
+        o = np.lexsort((dst, -cs, src))
+        src, dst, cs = src[o], dst[o], cs[o]
+        # rank within each prober's run of sorted partials
+        keep = np.arange(len(src)) - np.searchsorted(src, src) < kk
+        return pd.DataFrame({"src_id": src[keep], "dst_id": dst[keep], "cosine": cs[keep]})
 
     return kernel
+
+
+def _bucket_topk_partials(bucketed: DataFrame, entries: Column, k: int):
+    """The bucketed-kNN scale shape shared by ``knn_graph_lsh`` and
+    ``eval_semantic_contamination``: ``bucketed``'s (vec_id, v) rows
+    explode into their ``entries`` (bkey, is_member, is_prober)
+    structs, shuffle once on the bucket key, and ``_bucket_topk_kernel``
+    emits ≤ k partial edges per (prober, bucket).  Returns the partials
+    (src_id, dst_id, cosine) and the rank that merges them across
+    probed buckets: row_number per src_id by (cosine desc, dst_id asc)."""
+    partials = (
+        bucketed.select("vec_id", "v", F.explode(entries).alias("e"))
+        .select("vec_id", "v", "e.bkey", "e.is_member", "e.is_prober")
+        .groupBy("bkey")
+        .applyInPandas(
+            _bucket_topk_kernel(k=k),
+            schema="src_id bigint, dst_id bigint, cosine double",
+        )
+    )
+    w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("dst_id"))
+    return partials, F.row_number().over(w)
 
 
 def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
@@ -1217,18 +1231,9 @@ def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
             F.lit(True).alias("is_prober"),
         ),
     )
-    partials = (
-        bucketed.select("vec_id", "v", F.explode(entries).alias("e"))
-        .select("vec_id", "v", "e.bkey", "e.is_member", "e.is_prober")
-        .groupBy("bkey")
-        .applyInPandas(
-            _bucket_topk_kernel(),
-            schema="src_id bigint, dst_id bigint, cosine double",
-        )
-    )
-    w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("dst_id"))
+    partials, rank = _bucket_topk_partials(bucketed, entries, KNN_K)
     return (
-        partials.withColumn("rk", F.row_number().over(w).cast("int"))
+        partials.withColumn("rk", rank.cast("int"))
         .filter(F.col("rk") <= KNN_K)
         .select("src_id", "dst_id", "cosine", "rk")
     )
@@ -1293,18 +1298,9 @@ def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
         )
     )
     evals = bucketed.filter(F.col("vec_id") >= F.col("t0"))
-    partials = (
-        bucketed.select("vec_id", "v", F.explode(entries).alias("e"))
-        .select("vec_id", "v", "e.bkey", "e.is_member", "e.is_prober")
-        .groupBy("bkey")
-        .applyInPandas(
-            _bucket_topk_kernel(k=1),
-            schema="src_id bigint, dst_id bigint, cosine double",
-        )
-    )
-    w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), F.asc("dst_id"))
+    partials, rank = _bucket_topk_partials(bucketed, entries, 1)
     best = (
-        partials.withColumn("_rk", F.row_number().over(w))
+        partials.withColumn("_rk", rank)
         .filter(F.col("_rk") == 1)
         .select(
             F.col("src_id").alias("vec_id"),
@@ -1364,17 +1360,17 @@ def matryoshka_truncation_audit(t) -> DataFrame:
         "v",
         lsh_bucket_col(F.col("v"), bits).alias("bucket"),
     )
-    # Per-bucket blocked Arrow kernel (the _cell_pairs_kernel /
-    # _bucket_topk_kernel contract: dim loop outside the numpy
-    # broadcast, so every scalar follows the sequential fold order of
-    # the Column-expression cosine() and the DuckDB twin — results are
-    # bit-identical).  The previous form self-joined the bucketed table
-    # (materializing every candidate pair with BOTH 64-dim vectors in
-    # the join output), crossJoined ×4 widths, and evaluated three
-    # interpreted HOF folds per (pair, width) row; here only the m×d
-    # bucket members cross the cid shuffle, the width cosines are
-    # snapshots of ONE incremental dim loop, and each bucket emits 4
-    # partial-sum rows — pair rows never materialize anywhere.
+    # Per-bucket blocked Arrow kernel over _cosine_core (dim loop
+    # outside the numpy broadcast, so every scalar follows the
+    # sequential fold order of the Column-expression cosine() and the
+    # DuckDB twin — results are bit-identical).  The previous form
+    # self-joined the bucketed table (materializing every candidate
+    # pair with BOTH 64-dim vectors in the join output), crossJoined ×4
+    # widths, and evaluated three interpreted HOF folds per (pair,
+    # width) row; here only the m×d bucket members cross the cid
+    # shuffle, the width cosines are snapshots of ONE incremental dim
+    # loop, and each bucket emits 4 partial-sum rows — pair rows never
+    # materialize anywhere.
     partials = bv.groupBy("bucket").applyInPandas(
         _matryoshka_bucket_kernel(),
         schema="d int, n bigint, sad bigint, win bigint, scq bigint",
@@ -1393,27 +1389,23 @@ def _matryoshka_bucket_kernel(
 ):
     """Factory for the per-bucket Matryoshka audit kernel: all
     within-bucket pairs (id_a < id_b after the vec_id sort), cosine at
-    every prefix width as SNAPSHOTS of one incremental dimension loop
-    (the sequential fold over the first d elements is by definition the
-    fold over the first d' < d elements continued, so each snapshot is
-    bit-identical to the Column twin's ``cosine(slice(v, 1, d), ...)``),
-    floor-1e-9 quantization exactly as the expression form, and ONE
-    output row per (bucket, width) carrying exact BIGINT partial sums.
-    Blocked on both axes like ``_cell_pairs_kernel`` so the working set
-    stays ≤ B²·8 B regardless of bucket size; zero-norm vectors are
-    rejected loudly (the Column twin's ANSI DIVIDE_BY_ZERO contract).
-    Closure-shipped via cloudpickle."""
+    every prefix width as ``_cosine_core`` snapshots of one incremental
+    dimension loop (each bit-identical to the Column twin's
+    ``cosine(slice(v, 1, d), ...)``), floor-1e-9 quantization exactly
+    as the expression form, and ONE output row per (bucket, width)
+    carrying exact BIGINT partial sums — none for a bucket without a
+    pair.  Blocked on both axes, so the working set stays ≤ B²·8 B
+    regardless of bucket size.  Closure-shipped via cloudpickle."""
     widths = tuple(sorted(dims))
     B = SEMDEDUP_CELL_BLOCK if block is None else block
+    stack, cosine_blocks = _cosine_core()
 
     def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        m, d = V.shape
+        vecs = stack(pdf)
+        d = vecs[1].shape[1]
         # the widest audit width is the "full" reference: a shorter
         # vector has no such prefix, a longer one would be audited
         # against a truncation of itself
@@ -1422,67 +1414,30 @@ def _matryoshka_bucket_kernel(
                 f"Matryoshka audit needs {widths[-1]}-dim embeddings "
                 f"(the widest audit width), got {d}-dim"
             )
-        if m < 2:
-            return pd.DataFrame(
-                {"d": pd.Series([], dtype="int32"), "n": [], "sad": [], "win": [], "scq": []}
-            ).astype({"n": "int64", "sad": "int64", "win": "int64", "scq": "int64"})
-
-        def prefix_norms(X):
-            acc = np.zeros(X.shape[0])
-            snaps = {}
-            for i in range(d):
-                acc = acc + X[:, i] * X[:, i]
-                if i + 1 in widths:
-                    if not acc.all():
-                        bad = ids[order][acc == 0]
-                        raise ValueError(
-                            f"zero-norm embedding prefix vec_id={bad[:5].tolist()}: "
-                            "cosine is undefined (ANSI twin raises DIVIDE_BY_ZERO)"
-                        )
-                    snaps[i + 1] = np.sqrt(acc)
-            return snaps
-
-        nrm = prefix_norms(V)
-        acc = {w: [0, 0, 0] for w in widths}  # sad, win, scq per width
+        sums = [[0, 0, 0] for _ in widths]  # sad, win, scq per width
         n_pairs = 0
-        full = widths[-1]
-        for r0 in range(0, m, B):
-            r1 = min(r0 + B, m)
-            for c0 in range(r0, m, B):
-                c1 = min(c0 + B, m)
-                dot = np.zeros((r1 - r0, c1 - c0))
-                cos_w = {}
-                for i in range(d):
-                    dot = dot + V[r0:r1, i][:, None] * V[c0:c1, i][None, :]
-                    if i + 1 in widths:
-                        w = i + 1
-                        cos_w[w] = dot / (nrm[w][r0:r1][:, None] * nrm[w][c0:c1][None, :])
-                ra, ca = np.nonzero(np.ones((r1 - r0, c1 - c0), dtype=bool))
-                keep = (ra + r0) < (ca + c0)  # upper triangle: id_a < id_b
-                ra, ca = ra[keep], ca[keep]
-                if not len(ra):
-                    continue
-                n_pairs += len(ra)
-                cf = cos_w[full][ra, ca]
-                for w in widths:
-                    cw = cos_w[w][ra, ca]
-                    adq = np.floor(np.abs(cw - cf) * 1e9).astype(np.int64)
-                    acc[w][0] += int(adq.sum())
-                    acc[w][1] += int((adq <= tol_q).sum())
-                    acc[w][2] += int(np.floor(cw * 1e9).astype(np.int64).sum())
-        if not n_pairs:
-            return pd.DataFrame(
-                {"d": pd.Series([], dtype="int32"), "n": [], "sad": [], "win": [], "scq": []}
-            ).astype({"n": "int64", "sad": "int64", "win": "int64", "scq": "int64"})
-        return pd.DataFrame(
+        for r0, c0, cos in cosine_blocks(vecs, vecs, B, widths):
+            # upper triangle: id_a < id_b after the sort
+            ra, ca = np.triu_indices(len(cos[0]), r0 - c0 + 1, cos[0].shape[1])
+            n_pairs += len(ra)
+            cf = cos[-1][ra, ca]
+            for acc, c in zip(sums, cos):
+                cw = c[ra, ca]
+                adq = np.floor(np.abs(cw - cf) * 1e9).astype(np.int64)
+                acc[0] += int(adq.sum())
+                acc[1] += int((adq <= tol_q).sum())
+                acc[2] += int(np.floor(cw * 1e9).astype(np.int64).sum())
+        sad, win, scq = (np.array(x, dtype=np.int64) for x in zip(*sums))
+        out = pd.DataFrame(
             {
                 "d": np.array(widths, dtype=np.int32),
-                "n": np.full(len(widths), n_pairs, dtype=np.int64),
-                "sad": np.array([acc[w][0] for w in widths], dtype=np.int64),
-                "win": np.array([acc[w][1] for w in widths], dtype=np.int64),
-                "scq": np.array([acc[w][2] for w in widths], dtype=np.int64),
+                "n": np.int64(n_pairs),
+                "sad": sad,
+                "win": win,
+                "scq": scq,
             }
         )
+        return out[out["n"] > 0]
 
     return kernel
 

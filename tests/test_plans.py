@@ -61,28 +61,29 @@ INTENTIONAL_PYTHON_OPS = [
     "heavy_hitter_bigrams",
     "token_spans_udtf",
     "user_resequence_pandas",
-    # SemDeDup's blocked within-cell pair kernel (_cell_pairs_kernel):
-    # vectorized across pairs, per-scalar fold order bit-identical to
-    # the Column/DuckDB twin; avoids materializing pair rows with both
-    # vectors in the cid shuffle.  Present in every consumer of
-    # semdedup_pairs.
+    # The three Arrow pair kernels below compute their cosines in one
+    # shared core, similarity._cosine_core: blocked, vectorized across
+    # pairs, per-scalar fold order bit-identical to the Column/DuckDB
+    # twin.
+    # SemDeDup's within-cell pair kernel (_cell_pairs_kernel) avoids
+    # materializing pair rows with both vectors in the cid shuffle.
+    # Present in every consumer of semdedup_pairs.
     "semdedup",
     "semdedup_pairs",
     "semdedup_auto",
     "crossmodal_dedup_agreement",
     "dedup_ladder_report",
-    # kNN graph's per-bucket top-k kernel (_bucket_topk_kernel): the
-    # same blocked, fold-order-exact vectorization contract as
-    # _cell_pairs_kernel, keyed on the LSH bucket instead of the
-    # k-means cell.
+    # kNN graph's per-bucket top-k kernel (_bucket_topk_kernel) over
+    # _cosine_core, keyed on the LSH bucket instead of the k-means
+    # cell.
     "knn_graph_lsh",
     # Same kernel (k=1) keyed on LSH bucket for eval-vs-train nearest
     # search; the Arrow boundary is shared with knn_graph_lsh.
     "eval_semantic_contamination",
     # Matryoshka audit's per-bucket prefix-cosine kernel
-    # (_matryoshka_bucket_kernel): snapshots of one incremental dim
-    # loop, fold-order bit-identical to the Column twin; pair rows and
-    # the ×4 width crossJoin never materialize.
+    # (_matryoshka_bucket_kernel): _cosine_core snapshots of one
+    # incremental dim loop; pair rows and the ×4 width crossJoin never
+    # materialize.
     "matryoshka_truncation_audit",
 ]
 
@@ -717,6 +718,33 @@ def test_text_kernels_are_spelled_once():
         ]
         hash_sites |= _owners(path, lines)
     assert hash_sites == {("text.py", "sha_int")}, hash_sites
+
+
+def test_vector_folds_are_spelled_once():
+    """The dimension fold is spelled once per engine: in DuckDB inside
+    ``registry._fold_sql`` (every dot, norm, cosine, L2 and plane
+    projection of the oracles calls it) over one ``e`` CTE constant,
+    and in the Arrow pair kernels inside ``similarity._cosine_core``,
+    which also holds the one zero-norm rule — so the kernels and their
+    oracle twin cannot drift apart."""
+    import ast
+    from pathlib import Path
+
+    import storm_data_etl_service_spark.operators as ops
+
+    root = Path(ops.__file__).parent
+    registry, similarity = root / "registry.py", root / "similarity.py"
+    assert _sites(registry, "list_reduce(list_transform(generate_series(1, ") == {
+        ("registry.py", "_fold_sql")
+    }
+    assert registry.read_text().count("embedding::DOUBLE[] AS v FROM embeddings)") == 1
+    assert _sites(similarity, "for i in range(d)") == {("similarity.py", "_cosine_core")}
+    raises = [
+        n.lineno
+        for n in ast.walk(ast.parse(similarity.read_text()))
+        if isinstance(n, ast.Raise) and "zero-norm" in ast.dump(n)
+    ]
+    assert _owners(similarity, raises) == {("similarity.py", "_cosine_core")}, raises
 
 
 def test_stage_is_lazy(spark):

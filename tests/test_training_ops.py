@@ -804,38 +804,19 @@ def test_bucket_topk_kernel_blocked_axes_match_unblocked(spark):
             assert np.float64(ca).tobytes() == np.float64(cb).tobytes()
 
 
-def test_bucket_topk_kernel_working_set_stays_in_block_budget():
-    """A pathological single bucket far larger than the block must not
-    allocate any pair matrix beyond block² — the OOM guard for
-    degenerate LSH buckets (every 2-D allocation the kernel makes is
-    recorded and checked against B²)."""
-    from unittest.mock import patch
-
-    import numpy as np
-
-    from storm_data_etl_service_spark.operators import similarity as S
-
-    B = 8
-    pdf = _bucket_pdf(m_members=200, n_probers=64)
-    shapes = []
-    real_zeros = np.zeros
-
-    def recording_zeros(shape, *a, **kw):
-        if isinstance(shape, tuple) and len(shape) == 2:
-            shapes.append(shape)
-        return real_zeros(shape, *a, **kw)
-
-    with patch("numpy.zeros", side_effect=recording_zeros):
-        S._bucket_topk_kernel(k=5, block=B)(pdf)
-    assert shapes, "kernel allocated no pair matrices?"
-    worst = max(r * c for r, c in shapes)
-    assert worst <= B * B, f"pair matrix {worst} exceeds block budget {B * B}"
+_PAIR_KERNELS = {
+    "cell_pairs": lambda S, B: S._cell_pairs_kernel(threshold=0.2, block=B),
+    "bucket_topk": lambda S, B: S._bucket_topk_kernel(k=5, block=B),
+    "matryoshka": lambda S, B: S._matryoshka_bucket_kernel(dims=(2, 4, 8), block=B),
+}
 
 
-def test_cell_pairs_kernel_working_set_stays_in_block_budget():
-    """Same OOM guard for the SemDeDup within-cell kernel: a planted
-    degenerate cell (all vectors in one cid) must never allocate a
-    pair matrix beyond block²."""
+@pytest.mark.parametrize("kernel", sorted(_PAIR_KERNELS))
+def test_pair_kernel_working_set_stays_in_block_budget(kernel):
+    """A pathological single cell or bucket far larger than the block
+    must not allocate any pair matrix beyond block² — the OOM guard for
+    degenerate k-means cells and LSH buckets (every 2-D allocation the
+    kernel makes is recorded and checked against B²)."""
     from unittest.mock import patch
 
     import numpy as np
@@ -844,15 +825,17 @@ def test_cell_pairs_kernel_working_set_stays_in_block_budget():
     from storm_data_etl_service_spark.operators import similarity as S
 
     B = 8
-    rng = np.random.default_rng(9)
-    m = 150
-    pdf = pd.DataFrame(
-        {
-            "cid": 0,
-            "vec_id": np.arange(m, dtype=np.int64),
-            "v": [r.tolist() for r in rng.uniform(-1, 1, size=(m, 8)).round(4)],
-        }
-    )
+    if kernel == "bucket_topk":
+        pdf = _bucket_pdf(m_members=200, n_probers=64)
+    else:  # a planted degenerate cell / bucket: every vector in one group
+        rng = np.random.default_rng(9)
+        pdf = pd.DataFrame(
+            {
+                "cid": 0,
+                "vec_id": np.arange(150, dtype=np.int64),
+                "v": [r.tolist() for r in rng.uniform(-1, 1, size=(150, 8)).round(4)],
+            }
+        )
     shapes = []
     real_zeros = np.zeros
 
@@ -862,7 +845,8 @@ def test_cell_pairs_kernel_working_set_stays_in_block_budget():
         return real_zeros(shape, *a, **kw)
 
     with patch("numpy.zeros", side_effect=recording_zeros):
-        S._cell_pairs_kernel(threshold=0.2, block=B)(pdf)
+        out = _PAIR_KERNELS[kernel](S, B)(pdf)
+    assert len(out), "kernel produced no output?"
     assert shapes, "kernel allocated no pair matrices?"
     worst = max(r * c for r, c in shapes)
     assert worst <= B * B, f"pair matrix {worst} exceeds block budget {B * B}"
@@ -872,7 +856,10 @@ def test_kernels_reject_zero_norm_embeddings():
     """Zero-norm vectors make cosine undefined; the ANSI Column twin
     raises DIVIDE_BY_ZERO and the DuckDB oracle NULL-drops, so a silent
     numpy NaN would diverge from both — the kernels must fail loudly,
-    naming the offending vec_id."""
+    naming the offending vec_id, once such a vector enters a computed
+    pair.  A zero vector alone in its cell or bucket, or probing only
+    itself, has no pair: like both twins, the kernel returns nothing
+    and does not raise."""
     import numpy as np
     import pandas as pd
     import pytest
@@ -893,6 +880,30 @@ def test_kernels_reject_zero_norm_embeddings():
     )
     with pytest.raises(ValueError, match="zero-norm.*vec_id=\\[1\\]"):
         S._cell_pairs_kernel(threshold=0.2, block=16)(cell)
+
+    # the 8-dim prefix of vec_id=1 is zero, its full norm is not
+    prefix_zero = pd.DataFrame(
+        {"vec_id": np.arange(3, dtype=np.int64), "v": list(np.ones((3, 64)))}
+    )
+    prefix_zero.at[1, "v"] = np.r_[np.zeros(8), np.ones(56)]
+    with pytest.raises(ValueError, match="zero-norm.*vec_id=\\[1\\]"):
+        S._matryoshka_bucket_kernel()(prefix_zero)
+
+    zero = pd.DataFrame({"cid": 0, "vec_id": np.array([7], dtype=np.int64), "v": [np.zeros(64)]})
+    self_only = pd.DataFrame(
+        {
+            "vec_id": np.array([7, 7], dtype=np.int64),
+            "v": [np.zeros(64)] * 2,
+            "is_member": [True, False],
+            "is_prober": [False, True],
+        }
+    )
+    for out in (
+        S._cell_pairs_kernel(threshold=-1.0, block=16)(zero),  # singleton cell
+        S._bucket_topk_kernel(k=5, block=16)(self_only),  # probes only itself
+        S._matryoshka_bucket_kernel()(zero),  # singleton bucket
+    ):
+        assert out.empty, out
 
 
 def test_semdedup_auto_k_scales_near_linearly(spark):
