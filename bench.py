@@ -107,7 +107,6 @@ BENCH_QUERIES = [
 
 def main():
     from storm_data_etl_service_spark.operators.registry import REGISTRY
-    from storm_data_etl_service_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -117,25 +116,7 @@ def main():
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if subset:
         bench_queries = [q.strip() for q in subset.split(",") if q.strip()]
-    # single-row-group local files: fan the scan out to all cores
-    os.environ.setdefault(
-        "SPARK_GRAFT_SCAN_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    # Size shuffle parallelism to the DATA, not the core count: at
-    # bench scale 32 reducers per stage are pure task-launch overhead
-    # (measured ~20% of wall), while at 1000x the same bytes//2MiB
-    # rule grows partitions right back past the core count.  AQE still
-    # re-coalesces at runtime; this only seeds the initial plan.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    data_bytes = sum(
-        f.stat().st_size for f in Path(sf_dir).rglob("*.parquet") if f.is_file()
-    )
-    shuffle_parts = max(8, min(4 * int(cpus), data_bytes // (2 << 20)))
-    spark = get_spark(
-        app_name="bench",
-        shuffle_partitions=int(shuffle_parts),
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = bench_session("bench", sf_dir)
 
     # The timer covers build() + the noop write, because build() is
     # NOT metadata-cheap — under AQE even a LAZY localCheckpoint
@@ -226,6 +207,32 @@ def main():
     assert len(line) < 1800, f"stdout bench line too long for driver tail capture: {len(line)}"
     print(line)
     spark.stop()
+
+
+def bench_session(app_name: str, sf_dir: str):
+    """The session the benched closures run in, sized for ``sf_dir``;
+    ``scripts/explain_dump.py`` uses it too, so committed plans show
+    the benched partition counts."""
+    from storm_data_etl_service_spark.session import get_spark
+
+    # single-row-group local files: fan the scan out to all cores
+    os.environ.setdefault(
+        "SPARK_GRAFT_SCAN_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
+    )
+    # Size shuffle parallelism to the DATA, not the core count: at
+    # bench scale 32 reducers per stage are pure task-launch overhead
+    # (measured ~20% of wall), while at 1000x the same bytes//2MiB
+    # rule grows partitions right back past the core count.  AQE still
+    # re-coalesces at runtime; this only seeds the initial plan.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    data_bytes = sum(
+        f.stat().st_size for f in Path(sf_dir).rglob("*.parquet") if f.is_file()
+    )
+    return get_spark(
+        app_name=app_name,
+        shuffle_partitions=max(8, min(4 * int(cpus), data_bytes // (2 << 20))),
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
 
 if __name__ == "__main__":

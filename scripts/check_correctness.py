@@ -26,13 +26,28 @@ import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+def oracle_mem_gb() -> str:
+    """DuckDB ``memory_limit`` for an oracle run, in GB:
+    ``$SPARK_GRAFT_ORACLE_MEM_GB`` if set, else half the enforced
+    memory budget (``session._host_mem_gb``: min of MemTotal and the
+    cgroup limit), at most 60 and at least 1 — the other half is left
+    to the Spark driver JVM sharing the process."""
+    from storm_data_etl_service_spark.session import _host_mem_gb
+
+    if os.environ.get("SPARK_GRAFT_ORACLE_MEM_GB"):
+        return os.environ["SPARK_GRAFT_ORACLE_MEM_GB"]
+    budget = _host_mem_gb()
+    return str(60 if budget is None else max(1, min(60, int(budget / 2))))
 
 
 def norm(v):
@@ -199,8 +214,7 @@ def main():
     # same query completes) — the cap leaves room for the Spark driver
     # JVM sharing the process.
     con.execute("SET temp_directory='/tmp/duckdb_oracle_spill'")
-    mem_gb = os.environ.get("SPARK_GRAFT_ORACLE_MEM_GB", "60")
-    con.execute(f"SET memory_limit='{mem_gb}GB'")
+    con.execute(f"SET memory_limit='{oracle_mem_gb()}GB'")
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"
         # directory-layout tables (Spark writes a dir) need a glob

@@ -4,9 +4,10 @@
 Usage: python scripts/explain_dump.py <out_dir> <suffix> <query> [...]
 
 Writes ``<out_dir>/<query>_<suffix>.txt`` for each query — the
-before/after plan evidence committed under plans/rNN/.  Run from the
-tree whose plans you want (a worktree at the pre-change commit for
-``before``, the live tree for ``after``).
+before/after plan evidence committed under plans/rNN/.  The session is
+``bench.bench_session``, so the plans carry the benched partition
+counts.  Run from the tree whose plans you want (a copy of the
+pre-change commit for ``before``, the live tree for ``after``).
 """
 
 from __future__ import annotations
@@ -22,17 +23,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> None:
     out_dir, suffix, *queries = sys.argv[1:]
+    from bench import bench_session
     from storm_data_etl_service_spark.operators.registry import REGISTRY
-    from storm_data_etl_service_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault(
-        "SPARK_GRAFT_SCAN_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    spark = get_spark(
-        app_name="explain_dump",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = bench_session("explain_dump", sf_dir)
     Path(out_dir).mkdir(parents=True, exist_ok=True)
     for name in queries:
         df = REGISTRY[name].build(spark, sf_dir)

@@ -44,7 +44,8 @@ invariant battery.  Output lines use the same ``  ok <name>`` /
 
 Usage: python scripts/invariant_check.py [entry ...]     (default: all)
 Env:   SPARK_GRAFT_CHECK_SF_DIR (default /tmp/spark_graft_scale/sf1.6)
-       SPARK_GRAFT_ORACLE_MEM_GB (DuckDB cap, default 60)
+       SPARK_GRAFT_ORACLE_MEM_GB (DuckDB cap, default
+         check_correctness.oracle_mem_gb: half the memory budget, <= 60)
 """
 
 from __future__ import annotations
@@ -425,7 +426,7 @@ def main() -> int:
     con = duckdb.connect()
     os.makedirs("/tmp/duckdb_oracle_spill", exist_ok=True)
     con.execute("SET temp_directory='/tmp/duckdb_oracle_spill'")
-    mem_gb = os.environ.get("SPARK_GRAFT_ORACLE_MEM_GB", "60")
+    mem_gb = cc.oracle_mem_gb()
     con.execute(f"SET memory_limit='{mem_gb}GB'")
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

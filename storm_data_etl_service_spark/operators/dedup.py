@@ -37,6 +37,13 @@ from storm_data_etl_service_spark.operators.text import (
 MINHASH_SEEDS = 12
 LSH_BANDS = 4
 LSH_ROWS = 3
+if LSH_BANDS * LSH_ROWS > MINHASH_SEEDS:
+    # band i reads signature slots i*LSH_ROWS+1 .. i*LSH_ROWS+LSH_ROWS:
+    # a wider layout would index past the signature
+    raise ValueError(
+        f"LSH_BANDS * LSH_ROWS = {LSH_BANDS * LSH_ROWS} exceeds "
+        f"MINHASH_SEEDS = {MINHASH_SEEDS}"
+    )
 
 JACCARD_THRESHOLD = 0.8
 
@@ -548,55 +555,54 @@ def dedup_minhash_lsh(t, sh: DataFrame | None = None) -> DataFrame:
     )
 
 
-#: Documents with id >= this fraction of max(doc_id)+1 are "the new
-#: batch" in the incremental-dedup registry entry; below it, "the
+#: Documents with id >= t0 = floor((max(doc_id) + 1) * this) are "the
+#: new batch" in the incremental registry entries; below it, "the
 #: already-indexed corpus".
 INCREMENTAL_SPLIT = 0.8
 
 
-def dedup_incremental_minhash(t) -> DataFrame:
-    """Incremental near-dup: match a NEW document batch against the
-    persisted LSH index of the existing corpus (plus the batch
-    itself) WITHOUT re-pairing the corpus — the nightly-ingest shape:
-    index I/O is (new batch × bands) appended, and the only pair work
-    is new-vs-bucket.
+def with_id_split(
+    df: DataFrame, id_col: str = "doc_id", ids: DataFrame | None = None
+) -> DataFrame:
+    """``df`` plus the batch/index boundary column ``t0`` =
+    floor((max(id) + 1) * INCREMENTAL_SPLIT), taken over ``ids``
+    (default ``df``) and broadcast as one row: ids below ``t0`` are
+    the indexed corpus, ids at or above it the new batch.  The twin of
+    ``registry._split_sql``."""
+    ids = df if ids is None else ids
+    split = ids.agg(F.floor((F.max(id_col) + 1) * INCREMENTAL_SPLIT).alias("t0"))
+    return df.crossJoin(F.broadcast(split))
 
-    At 100 TB the corpus index is a bucketed table keyed on
-    (band, key); the new batch's band keys shuffle-join into it, so
-    cost scales with the BATCH, not the corpus.  Here the "index" is
-    computed in-plan from the id-split (the registry entry is
-    self-contained); ``lsh_band_keys`` is the exact thing a real
-    deployment persists.
 
-    Output: (doc_id, matched_doc_id) — every candidate partner (old
-    or earlier-in-batch) for each new document; equal to the full
-    ``dedup_minhash_lsh`` pair set restricted to pairs whose higher
-    id is in the new batch (asserted in tests).
-    """
-    docs = t["documents"]
-    split = docs.agg(
-        F.floor((F.max("doc_id") + 1) * INCREMENTAL_SPLIT).alias("t0")
-    )
-    # repartition on the probe key BEFORE the corpus/batch split: both
-    # join inputs then canonicalize to one exchange, so the signature
-    # map work runs once and the batch side is a ReusedExchange over
-    # the same shuffle files (measured 1.65× at sf0.1, identical
-    # pairs) — the same trick as ``dedup_minhash_lsh``, and exactly
-    # how the persisted production index would be laid out (bucketed
-    # by (band, key)).
-    bands = lsh_band_keys(t).repartition("band", "key")
-    all_b = bands.crossJoin(F.broadcast(split))
-    new_b = all_b.filter(F.col("doc_id") >= F.col("t0")).select(
+def lsh_matches(probers: DataFrame, partners: DataFrame) -> DataFrame:
+    """The one incremental LSH match rule, over ``(doc_id, band, key,
+    batch_id)`` band rows: a partner matches a prober when they share
+    a (band, key), their doc_ids differ, and the partner comes first
+    in (batch_id, doc_id) order.  Returns the distinct (doc_id,
+    matched_doc_id) pairs, doc_id being the prober's.
+
+    ``dedup_incremental_minhash`` passes the id split as batch_id;
+    the streaming ``incremental_dedup_batch_fn`` passes its micro-batch
+    id, with the earlier batches' index rows among the partners."""
+    p = probers.select(
         F.col("doc_id").alias("new_id"),
         F.col("band").alias("nband"),
         F.col("key").alias("nkey"),
+        F.col("batch_id").alias("nbatch"),
     )
     return (
-        all_b.join(
-            new_b,
+        partners.join(
+            p,
             (F.col("band") == F.col("nband"))
             & (F.col("key") == F.col("nkey"))
-            & (F.col("doc_id") < F.col("new_id")),
+            & (F.col("doc_id") != F.col("new_id"))
+            & (
+                (F.col("batch_id") < F.col("nbatch"))
+                | (
+                    (F.col("batch_id") == F.col("nbatch"))
+                    & (F.col("doc_id") < F.col("new_id"))
+                )
+            ),
         )
         .select(
             F.col("new_id").alias("doc_id"),
@@ -604,6 +610,31 @@ def dedup_incremental_minhash(t) -> DataFrame:
         )
         .distinct()
     )
+
+
+def dedup_incremental_minhash(t) -> DataFrame:
+    """Incremental near-dup: match a NEW document batch (ids at or
+    above the id split) against the LSH index of the existing corpus
+    plus the batch itself, WITHOUT re-pairing the corpus — the
+    nightly-ingest shape, whose cost scales with the batch, not the
+    corpus.  ``lsh_band_keys`` is exactly what a deployment persists
+    (a table bucketed on (band, key)); ``incremental_dedup_batch_fn``
+    is the streaming loop around the same ``lsh_matches`` rule.
+
+    Output: (doc_id, matched_doc_id) — every candidate partner (old
+    or earlier-in-batch) for each new document; equal to the full
+    ``dedup_minhash_lsh`` pair set restricted to pairs whose higher
+    id is in the new batch (asserted in tests).
+
+    The band table is repartitioned on the probe key BEFORE the split,
+    so both join sides canonicalize to one exchange: the signature map
+    work runs once and the batch side is a ReusedExchange (measured
+    1.65x at sf0.1, identical pairs) — the ``dedup_minhash_lsh`` trick.
+    """
+    bands = with_id_split(
+        lsh_band_keys(t).repartition("band", "key"), ids=t["documents"]
+    ).withColumn("batch_id", (F.col("doc_id") >= F.col("t0")).cast("int"))
+    return lsh_matches(bands.filter(F.col("batch_id") == 1), bands)
 
 
 def dedup_simhash(t) -> DataFrame:
@@ -913,11 +944,43 @@ def bloom_bit_positions(h: Column, m: int = BLOOM_BITS) -> Column:
     )
 
 
+def content_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, h): each document's sha256 content key."""
+    return docs.select("doc_id", F.sha2(F.col("text"), 256).alias("h"))
+
+
+def bloom_bits(hashed: DataFrame, m: int = BLOOM_BITS) -> DataFrame:
+    """The Bloom index of a ``content_hashes`` relation: the distinct
+    (bit) positions of its keys.  Held as a relation rather than a
+    blob, so bit sets merge by plain DISTINCT union (the
+    ``cms_token_frequencies`` trade); a deployment folds it into a
+    bitmap via ``bit_or`` partials and broadcasts m/8 bytes."""
+    return hashed.select(
+        F.explode(bloom_bit_positions(F.col("h"), m)).alias("bit")
+    ).distinct()
+
+
+def bloom_probe(hashed: DataFrame, bits: DataFrame, m: int = BLOOM_BITS) -> DataFrame:
+    """The one Bloom probe: per (doc_id, h) of ``hashed``,
+    ``bloom_hit`` = all k of its bit positions are in ``bits`` (any
+    relation with a ``bit`` column; repeated bits, as in a union of
+    batches' bit sets, count once)."""
+    idx = bits.select("bit").distinct().withColumn("_set", F.lit(1))
+    return (
+        hashed.select(
+            "doc_id", "h", F.explode(bloom_bit_positions(F.col("h"), m)).alias("bit")
+        )
+        .join(idx, "bit", "left")
+        .groupBy("doc_id", "h")
+        .agg((F.count("_set") == BLOOM_HASHES).alias("bloom_hit"))
+    )
+
+
 def bloom_dedup_report(t, m: int | None = None) -> DataFrame:
     """Bloom-filter membership pre-screen for incremental ingest: the
-    new batch (id-split as in ``dedup_incremental_minhash``) is probed
-    against a Bloom index built from the existing corpus's content
-    hashes, then audited against exact membership.  Per batch
+    new batch (the id split of ``dedup_incremental_minhash``) goes
+    through ``bloom_probe`` against the ``bloom_bits`` of the existing
+    corpus, then is audited against exact membership.  Per batch
     document: ``bloom_hit`` (all k bits set), ``exact_hit`` (content
     hash truly present), the reconciled ``verdict``
     (dup / false_positive / new), and the Bloom invariant
@@ -925,21 +988,15 @@ def bloom_dedup_report(t, m: int | None = None) -> DataFrame:
     emitted so the oracle re-derives rather than trusts it).
 
     Why a third incremental rung beside the LSH index: the Bloom set
-    is O(m bits) regardless of corpus size — at 100 TB the whole
-    index is m/8 ≈ 128 KB·(m/2^20) as a bitmap aggregate, vs the
-    LSH index's O(corpus × bands) rows.  It answers only EXACT
-    membership, but answers it with a map-side broadcast test and
-    zero shuffle on the corpus — the cheap first gate before the
-    near-dup machinery pays its band-key shuffle.
-
-    Here the index is held as a (bit) relation and the probe is a
-    join on the bit position, keeping the sketch mergeable by plain
-    DISTINCT union (the same table-not-blob trade as
-    ``cms_token_frequencies``); a production deployment folds the
-    bit set into a bitmap via ``bit_or`` partials and broadcasts
-    m/8 bytes.  Batch-internal duplicates are out of scope by
+    is O(m bits) regardless of corpus size, vs the LSH index's
+    O(corpus × bands) rows.  It answers only EXACT membership, but
+    with a map-side broadcast test and zero shuffle on the corpus —
+    the cheap first gate before the near-dup machinery pays its
+    band-key shuffle.  Batch-internal duplicates are out of scope by
     construction (the index covers the corpus as of the batch
-    boundary); they are the first rung of ``dedup_ladder_report``.
+    boundary); they are the first rung of ``dedup_ladder_report``,
+    and the streaming ``bloom_gate_batch_fn`` adds them on top of the
+    same probe.
 
     ``m=None`` (production default) derives the filter width from one
     cheap count via ``bloom_auto_bits`` so the fill ratio — and with
@@ -947,34 +1004,22 @@ def bloom_dedup_report(t, m: int | None = None) -> DataFrame:
     the registry entry pins ``m=BLOOM_BITS`` because the oracle
     enumerates those exact positions.
     """
-    docs = t["documents"].select("doc_id", F.sha2(F.col("text"), 256).alias("h"))
+    docs = content_hashes(t["documents"])
     if m is None:
         m = bloom_auto_bits(docs.count())
-    split = docs.agg(F.floor((F.max("doc_id") + 1) * INCREMENTAL_SPLIT).alias("t0"))
-    staged = docs.crossJoin(F.broadcast(split))
+    staged = with_id_split(docs)
     existing = staged.filter(F.col("doc_id") < F.col("t0"))
-    batch = staged.filter(F.col("doc_id") >= F.col("t0"))
-    index = (
-        existing.select(F.explode(bloom_bit_positions(F.col("h"), m)).alias("bit"))
-        .distinct()
-        .withColumn("_set", F.lit(1))
-    )
-    probes = batch.select(
-        "doc_id", "h", F.explode(bloom_bit_positions(F.col("h"), m)).alias("bit")
-    )
-    hits = (
-        probes.join(index, "bit", "left")
-        .groupBy("doc_id", "h")
-        .agg(F.count("_set").alias("n_set"))
+    hits = bloom_probe(
+        staged.filter(F.col("doc_id") >= F.col("t0")), bloom_bits(existing, m), m
     )
     seen = existing.select("h").distinct().withColumn("_seen", F.lit(True))
-    bloom_hit = F.col("n_set") == BLOOM_HASHES
+    bloom_hit = F.col("bloom_hit")
     exact_hit = F.coalesce(F.col("_seen"), F.lit(False))
     return (
         hits.join(seen, "h", "left")
         .select(
             "doc_id",
-            bloom_hit.alias("bloom_hit"),
+            bloom_hit,
             exact_hit.alias("exact_hit"),
             F.when(bloom_hit & exact_hit, F.lit("dup"))
             .when(bloom_hit, F.lit("false_positive"))

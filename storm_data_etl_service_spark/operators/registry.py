@@ -337,6 +337,19 @@ def _sha_int_sql(expr: str, start: int = 1, width: int = 8) -> str:
     return f"('0x' || substr(sha256({expr}), {start}, {width}))::BIGINT"
 
 
+def _split_sql(id_col: str, rel: str) -> str:
+    """The ``s`` CTE holding the batch/index boundary ``t0`` of
+    ``rel`` — the twin of ``dedup.with_id_split``."""
+    return f"""s AS (SELECT cast(floor((max({id_col}) + 1) * {D.INCREMENTAL_SPLIT}) AS BIGINT)
+        AS t0 FROM {rel})"""
+
+
+def _bloom_bits_sql(h: str = "h") -> str:
+    """Bloom bit position ``i`` (bound by the caller) of the content
+    key ``h`` — the twin of ``dedup.bloom_bit_positions``."""
+    return f"""{_sha_int_sql(f"'bloom' || i || '|' || {h}")} % {D.BLOOM_BITS}"""
+
+
 _BPE_SQL = _re2_sql(X.BPE_PATTERN)
 _WS_ONLY_SQL = _re2_sql(r"^\s+$")
 
@@ -455,6 +468,8 @@ FROM v WHERE CAST(common AS DOUBLE) / na >= 0.9"""
 
 def _minhash_oracle() -> str:
     from storm_data_etl_service_spark.operators.dedup import (
+        LSH_BANDS,
+        LSH_ROWS,
         MINHASH_P,
         minhash_params,
     )
@@ -463,6 +478,14 @@ def _minhash_oracle() -> str:
         f"list_min(list_transform(base, h -> ({a} * h + {b}) % {MINHASH_P}))"
         for a, b in minhash_params()
     )
+    # band i's key: signature slots i*LSH_ROWS+1 .. i*LSH_ROWS+LSH_ROWS,
+    # comma-joined (the twin of dedup.lsh_band_keys); wrapped after
+    # every second slot
+    key = ""
+    for k in range(LSH_ROWS):
+        if k:
+            key += " || ',' || " if k % 2 else "\n                || ',' || "
+        key += f"cast(mh[{LSH_ROWS}*i+{k + 1}] AS VARCHAR)"
     return f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id, list_transform(shingles,
@@ -471,9 +494,8 @@ hashed AS (
 sig AS (SELECT doc_id, [{perms}] AS mh FROM hashed),
 bands AS (
   SELECT doc_id, i AS band,
-         sha256(cast(mh[3*i+1] AS VARCHAR) || ',' || cast(mh[3*i+2] AS VARCHAR)
-                || ',' || cast(mh[3*i+3] AS VARCHAR)) AS key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS i)),
+         sha256({key}) AS key
+  FROM sig, (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)),
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
@@ -715,7 +737,6 @@ WHERE rk <= {KNN_K}"""
 
 
 def _semantic_contam_oracle() -> str:
-    from storm_data_etl_service_spark.operators.dedup import INCREMENTAL_SPLIT
     from storm_data_etl_service_spark.operators.similarity import (
         MAX_LSH_PLANES,
         NEAR_DUP_COSINE,
@@ -723,8 +744,7 @@ def _semantic_contam_oracle() -> str:
 
     return f"""WITH {_EMB_CTE},
 {_auto_bits_cte()},
-s AS (SELECT cast(floor((max(vec_id) + 1) * {INCREMENTAL_SPLIT}) AS BIGINT)
-        AS t0 FROM e),
+{_split_sql("vec_id", "e")},
 fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx,
          sqrt({_dot_sql('v', 'v')}) AS nrm
        FROM e),
@@ -3357,8 +3377,7 @@ REGISTRY["dedup_incremental_minhash"] = QuerySpec(
     _t(D.dedup_incremental_minhash),
     f"""WITH pairs AS (
 {_minhash_oracle()}),
-s AS (SELECT cast(floor((max(doc_id) + 1) * {D.INCREMENTAL_SPLIT}) AS BIGINT)
-        AS t0 FROM documents)
+{_split_sql("doc_id", "documents")}
 SELECT doc_b AS doc_id, doc_a AS matched_doc_id
 FROM pairs, s WHERE doc_b >= t0""",
     ("dedup", "neardup", "incremental", "lsh"),
@@ -3436,18 +3455,17 @@ REGISTRY["bloom_dedup_report"] = QuerySpec(
         load_tables(spark, sf_dir), m=D.BLOOM_BITS
     ),
     f"""WITH docs AS (SELECT doc_id, sha256(text) AS h FROM documents),
-s AS (SELECT cast(floor((max(doc_id) + 1) * {D.INCREMENTAL_SPLIT}) AS BIGINT)
-        AS t0 FROM docs),
+{_split_sql("doc_id", "docs")},
 existing AS (SELECT doc_id, h FROM docs, s WHERE doc_id < t0),
 batch AS (SELECT doc_id, h FROM docs, s WHERE doc_id >= t0),
 ks AS (SELECT unnest([{", ".join(str(i) for i in range(D.BLOOM_HASHES))}]) AS i),
 idx AS (
   SELECT DISTINCT
-    {_sha_int_sql("'bloom' || i || '|' || h")} % {D.BLOOM_BITS} AS bit
+    {_bloom_bits_sql()} AS bit
   FROM existing CROSS JOIN ks),
 probes AS (
   SELECT doc_id, h,
-    {_sha_int_sql("'bloom' || i || '|' || h")} % {D.BLOOM_BITS} AS bit
+    {_bloom_bits_sql()} AS bit
   FROM batch CROSS JOIN ks),
 hits AS (
   SELECT p.doc_id, p.h, count(idx.bit) AS n_set

@@ -1261,13 +1261,12 @@ def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
     the identical width from ``count(*)``; recall is bounded by the
     hamming-1 probe radius like every sign-LSH entry here.
     """
-    from storm_data_etl_service_spark.operators.dedup import INCREMENTAL_SPLIT
+    from storm_data_etl_service_spark.operators.dedup import with_id_split
 
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
     if bits is None:
         bits = knn_auto_bits(emb.count())
-    split = emb.agg(F.floor((F.max("vec_id") + 1) * INCREMENTAL_SPLIT).alias("t0"))
-    bucketed = emb.crossJoin(F.broadcast(split)).select(
+    bucketed = with_id_split(emb, "vec_id").select(
         "vec_id",
         "v",
         "t0",

@@ -325,79 +325,62 @@ def _write_batch_state(df: DataFrame, root: str, batch_id: int) -> None:
     df.write.mode("overwrite").parquet(f"{root}/batch_id={batch_id}")
 
 
-def _earlier_batch_state(spark: SparkSession, root: str, batch_id: int):
-    """The state written by batches before ``batch_id`` (None before the
-    first write).  Reading only ``batch_id < N`` makes a replayed batch
-    probe exactly its pre-batch state, never the rows it wrote itself
-    on the failed attempt.  The read is gated on an explicit
-    filesystem existence check (Hadoop FS, so any supported scheme
-    works), NOT a blanket except: a corrupt or transiently-unreadable
-    state raises and fails the batch, which the streaming checkpoint
-    then retries — silently probing nothing is the one wrong outcome."""
+def _earlier_batch_state(
+    spark: SparkSession, root: str, batch_id: int, empty: DataFrame
+) -> DataFrame:
+    """The state written by batches before ``batch_id``, or ``empty``
+    (a relation with the state's columns and no rows) before the first
+    write — the optimizer prunes unions and outer joins against an
+    empty relation, so a first batch needs no plan of its own.
+
+    Reading only ``batch_id < N`` makes a replayed batch probe exactly
+    its pre-batch state, never the rows it wrote itself on the failed
+    attempt.  The read is gated on an explicit filesystem existence
+    check (Hadoop FS, so any supported scheme works), NOT a blanket
+    except: a corrupt or transiently-unreadable state raises and fails
+    the batch, which the streaming checkpoint then retries — silently
+    probing nothing is the one wrong outcome."""
     if not _path_exists(spark, root):
-        return None
+        return empty
     return spark.read.parquet(root).filter(F.col("batch_id") < batch_id)
 
 
 def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
     """foreachBatch kernel for STREAMING corpus dedup against a
     persisted LSH index — the production loop around
-    ``operators.dedup.dedup_incremental_minhash``:
+    ``operators.dedup.dedup_incremental_minhash``.  Per micro-batch of
+    documents (doc_id, text): the batch's ``lsh_band_keys`` probe the
+    index written by every earlier batch plus the batch itself through
+    ``operators.dedup.lsh_matches`` (batch_id is the micro-batch id),
+    then the matches go to ``matches_dir`` and the batch's band keys
+    to ``index_dir``.  Per-batch cost scales with the batch, never the
+    corpus.
 
-    per micro-batch of documents (doc_id, text):
-      1. compute the batch's (doc_id, band, key) LSH rows (map-only);
-      2. shuffle-join them against the parquet index accumulated by
-         every PREVIOUS batch → candidate matches (new doc, old doc),
-         PLUS a self-join of the batch's own bands → earlier-in-batch
-         matches (matched_doc_id < doc_id) — the same contract as
-         ``dedup_incremental_minhash``, so a duplicate pair arriving
-         inside one micro-batch is still caught;
-      3. write matches to ``matches_dir`` and the batch's own band
-         keys to ``index_dir`` — so later batches (and later runs:
-         the index is durable) dedup against everything before them.
-
-    At 100 TB the index is a bucketed table on (band, key); per-batch
-    cost scales with the batch, never the corpus.  Checkpoint retries
-    are REPLAY-STABLE, by the rule ``bloom_gate_batch_fn`` uses: both
-    relations are written (overwrite) as ``batch_id=N`` partitions and
-    the probe reads only ``batch_id < N``, so a batch replayed after
-    its index write committed rewrites identical matches instead of
-    matching its own band keys.  On-disk layout: ``index_dir`` and
-    ``matches_dir`` hold one ``batch_id=N`` directory per batch (read
-    back with a ``batch_id`` column); an index written flat by the
-    earlier append-only kernel must be moved under ``batch_id=-1``
-    before it is resumed.
+    Replay-stable: both relations are written (overwrite) as
+    ``batch_id=N`` partitions and the probe reads only ``batch_id <
+    N`` (``_write_batch_state`` / ``_earlier_batch_state``), so a batch
+    replayed after its index write committed rewrites identical
+    matches instead of matching its own band keys.  An index written
+    flat by the earlier append-only kernel must be moved under
+    ``batch_id=-1`` before it is resumed.
     """
-    from pyspark.sql import functions as F
-
-    from storm_data_etl_service_spark.operators.dedup import lsh_band_keys
+    from storm_data_etl_service_spark.operators.dedup import (
+        lsh_band_keys,
+        lsh_matches,
+    )
 
     def process(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bands = lsh_band_keys({"documents": batch_df}).persist()
+        bands = (
+            lsh_band_keys({"documents": batch_df})
+            .withColumn("batch_id", F.lit(batch_id))
+            .persist()
+        )
         try:
-            # within-batch: earlier-in-batch partner wins, i.e. the
-            # matched_doc_id < doc_id contract of
-            # dedup_incremental_minhash — so a duplicate pair arriving
-            # in ONE micro-batch is caught, not just across batches
-            matches = (
-                bands.select("band", "key", F.col("doc_id").alias("matched_doc_id"))
-                .join(bands, ["band", "key"])
-                .filter(F.col("matched_doc_id") < F.col("doc_id"))
-                .select("doc_id", "matched_doc_id")
-            )
-            index = _earlier_batch_state(spark, index_dir, batch_id)
-            if index is not None:
-                # cross-batch: anything in an earlier batch's index is a
-                # valid partner regardless of id order
-                matches = matches.unionByName(
-                    index.withColumnRenamed("doc_id", "matched_doc_id")
-                    .join(bands, ["band", "key"])
-                    .filter(F.col("matched_doc_id") != F.col("doc_id"))
-                    .select("doc_id", "matched_doc_id")
-                )
-            _write_batch_state(matches.distinct(), matches_dir, batch_id)
-            _write_batch_state(bands, index_dir, batch_id)
+            index = _earlier_batch_state(spark, index_dir, batch_id, bands.limit(0))
+            matches = lsh_matches(bands, bands.unionByName(index))
+            _write_batch_state(matches, matches_dir, batch_id)
+            _write_batch_state(bands.drop("batch_id"), index_dir, batch_id)
         finally:
             bands.unpersist()
 
@@ -406,62 +389,33 @@ def incremental_dedup_batch_fn(index_dir: str, matches_dir: str):
 
 def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
     """foreachBatch kernel for the STREAMING Bloom membership gate —
-    the production loop around ``operators.dedup.bloom_dedup_report``:
+    the production loop around ``operators.dedup.bloom_dedup_report``.
+    Per micro-batch of documents (doc_id, text): ``bloom_probe`` the
+    batch's ``content_hashes`` against the ``bloom_bits`` written by
+    every earlier batch (``bloom_hit``: possibly seen — the exact
+    confirm happens downstream, which a Bloom gate exists to avoid for
+    the definitely-new majority), add ``dup_of_in_batch`` (the earliest
+    exact copy inside the batch, which the index cannot cover yet),
+    then write the verdicts and the batch's bits.  State is O(m bits)
+    forever, versus the LSH index's per-document rows.
 
-    per micro-batch of documents (doc_id, text):
-      1. hash each document's content and derive its k Bloom bit
-         positions (map-only);
-      2. probe the durable bit set accumulated by every previous
-         batch → ``bloom_hit`` (all k bits present: possibly seen —
-         the exact confirm happens downstream against the content
-         store, which a Bloom gate exists to avoid hitting for the
-         definitely-new majority);
-      3. catch exact duplicates WITHIN the batch via a self-join on
-         the content hash (``dup_of_in_batch`` = earliest partner),
-         since the index only covers batches before this one;
-      4. write verdicts and the batch's distinct bits, each to its
-         batch_id-keyed partition directory — later batches (and later
-         runs: the bits are durable) gate against everything before
-         them.
-
-    State is O(m bits) forever — the whole point versus the LSH
-    index's per-document rows; at 100 TB the (bit) relation compacts
-    to an m/8-byte bitmap merged by OR and broadcast to executors.
-    Checkpoint retries are REPLAY-STABLE on both relations
-    (``_write_batch_state`` / ``_earlier_batch_state``): each writes
-    (overwrite) its own ``batch_id=N`` partition, and the probe reads
-    only partitions with ``batch_id < N`` — so a batch replayed after
-    its bits commit (verdict commit failed last time) still probes
-    exactly the pre-batch index and rewrites byte-identical verdicts,
-    instead of flipping its own first-seen docs to ``bloom_hit`` by
-    seeing its own bits.
+    Replay-stable on both relations, by the rule
+    ``incremental_dedup_batch_fn`` uses: a batch replayed after its
+    bits committed still probes exactly the pre-batch index and
+    rewrites byte-identical verdicts.
     """
-    from pyspark.sql import functions as F
-
     from storm_data_etl_service_spark.operators.dedup import (
-        BLOOM_HASHES,
-        bloom_bit_positions,
+        bloom_bits,
+        bloom_probe,
+        content_hashes,
     )
 
     def process(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        hashed = batch_df.select(
-            "doc_id", F.sha2(F.col("text"), 256).alias("h")
-        ).persist()
+        hashed = content_hashes(batch_df).persist()
         try:
-            probes = hashed.select(
-                "doc_id", F.explode(bloom_bit_positions(F.col("h"))).alias("bit")
-            )
-            bits = _earlier_batch_state(spark, bits_dir, batch_id)
-            if bits is not None:
-                idx = bits.select("bit").distinct().withColumn("_set", F.lit(1))
-                n_set = (
-                    probes.join(idx, "bit", "left")
-                    .groupBy("doc_id")
-                    .agg(F.count("_set").alias("n_set"))
-                )
-            else:
-                n_set = hashed.select("doc_id", F.lit(0).alias("n_set"))
+            own = bloom_bits(hashed)
+            earlier = _earlier_batch_state(spark, bits_dir, batch_id, own.limit(0))
             within = (
                 hashed.join(
                     hashed.select(F.col("doc_id").alias("earlier_id"), "h"), "h"
@@ -471,16 +425,12 @@ def bloom_gate_batch_fn(bits_dir: str, verdicts_dir: str):
                 .agg(F.min("earlier_id").alias("dup_of_in_batch"))
             )
             verdicts = (
-                hashed.join(n_set, "doc_id")
+                bloom_probe(hashed, earlier)
                 .join(within, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    (F.col("n_set") == BLOOM_HASHES).alias("bloom_hit"),
-                    "dup_of_in_batch",
-                )
+                .select("doc_id", "bloom_hit", "dup_of_in_batch")
             )
             _write_batch_state(verdicts, verdicts_dir, batch_id)
-            _write_batch_state(probes.select("bit").distinct(), bits_dir, batch_id)
+            _write_batch_state(own, bits_dir, batch_id)
         finally:
             hashed.unpersist()
 

@@ -50,6 +50,29 @@ def sessionize_stream(
     )
 
 
+def _interval_join(
+    left: DataFrame, right: DataFrame, within: str, watermark: str, how: str
+) -> DataFrame:
+    """Watermarked stream-stream join of each left event to the
+    same-user right events at most ``within`` after it; ``how`` is the
+    join type."""
+    lw = left.withWatermark("ts", watermark).alias("l")
+    rw = right.withWatermark("ts", watermark).alias("r")
+    return lw.join(
+        rw,
+        (F.col("l.user_id") == F.col("r.user_id"))
+        & (F.col("r.ts") > F.col("l.ts"))
+        & (F.col("r.ts") <= F.col("l.ts") + F.expr(f"INTERVAL {within}")),
+        how,
+    ).select(
+        F.col("l.user_id").alias("user_id"),
+        F.col("l.event_id").alias("id_left"),
+        F.col("r.event_id").alias("id_right"),
+        F.col("l.ts").alias("ts_left"),
+        F.col("r.ts").alias("ts_right"),
+    )
+
+
 def interval_join_stream(
     left: DataFrame,
     right: DataFrame,
@@ -68,20 +91,7 @@ def interval_join_stream(
     dropped.  Without the time bound the state would grow without
     limit; Spark rejects such a join in append mode for exactly that
     reason."""
-    lw = left.withWatermark("ts", watermark).alias("l")
-    rw = right.withWatermark("ts", watermark).alias("r")
-    return lw.join(
-        rw,
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") > F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr(f"INTERVAL {within}")),
-    ).select(
-        F.col("l.user_id").alias("user_id"),
-        F.col("l.event_id").alias("id_left"),
-        F.col("r.event_id").alias("id_right"),
-        F.col("l.ts").alias("ts_left"),
-        F.col("r.ts").alias("ts_right"),
-    )
+    return _interval_join(left, right, within, watermark, "inner")
 
 
 def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
@@ -96,12 +106,13 @@ def window_topk_counts_stream(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
     """Incremental per-(window, event_type) counts — the streaming
-    half of windowed top-k.  Ranking cannot run inside the streaming
-    plan (no rank-after-aggregation in update/append modes), so the
-    contract splits: this stateful count updates incrementally;
-    ``rank_window_topk`` runs per micro-batch inside foreachBatch on
-    the (tiny) aggregated deltas — the standard Spark decomposition
-    for streaming leaderboards."""
+    half of windowed top-k and of the drift monitor.  Ranking cannot
+    run inside the streaming plan (no rank-after-aggregation in
+    update/append modes), so the contract splits: this stateful count
+    updates incrementally; ``rank_window_topk`` or
+    ``drift_against_baseline`` runs per micro-batch inside
+    foreachBatch on the (tiny) aggregated deltas — the standard Spark
+    decomposition for streaming leaderboards and monitors."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window(F.col("ts"), window).alias("w"), "event_type")
@@ -121,20 +132,6 @@ def rank_window_topk(counts: DataFrame, k: int = 3) -> DataFrame:
     return (
         counts.withColumn("rk", F.row_number().over(w).cast("int"))
         .filter(F.col("rk") <= k)
-    )
-
-
-def windowed_type_counts_stream(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Incremental per-(window, type) counts — the streaming half of
-    the drift monitor (same decomposition as the top-k leaderboard:
-    stateful counts in the stream, the comparison in foreachBatch)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window(F.col("ts"), window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("bucket_start"), "event_type", "n")
     )
 
 
@@ -191,18 +188,4 @@ def interval_left_join_stream(
     (spark.sql.streaming.multipleWatermarkPolicy=min) — a quiet left
     stream freezes eviction even while the right stream races ahead,
     and null rows surface in the batch AFTER the advance."""
-    lw = left.withWatermark("ts", watermark).alias("l")
-    rw = right.withWatermark("ts", watermark).alias("r")
-    return lw.join(
-        rw,
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") > F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr(f"INTERVAL {within}")),
-        "leftOuter",
-    ).select(
-        F.col("l.user_id").alias("user_id"),
-        F.col("l.event_id").alias("id_left"),
-        F.col("r.event_id").alias("id_right"),
-        F.col("l.ts").alias("ts_left"),
-        F.col("r.ts").alias("ts_right"),
-    )
+    return _interval_join(left, right, within, watermark, "leftOuter")

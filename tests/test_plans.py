@@ -747,6 +747,64 @@ def test_vector_folds_are_spelled_once():
     assert _owners(similarity, raises) == {("similarity.py", "_cosine_core")}, raises
 
 
+
+def test_incremental_gates_are_spelled_once():
+    """Each incremental-dedup decision is spelled once per engine: the
+    id split (``dedup.with_id_split`` / ``registry._split_sql``), the
+    LSH match rule (``dedup.lsh_matches``, beside the all-pairs
+    ``dedup_minhash_lsh`` join / the ``_minhash_oracle`` band join)
+    and the Bloom bit set and probe (``dedup.bloom_bits`` and
+    ``bloom_probe`` / ``registry._bloom_bits_sql``).  The streaming
+    kernels call them, so ``streaming/pipeline.py`` joins no band or
+    bit relation of its own."""
+    import ast
+    from pathlib import Path
+
+    import storm_data_etl_service_spark.operators as ops
+    import storm_data_etl_service_spark.streaming.pipeline as stream
+
+    root = Path(ops.__file__).parent
+    registry, dedup, pipeline = root / "registry.py", root / "dedup.py", Path(stream.__file__)
+    split = set().union(*(_sites(p, "INCREMENTAL_SPLIT") for p in root.glob("*.py")))
+    assert split == {
+        ("dedup.py", None),  # the constant itself
+        ("dedup.py", "with_id_split"),
+        ("registry.py", "_split_sql"),
+    }, split
+    assert _sites(registry, "a.key = b.key") == {("registry.py", "_minhash_oracle")}
+    assert _sites(registry, "'bloom' || i") == {("registry.py", "_bloom_bits_sql")}
+
+    def joins(path, names):
+        """Owners of the ``.join(`` calls of ``path`` that name one of
+        ``names`` (as a column, possibly table-qualified)."""
+        lines = [
+            n.lineno
+            for n in ast.walk(ast.parse(path.read_text()))
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "join"
+            and any(
+                isinstance(c, ast.Constant)
+                and isinstance(c.value, str)
+                and c.value.split(".")[-1] in names
+                for c in ast.walk(n)
+            )
+        ]
+        return _owners(path, lines)
+
+    assert joins(dedup, {"band", "nband"}) == {
+        ("dedup.py", "dedup_minhash_lsh"),
+        ("dedup.py", "lsh_matches"),
+    }
+    assert joins(dedup, {"bit"}) == {("dedup.py", "bloom_probe")}
+    assert joins(pipeline, {"band", "nband", "key", "bit"}) == set()
+    assert _sites(pipeline, "bloom_bit_positions") == set()
+    assert _sites(dedup, "bloom_bit_positions(") == {
+        ("dedup.py", "bloom_bit_positions"),
+        ("dedup.py", "bloom_bits"),
+        ("dedup.py", "bloom_probe"),
+    }
+
 def test_stage_is_lazy(spark):
     """``stage`` defers the materialization of a shuffle-free frame to
     its first consumer: creating it submits no job, and its plan reads

@@ -463,7 +463,7 @@ def test_streaming_drift_monitor_matches_batch(spark, workdir):
     skewed window scores higher."""
     from storm_data_etl_service_spark.streaming.windows import (
         drift_against_baseline,
-        windowed_type_counts_stream,
+        window_topk_counts_stream,
     )
 
     schema = "event_id long, ts timestamp, user_id long, event_type string"
@@ -492,7 +492,7 @@ def test_streaming_drift_monitor_matches_batch(spark, workdir):
             got[r["bucket_start"]] = (r["n_types"], r["chi2"])
 
     q = (
-        windowed_type_counts_stream(
+        window_topk_counts_stream(
             spark.readStream.schema(schema).json(str(src))
         )
         .writeStream.outputMode("complete")
@@ -969,6 +969,62 @@ def test_streaming_bloom_gate_flags_across_batches(spark, workdir):
     )
     assert n_bits_after == n_bits
 
+
+
+def test_stream_gates_match_registry_entries(spark, sf_dir, workdir):
+    """Fed as two micro-batches split at the registry's id boundary
+    (ids below t0, then the rest), each streaming kernel's second batch
+    reproduces its registry entry: the LSH kernel's matches equal
+    ``dedup_incremental_minhash`` row for row, and the Bloom gate's
+    ``bloom_hit`` per document equals ``bloom_dedup_report``'s.  One
+    above-split document is planted as an exact copy of a below-split
+    text, so both gates see a true hit."""
+    import math
+
+    from storm_data_etl_service_spark.operators.dedup import (
+        BLOOM_BITS,
+        INCREMENTAL_SPLIT,
+        bloom_dedup_report,
+        dedup_incremental_minhash,
+    )
+    from storm_data_etl_service_spark.schemas import load_tables
+    from storm_data_etl_service_spark.streaming.pipeline import (
+        bloom_gate_batch_fn,
+        incremental_dedup_batch_fn,
+    )
+
+    rows = sorted(
+        tuple(r)
+        for r in load_tables(spark, sf_dir)["documents"].select("doc_id", "text").collect()
+    )
+    t0 = math.floor((rows[-1][0] + 1) * INCREMENTAL_SPLIT)
+    rows[-1] = (rows[-1][0], rows[0][1])  # plant: the last doc copies the first
+    assert rows[0][0] < t0 <= rows[-1][0]
+    schema = "doc_id long, text string"
+    t = {"documents": spark.createDataFrame(rows, schema)}
+    batches = [
+        spark.createDataFrame([r for r in rows if r[0] < t0], schema),
+        spark.createDataFrame([r for r in rows if r[0] >= t0], schema),
+    ]
+
+    lsh = incremental_dedup_batch_fn(str(workdir / "index"), str(workdir / "matches"))
+    bloom = bloom_gate_batch_fn(str(workdir / "bits"), str(workdir / "verdicts"))
+    for batch_id, batch in enumerate(batches):
+        lsh(batch, batch_id)
+        bloom(batch, batch_id)
+
+    def second_batch(name, cols):
+        df = spark.read.parquet(str(workdir / name)).filter(F.col("batch_id") == 1)
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    matches = second_batch("matches", ["doc_id", "matched_doc_id"])
+    assert matches == sorted(tuple(r) for r in dedup_incremental_minhash(t).collect())
+    assert (rows[-1][0], rows[0][0]) in matches
+
+    hits = second_batch("verdicts", ["doc_id", "bloom_hit"])
+    want = bloom_dedup_report(t, m=BLOOM_BITS).select("doc_id", "bloom_hit")
+    assert hits == sorted(tuple(r) for r in want.collect())
+    assert (rows[-1][0], True) in hits
 
 def test_batch_kernels_release_their_cached_relations(spark, workdir, monkeypatch):
     """Every relation a foreachBatch kernel persists is unpersisted
