@@ -25,9 +25,24 @@ Semantics notes (the "hard parts", SURVEY.md §7):
 * ``processed_at`` takes an injectable override mirroring the
   reference's swappable clock (internal/domain/clock.go:7-16) so
   golden-output tests are deterministic.
+
+Column trees are built once per process.  Every ``F.*`` call is a
+round trip to the JVM (about eight with the session's
+``dataFrameDebugging`` call-site capture on), and the chain below is
+~2,000 of them — so ``parse_raw_events``, ``enrich`` and ``flatten``
+read their expressions from ``functools.cache`` builders keyed only on
+hashable arguments, and each call merely applies them to its frame.
+Sharing them is safe: a ``Column`` is an immutable, unresolved
+expression that names columns but no DataFrame or session (it is
+resolved against the frame it is applied to), and cached Columns keep
+working across ``spark.stop()`` and a new ``get_spark()`` in the same
+process.  Never build ``F.*`` trees inside a per-batch function; add a
+memoized builder beside it.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -235,25 +250,11 @@ def derive_time_bucket(event_time: Column) -> Column:
     return F.date_trunc("hour", event_time)
 
 
-def enrich(
-    df: DataFrame,
-    processed_at: Column | None = None,
-    passthrough: tuple = (),
-) -> DataFrame:
-    """Full enrichment: raw CSV-shaped columns → nested StormEvent.
-
-    Input columns: the 11 ``RAW_CSV_SCHEMA`` fields plus
-    ``kafka_timestamp`` (per-row base timestamp for HHMM expansion —
-    the Kafka message timestamp in streaming).  ``processed_at`` defaults
-    to ``current_timestamp()``; pass ``F.lit(<ts>)`` for frozen-clock
-    golden tests (mirror of the reference's ``SetClock``,
-    internal/domain/clock.go:7-16).
-
-    Pure projection — no shuffle, no UDF; Catalyst collapses the whole
-    chain into one WholeStageCodegen stage.
-    """
-    if processed_at is None:
-        processed_at = F.current_timestamp()
+@functools.cache
+def _enrich_columns() -> tuple[tuple, tuple[Column, ...]]:
+    """``enrich``'s three staged ``withColumns`` steps, as (name,
+    Column) pairs, and its final projection minus ``processed_at`` and
+    the passthrough columns — built once per process."""
     base_ts = F.col("kafka_timestamp")
 
     # Missing JSON keys arrive as nulls; Go's unmarshal gives "" — pin
@@ -269,37 +270,27 @@ def enrich(
     # inside conditional branches) — measured 6× slower.  Catalyst's
     # CollapseProject keeps these stages separate because each alias
     # is non-cheap and referenced more than once.
-    stage1 = df.withColumns(
-        {
-            "_et": normalize_event_type(s("EventType")),
-            "_lat": parse_float_or_zero(s("Lat")),
-            "_lon": parse_float_or_zero(s("Lon")),
-            "_time_raw": F.trim(s("Time")),
-        }
-    )
-    stage2 = stage1.withColumns(
-        {
-            "_raw_mag": parse_magnitude(
-                magnitude_raw_string(
-                    F.col("_et"), s("Size"), s("F_Scale"), s("Speed")
-                )
-            ),
-            "_unit": normalize_unit(F.col("_et")),
-            "_event_time": parse_event_time(F.col("_time_raw"), base_ts),
-        }
-    )
-    stage3 = stage2.withColumns(
-        {
-            "_mag": normalize_magnitude(
-                F.col("_raw_mag"), F.col("_unit"), F.col("_et")
-            ),
-        }
-    )
+    stage1 = {
+        "_et": normalize_event_type(s("EventType")),
+        "_lat": parse_float_or_zero(s("Lat")),
+        "_lon": parse_float_or_zero(s("Lon")),
+        "_time_raw": F.trim(s("Time")),
+    }
+    stage2 = {
+        "_raw_mag": parse_magnitude(
+            magnitude_raw_string(F.col("_et"), s("Size"), s("F_Scale"), s("Speed"))
+        ),
+        "_unit": normalize_unit(F.col("_et")),
+        "_event_time": parse_event_time(F.col("_time_raw"), base_ts),
+    }
+    stage3 = {
+        "_mag": normalize_magnitude(F.col("_raw_mag"), F.col("_unit"), F.col("_et")),
+    }
 
     et, mag = F.col("_et"), F.col("_mag")
     event_time = F.col("_event_time")
     loc = parse_location(s("Location"))
-    return stage3.select(
+    projection = (
         generate_id(
             et, s("State"), F.col("_lat"), F.col("_lon"), F.col("_time_raw"), F.col("_raw_mag")
         ).alias("id"),
@@ -322,9 +313,54 @@ def enrich(
         s("Comments").alias("comments"),
         extract_source_office(s("Comments")).alias("source_office"),
         derive_time_bucket(event_time).alias("time_bucket"),
+    )
+    stages = tuple(tuple(stage.items()) for stage in (stage1, stage2, stage3))
+    return stages, projection
+
+
+def enrich(
+    df: DataFrame,
+    processed_at: Column | None = None,
+    passthrough: tuple = (),
+) -> DataFrame:
+    """Full enrichment: raw CSV-shaped columns → nested StormEvent.
+
+    Input columns: the 11 ``RAW_CSV_SCHEMA`` fields plus
+    ``kafka_timestamp`` (per-row base timestamp for HHMM expansion —
+    the Kafka message timestamp in streaming).  ``processed_at`` defaults
+    to ``current_timestamp()``; pass ``F.lit(<ts>)`` for frozen-clock
+    golden tests (mirror of the reference's ``SetClock``,
+    internal/domain/clock.go:7-16).
+
+    Pure projection — no shuffle, no UDF; Catalyst collapses the whole
+    chain into one WholeStageCodegen stage.
+    """
+    if processed_at is None:
+        processed_at = F.current_timestamp()
+    stages, projection = _enrich_columns()
+    for stage in stages:
+        df = df.withColumns(dict(stage))
+    return df.select(
+        *projection,
         processed_at.alias("processed_at"),
         *[F.col(c) for c in passthrough],
     )
+
+
+@functools.cache
+def _parse_columns(value_col: str) -> tuple[Column, Column]:
+    """``parse_raw_events``'s ``parsed`` and ``is_poison`` columns."""
+    import pyspark.sql.types as T
+
+    schema_with_corrupt = T.StructType(
+        list(RAW_CSV_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    parsed = F.from_json(
+        F.col(value_col).cast("string"),
+        schema_with_corrupt,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
+    )
+    return parsed, F.col("parsed._corrupt_record").isNotNull()
 
 
 def parse_raw_events(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -339,42 +375,37 @@ def parse_raw_events(df: DataFrame, value_col: str = "value") -> DataFrame:
     NOT NULL`` marks the dead-letter branch; callers filter it out and
     continue, reproducing the skip-and-commit policy.
     """
-    import pyspark.sql.types as T
-
-    schema_with_corrupt = T.StructType(
-        list(RAW_CSV_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    return df.withColumn(
-        "parsed",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ),
-    ).withColumn("is_poison", F.col("parsed._corrupt_record").isNotNull())
+    parsed, is_poison = _parse_columns(value_col)
+    return df.withColumn("parsed", parsed).withColumn("is_poison", is_poison)
 
 
-def flatten(df: DataFrame) -> DataFrame:
-    """P15 — the downstream flat contract: nested structs become
-    ``geo_*`` / ``measurement_*`` / ``location_*`` columns
-    (reference internal/domain/event.go:40,52,62)."""
-    return df.select(
-        "id",
-        "event_type",
+@functools.cache
+def _flatten_columns() -> tuple[Column, ...]:
+    """``flatten``'s projection."""
+    return (
+        F.col("id"),
+        F.col("event_type"),
         F.col("geo.lat").alias("geo_lat"),
         F.col("geo.lon").alias("geo_lon"),
         F.col("measurement.magnitude").alias("measurement_magnitude"),
         F.col("measurement.unit").alias("measurement_unit"),
         F.col("measurement.severity").alias("measurement_severity"),
-        "event_time",
+        F.col("event_time"),
         F.col("location.raw").alias("location_raw"),
         F.col("location.name").alias("location_name"),
         F.col("location.distance").alias("location_distance"),
         F.col("location.direction").alias("location_direction"),
         F.col("location.state").alias("location_state"),
         F.col("location.county").alias("location_county"),
-        "comments",
-        "source_office",
-        "time_bucket",
-        "processed_at",
+        F.col("comments"),
+        F.col("source_office"),
+        F.col("time_bucket"),
+        F.col("processed_at"),
     )
+
+
+def flatten(df: DataFrame) -> DataFrame:
+    """P15 — the downstream flat contract: nested structs become
+    ``geo_*`` / ``measurement_*`` / ``location_*`` columns
+    (reference internal/domain/event.go:40,52,62)."""
+    return df.select(*_flatten_columns())

@@ -33,7 +33,9 @@ at 100 TB is noise next to the enrichment chain itself.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import functools
+
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from storm_data_etl_service_spark.functions.enrich import format_g
@@ -116,11 +118,13 @@ def _obj(name: str, *frags: Column) -> Column:
     )
 
 
-def storm_wire_json(df: DataFrame) -> Column:
+@functools.cache
+def storm_wire_json() -> Column:
     """The exact ``json.Marshal(StormEvent)`` bytes as a string column
-    over the enriched frame (verified byte-for-byte against a
+    over the enriched frame's columns (verified byte-for-byte against a
     Go-semantics golden over the reference's 271-record fixture in
-    tests/test_wire_format.py)."""
+    tests/test_wire_format.py).  Built once per process, like the
+    enrich chain's Columns (functions/enrich.py)."""
     c = F.col
     fragments = [
         _str_field("id", c("id")),

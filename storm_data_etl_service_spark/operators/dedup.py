@@ -962,9 +962,11 @@ def bloom_bits(hashed: DataFrame, m: int = BLOOM_BITS) -> DataFrame:
 
 def bloom_probe(hashed: DataFrame, bits: DataFrame, m: int = BLOOM_BITS) -> DataFrame:
     """The one Bloom probe: per (doc_id, h) of ``hashed``,
-    ``bloom_hit`` = all k of its bit positions are in ``bits`` (any
+    ``bloom_hit`` = every one of its probe bits is in ``bits`` (any
     relation with a ``bit`` column; repeated bits, as in a union of
-    batches' bit sets, count once)."""
+    batches' bit sets, count once).  "Every bit set", not "k bits
+    set": a doc_id carried twice by one micro-batch (a replay) makes
+    2·k probe rows, and a key's k positions may repeat."""
     idx = bits.select("bit").distinct().withColumn("_set", F.lit(1))
     return (
         hashed.select(
@@ -972,7 +974,7 @@ def bloom_probe(hashed: DataFrame, bits: DataFrame, m: int = BLOOM_BITS) -> Data
         )
         .join(idx, "bit", "left")
         .groupBy("doc_id", "h")
-        .agg((F.count("_set") == BLOOM_HASHES).alias("bloom_hit"))
+        .agg(F.bool_and(F.col("_set").isNotNull()).alias("bloom_hit"))
     )
 
 

@@ -6,7 +6,8 @@ internal/adapter/httpadapter/server.go, README.md endpoints table):
 * ``GET /healthz`` — liveness, always 200;
 * ``GET /readyz``  — 200 after the first processed batch, else 503;
 * ``GET /metrics`` — Prometheus text exposition of the pipeline
-  counters (reference internal/observability/metrics.go:20-66).
+  counters (reference internal/observability/metrics.go:20-66) and
+  the processed batches' wall time.
 
 Runs in a daemon thread next to the Spark driver — the driver is the
 single coordinating process, exactly where the reference hosts it.
@@ -21,7 +22,8 @@ from storm_data_etl_service_spark.streaming.pipeline import PipelineMetrics
 
 
 def render_metrics(m: PipelineMetrics) -> str:
-    """Prometheus text format, same metric names as the reference."""
+    """Prometheus text format, same metric names as the reference,
+    plus the wall time of the processed batches."""
     lines = [
         "# TYPE storm_etl_messages_consumed_total counter",
         f"storm_etl_messages_consumed_total {m.consumed}",
@@ -33,6 +35,11 @@ def render_metrics(m: PipelineMetrics) -> str:
         f"storm_etl_batches_total {m.batches}",
         "# TYPE storm_etl_running gauge",
         f"storm_etl_running {1 if m.ready else 0}",
+        "# TYPE storm_etl_batch_duration_seconds summary",
+        f"storm_etl_batch_duration_seconds_sum {m.batch_seconds_sum}",
+        f"storm_etl_batch_duration_seconds_count {m.batch_seconds_count}",
+        "# TYPE storm_etl_last_batch_duration_seconds gauge",
+        f"storm_etl_last_batch_duration_seconds {m.last_batch_seconds}",
     ]
     return "\n".join(lines) + "\n"
 

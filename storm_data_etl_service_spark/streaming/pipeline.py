@@ -31,10 +31,12 @@ The enrichment applied per batch is the *same* expression-only
 
 from __future__ import annotations
 
+import functools
 import threading
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -43,6 +45,7 @@ from storm_data_etl_service_spark.functions.enrich import (
     flatten,
     parse_raw_events,
 )
+from storm_data_etl_service_spark.functions.wire import storm_wire_json
 from storm_data_etl_service_spark.schemas import RAW_EVENT_SCHEMA
 
 
@@ -66,26 +69,32 @@ def split_poison(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     return split_parsed(parse_raw_events(raw))
 
 
+@functools.cache
+def _split_columns() -> tuple[Column, tuple[Column, ...], tuple[Column, ...]]:
+    """``split_parsed``'s poison predicate and its two projections."""
+    is_poison = F.col("is_poison")
+    poison = (
+        F.col("value").cast("string").alias("raw_value"),
+        F.col("topic"),
+        F.col("partition"),
+        F.col("offset"),
+        F.col("timestamp"),
+    )
+    valid = (
+        F.col("parsed.*"),
+        F.col("timestamp").alias("kafka_timestamp"),
+        F.col("offset").alias("kafka_offset"),
+    )
+    return is_poison, poison, valid
+
+
 def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Fork an already-parsed envelope frame into valid / dead-letter
     (factored out so ``_process_batch`` can persist the parse once and
     derive both forks from the cache — single parse per micro-batch)."""
-    poison = parsed.filter(F.col("is_poison")).select(
-        F.col("value").cast("string").alias("raw_value"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
-    valid = (
-        parsed.filter(~F.col("is_poison"))
-        .select(
-            "parsed.*",
-            F.col("timestamp").alias("kafka_timestamp"),
-            F.col("offset").alias("kafka_offset"),
-        )
-        .drop("_corrupt_record")
-    )
+    is_poison, poison_cols, valid_cols = _split_columns()
+    poison = parsed.filter(is_poison).select(*poison_cols)
+    valid = parsed.filter(~is_poison).select(*valid_cols).drop("_corrupt_record")
     return valid, poison
 
 
@@ -103,15 +112,36 @@ def dedup_stream_within_watermark(
     )
 
 
+@functools.cache
+def _first_wins_rank(order_col: str) -> tuple[Column, Column]:
+    """``dedup_first_wins``'s per-id arrival rank and its keep-first
+    predicate."""
+    w = Window.partitionBy("id").orderBy(F.col(order_col).asc())
+    return F.row_number().over(w), F.col("_rk") == 1
+
+
 def dedup_first_wins(enriched: DataFrame, order_col: str = "kafka_offset") -> DataFrame:
     """D8 — deterministic first-wins dedup by id: rank by the explicit
     arrival-order column (the reference's 'first occurrence' is file
     order, which does not exist under parallelism — SURVEY.md §7)."""
-    w = Window.partitionBy("id").orderBy(F.col(order_col).asc())
+    rank, first = _first_wins_rank(order_col)
+    return enriched.withColumn("_rk", rank).filter(first).drop("_rk")
+
+
+@functools.cache
+def _kafka_sink_columns() -> tuple[Column, Column, Column]:
+    """``kafka_sink_frame``'s key, value and headers."""
+    headers = F.array(
+        F.struct(F.lit("event_type").alias("key"), F.col("event_type").cast("binary").alias("value")),
+        F.struct(
+            F.lit("processed_at").alias("key"),
+            F.date_format("processed_at", "yyyy-MM-dd'T'HH:mm:ssX").cast("binary").alias("value"),
+        ),
+    )
     return (
-        enriched.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
+        F.col("id").cast("binary").alias("key"),
+        storm_wire_json().alias("value"),
+        headers.alias("headers"),
     )
 
 
@@ -121,20 +151,19 @@ def kafka_sink_frame(enriched: DataFrame) -> DataFrame:
     full ``omitempty`` semantics incl. empty-string ``comments``/
     ``source_office``, see functions/wire.py), headers event_type +
     processed_at (reference internal/adapter/kafka/writer.go:55-68)."""
-    from storm_data_etl_service_spark.functions.wire import storm_wire_json
+    return enriched.select(*_kafka_sink_columns())
 
-    payload = storm_wire_json(enriched)
-    headers = F.array(
-        F.struct(F.lit("event_type").alias("key"), F.col("event_type").cast("binary").alias("value")),
-        F.struct(
-            F.lit("processed_at").alias("key"),
-            F.date_format("processed_at", "yyyy-MM-dd'T'HH:mm:ssX").cast("binary").alias("value"),
+
+@functools.cache
+def _batch_counts() -> tuple[tuple[Column, Column], Column]:
+    """``_process_batch``'s observed aggregates: poison and valid rows
+    over the parse, produced rows over the deduped output."""
+    return (
+        (
+            F.count(F.when(F.col("is_poison"), 1)).alias("n_poison"),
+            F.count(F.when(~F.col("is_poison"), 1)).alias("n_in"),
         ),
-    )
-    return enriched.select(
-        F.col("id").cast("binary").alias("key"),
-        payload.alias("value"),
-        headers.alias("headers"),
+        F.count(F.lit(1)).alias("n_out"),
     )
 
 
@@ -152,6 +181,9 @@ class PipelineMetrics:
     transform_errors: int = 0
     batches: int = 0
     ready: bool = False
+    batch_seconds_sum: float = 0.0
+    batch_seconds_count: int = 0
+    last_batch_seconds: float = 0.0
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def record_batch(self, consumed: int, produced: int, errors: int) -> None:
@@ -161,6 +193,15 @@ class PipelineMetrics:
             self.transform_errors += errors
             self.batches += 1
             self.ready = True
+
+    def record_batch_seconds(self, seconds: float) -> None:
+        """One processed batch's wall time, as ``_process_batch``
+        measures it (a call of its own: subclasses override
+        ``record_batch`` with its three-count signature)."""
+        with self._lock:
+            self.batch_seconds_sum += seconds
+            self.batch_seconds_count += 1
+            self.last_batch_seconds = seconds
 
 
 class StormStreamPipeline:
@@ -196,23 +237,22 @@ class StormStreamPipeline:
         deduped output — exactly one enrich+dedup execution per batch,
         no standalone ``.count()`` actions.  The dead-letter write (a
         cache scan, not a re-parse) follows the sink only when the
-        batch held poison; both finish before the offsets commit.
+        batch held poison; both finish before the offsets commit, and
+        the batch's wall time goes to ``record_batch_seconds``.
         ``consumed`` is every message read, replays dropped by
         first-wins dedup included (the reference counts in-process for
         free, internal/pipeline/pipeline.go:104-153)."""
         from pyspark.sql import Observation
 
+        started = time.perf_counter()
+        in_counts, out_count = _batch_counts()
         parsed = parse_raw_events(batch_df).persist()
         try:
             # observed on the persisted parse, below enrich: a
             # CollectMetrics over the enriched projection measured ~30%
             # slower per 1000-record batch on 4 vCPUs
             obs_in = Observation(f"parsed_batch_{batch_id}")
-            counted = parsed.observe(
-                obs_in,
-                F.count(F.when(F.col("is_poison"), 1)).alias("n_poison"),
-                F.count(F.when(~F.col("is_poison"), 1)).alias("n_in"),
-            )
+            counted = parsed.observe(obs_in, *in_counts)
             enriched = enrich(
                 split_parsed(counted)[0],
                 processed_at=self.processed_at,
@@ -220,7 +260,7 @@ class StormStreamPipeline:
             )
             deduped = dedup_first_wins(enriched).drop("kafka_offset")
             obs_out = Observation(f"sink_batch_{batch_id}")
-            observed = deduped.observe(obs_out, F.count(F.lit(1)).alias("n_out"))
+            observed = deduped.observe(obs_out, out_count)
             self.sink_writer(observed, batch_id)
             n_in, n_poison = obs_in.get["n_in"], obs_in.get["n_poison"]
             n_out = obs_out.get["n_out"]
@@ -231,6 +271,7 @@ class StormStreamPipeline:
         self.metrics.record_batch(
             consumed=n_in + n_poison, produced=n_out, errors=n_poison
         )
+        self.metrics.record_batch_seconds(time.perf_counter() - started)
 
     def start(
         self,
@@ -265,9 +306,7 @@ def retry_with_backoff(
     wraps driver-side sink calls in ``foreachBatch`` where the
     reference's extract/load retry loop lives.  Returns a wrapped
     callable with the same signature."""
-    import time as _time
-
-    do_sleep = sleep or _time.sleep
+    do_sleep = sleep or time.sleep
 
     def wrapped(*args, **kwargs):
         delay = base_ms

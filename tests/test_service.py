@@ -67,9 +67,9 @@ def test_render_metrics_names():
         assert name in text
 
 
-def test_file_service_pipeline_end_to_end(spark, workdir):
-    """build_pipeline with file source/sink processes records and
-    reports through the same metrics the endpoints expose."""
+def _run_file_pipeline(spark, workdir):
+    """build_pipeline over a file source of 8 fixture records, run to
+    completion."""
     from storm_data_etl_service_spark.sources.storm_fixture import (
         BASE_TS,
         RAW_COLUMNS,
@@ -103,11 +103,34 @@ def test_file_service_pipeline_end_to_end(spark, workdir):
     )
     q = pipe.start(str(workdir / "ckpt"))
     q.awaitTermination(120)
+    return pipe
+
+
+def test_file_service_pipeline_end_to_end(spark, workdir):
+    """build_pipeline with file source/sink processes records and
+    reports through the same metrics the endpoints expose."""
+    pipe = _run_file_pipeline(spark, workdir)
     assert pipe.metrics.produced == 8
     assert pipe.metrics.ready
     out = spark.read.parquet(str(workdir / "out"))
     assert out.count() == 8
     assert "id" in out.columns
+
+
+def test_metrics_export_batch_durations(spark, workdir):
+    """/metrics carries the wall time of the processed batches, as
+    measured inside the micro-batch kernel."""
+    pipe = _run_file_pipeline(spark, workdir)
+    samples = {}
+    for line in render_metrics(pipe.metrics).splitlines():
+        if not line.startswith("#"):
+            name, value = line.split()
+            samples[name] = float(value)
+    n = samples["storm_etl_batch_duration_seconds_count"]
+    assert n == samples["storm_etl_batches_total"] >= 1
+    total = samples["storm_etl_batch_duration_seconds_sum"]
+    last = samples["storm_etl_last_batch_duration_seconds"]
+    assert 0 < last <= total < 120
 
 
 def test_kafka_service_source_carries_group_id(monkeypatch):

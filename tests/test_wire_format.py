@@ -117,7 +117,7 @@ def go_marshal_storm_event(r) -> str:
 
 def _assert_byte_parity(enriched):
     rows = (
-        enriched.withColumn("_wire", storm_wire_json(enriched))
+        enriched.withColumn("_wire", storm_wire_json())
         .orderBy("id")
         .collect()
     )
@@ -182,7 +182,7 @@ def test_wire_omits_empty_strings_like_go(spark):
     enriched = enrich(raw, processed_at=F.lit(FROZEN_CLOCK).cast("timestamp"))
     wires = [
         (json.loads(w), w)
-        for (w,) in enriched.select(storm_wire_json(enriched)).collect()
+        for (w,) in enriched.select(storm_wire_json()).collect()
     ]
     no_comment = [p for p, _ in wires if "comments" not in p]
     assert no_comment, "fixture must exercise the empty-comments path"
@@ -215,7 +215,7 @@ def test_wire_escaping_and_float_rules(spark):
     frozen_us = datetime.datetime(2024, 4, 27, 6, 0, 0, 120000)
     enriched = enrich(raw, processed_at=F.lit(frozen_us).cast("timestamp"))
     _assert_byte_parity(enriched)
-    (wire,) = enriched.select(storm_wire_json(enriched)).first()
+    (wire,) = enriched.select(storm_wire_json()).first()
     assert '\\"Quo\\\\ted\\"' in wire
     assert "Li\\u003cn\\u003ee1\\n\\tTab \\u0026 co" in wire
     assert "café — naïve ünïcode" in wire  # raw UTF-8, not \u-escaped
