@@ -226,9 +226,9 @@ FLAG_NOTES = {
         "determinism-checked form."
     ),
     "knn_graph_lsh": (
-        "if flagged, check the corpus: since round 4 the registry runs "
-        "the bits=None auto-width form (the DuckDB oracle derives the "
-        "same width from count(*)), which holds bucket size — and the "
+        "if flagged, check the corpus: since round 4 the entry derives "
+        "its prefix width from the corpus size (the DuckDB oracle derives "
+        "the same width from count(*)), which holds bucket size — and the "
         "per-bucket Arrow top-k's quadratic term — constant in n up to "
         "2^MAX_LSH_PLANES·KNN_TARGET_BUCKET vectors.  The r3 exp ~1.05 "
         "was the since-retired pinned-SEARCH_PREFIX_BITS artifact."

@@ -628,47 +628,43 @@ def _bucket_sql(n_planes: int) -> str:
     return " || ".join(bits)
 
 
-def _lsh_buckets_oracle() -> str:
-    """Auto-width twin of similarity.ann_lsh_buckets: the bucket key is
-    the first ``bits`` sign bits where ``bits`` is the same
-    ``knn_auto_bits`` closed form over count(*) the Spark side derives
-    (``_auto_bits_cte``) — fixed widths make bucket population ∝ n."""
+def _lsh_bucket_ctes(*extra: str) -> str:
+    """The auto-width LSH index as CTEs — the twin of
+    similarity._lsh_bucketed: ``e``, the width ``nb`` (``bits``) and
+    ``bucketed`` = (vec_id, v, ``extra`` columns, pfx), pfx being the
+    first ``bits`` of the MAX_LSH_PLANES sign bits."""
     from storm_data_etl_service_spark.operators.similarity import MAX_LSH_PLANES
 
-    return f"""WITH {_EMB_CTE},
+    cols = "".join(f", {c}" for c in extra)
+    return f"""{_EMB_CTE},
 {_auto_bits_cte()},
-fb AS (SELECT vec_id, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e)
-SELECT vec_id, substr(fullpfx, 1, bits) AS bucket FROM fb, nb"""
+fb AS (SELECT vec_id, v{cols}, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e),
+bucketed AS (SELECT fb.* EXCLUDE (fullpfx), substr(fullpfx, 1, bits) AS pfx
+             FROM fb, nb)"""
+
+
+#: The vector norm as the extra ``nrm`` column of ``_lsh_bucket_ctes``.
+_NRM = f"sqrt({_dot_sql('v', 'v')}) AS nrm"
+
+
+def _lsh_buckets_oracle() -> str:
+    """Twin of similarity.ann_lsh_buckets."""
+    return f"""WITH {_lsh_bucket_ctes()}
+SELECT vec_id, pfx AS bucket FROM bucketed"""
 
 
 def _lsh_search_oracle() -> str:
-    """Auto-width twin of similarity.ann_lsh_search: prefix width AND
-    multi-probe radius (1 + bits hamming-1 flips) both derived from
-    count(*) via the same closed form as the Spark side."""
-    from storm_data_etl_service_spark.operators.similarity import (
-        MAX_LSH_PLANES,
-        N_QUERIES,
-    )
+    """Twin of similarity.ann_lsh_search: prefix width AND multi-probe
+    radius (1 + bits hamming-1 flips) both derived from count(*)."""
+    from storm_data_etl_service_spark.operators.similarity import N_QUERIES
 
-    return f"""WITH {_EMB_CTE},
-{_auto_bits_cte()},
-fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e),
-bucketed AS (SELECT vec_id, v, substr(fullpfx, 1, bits) AS pfx FROM fb, nb),
-q0 AS (SELECT vec_id AS query_id, v AS qv, pfx AS qpfx
-       FROM bucketed WHERE vec_id < {N_QUERIES}),
-q AS (
-  SELECT query_id, qv, qpfx AS probe_pfx FROM q0
-  UNION ALL
-  SELECT query_id, qv,
-    substr(qpfx, 1, i - 1)
-      || (CASE WHEN substr(qpfx, i, 1) = '1' THEN '0' ELSE '1' END)
-      || substr(qpfx, i + 1)
-  FROM (SELECT query_id, qv, qpfx, unnest(range(1, bits + 1)) AS i
-        FROM q0, nb)),
+    return f"""WITH {_lsh_bucket_ctes(_NRM)},
+q0 AS (SELECT * FROM bucketed WHERE vec_id < {N_QUERIES}),
+{_dyn_probe_cte('q0')},
 cands AS (
-  SELECT query_id, b.vec_id,
-    {_cosine_sql('qv', 'b.v')} AS cosine
-  FROM q JOIN bucketed b ON b.pfx = q.probe_pfx AND b.vec_id != q.query_id)
+  SELECT src_id AS query_id, b.vec_id,
+    {_dot_sql('qv', 'b.v')} / (qn * b.nrm) AS cosine
+  FROM q JOIN bucketed b ON b.pfx = q.probe_pfx AND b.vec_id != q.src_id)
 SELECT query_id, vec_id, cosine, rk FROM (
   SELECT *, cast(row_number() OVER (PARTITION BY query_id
              ORDER BY cosine DESC, vec_id) AS INTEGER) AS rk FROM cands)
@@ -713,18 +709,9 @@ def _dyn_probe_cte(src: str) -> str:
 
 
 def _knn_graph_oracle() -> str:
-    from storm_data_etl_service_spark.operators.similarity import (
-        KNN_K,
-        MAX_LSH_PLANES,
-    )
+    from storm_data_etl_service_spark.operators.similarity import KNN_K
 
-    return f"""WITH {_EMB_CTE},
-{_auto_bits_cte()},
-fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx,
-         sqrt({_dot_sql('v', 'v')}) AS nrm
-       FROM e),
-bucketed AS (SELECT vec_id, v, nrm, substr(fullpfx, 1, bits) AS pfx
-             FROM fb, nb),
+    return f"""WITH {_lsh_bucket_ctes(_NRM)},
 {_dyn_probe_cte('bucketed')},
 cands AS (
   SELECT src_id, b.vec_id AS dst_id,
@@ -737,19 +724,10 @@ WHERE rk <= {KNN_K}"""
 
 
 def _semantic_contam_oracle() -> str:
-    from storm_data_etl_service_spark.operators.similarity import (
-        MAX_LSH_PLANES,
-        NEAR_DUP_COSINE,
-    )
+    from storm_data_etl_service_spark.operators.similarity import NEAR_DUP_COSINE
 
-    return f"""WITH {_EMB_CTE},
-{_auto_bits_cte()},
+    return f"""WITH {_lsh_bucket_ctes(_NRM)},
 {_split_sql("vec_id", "e")},
-fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx,
-         sqrt({_dot_sql('v', 'v')}) AS nrm
-       FROM e),
-bucketed AS (SELECT vec_id, v, nrm, substr(fullpfx, 1, bits) AS pfx
-             FROM fb, nb),
 train AS (SELECT b.* FROM bucketed b, s WHERE vec_id < t0),
 ev AS (SELECT b.* FROM bucketed b, s WHERE vec_id >= t0),
 {_dyn_probe_cte('ev')},
@@ -3248,21 +3226,14 @@ FROM erred GROUP BY dim""",
 
 
 REGISTRY["knn_graph_lsh"] = QuerySpec(
-    # bits=None: the production bucket-size-constant auto-derivation
-    # IS the oracle-checked form — the DuckDB twin derives the same
-    # width from count(*) (closed form, _auto_bits_cte), so the gate
-    # exercises the plan that actually runs at scale.
-    lambda spark, sf_dir: S.knn_graph_lsh(load_tables(spark, sf_dir), bits=None),
+    _t(S.knn_graph_lsh),
     _knn_graph_oracle(),
     ("similarity", "knn-graph", "lsh", "pandas-udf"),
 )
 
 
 REGISTRY["eval_semantic_contamination"] = QuerySpec(
-    # bits=None auto-width, oracle derives the same (see knn_graph_lsh).
-    lambda spark, sf_dir: S.eval_semantic_contamination(
-        load_tables(spark, sf_dir), bits=None
-    ),
+    _t(S.eval_semantic_contamination),
     _semantic_contam_oracle(),
     ("similarity", "decontamination", "lsh", "pandas-udf"),
 )
@@ -4495,20 +4466,14 @@ def _matryoshka_oracle() -> str:
     """Same-bucket pair set via the auto-width LSH twin, then the
     portable sequential-fold cosine over each prefix width; fixed-point
     sums mirror similarity.matryoshka_truncation_audit."""
-    from storm_data_etl_service_spark.operators.similarity import (
-        MATRYOSHKA_TOL_Q,
-        MAX_LSH_PLANES,
-    )
+    from storm_data_etl_service_spark.operators.similarity import MATRYOSHKA_TOL_Q
 
     cos_full = _cosine_sql("va", "vb")
     cos_d = _cosine_sql("list_slice(va, 1, d)", "list_slice(vb, 1, d)")
-    return f"""WITH {_EMB_CTE},
-{_auto_bits_cte()},
-fb AS (SELECT vec_id, v, {_bucket_sql(MAX_LSH_PLANES)} AS fullpfx FROM e),
-bk AS (SELECT vec_id, v, substr(fullpfx, 1, bits) AS bucket FROM fb, nb),
+    return f"""WITH {_lsh_bucket_ctes()},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS va, b.v AS vb
-  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
+  FROM bucketed a JOIN bucketed b ON a.pfx = b.pfx AND a.vec_id < b.vec_id),
 dims AS (SELECT * FROM (VALUES (8), (16), (32), (64)) AS dd(d)),
 graded AS (
   SELECT d,

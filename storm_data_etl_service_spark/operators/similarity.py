@@ -131,35 +131,43 @@ def lsh_bucket_col(v: Column, bits: int) -> Column:
     return F.concat(*signs)
 
 
-def ann_lsh_buckets(t, bits: int | None = None) -> DataFrame:
+def _lsh_bucketed(
+    emb: DataFrame, rows: DataFrame | None = None
+) -> tuple[DataFrame, int]:
+    """The auto-width sign-LSH index every sign-LSH entry probes:
+    ``rows`` (default ``emb``; any frame over it that keeps ``v``)
+    plus the bucket key ``pfx``, the signs of the first
+    ``knn_auto_bits(n)`` planes with n counted on ``emb`` (one cheap
+    count job).  The width holds the expected bucket population near
+    KNN_TARGET_BUCKET as n grows, up to the documented
+    2^MAX_LSH_PLANES·KNN_TARGET_BUCKET bound; a fixed width would make
+    every bucket's population, and the per-bucket quadratic work, ∝ n.
+    Returns the frame and the width, which also sizes the hamming-1
+    probes (``_probe_prefixes``).  The DuckDB twin
+    (``registry._lsh_bucket_ctes``) derives the identical width from
+    ``count(*)``."""
+    bits = knn_auto_bits(emb.count())
+    rows = emb if rows is None else rows
+    return rows.withColumn("pfx", lsh_bucket_col(F.col("v"), bits)), bits
+
+
+def ann_lsh_buckets(t) -> DataFrame:
     """Per-vector LSH bucket assignment (the scale path's shuffle key):
     vectors in the same bucket are candidate neighbors.  Output is the
-    oracle-checked contract (vec_id → bucket).
-
-    ``bits=None`` (the default, and what the registry/oracle exercise)
-    derives the bucket width from one cheap count via ``knn_auto_bits``
-    so the expected bucket population stays near KNN_TARGET_BUCKET as
-    n grows — the same auto-width promotion ``knn_graph_lsh`` got; a
-    fixed width would make every bucket's population ∝ n.  Exactly
-    ``bits`` planes are hashed, and the DuckDB oracle derives the
-    identical width from ``count(*)``."""
+    oracle-checked contract (vec_id → bucket), at the auto width of
+    ``_lsh_bucketed``."""
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
-    if bits is None:
-        bits = knn_auto_bits(emb.count())
-    return emb.select(
-        "vec_id",
-        lsh_bucket_col(F.col("v"), bits).alias("bucket"),
-    )
+    bucketed, _ = _lsh_bucketed(emb)
+    return bucketed.select("vec_id", F.col("pfx").alias("bucket"))
 
 
-#: Floor on the derived prefix width (and the fixed width used by
-#: explicit-``bits`` callers in tests): 4 bits keeps enough candidates
-#: per bucket at tiny test scale; production widths come from
-#: ``knn_auto_bits`` (bucket-size-constant in n).
+#: Floor on the derived prefix width: 4 bits keeps enough candidates
+#: per bucket at tiny test scale; larger corpora get wider prefixes
+#: from ``knn_auto_bits`` (bucket-size-constant in n).
 SEARCH_PREFIX_BITS = 4
 
 
-def _probe_prefixes(qpfx: Column, bits: int = SEARCH_PREFIX_BITS) -> Column:
+def _probe_prefixes(qpfx: Column, bits: int) -> Column:
     """Multi-probe expansion: the query's own bucket plus every bucket
     at hamming distance 1 (flip each bit once).  Standard remedy for
     hyperplane-LSH recall on near-orthogonal data — probing 1+bits
@@ -174,7 +182,7 @@ def _probe_prefixes(qpfx: Column, bits: int = SEARCH_PREFIX_BITS) -> Column:
     return F.array(qpfx, *flips)
 
 
-def ann_lsh_search(t, bits: int | None = None) -> DataFrame:
+def ann_lsh_search(t) -> DataFrame:
     """Bucketed ANN search — the scale path end-to-end: queries hash to
     a bucket prefix and multi-probe its hamming-1 neighborhood;
     candidates come from those buckets only (an equi-join on the
@@ -182,24 +190,14 @@ def ann_lsh_search(t, bits: int | None = None) -> DataFrame:
 
     Versus brute force: the data side is scanned once and shuffled on
     a bucket key; the per-query candidate set is (1+bits)·|bucket| ≪ N.
-    ``bits=None`` (the default, and what the registry/oracle exercise)
-    derives the prefix width from one cheap count (``knn_auto_bits``)
-    so |bucket| — and with it per-query candidate work — stays near
-    KNN_TARGET_BUCKET instead of growing ∝ n as the old pinned
-    SEARCH_PREFIX_BITS=4 form did; the multi-probe radius grows with
-    the width (1 + bits probes), which is what keeps recall roughly
-    flat as buckets shrink.  The DuckDB oracle derives the identical
-    width from ``count(*)`` (``_auto_bits_cte``).  Approximate by
-    construction — recall is bounded in the unit test against
+    The auto width (``_lsh_bucketed``) keeps |bucket| — and with it
+    per-query candidate work — near KNN_TARGET_BUCKET, and the
+    multi-probe radius grows with the width (1 + bits probes), which
+    is what keeps recall roughly flat as buckets shrink.  Approximate
+    by construction — recall is bounded in the unit test against
     `ann_cosine_topk`."""
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
-    if bits is None:
-        bits = knn_auto_bits(emb.count())
-    bucketed = emb.select(
-        "vec_id",
-        "v",
-        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
-    )
+    bucketed, bits = _lsh_bucketed(emb)
     q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1180,7 +1178,7 @@ def _bucket_topk_partials(bucketed: DataFrame, entries: Column, k: int):
     return partials, F.row_number().over(w)
 
 
-def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
+def knn_graph_lsh(t) -> DataFrame:
     """k-nearest-neighbor graph over the embedding corpus — the
     backbone relation for graph clustering, semantic dedup, and
     diversity sampling: per vector, its KNN_K best cosine neighbors
@@ -1191,28 +1189,17 @@ def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
     bkey-keyed shuffle of m×d member/prober rows — never a pair-row
     materialization), the per-bucket prober×member cosines run in the
     blocked Arrow kernel, and only ≤ k partial edges per
-    (vector, bucket) reach the final top-k window.  ``bits=None``
-    (the default, and what the registry/oracle now exercise) derives
-    the prefix width from one cheap count so bucket size — and with
-    it per-bucket quadratic work — stays constant as n grows, up to
-    the documented 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET bound; exactly
-    ``bits`` planes are hashed, so the width is never silently
-    clamped below what n needs.  The DuckDB oracle derives
-    the identical width from ``count(*)`` (closed form), so the
-    auto form is itself hash-checked at every gate scale.
+    (vector, bucket) reach the final top-k window.  The auto width
+    (``_lsh_bucketed``) holds bucket size — and with it per-bucket
+    quadratic work — constant as n grows.
 
     Approximate by construction: a true neighbor in a bucket ≥ 2 bit
     flips away is unseen (recall bounded in tests against the exact
-    scan); raise the probe radius for recall, bits for cost.
+    scan); raise the probe radius for recall, lower
+    KNN_TARGET_BUCKET (wider prefixes) for cost.
     """
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
-    if bits is None:
-        bits = knn_auto_bits(emb.count())
-    bucketed = emb.select(
-        "vec_id",
-        "v",
-        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
-    )
+    bucketed, bits = _lsh_bucketed(emb)
     # ONE exploded projection instead of a members ∪ probers union: the
     # union form inlined ``bucketed`` into both branches, so the plane
     # projections (``bits`` interpreted 64-element folds per vector —
@@ -1239,7 +1226,7 @@ def knn_graph_lsh(t, bits: int | None = None) -> DataFrame:
     )
 
 
-def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
+def eval_semantic_contamination(t) -> DataFrame:
     """Semantic decontamination: for every EVAL vector (the id-split
     tail, as in ``dedup_incremental_minhash``), its nearest TRAIN
     vector by cosine among the multi-probed LSH buckets — flagging
@@ -1253,25 +1240,14 @@ def eval_semantic_contamination(t, bits: int | None = None) -> DataFrame:
     probers shuffle once on the bucket key, the per-bucket kernel
     (k = 1) emits one best-train partial per (eval, bucket), and a
     top-1 window merges probes.  Cost scales with the EVAL split ×
-    bucket size — never train × train — and ``bits=None`` (the
-    default, and what the registry/oracle now exercise) derives the
-    prefix width from one cheap count to hold bucket size constant
-    up to 2^MAX_LSH_PLANES·KNN_TARGET_BUCKET vectors, hashing
-    exactly ``bits`` planes.  The DuckDB oracle derives
-    the identical width from ``count(*)``; recall is bounded by the
-    hamming-1 probe radius like every sign-LSH entry here.
+    bucket size — never train × train — at the auto width of
+    ``_lsh_bucketed``; recall is bounded by the hamming-1 probe radius
+    like every sign-LSH entry here.
     """
     from storm_data_etl_service_spark.operators.dedup import with_id_split
 
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
-    if bits is None:
-        bits = knn_auto_bits(emb.count())
-    bucketed = with_id_split(emb, "vec_id").select(
-        "vec_id",
-        "v",
-        "t0",
-        lsh_bucket_col(F.col("v"), bits).alias("pfx"),
-    )
+    bucketed, bits = _lsh_bucketed(emb, with_id_split(emb, "vec_id"))
     # ONE exploded projection instead of a members ∪ probers union
     # (the knn_graph_lsh rationale: the union inlined ``bucketed`` into
     # both branches, running the plane folds and the scan twice).
@@ -1335,8 +1311,8 @@ def matryoshka_truncation_audit(t) -> DataFrame:
     cosine.  Per width: pair count, mean |Δcos|, the share of pairs
     within 0.05 of their full-dim cosine, and the mean prefix cosine.
 
-    Scale: ``ann_lsh_buckets`` auto-width keeps bucket population
-    ~constant in n, so the within-bucket self-join yields O(n) pairs;
+    Scale: the auto width (``_lsh_bucketed``) keeps bucket population
+    ~constant in n, so the within-bucket pairs are O(n);
     the per-pair work is 4 fixed-width array folds (d ≤ 64).  One
     bucket-keyed shuffle + one |widths|-row aggregate.  Mean/share
     aggregates sum floor-1e-9 fixed-point BIGINTs (float addition is
@@ -1345,20 +1321,11 @@ def matryoshka_truncation_audit(t) -> DataFrame:
     the portable sequential fold both engines evaluate identically.
     """
     emb = t["embeddings"].select("vec_id", _vec(F.col("embedding")).alias("v"))
-    # one (vec_id, bucket, v) table, self-joined on bucket — identical
-    # subplans on both sides, so the bucket-keyed exchange is computed
-    # once and reused (the shared-staging pattern test_plans asserts
-    # for the dedup rungs).  The bucket is computed INLINE on the same
-    # scan (the ``ann_lsh_search`` idiom) instead of joining
-    # ``ann_lsh_buckets`` back on vec_id — the join form scanned the
-    # embeddings table twice and paid a vec_id-keyed join purely to
+    # The bucket is computed on the same scan as the vectors instead of
+    # joining ``ann_lsh_buckets`` back on vec_id — the join form scanned
+    # the embeddings table twice and paid a vec_id-keyed join purely to
     # reunite columns that one projection produces.
-    bits = knn_auto_bits(emb.count())
-    bv = emb.select(
-        "vec_id",
-        "v",
-        lsh_bucket_col(F.col("v"), bits).alias("bucket"),
-    )
+    bv, _ = _lsh_bucketed(emb)
     # Per-bucket blocked Arrow kernel over _cosine_core (dim loop
     # outside the numpy broadcast, so every scalar follows the
     # sequential fold order of the Column-expression cosine() and the
@@ -1370,7 +1337,7 @@ def matryoshka_truncation_audit(t) -> DataFrame:
     # shuffle, the width cosines are snapshots of ONE incremental dim
     # loop, and each bucket emits 4 partial-sum rows — pair rows never
     # materialize anywhere.
-    partials = bv.groupBy("bucket").applyInPandas(
+    partials = bv.groupBy("pfx").applyInPandas(
         _matryoshka_bucket_kernel(),
         schema="d int, n bigint, sad bigint, win bigint, scq bigint",
     )

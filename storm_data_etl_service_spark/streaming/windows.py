@@ -31,25 +31,6 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def sessionize_stream(
-    events: DataFrame, gap: str = "5 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Per-user streaming session windows (stateful merge with
-    inactivity gap); sessions finalize once the watermark passes
-    their end."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window(F.col("ts"), gap).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n",
-        )
-    )
-
-
 def _interval_join(
     left: DataFrame, right: DataFrame, within: str, watermark: str, how: str
 ) -> DataFrame:

@@ -5,6 +5,8 @@ sort, and a UDF-free enrichment path."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from storm_data_etl_service_spark.operators.registry import REGISTRY
@@ -747,6 +749,69 @@ def test_vector_folds_are_spelled_once():
     assert _owners(similarity, raises) == {("similarity.py", "_cosine_core")}, raises
 
 
+def _calls(path, name):
+    """``_owners`` of the calls of ``path`` to a function or method
+    named ``name`` (f-string expressions included)."""
+    import ast
+
+    lines = [
+        n.lineno
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and getattr(n.func, "id", getattr(n.func, "attr", None)) == name
+    ]
+    return _owners(path, lines)
+
+
+def test_lsh_bucketing_is_spelled_once():
+    """The auto-width sign-LSH bucketing (count, ``knn_auto_bits``
+    width, the first ``bits`` plane signs) has one builder per engine —
+    ``similarity._lsh_bucketed`` and ``registry._lsh_bucket_ctes`` —
+    and the hamming-1 flip one DuckDB spelling, ``_dyn_probe_cte``, so
+    the five sign-LSH entries and their oracles cannot drift apart."""
+    from pathlib import Path
+
+    import storm_data_etl_service_spark as pkg
+
+    files = sorted(Path(pkg.__file__).parent.rglob("*.py"))
+    for name in ("knn_auto_bits", "lsh_bucket_col"):
+        owners = set().union(*(_calls(p, name) for p in files))
+        assert owners == {("similarity.py", "_lsh_bucketed")}, (name, owners)
+    registry = Path(pkg.__file__).parent / "operators" / "registry.py"
+    for name in ("_auto_bits_cte", "_bucket_sql"):
+        assert _calls(registry, name) == {("registry.py", "_lsh_bucket_ctes")}, name
+    assert _sites(registry, "substr(fullpfx, 1, bits)") == {
+        ("registry.py", "_lsh_bucket_ctes")
+    }
+    assert _sites(registry, "THEN '0' ELSE '1'") == {("registry.py", "_dyn_probe_cte")}
+
+
+#: Optimized-plan shape of the sign-LSH entries at sf0.001: (embeddings
+#: scans, plane-fold subtrees).  One fold subtree per hashed relation:
+#: ``ann_lsh_search`` hashes its broadcast query side and its data side,
+#: and the contamination entry's extra scans are its id split and its
+#: eval-side join, which read no bucket.
+LSH_PLAN_SHAPES = {
+    "ann_lsh_buckets": (1, 1),
+    "ann_lsh_search": (2, 2),
+    "knn_graph_lsh": (1, 1),
+    "eval_semantic_contamination": (4, 1),
+    "matryoshka_truncation_audit": (1, 1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LSH_PLAN_SHAPES))
+def test_lsh_entries_hash_once(spark, sf_dir, name):
+    """A shared bucketing builder must not inline a second plane-fold
+    subtree or scan: counted as ``Relation [`` nodes and occurrences of
+    plane 0's first literal in the optimized plan."""
+    from storm_data_etl_service_spark.operators.similarity import plane_components
+
+    df = REGISTRY[name].build(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    shape = (plan.count("Relation ["), plan.count(repr(plane_components(0)[0])))
+    assert shape == LSH_PLAN_SHAPES[name], (shape, plan[:3000])
+
 
 def test_incremental_gates_are_spelled_once():
     """Each incremental-dedup decision is spelled once per engine: the
@@ -805,6 +870,21 @@ def test_incremental_gates_are_spelled_once():
         ("dedup.py", "bloom_probe"),
     }
 
+
+@contextmanager
+def _job_count(spark, group):
+    """Run the block under job group ``group``; yields a callable that
+    counts the jobs the block has submitted so far (the status tracker
+    answers with the UI off)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_stage_is_lazy(spark):
     """``stage`` defers the materialization of a shuffle-free frame to
     its first consumer: creating it submits no job, and its plan reads
@@ -813,16 +893,9 @@ def test_stage_is_lazy(spark):
 
     from storm_data_etl_service_spark.operators import stage
 
-    sc = spark.sparkContext
-    group = "test_stage_is_lazy"
-    sc.setJobGroup(group, group)
-    try:
+    with _job_count(spark, "test_stage_is_lazy") as jobs:
         staged = stage(spark.range(1000).select((F.col("id") * 2).alias("x")))
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert jobs == [], jobs
+        assert jobs() == 0
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan, plan
     assert staged.agg(F.sum("x")).first()[0] == 999 * 1000
@@ -835,17 +908,49 @@ def test_triangle_stats_contracts_once(spark, sf_dir):
     measured for that shape on the sf_dir fixture (20-21).  Contracting
     twice, once for the probe and once for the census, submitted 27
     (18 in build + 9 in collect)."""
-    sc = spark.sparkContext
-    group = "test_triangle_stats_contracts_once"
-    sc.setJobGroup(group, group)
-    try:
+    with _job_count(spark, "test_triangle_stats_contracts_once") as jobs:
         rows = REGISTRY["triangle_stats"].build(spark, sf_dir).collect()
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        n = jobs()
     assert rows[0]["branch"] == "exact_census", rows
-    assert len(jobs) <= 21, len(jobs)
+    assert n <= 21, n
+
+
+#: Spark jobs submitted by (build, build + collect) at sf0.001, each
+#: equal over three warm runs when its budget was set.  A change may
+#: lower a budget; raising one needs a CHANGES.md line that says why.
+JOB_BUDGETS = {
+    "ann_ivf_auto": (6, 14),
+    "ann_ivf_search": (7, 15),
+    "ann_lsh_buckets": (3, 4),
+    "ann_lsh_search": (3, 6),
+    "ann_pq_search": (25, 46),
+    "ccnet_perplexity_buckets": (12, 16),
+    "dedup_containment": (4, 9),
+    "dedup_ladder_report": (13, 31),
+    "dsir_importance_weights": (2, 14),
+    "eval_semantic_contamination": (3, 10),
+    "knn_graph_lsh": (3, 6),
+    "matryoshka_truncation_audit": (3, 6),
+    "minhash_band_calibration": (4, 9),
+    "quality_gate_agreement": (12, 18),
+    "semdedup": (7, 13),
+    "semdedup_auto": (9, 15),
+    "semdedup_pairs": (7, 11),
+    "triangle_stats": (12, 21),
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget(spark, sf_dir, name):
+    """At this scale a query's time goes to its jobs, not to compute, so
+    the staged queries' job counts are held to a budget."""
+    with _job_count(spark, f"test_job_budget_{name}") as jobs:
+        df = REGISTRY[name].build(spark, sf_dir)
+        build = jobs()
+        df.collect()
+        total = jobs()
+    build_budget, total_budget = JOB_BUDGETS[name]
+    assert build <= build_budget and total <= total_budget, (build, total)
 
 
 def test_topk_windows_are_limit_bounded(spark, sf_dir):
