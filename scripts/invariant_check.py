@@ -208,57 +208,25 @@ SELECT '1_exact_normalized' AS rung, n AS n_docs_flagged FROM norm
 UNION ALL SELECT '2_ngram_jaccard', n FROM jd
 UNION ALL SELECT '3_minhash_lsh', n FROM md
 UNION ALL SELECT '4_semdedup_cosine', n FROM ed""",
-    # the registry oracles' own J >= 0.8 verify/threshold tails, over
-    # the staged pp_v table (same integer common/na/nb columns the
-    # inline oracle computes in its `v` CTE — identical IEEE division)
-    "dedup_ngram_jaccard": """SELECT doc_a, doc_b,
-  CAST(common AS DOUBLE) / (na + nb - common) AS jaccard
-FROM pp_v
-WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8""",
-    "fuzzy_neardup_distance": """WITH pairs AS (
-  SELECT doc_a, doc_b FROM pp_v
-  WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8),
-p40 AS (SELECT doc_id, substr(text, 1, 40) AS p FROM documents)
-SELECT doc_a, doc_b, levenshtein(da.p, db.p) AS prefix_edit_distance
-FROM pairs
-JOIN p40 da ON da.doc_id = doc_a
-JOIN p40 db ON db.doc_id = doc_b""",
-    # the registry oracle's banding tail over the staged verified
-    # pairs; {sr}/{miss} are registry._BAND_SR_SQL/_BAND_MISS_SQL so
-    # the IEEE multiply chains are the gate-proven text (filled in by
-    # _replay_sql at run time, keeping this module import-light)
-    "minhash_band_calibration": """WITH jp AS (
-  SELECT CAST(common AS DOUBLE) / (na + nb - common) AS jaccard
-  FROM pp_v
-  WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8),
-cfg AS (SELECT * FROM (VALUES (1, 12), (2, 6), (3, 4), (4, 3), (6, 2),
-                              (12, 1)) AS c(r_rows, n_bands)),
-e AS (
-  SELECT cast(r_rows AS INTEGER) AS r_rows,
-         cast(n_bands AS INTEGER) AS n_bands,
-         floor(jaccard * 20) / 20.0 AS jaccard_bucket,
-         cast(floor((1.0 - {miss}) * 1e9) AS BIGINT) AS pq
-  FROM (
-    SELECT r_rows, n_bands, jaccard, 1.0 - {sr} AS m
-    FROM jp CROSS JOIN cfg))
-SELECT r_rows, n_bands, jaccard_bucket,
-  count(*) AS n_pairs,
-  cast(sum(pq) AS DOUBLE) / 1e9 AS expected_detected,
-  cast(sum(pq) AS DOUBLE) / (1e9 * count(*)) AS detect_rate
-FROM e GROUP BY 1, 2, 3""",
 }
 
 
 def _replay_sql(name: str) -> str:
-    sql = _REPLAY_SELECT[name]
-    if name == "minhash_band_calibration":
-        from storm_data_etl_service_spark.operators.registry import (
-            _BAND_MISS_SQL,
-            _BAND_SR_SQL,
-        )
+    if name not in _PPJOIN_ENTRIES:
+        return _REPLAY_SELECT[name]
+    # the registry oracles' own tails, over the staged verified pairs
+    from storm_data_etl_service_spark.operators.registry import (
+        _band_calibration_sql,
+        _fuzzy_distance_sql,
+        _jaccard_pairs_sql,
+    )
 
-        sql = sql.format(sr=_BAND_SR_SQL, miss=_BAND_MISS_SQL)
-    return sql
+    jp = _jaccard_pairs_sql("pp_v")
+    if name == "fuzzy_neardup_distance":
+        return _fuzzy_distance_sql(jp)
+    if name == "minhash_band_calibration":
+        return _band_calibration_sql(jp)
+    return jp
 
 
 def _load_cc_module():
@@ -325,44 +293,35 @@ def _stage_ladder_rungs(con) -> None:
 
 
 def _stage_ppjoin_pairs(con) -> None:
-    """The _NGRAM_JACCARD_ORACLE pipeline staged CTE-by-CTE: shingle
+    """The _NGRAM_JACCARD_ORACLE pipeline staged step by step: shingle
     sets, rarest-first ranking, prefix-filter candidates, and the
     verified (doc_a, doc_b, common, na, nb) table — each its own
-    ``CREATE TEMP TABLE`` pass so the ranking and candidate join are
+    ``CREATE TEMP TABLE`` pass, so the ranking and candidate join are
     paid once (not once per consuming query) and the working set stays
-    bounded on cold-cache hosts.  The SQL text of each step is lifted
-    from registry._TOKS_CTE / _PPJOIN_RANK_CTES / _NGRAM_JACCARD_ORACLE
-    so the arithmetic (integer-exact prefix length, 4·max <= 5·min size
+    bounded on cold-cache hosts.  Every step is the registry's own
+    builder, so the arithmetic (integer-exact prefix length, size
     gate, BIGINT common/na/nb) is the gate-proven form."""
-    from storm_data_etl_service_spark.operators.registry import _TOKS_CTE
+    from storm_data_etl_service_spark.operators.dedup import JACCARD_THRESHOLD
+    from storm_data_etl_service_spark.operators.registry import (
+        _TOKS_CTE,
+        _jaccard_cand_sql,
+        _overlap_sql,
+        _prefix_sql,
+        _rank_ctes,
+    )
 
     con.execute(f"CREATE TEMP TABLE pp_shf AS WITH {_TOKS_CTE} SELECT doc_id, shingles FROM shf")
     con.execute(
-        """CREATE TEMP TABLE pp_ranked AS
-  WITH ex AS (SELECT doc_id, unnest(shingles) AS s FROM pp_shf),
-  dfq AS (SELECT s, count(*) AS df FROM ex GROUP BY s)
-  SELECT doc_id, list(s ORDER BY df, s) AS ordered
-  FROM ex JOIN dfq USING (s) GROUP BY doc_id"""
+        f"CREATE TEMP TABLE pp_ranked AS WITH {_rank_ctes('pp_shf')}"
+        " SELECT doc_id, ordered FROM ranked"
     )
     con.execute(
-        """CREATE TEMP TABLE pp_cand AS
-  WITH pre AS (
-    SELECT doc_id, len(ordered) AS ns,
-      unnest(ordered[1 : len(ordered) - (4 * len(ordered) + 4) // 5 + 1]) AS s
-    FROM pp_ranked)
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM pre a JOIN pre b
-    ON a.s = b.s AND a.doc_id < b.doc_id
-   AND 4 * greatest(a.ns, b.ns) <= 5 * least(a.ns, b.ns)"""
+        "CREATE TEMP TABLE pp_cand AS WITH pre AS"
+        f" ({_prefix_sql(JACCARD_THRESHOLD, 'pp_ranked')}) {_jaccard_cand_sql()}"
     )
     con.execute(
-        """CREATE TEMP TABLE pp_v AS
-  SELECT doc_a, doc_b,
-    len(list_intersect(sa.shingles, sb.shingles)) AS common,
-    len(sa.shingles) AS na, len(sb.shingles) AS nb
-  FROM pp_cand
-  JOIN pp_shf sa ON sa.doc_id = doc_a
-  JOIN pp_shf sb ON sb.doc_id = doc_b"""
+        "CREATE TEMP TABLE pp_v AS "
+        + _overlap_sql("doc_a", "doc_b", pairs="pp_cand", sets="pp_shf")
     )
 
 

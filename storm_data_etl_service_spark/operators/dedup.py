@@ -23,6 +23,10 @@ Scale design:
 
 from __future__ import annotations
 
+import operator
+from fractions import Fraction
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +41,13 @@ from storm_data_etl_service_spark.operators.text import (
 MINHASH_SEEDS = 12
 LSH_BANDS = 4
 LSH_ROWS = 3
+#: Every (rows, bands) banding of the signature, r·b = MINHASH_SEEDS —
+#: the configurations ``minhash_band_calibration`` prices.
+BAND_LAYOUTS = [
+    (r, MINHASH_SEEDS // r)
+    for r in range(1, MINHASH_SEEDS + 1)
+    if MINHASH_SEEDS % r == 0
+]
 if LSH_BANDS * LSH_ROWS > MINHASH_SEEDS:
     # band i reads signature slots i*LSH_ROWS+1 .. i*LSH_ROWS+LSH_ROWS:
     # a wider layout would index past the signature
@@ -45,7 +56,20 @@ if LSH_BANDS * LSH_ROWS > MINHASH_SEEDS:
         f"MINHASH_SEEDS = {MINHASH_SEEDS}"
     )
 
+#: Thresholds of the exact shingle-similarity family: Jaccard for the
+#: symmetric pairs, containment (the default of ``dedup_containment``)
+#: for the directed ones.
 JACCARD_THRESHOLD = 0.8
+CONTAINMENT_THRESHOLD = 0.9
+
+
+def threshold_ratio(theta: float) -> tuple[int, int]:
+    """θ as the exact rational p/q (0.8 → 4/5, 0.9 → 9/10), so prefix
+    lengths and size gates stay integer-exact: ``ceil(θ·n)`` on binary
+    floats is off by one at exact multiples (0.9·10 binds as
+    9.000000000000002).  The DuckDB oracles take the same (p, q)."""
+    frac = Fraction(theta).limit_denominator(1_000_000)
+    return frac.numerator, frac.denominator
 
 
 def shingles_col(toks: Column, n: int = 3) -> Column:
@@ -129,7 +153,7 @@ def dedup_ngram_jaccard(t) -> DataFrame:
     )
 
 
-def dedup_containment(t, threshold: float = 0.9) -> DataFrame:
+def dedup_containment(t, threshold: float = CONTAINMENT_THRESHOLD) -> DataFrame:
     """Near-SUPERSET pairs by word-3-gram containment
     C(sub→super) = |sub ∩ super| / |sub| ≥ ``threshold`` (default 0.9).
 
@@ -165,28 +189,15 @@ def dedup_containment(t, threshold: float = 0.9) -> DataFrame:
     containment."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"containment threshold must be in (0, 1], got {threshold}")
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(1_000_000)
-    p, q = frac.numerator, frac.denominator
+    p, q = threshold_ratio(threshold)
     ranked = _ranked_shingles(_doc_shingles(t))
-    ns = F.size("ordered")
-    # sub-side prefix length = ns - t_min + 1 with t_min = ceil(p*ns/q)
-    # = floor((p*ns + q - 1)/q), integer-exact for the rational p/q.
-    t_min = F.floor((p * ns + (q - 1)) / F.lit(q))
-    plen = (ns - t_min + 1).cast("int")
-    sub_prefix = ranked.select(
-        F.col("doc_id").alias("doc_sub"),
-        ns.alias("n_sub"),
-        F.explode(
-            F.transform(F.slice("ordered", F.lit(1), plen), lambda x: x["s"])
-        ).alias("s"),
+    sub_prefix = _prefix_rows(ranked, threshold).select(
+        F.col("doc_id").alias("doc_sub"), F.col("ns").alias("n_sub"), "s"
     )
     # every downstream relation (super side, verification arrays)
     # derives from `ranked` — one shared exchange, computed once and
     # ReusedExchange'd into the other consumers, instead of re-running
     # the tokenize/shingle map work per plan occurrence.
-    arr = F.transform("ordered", lambda x: x["s"])
     # MERGE hint: left to estimates the planner broadcast THIS side —
     # the full exploded shingle table (260 k rows / 40 MB at sf0.1,
     # built single-threaded on the driver), and at corpus scale the
@@ -196,7 +207,7 @@ def dedup_containment(t, threshold: float = 0.9) -> DataFrame:
     sup_full = ranked.select(
         F.col("doc_id").alias("doc_super"),
         F.size("ordered").alias("n_super"),
-        F.explode(arr).alias("s"),
+        F.explode(_shingle_strings(F.col("ordered"))).alias("s"),
     ).hint("merge")
     cand = (
         sub_prefix.join(
@@ -208,23 +219,16 @@ def dedup_containment(t, threshold: float = 0.9) -> DataFrame:
         .select("doc_sub", "doc_super")
         .distinct()
     )
-    ha = ranked.select(F.col("doc_id").alias("doc_sub"), arr.alias("sh_sub"))
-    hb = ranked.select(F.col("doc_id").alias("doc_super"), arr.alias("sh_super"))
-    c = F.size(F.array_intersect("sh_sub", "sh_super")).cast("double")
-    na, nb = F.size("sh_sub"), F.size("sh_super")
-    return (
-        cand.join(ha, "doc_sub")
-        .join(hb, "doc_super")
-        .select(
-            "doc_sub",
-            "doc_super",
-            na.cast("long").alias("n_sub"),
-            nb.cast("long").alias("n_super"),
-            (c / na).alias("containment"),
-            (c / (na + nb - c)).alias("jaccard"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    pairs, c, na, nb = _with_overlap(cand, _ranked_sets(ranked), "doc_sub", "doc_super")
+    c = c.cast("double")
+    return pairs.select(
+        "doc_sub",
+        "doc_super",
+        na.cast("long").alias("n_sub"),
+        nb.cast("long").alias("n_super"),
+        (c / na).alias("containment"),
+        _jaccard(c, na, nb).alias("jaccard"),
+    ).filter(F.col("containment") >= threshold)
 
 
 def dedup_jaccard_prefix_join(t) -> DataFrame:
@@ -265,17 +269,11 @@ def _jaccard_pairs_from_ranked(ranked: DataFrame) -> DataFrame:
     """``dedup_jaccard_prefix_join`` body over a precomputed ranked
     relation — shared with ``dedup_ladder_report``, whose rungs 2 and 3
     both consume the same exchange (see ``_ranked_shingles``)."""
-    cand = _prefix_candidates(ranked)
-    arr = F.transform("ordered", lambda x: x["s"])
-    ha = ranked.select(F.col("doc_id").alias("doc_a"), arr.alias("sh_a"))
-    hb = ranked.select(F.col("doc_id").alias("doc_b"), arr.alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    na, nb = F.size("sh_a"), F.size("sh_b")
-    jaccard = common.cast("double") / (na + nb - common)
+    pairs, c, na, nb = _with_overlap(
+        _prefix_candidates(ranked), _ranked_sets(ranked), "doc_a", "doc_b"
+    )
     return (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .withColumn("jaccard", jaccard)
+        pairs.withColumn("jaccard", _jaccard(c, na, nb))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -326,21 +324,42 @@ def _ranked_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
-def prefix_filter_candidates(sh: DataFrame) -> DataFrame:
-    """Candidate (doc_a, doc_b) pairs from the rarest-first prefix
-    self-join + integer-exact size filter.  100%-recall superset of
-    the J ≥ 0.8 pairs; strictly smaller than the all-shingles join."""
-    return _prefix_candidates(_ranked_shingles(sh))
+def _shingle_strings(ordered: Column) -> Column:
+    """The shingle texts of a (df, s) struct array, in its order."""
+    return F.transform(ordered, lambda x: x["s"])
+
+
+def _ranked_sets(ranked: DataFrame) -> DataFrame:
+    """(doc_id, shingles) re-derived from the ranked relation, so the
+    verification arrays and the MinHash rung read the same exchange as
+    the prefix (element order is rarest-first, which neither an
+    intersection nor a min-hash can see)."""
+    return ranked.select("doc_id", _shingle_strings(F.col("ordered")).alias("shingles"))
+
+
+def _prefix_rows(ranked: DataFrame, theta: float) -> DataFrame:
+    """(doc_id, ns, s) rows of each doc's rarest-first PREFIX: its first
+    ``ns - ceil(θ·ns) + 1`` shingles.  Any pair whose overlap must
+    reach ``ceil(θ·ns)`` of this doc's shingles shares one of them under
+    the global order (PPJoin, Xiao et al. 2008) — the bound behind both
+    the symmetric Jaccard and the directed containment candidates; each
+    caller adds its own size gate."""
+    p, q = threshold_ratio(theta)
+    ns = F.size("ordered")
+    # ceil(p*ns/q) = floor((p*ns + q - 1)/q), integer-exact
+    plen = (ns - F.floor((p * ns + (q - 1)) / F.lit(q)) + 1).cast("int")
+    return ranked.select(
+        "doc_id",
+        ns.alias("ns"),
+        F.explode(_shingle_strings(F.slice("ordered", F.lit(1), plen))).alias("s"),
+    )
 
 
 def _prefix_candidates(ranked: DataFrame) -> DataFrame:
-    """``prefix_filter_candidates`` body over a precomputed ranked
-    relation, so callers that also need the shingle arrays share one
-    exchange (see ``_ranked_shingles``)."""
-    ns = F.size("ordered")
-    # prefix length = ns - ceil(0.8*ns) + 1; ceil(4n/5) = floor((4n+4)/5),
-    # integer-exact (no 0.8 float multiply).
-    plen = (ns - F.floor((4 * ns + 4) / F.lit(5)) + 1).cast("int")
+    """Candidate (doc_a, doc_b) pairs from the rarest-first prefix
+    self-join + integer-exact size filter: a 100%-recall superset of
+    the J ≥ 0.8 pairs, strictly smaller than the all-shingles join."""
+    p, q = threshold_ratio(JACCARD_THRESHOLD)
     # SHUFFLE_HASH hint: the planner broadcast this exploded prefix
     # relation (55 k rows / 34 MB at sf0.1) and built the hash table
     # single-threaded on the driver; a shuffled hash join partitions
@@ -349,13 +368,7 @@ def _prefix_candidates(ranked: DataFrame) -> DataFrame:
     # measured 0.79× locally.  At scale the build side per partition
     # is the ~20% rarest-prefix stream slice, the "moderately small
     # per partition" case shuffled hash is meant for.
-    prefix = ranked.select(
-        "doc_id",
-        ns.alias("ns"),
-        F.explode(
-            F.transform(F.slice("ordered", F.lit(1), plen), lambda x: x["s"])
-        ).alias("s"),
-    ).hint("shuffle_hash")
+    prefix = _prefix_rows(ranked, JACCARD_THRESHOLD).hint("shuffle_hash")
     a, b = prefix.alias("a"), prefix.alias("b")
     return (
         a.join(
@@ -363,13 +376,47 @@ def _prefix_candidates(ranked: DataFrame) -> DataFrame:
             (F.col("a.s") == F.col("b.s"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
-                4 * F.greatest(F.col("a.ns"), F.col("b.ns"))
-                <= 5 * F.least(F.col("a.ns"), F.col("b.ns"))
+                p * F.greatest(F.col("a.ns"), F.col("b.ns"))
+                <= q * F.least(F.col("a.ns"), F.col("b.ns"))
             ),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+def _with_overlap(
+    pairs: DataFrame, sets: DataFrame, a: str, b: str
+) -> tuple[DataFrame, Column, Column, Column]:
+    """``pairs`` joined to the shingle sets (``sets``: doc_id,
+    shingles) of its id columns ``a`` and ``b``, and the exact overlap
+    columns over them: c = |A ∩ B|, na = |A|, nb = |B| — the one
+    verify step of the prefix-filter family.  Each array is named after
+    its key (doc_a → sh_a)."""
+    sa, sb = a.replace("doc", "sh"), b.replace("doc", "sh")
+
+    def side(key: str, arr: str) -> DataFrame:
+        return sets.select(F.col("doc_id").alias(key), F.col("shingles").alias(arr))
+
+    joined = pairs.join(side(a, sa), a).join(side(b, sb), b)
+    return joined, F.size(F.array_intersect(sa, sb)), F.size(sa), F.size(sb)
+
+
+def _jaccard(c: Column, na: Column, nb: Column) -> Column:
+    """|A ∩ B| / |A ∪ B| of two distinct sets, as c / (na + nb − c)."""
+    return c / (na + nb - c)
+
+
+def _power(x: Column, n: int) -> Column:
+    """``x**n`` as a fixed IEEE multiply chain, never ``pow`` (libm and
+    the JVM differ in ulps): x·x·x for n ≤ 3, the square of x^(n/2) for
+    even n — the chain ``registry._power_sql`` spells in DuckDB."""
+    if n <= 3:
+        return reduce(operator.mul, [x] * n)
+    if n % 2:
+        raise ValueError(f"no multiply chain for x^{n}")
+    half = _power(x, n // 2)
+    return half * half
 
 
 #: Window length (tokens) for exact duplicated-span detection.
@@ -695,30 +742,21 @@ def minhash_accuracy_report(t) -> DataFrame:
     pairs = dedup_minhash_lsh(t)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("mh").alias("mh_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("mh").alias("mh_b"))
-    ha = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    hb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     est = F.size(
         F.filter(
             F.zip_with(F.col("mh_a"), F.col("mh_b"), lambda x, y: x == y),
             lambda m: m,
         )
     ) / F.lit(float(MINHASH_SEEDS))
-    exact = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
+    joined, c, na, nb = _with_overlap(
+        pairs.join(sa, "doc_a").join(sb, "doc_b"), sh, "doc_a", "doc_b"
     )
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            est.alias("est_jaccard"),
-            exact.alias("exact_jaccard"),
-        )
-        .withColumn("abs_error", F.abs(F.col("est_jaccard") - F.col("exact_jaccard")))
-    )
+    return joined.select(
+        "doc_a",
+        "doc_b",
+        est.alias("est_jaccard"),
+        _jaccard(c, na, nb).alias("exact_jaccard"),
+    ).withColumn("abs_error", F.abs(F.col("est_jaccard") - F.col("exact_jaccard")))
 
 
 def crossmodal_dedup_agreement(t) -> DataFrame:
@@ -883,9 +921,6 @@ def dedup_ladder_report(t) -> DataFrame:
     # other rung in as a ReusedExchange instead of re-tokenizing the
     # corpus per rung.
     ranked = _ranked_shingles(_doc_shingles(t))
-    sh_from_ranked = ranked.select(
-        "doc_id", F.transform("ordered", lambda x: x["s"]).alias("shingles")
-    )
     rungs = [
         ("1_exact_normalized", norm_count),
         (
@@ -896,9 +931,9 @@ def dedup_ladder_report(t) -> DataFrame:
         ),
         (
             "3_minhash_lsh",
-            pair_docs(dedup_minhash_lsh(t, sh=sh_from_ranked), "doc_a", "doc_b").agg(
-                F.count("*").alias("n_docs_flagged")
-            ),
+            pair_docs(
+                dedup_minhash_lsh(t, sh=_ranked_sets(ranked)), "doc_a", "doc_b"
+            ).agg(F.count("*").alias("n_docs_flagged")),
         ),
         (
             "4_semdedup_cosine",
@@ -1057,37 +1092,16 @@ def minhash_band_calibration(t) -> DataFrame:
     """
     pairs = _jaccard_pairs_from_ranked(_ranked_shingles(_doc_shingles(t)))
     s = F.col("jaccard")
-    s2, s3 = s * s, s * s * s
-    s4, s6 = (s * s) * (s * s), (s * s * s) * (s * s * s)
-    s12 = ((s * s * s) * (s * s * s)) * ((s * s * s) * (s * s * s))
-
-    def miss_pow(sr, b: int):
-        m = F.lit(1.0) - sr
-        if b == 1:
-            return m
-        if b == 2:
-            return m * m
-        if b == 3:
-            return m * m * m
-        if b == 4:
-            return (m * m) * (m * m)
-        if b == 6:
-            return (m * m * m) * (m * m * m)
-        if b == 12:
-            return ((m * m * m) * (m * m * m)) * ((m * m * m) * (m * m * m))
-        raise ValueError(b)
-
-    configs = [(1, 12, s), (2, 6, s2), (3, 4, s3), (4, 3, s4), (6, 2, s6), (12, 1, s12)]
     entries = F.array(
         *[
             F.struct(
                 F.lit(r).cast("integer").alias("r_rows"),
                 F.lit(b).cast("integer").alias("n_bands"),
-                F.floor((F.lit(1.0) - miss_pow(sr, b)) * 1e9)
+                F.floor((F.lit(1.0) - _power(F.lit(1.0) - _power(s, r), b)) * 1e9)
                 .cast("long")
                 .alias("pq"),
             )
-            for r, b, sr in configs
+            for r, b in BAND_LAYOUTS
         ]
     )
     exploded = pairs.select(

@@ -404,67 +404,139 @@ JOIN (SELECT doc_id AS doc_a, ns AS na FROM counts) USING (doc_a)
 JOIN (SELECT doc_id AS doc_b, ns AS nb FROM counts) USING (doc_b)
 WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8"""
 
-#: Shared rarest-first prefix ranking (PPJoin global order: document
-#: frequency, then shingle text — the exact sort key of
-#: dedup.prefix_filter_candidates' struct(df, s) sort).
-_PPJOIN_RANK_CTES = f"""{_TOKS_CTE},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM shf),
+def _rank_ctes(sets: str = "shf") -> str:
+    """Rarest-first shingle ranking over a (doc_id, shingles) relation
+    ``sets`` (PPJoin global order: document frequency, then shingle
+    text — the sort key of ``dedup._ranked_shingles``' struct(df, s)
+    sort): the ``ex``, ``dfq`` and ``ranked`` CTEs."""
+    return f"""ex AS (SELECT doc_id, unnest(shingles) AS s FROM {sets}),
 dfq AS (SELECT s, count(*) AS df FROM ex GROUP BY s),
 ranked AS (
   SELECT doc_id, list(s ORDER BY df, s) AS ordered
   FROM ex JOIN dfq USING (s) GROUP BY doc_id)"""
 
-# J >= 0.8 pairs must share one of each doc's ns - ceil(0.8 ns) + 1
-# rarest shingles (ceil(4n/5) = (4n+4)//5, integer-exact like the
-# Spark side) and satisfy the 4·max <= 5·min size gate.
-_NGRAM_JACCARD_ORACLE = f"""WITH {_PPJOIN_RANK_CTES},
-pre AS (
-  SELECT doc_id, len(ordered) AS ns,
-    unnest(ordered[1 : len(ordered) - (4 * len(ordered) + 4) // 5 + 1]) AS s
-  FROM ranked),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+
+_PPJOIN_RANK_CTES = f"{_TOKS_CTE},\n{_rank_ctes()}"
+
+
+def _prefix_sql(theta: float, ranked: str = "ranked") -> str:
+    """(doc_id, ns, s) rows of each doc's first ns - ceil(θ·ns) + 1
+    rarest shingles, integer-exact through θ = p/q — the twin of
+    ``dedup._prefix_rows``."""
+    p, q = D.threshold_ratio(theta)
+    return f"""SELECT doc_id, len(ordered) AS ns,
+    unnest(ordered[1 : len(ordered) - ({p} * len(ordered) + {q - 1}) // {q} + 1]) AS s
+  FROM {ranked}"""
+
+
+def _jaccard_cand_sql() -> str:
+    """Symmetric J ≥ θ candidates over a ``pre`` prefix relation: pairs
+    sharing a prefix shingle that pass the p·max <= q·min size gate —
+    the twin of ``dedup._prefix_candidates``."""
+    p, q = D.threshold_ratio(D.JACCARD_THRESHOLD)
+    return f"""SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM pre a JOIN pre b
     ON a.s = b.s AND a.doc_id < b.doc_id
-   AND 4 * greatest(a.ns, b.ns) <= 5 * least(a.ns, b.ns)),
-v AS (
-  SELECT doc_a, doc_b,
+   AND {p} * greatest(a.ns, b.ns) <= {q} * least(a.ns, b.ns)"""
+
+
+def _overlap_sql(a: str, b: str, pairs: str = "cand", sets: str = "shf") -> str:
+    """``pairs`` (columns ``a``, ``b``) with the exact overlap of their
+    shingle sets: common, na, nb — the twin of ``dedup._with_overlap``."""
+    return f"""SELECT {a}, {b},
     len(list_intersect(sa.shingles, sb.shingles)) AS common,
     len(sa.shingles) AS na, len(sb.shingles) AS nb
-  FROM cand
-  JOIN shf sa ON sa.doc_id = doc_a
-  JOIN shf sb ON sb.doc_id = doc_b)
-SELECT doc_a, doc_b, CAST(common AS DOUBLE) / (na + nb - common) AS jaccard
-FROM v WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8"""
+  FROM {pairs}
+  JOIN {sets} sa ON sa.doc_id = {a}
+  JOIN {sets} sb ON sb.doc_id = {b}"""
 
-# Directed variant for containment >= 0.9 (p/q = 9/10 exactly, the
-# same Fraction the Spark side derives): sub-side prefix length
-# ns - (9 ns + 9)//10 + 1, size gate 10·n_super >= 9·n_sub, verify on
-# candidates only.
+
+#: |A ∩ B| / |A ∪ B| over ``_overlap_sql``'s columns (``dedup._jaccard``)
+_JACCARD_SQL = "CAST(common AS DOUBLE) / (na + nb - common)"
+
+
+def _jaccard_pairs_sql(v: str = "v") -> str:
+    """The J ≥ θ pairs (doc_a, doc_b, jaccard) of an overlap table."""
+    return f"""SELECT doc_a, doc_b, {_JACCARD_SQL} AS jaccard
+FROM {v} WHERE {_JACCARD_SQL} >= {D.JACCARD_THRESHOLD}"""
+
+
+# J >= 0.8 pairs must share a prefix shingle and pass the size gate;
+# only those candidates are verified.
+_NGRAM_JACCARD_ORACLE = f"""WITH {_PPJOIN_RANK_CTES},
+pre AS ({_prefix_sql(D.JACCARD_THRESHOLD)}),
+cand AS ({_jaccard_cand_sql()}),
+v AS ({_overlap_sql("doc_a", "doc_b")})
+{_jaccard_pairs_sql()}"""
+
+
+# Directed variant: the sub side's containment prefix against the full
+# super side, gated by q·n_super >= p·n_sub, verified on the candidates
+# only.
+_CON_P, _CON_Q = D.threshold_ratio(D.CONTAINMENT_THRESHOLD)
 _CONTAINMENT_ORACLE = f"""WITH {_PPJOIN_RANK_CTES},
-subp AS (
-  SELECT doc_id AS doc_sub, len(ordered) AS ns_sub,
-    unnest(ordered[1 : len(ordered) - (9 * len(ordered) + 9) // 10 + 1]) AS s
-  FROM ranked),
+subp AS ({_prefix_sql(D.CONTAINMENT_THRESHOLD)}),
 supf AS (SELECT doc_id AS doc_super, len(shingles) AS ns_super,
                 unnest(shingles) AS s
          FROM shf),
 cand AS (
-  SELECT DISTINCT doc_sub, doc_super
+  SELECT DISTINCT subp.doc_id AS doc_sub, doc_super
   FROM subp JOIN supf USING (s)
-  WHERE doc_sub != doc_super AND 10 * ns_super >= 9 * ns_sub),
-v AS (
-  SELECT doc_sub, doc_super,
-    len(list_intersect(sa.shingles, sb.shingles)) AS common,
-    len(sa.shingles) AS na, len(sb.shingles) AS nb
-  FROM cand
-  JOIN shf sa ON sa.doc_id = doc_sub
-  JOIN shf sb ON sb.doc_id = doc_super)
+  WHERE subp.doc_id != doc_super AND {_CON_Q} * ns_super >= {_CON_P} * subp.ns),
+v AS ({_overlap_sql("doc_sub", "doc_super")})
 SELECT doc_sub, doc_super,
   CAST(na AS BIGINT) AS n_sub, CAST(nb AS BIGINT) AS n_super,
   CAST(common AS DOUBLE) / na AS containment,
-  CAST(common AS DOUBLE) / (na + nb - common) AS jaccard
-FROM v WHERE CAST(common AS DOUBLE) / na >= 0.9"""
+  {_JACCARD_SQL} AS jaccard
+FROM v WHERE CAST(common AS DOUBLE) / na >= {D.CONTAINMENT_THRESHOLD}"""
+
+
+def _fuzzy_distance_sql(pairs: str) -> str:
+    """fuzzy_neardup_distance over a Jaccard pair query ``pairs``."""
+    return f"""WITH pairs AS ({pairs}),
+p40 AS (SELECT doc_id, substr(text, 1, 40) AS p FROM documents)
+SELECT doc_a, doc_b, levenshtein(da.p, db.p) AS prefix_edit_distance
+FROM pairs
+JOIN p40 da ON da.doc_id = doc_a
+JOIN p40 db ON db.doc_id = doc_b"""
+
+
+def _power_sql(x: str, n: int) -> str:
+    """``x^n`` as the IEEE multiply chain of ``dedup._power``."""
+    if n <= 3:
+        return " * ".join([x] * n)
+    if n % 2:
+        raise ValueError(f"no multiply chain for x^{n}")
+    half = _power_sql(x, n // 2)
+    return f"({half}) * ({half})"
+
+
+def _band_calibration_sql(jp: str) -> str:
+    """minhash_band_calibration over a Jaccard pair query ``jp``: per
+    banding (r, b) and 0.05 bucket, the expected detections
+    1 - (1 - s^r)^b, floor-quantized to 1e-9 per pair."""
+
+    def pow_case(col: str, x: str) -> str:
+        whens = " ".join(f"WHEN {n} THEN {_power_sql(x, n)}" for n, _ in D.BAND_LAYOUTS)
+        return f"CASE {col} {whens} END"
+
+    layouts = ", ".join(f"({r}, {b})" for r, b in D.BAND_LAYOUTS)
+    return f"""WITH jp AS ({jp}),
+cfg AS (SELECT * FROM (VALUES {layouts}) AS c(r_rows, n_bands)),
+e AS (
+  SELECT cast(r_rows AS INTEGER) AS r_rows,
+         cast(n_bands AS INTEGER) AS n_bands,
+         floor(jaccard * 20) / 20.0 AS jaccard_bucket,
+         cast(floor((1.0 - {pow_case("n_bands", "m")}) * 1e9) AS BIGINT) AS pq
+  FROM (
+    SELECT r_rows, n_bands, jaccard, 1.0 - {pow_case("r_rows", "jaccard")} AS m
+    FROM jp CROSS JOIN cfg))
+SELECT r_rows, n_bands, jaccard_bucket,
+  count(*) AS n_pairs,
+  cast(sum(pq) AS DOUBLE) / 1e9 AS expected_detected,
+  cast(sum(pq) AS DOUBLE) / (1e9 * count(*)) AS detect_rate
+FROM e GROUP BY 1, 2, 3"""
+
 
 def _minhash_oracle() -> str:
     from storm_data_etl_service_spark.operators.dedup import (
@@ -1177,39 +1249,13 @@ SELECT count(*) AS n_users, count(fc) AS n_clicked,
     ),
     "fuzzy_neardup_distance": QuerySpec(
         _t(A.fuzzy_neardup_distance),
-        # Candidate pairs via the SAME prefix-filtered PPJoin SQL as
-        # the dedup_jaccard_prefix_join oracle (provably identical to
-        # the naive df² shingle self-join — the equivalence test in
-        # tests/test_training_ops.py covers the shared pair CTEs, and
-        # test_fuzzy_oracle_prefix_matches_naive pins this query's
-        # full output) — this keeps the oracle feasible at sf1.6
-        # density, where the old common-shingle self-join was the
-        # measured blocker, while the Levenshtein tail stays
-        # O(candidates) in both engines.
-        f"""WITH {_PPJOIN_RANK_CTES},
-pre AS (
-  SELECT doc_id, len(ordered) AS ns,
-    unnest(ordered[1 : len(ordered) - (4 * len(ordered) + 4) // 5 + 1]) AS s
-  FROM ranked),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM pre a JOIN pre b
-    ON a.s = b.s AND a.doc_id < b.doc_id
-   AND 4 * greatest(a.ns, b.ns) <= 5 * least(a.ns, b.ns)),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM cand
-  JOIN shf sa ON sa.doc_id = doc_a
-  JOIN shf sb ON sb.doc_id = doc_b
-  WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-        / (len(sa.shingles) + len(sb.shingles)
-           - len(list_intersect(sa.shingles, sb.shingles))) >= 0.8)
-SELECT doc_a, doc_b,
-  levenshtein(
-    (SELECT substr(text, 1, 40) FROM documents d WHERE d.doc_id = doc_a),
-    (SELECT substr(text, 1, 40) FROM documents d WHERE d.doc_id = doc_b)
-  ) AS prefix_edit_distance
-FROM pairs""",
+        # The dedup_jaccard_prefix_join oracle composed as the pair
+        # source: prefix-filtered PPJoin, identical to the naive df²
+        # shingle self-join (test_fuzzy_oracle_prefix_matches_naive
+        # pins this query's full output) and feasible at sf1.6
+        # density, where the common-shingle self-join was the measured
+        # blocker; the Levenshtein tail stays O(candidates).
+        _fuzzy_distance_sql(_NGRAM_JACCARD_ORACLE),
         ("dedup", "fuzzy"),
     ),
     "salted_group_sum": QuerySpec(
@@ -2571,22 +2617,20 @@ def _minhash_accuracy_oracle() -> str:
     assert base.endswith(final)
     ctes = base[len("WITH ") : -len(final)].rstrip().rstrip("\n")
     s = MINHASH_SEEDS
-    return f"""WITH {ctes}
-SELECT p.doc_a, p.doc_b,
-  list_sum(list_transform(generate_series(1, {s}),
-    i -> CASE WHEN sa.mh[i] = sb.mh[i] THEN 1 ELSE 0 END)) / {s}.0
-    AS est_jaccard,
-  cast(len(list_intersect(ha.shingles, hb.shingles)) AS DOUBLE)
-    / len(list_distinct(ha.shingles || hb.shingles)) AS exact_jaccard,
-  abs(list_sum(list_transform(generate_series(1, {s}),
-    i -> CASE WHEN sa.mh[i] = sb.mh[i] THEN 1 ELSE 0 END)) / {s}.0
-    - cast(len(list_intersect(ha.shingles, hb.shingles)) AS DOUBLE)
-      / len(list_distinct(ha.shingles || hb.shingles))) AS abs_error
-FROM pairs p
-JOIN sig sa ON sa.doc_id = p.doc_a
-JOIN sig sb ON sb.doc_id = p.doc_b
-JOIN shf ha ON ha.doc_id = p.doc_a
-JOIN shf hb ON hb.doc_id = p.doc_b"""
+    return f"""WITH {ctes},
+v AS ({_overlap_sql("doc_a", "doc_b", pairs="pairs")}),
+cmp AS (
+  SELECT v.doc_a, v.doc_b,
+    list_sum(list_transform(generate_series(1, {s}),
+      i -> CASE WHEN ga.mh[i] = gb.mh[i] THEN 1 ELSE 0 END)) / {s}.0
+      AS est_jaccard,
+    {_JACCARD_SQL} AS exact_jaccard
+  FROM v
+  JOIN sig ga ON ga.doc_id = v.doc_a
+  JOIN sig gb ON gb.doc_id = v.doc_b)
+SELECT doc_a, doc_b, est_jaccard, exact_jaccard,
+  abs(est_jaccard - exact_jaccard) AS abs_error
+FROM cmp"""
 
 
 REGISTRY["minhash_accuracy_report"] = QuerySpec(
@@ -3641,8 +3685,8 @@ FROM intra i JOIN nearest n USING (label)""",
 
 REGISTRY["dedup_ladder_report"] = QuerySpec(
     _t(D.dedup_ladder_report),
-    # Rung 2's oracle stays the all-pairs Jaccard definition — the
-    # Spark side's PPJoin prefix filter is exact, same pair set.
+    # Rung 2 composes the prefix-filtered Jaccard oracle — the same
+    # pair set as the all-pairs definition, like the Spark side.
     # Rung 4 composes the SemDeDup pair chain (within-cell cosine),
     # mirroring the Spark side's scale path.
     f"""WITH jp AS ({REGISTRY["dedup_ngram_jaccard"].oracle}),
@@ -4381,40 +4425,9 @@ FROM agg""",
 )
 
 
-_BAND_SR_SQL = """CASE r_rows
-  WHEN 1 THEN jaccard WHEN 2 THEN jaccard * jaccard
-  WHEN 3 THEN jaccard * jaccard * jaccard
-  WHEN 4 THEN (jaccard * jaccard) * (jaccard * jaccard)
-  WHEN 6 THEN (jaccard * jaccard * jaccard) * (jaccard * jaccard * jaccard)
-  ELSE ((jaccard * jaccard * jaccard) * (jaccard * jaccard * jaccard))
-     * ((jaccard * jaccard * jaccard) * (jaccard * jaccard * jaccard))
-  END"""
-
-_BAND_MISS_SQL = """CASE n_bands
-  WHEN 1 THEN m WHEN 2 THEN m * m WHEN 3 THEN m * m * m
-  WHEN 4 THEN (m * m) * (m * m)
-  WHEN 6 THEN (m * m * m) * (m * m * m)
-  ELSE ((m * m * m) * (m * m * m)) * ((m * m * m) * (m * m * m))
-  END"""
-
 REGISTRY["minhash_band_calibration"] = QuerySpec(
     _t(D.minhash_band_calibration),
-    f"""WITH jp AS ({_NGRAM_JACCARD_ORACLE}),
-cfg AS (SELECT * FROM (VALUES (1, 12), (2, 6), (3, 4), (4, 3), (6, 2),
-                              (12, 1)) AS c(r_rows, n_bands)),
-e AS (
-  SELECT cast(r_rows AS INTEGER) AS r_rows,
-         cast(n_bands AS INTEGER) AS n_bands,
-         floor(jaccard * 20) / 20.0 AS jaccard_bucket,
-         cast(floor((1.0 - {_BAND_MISS_SQL}) * 1e9) AS BIGINT) AS pq
-  FROM (
-    SELECT r_rows, n_bands, jaccard, 1.0 - {_BAND_SR_SQL} AS m
-    FROM jp CROSS JOIN cfg))
-SELECT r_rows, n_bands, jaccard_bucket,
-  count(*) AS n_pairs,
-  cast(sum(pq) AS DOUBLE) / 1e9 AS expected_detected,
-  cast(sum(pq) AS DOUBLE) / (1e9 * count(*)) AS detect_rate
-FROM e GROUP BY 1, 2, 3""",
+    _band_calibration_sql(_NGRAM_JACCARD_ORACLE),
     ("dedup", "minhash", "lsh", "calibration"),
 )
 

@@ -28,6 +28,14 @@ RAW_CSV_SCHEMA = T.StructType(
     ]
 )
 
+#: The 11 raw field names, in record order.
+RAW_FIELDS = tuple(RAW_CSV_SCHEMA.fieldNames())
+
+#: Event type → the one SPC magnitude column it populates (column names
+#: per reference cmd/genmock/main.go:74-80; per-type exclusivity
+#: invariant, cmd/validate/main.go:316-347).
+MAGNITUDE_COLUMNS = {"hail": "Size", "tornado": "F_Scale", "wind": "Speed"}
+
 #: Kafka message envelope (reference internal/domain/event.go:26-35).
 #: In Structured Streaming the Kafka source exposes these columns
 #: natively; this schema exists for file-based test streams that fake

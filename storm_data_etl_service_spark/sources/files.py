@@ -8,11 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storm_data_etl_service_spark.schemas import RAW_CSV_SCHEMA
-
-#: SPC CSV magnitude column per event type
-#: (reference cmd/genmock/main.go:74-80).
-MAGNITUDE_COLUMNS = {"hail": "Size", "tornado": "F_Scale", "wind": "Speed"}
+from storm_data_etl_service_spark.schemas import (
+    MAGNITUDE_COLUMNS,
+    RAW_CSV_SCHEMA,
+    RAW_FIELDS,
+)
 
 
 def read_spc_csv(spark: SparkSession, path: str, event_type: str) -> DataFrame:
@@ -26,7 +26,7 @@ def read_spc_csv(spark: SparkSession, path: str, event_type: str) -> DataFrame:
     raw = spark.read.option("header", True).option("mode", "PERMISSIVE").csv(path)
     mag_col = MAGNITUDE_COLUMNS.get(event_type)
     cols = []
-    for field in RAW_CSV_SCHEMA.fieldNames():
+    for field in RAW_FIELDS:
         if field == "EventType":
             cols.append(F.lit(event_type).alias(field))
         elif field in MAGNITUDE_COLUMNS.values():
@@ -218,7 +218,7 @@ def read_storm_xml(spark: SparkSession, path: str, row_tag: str = "alert") -> Da
     (Size→hail, F_Scale→tornado, Speed→wind — the per-type
     exclusivity invariant in reverse)."""
     schema = ", ".join(
-        f"`{f}` string" for f in RAW_CSV_SCHEMA.fieldNames() if f != "EventType"
+        f"`{f}` string" for f in RAW_FIELDS if f != "EventType"
     )
     raw = (
         spark.read.format("xml")
@@ -234,7 +234,7 @@ def read_storm_xml(spark: SparkSession, path: str, row_tag: str = "alert") -> Da
     )
     cols = [
         F.coalesce(F.trim(F.col(f)), F.lit("")).alias(f)
-        for f in RAW_CSV_SCHEMA.fieldNames()
+        for f in RAW_FIELDS
         if f != "EventType"
     ]
     return raw.select(*cols, et.alias("EventType"))

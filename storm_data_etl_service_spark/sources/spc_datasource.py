@@ -25,26 +25,14 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from storm_data_etl_service_spark.schemas import (
+    MAGNITUDE_COLUMNS,
+    RAW_CSV_SCHEMA,
+    RAW_FIELDS,
+)
+
 #: filename probe → event type (reference genmock maps per-type files)
 _TYPE_PROBES = (("hail", "hail"), ("torn", "tornado"), ("wind", "wind"))
-
-#: event type → the single magnitude column that may be populated
-#: (per-type exclusivity invariant, reference cmd/validate/main.go:316-347)
-_MAGNITUDE_COLUMNS = {"hail": "Size", "tornado": "F_Scale", "wind": "Speed"}
-
-_FIELDS = (
-    "Time",
-    "Size",
-    "F_Scale",
-    "Speed",
-    "Location",
-    "County",
-    "State",
-    "Lat",
-    "Lon",
-    "Comments",
-    "EventType",
-)
 
 
 class _SPCPartition(InputPartition):
@@ -89,7 +77,7 @@ class SPCReportsReader(DataSourceReader):
         import csv
 
         et = partition.event_type
-        mag_col = _MAGNITUDE_COLUMNS[et]
+        mag_col = MAGNITUDE_COLUMNS[et]
         with open(partition.path, newline="", encoding="utf-8") as fh:
             rows = csv.reader(fh)
             try:
@@ -101,10 +89,10 @@ class SPCReportsReader(DataSourceReader):
                 if len(row) < len(header):
                     continue  # short row — skipped, like the reference
                 out = []
-                for field in _FIELDS:
+                for field in RAW_FIELDS:
                     if field == "EventType":
                         out.append(et)
-                    elif field in _MAGNITUDE_COLUMNS.values() and field != mag_col:
+                    elif field in MAGNITUDE_COLUMNS.values() and field != mag_col:
                         out.append("")
                     elif field in idx:
                         out.append(row[idx[field]].strip())
@@ -118,8 +106,8 @@ class SPCReportsDataSource(DataSource):
     def name(cls) -> str:
         return "spc_reports"
 
-    def schema(self) -> str:
-        return ", ".join(f"`{f}` string" for f in _FIELDS)
+    def schema(self):
+        return RAW_CSV_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
         return SPCReportsReader(self.options)

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+from storm_data_etl_service_spark.schemas import RAW_FIELDS
+
 #: Frozen clock for golden outputs (reference cmd/genmock/main.go:60-64).
 FROZEN_CLOCK = datetime(2024, 4, 27, 6, 0, 0)
 
@@ -24,19 +26,8 @@ FROZEN_CLOCK = datetime(2024, 4, 27, 6, 0, 0)
 #: timestamp; pinned by reference internal/pipeline/mock_data_test.go:23).
 BASE_TS = datetime(2024, 4, 26, 0, 0, 0)
 
-RAW_COLUMNS = (
-    "Time",
-    "Size",
-    "F_Scale",
-    "Speed",
-    "Location",
-    "County",
-    "State",
-    "Lat",
-    "Lon",
-    "Comments",
-    "EventType",
-)
+#: The raw field names, in record order (``schemas.RAW_FIELDS``).
+RAW_COLUMNS = RAW_FIELDS
 
 #: (Time, Size, F_Scale, Speed, Location, County, State, Lat, Lon, Comments, EventType)
 RAW_ROWS: list[tuple[str, ...]] = [

@@ -32,19 +32,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_FIELDS = (
-    "Time",
-    "Size",
-    "F_Scale",
-    "Speed",
-    "Location",
-    "County",
-    "State",
-    "Lat",
-    "Lon",
-    "Comments",
-    "EventType",
-)
+from storm_data_etl_service_spark.schemas import RAW_CSV_SCHEMA, RAW_FIELDS
 
 _TYPES = ("hail", "wind", "tornado")
 _STATES = ("TX", "OK", "KS", "NE")
@@ -71,7 +59,7 @@ def synth_record(i: int) -> tuple:
         "Comments": f"Synthetic replay report {i}. (OUN)",
         "EventType": et,
     }
-    return tuple(vals[f] for f in _FIELDS)
+    return tuple(vals[f] for f in RAW_FIELDS)
 
 
 class _RangePartition(InputPartition):
@@ -119,8 +107,8 @@ class StormReplayDataSource(DataSource):
     def name(cls) -> str:
         return "storm_replay"
 
-    def schema(self) -> str:
-        return ", ".join(f"`{f}` string" for f in _FIELDS)
+    def schema(self):
+        return RAW_CSV_SCHEMA
 
     def streamReader(self, schema) -> StormReplayStreamReader:
         return StormReplayStreamReader(self.options)

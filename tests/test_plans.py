@@ -586,6 +586,8 @@ def test_dedup_family_reuses_staging_exchange(spark, sf_dir):
         ("dedup_minhash_lsh", "reuse"),          # self-join's second side
         ("dedup_jaccard_prefix_join", "ckpt"),   # ranked ckpt: prefix ×2 + ha + hb
         ("dedup_containment", "ckpt"),           # ranked ckpt: sub + super + ha + hb
+        ("minhash_band_calibration", "ckpt"),    # ranked ckpt: the prefix-join pairs
+        ("fuzzy_neardup_distance", "ckpt"),      # ranked ckpt: the prefix-join pairs
         ("dedup_incremental_minhash", "reuse"),  # batch probe side
         ("dedup_ladder_report", "ckpt+reuse"),   # ranked ckpt + rung-3 band reuse
     ]:
@@ -786,6 +788,55 @@ def test_lsh_bucketing_is_spelled_once():
     assert _sites(registry, "THEN '0' ELSE '1'") == {("registry.py", "_dyn_probe_cte")}
 
 
+def test_ppjoin_is_spelled_once():
+    """The prefix-filter (PPJoin) family spells each decision once per
+    engine: the rarest-first prefix (``dedup._prefix_rows`` /
+    ``registry._prefix_sql``, θ as the exact ``threshold_ratio``), the
+    symmetric candidate gate (``registry._jaccard_cand_sql``), the
+    exact overlap (``dedup._with_overlap`` / ``registry._overlap_sql``)
+    and the band power chain (``dedup._power`` / ``registry._power_sql``)
+    — so the Jaccard, containment, fuzzy and calibration entries, their
+    oracles and the sf1.6 replay cannot drift apart."""
+    import re
+    from pathlib import Path
+
+    import storm_data_etl_service_spark.operators as ops
+
+    root = Path(ops.__file__).parent
+    registry, dedup = root / "registry.py", root / "dedup.py"
+    for needle, owner in (
+        ('F.slice("ordered"', "_prefix_rows"),
+        ('lambda x: x["s"]', "_shingle_strings"),
+        ("Fraction(", "threshold_ratio"),
+    ):
+        sites = set().union(*(_sites(p, needle) for p in root.glob("*.py")))
+        assert sites == {("dedup.py", owner)}, (needle, sites)
+    # text.py's Gopher stopword count intersects tokens, not shingle sets
+    assert _sites(dedup, "F.array_intersect(") == {("dedup.py", "_with_overlap")}
+    for needle, owner in (
+        ("ordered[1 : len(ordered)", "_prefix_sql"),
+        ("greatest(a.ns, b.ns)", "_jaccard_cand_sql"),
+    ):
+        assert _sites(registry, needle) == {("registry.py", owner)}, needle
+    lines = registry.read_text().splitlines()
+    verify = [
+        i for i, ln in enumerate(lines, 1) if re.search(r"list_intersect\(\w+\.shingles", ln)
+    ]
+    assert _owners(registry, verify) == {("registry.py", "_overlap_sql")}, verify
+    assert not _sites(registry, "m * m") and not _sites(registry, "jaccard * jaccard")
+    assert _calls(registry, "_power_sql") == {
+        ("registry.py", "_power_sql"),
+        ("registry.py", "_band_calibration_sql"),
+    }
+    assert _calls(dedup, "_power") == {
+        ("dedup.py", "_power"),
+        ("dedup.py", "minhash_band_calibration"),
+    }
+    replay = Path(__file__).resolve().parents[1] / "scripts" / "invariant_check.py"
+    for needle in ("ordered[1 :", "list_intersect(", "greatest(", "m * m", "jaccard * jaccard"):
+        assert needle not in replay.read_text(), needle
+
+
 #: Optimized-plan shape of the sign-LSH entries at sf0.001: (embeddings
 #: scans, plane-fold subtrees).  One fold subtree per hashed relation:
 #: ``ann_lsh_search`` hashes its broadcast query side and its data side,
@@ -926,11 +977,14 @@ JOB_BUDGETS = {
     "ann_pq_search": (25, 46),
     "ccnet_perplexity_buckets": (12, 16),
     "dedup_containment": (4, 9),
+    "dedup_jaccard_prefix_join": (4, 8),
     "dedup_ladder_report": (13, 31),
     "dsir_importance_weights": (2, 14),
     "eval_semantic_contamination": (3, 10),
+    "fuzzy_neardup_distance": (4, 9),
     "knn_graph_lsh": (3, 6),
     "matryoshka_truncation_audit": (3, 6),
+    "minhash_accuracy_report": (1, 7),
     "minhash_band_calibration": (4, 9),
     "quality_gate_agreement": (12, 18),
     "semdedup": (7, 13),

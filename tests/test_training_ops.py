@@ -397,10 +397,11 @@ SELECT * FROM directed WHERE containment >= 0.9"""
 
 def test_fuzzy_oracle_prefix_matches_naive(sf_dir):
     """fuzzy_neardup_distance's REGISTERED oracle derives its candidate
-    pairs with the prefix-filtered PPJoin SQL (feasible at sf1.6) —
-    its full output must equal the old naive form (common-shingle df²
-    self-join, the measured sf1.6 blocker) with the identical
-    Levenshtein tail."""
+    pairs with the prefix-filtered PPJoin SQL (feasible at sf1.6) and
+    takes its Levenshtein prefixes from one joined ``p40`` CTE — its
+    full output must equal the naive form (common-shingle df²
+    self-join, the measured sf1.6 blocker) with the correlated-subquery
+    Levenshtein tail, row for row."""
     import duckdb
 
     from storm_data_etl_service_spark.operators.registry import (
@@ -446,7 +447,8 @@ def test_prefix_join_prunes_candidate_pairs(spark, sf_dir):
     every true J ≥ 0.8 pair (100% recall, no sketch probability)."""
     from storm_data_etl_service_spark.operators.dedup import (
         _doc_shingles,
-        prefix_filter_candidates,
+        _prefix_candidates,
+        _ranked_shingles,
     )
 
     t = load_tables(spark, sf_dir, ("documents",))
@@ -464,7 +466,7 @@ def test_prefix_join_prunes_candidate_pairs(spark, sf_dir):
     )
     cand = {
         (r["doc_a"], r["doc_b"])
-        for r in prefix_filter_candidates(sh).collect()
+        for r in _prefix_candidates(_ranked_shingles(sh)).collect()
     }
     true_pairs = {
         (r["doc_a"], r["doc_b"])
