@@ -65,9 +65,9 @@ BENCH_QUERIES = [
     "linear_interpolate",       # fused two-frame window interpolation
     "cohort_retention",         # unbounded MIN window + distinct agg
     "rare_token_share",         # explode + broadcast doc-frequency join
-    # the four shuffle-heaviest registered plans (PLAN_AUDIT.md
-    # network-budget table: 16/13/13/10 shuffles) — benched so the
-    # most network-bound shapes have a tracked number
+    # shuffle-heavy registered plans (per-entry exchange counts in
+    # plans/manifest.json) — benched so the most network-bound
+    # shapes have a tracked number
     "revenue_pareto_curve",     # deciled pareto: chained window aggs
     "dedup_ladder_report",      # exact→minhash→containment rungs union
     "vocab_growth_curve",       # per-decile first-seen vocab accumulation

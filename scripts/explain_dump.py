@@ -9,15 +9,14 @@ before/after plan evidence committed under plans/rNN/.  The session is
 counts.  Run from the tree whose plans you want (a copy of the
 pre-change commit for ``before``, the live tree for ``after``).
 
-Expression ids (``#N``), exchange ``plan_id``s, lambda-variable
-suffixes (``x_12``) and JVM identity hashes (``[B@…``) are stripped:
-they follow process-global counters, not the plan, so with them gone
-``diff <q>_before.txt <q>_after.txt`` is a plan-identity check.  Not
-for queries with two or more DISTINCT aggregates (e.g.
-``corpus_dataset_card``, ``eval_decontamination``): Spark prints their
-Expand groups in an order set by the expression-id counter, so the
-same code can dump either order and their diffs are not identity
-checks.
+Every plan passes through ``stable_plan``, which is also what
+``plans/manifest.json`` hashes (``tests/test_plans.py``): expression
+ids (``#N``), exchange ``plan_id``s, lambda-variable suffixes
+(``x_12``) and JVM identity hashes (``[B@…``) are stripped, and the
+group order of a rewritten multi-DISTINCT aggregate is put in one
+canonical order.  All of them follow process-global counters, not the
+plan.  The manifest is the plan-identity check for a refactor; these
+dumps are the readable evidence of the plans it names.
 """
 
 from __future__ import annotations
@@ -38,6 +37,61 @@ _UNSTABLE = (
     (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
 )
 
+_CLOSE = {"[": "]", "(": ")"}
+
+
+def _sorted_group(text: str, i: int) -> tuple[str, int]:
+    """The bracket or paren group opening at ``text[i]``, its elements
+    sorted (each canonicalized first) and bare integers masked, and the
+    index just past its close."""
+    opening, items, cur = text[i], [], []
+    i += 1
+    while text[i] != _CLOSE[opening]:
+        if text[i] in _CLOSE:
+            group, i = _sorted_group(text, i)
+            cur.append(group)
+            continue
+        if text[i] == ",":
+            items.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(text[i])
+        i += 1
+    items.append("".join(cur).strip())
+    items = sorted("?" if s.isdigit() else s for s in items)
+    return opening + ", ".join(items) + _CLOSE[opening], i + 1
+
+
+def _canonical_gid_line(line: str) -> str:
+    """Spark rewrites two or more DISTINCT aggregates into an ``Expand``
+    tagged by a ``gid`` column, and numbers the groups in an order set by
+    the expression-id counter: the gid literals, the group-by key order
+    and the Expand projections permute together.  On a line that carries
+    ``gid``, every list's elements are sorted and its integers masked."""
+    line, out, i = re.sub(r"\bgid = \d+", "gid = ?", line), [], 0
+    try:
+        while i < len(line):
+            if line[i] in _CLOSE:
+                group, i = _sorted_group(line, i)
+                out.append(group)
+            else:
+                out.append(line[i])
+                i += 1
+    except IndexError:  # an unbalanced literal: leave the line as printed
+        return line
+    return "".join(out)
+
+
+def stable_plan(text: str) -> str:
+    """``text`` (a plan string) without the parts that follow
+    process-global counters; equal plans give equal strings."""
+    for pattern, repl in _UNSTABLE:
+        text = pattern.sub(repl, text)
+    return "\n".join(
+        _canonical_gid_line(line) if re.search(r"\bgid\b", line) else line
+        for line in text.split("\n")
+    )
+
 
 def main() -> None:
     out_dir, suffix, *queries = sys.argv[1:]
@@ -52,9 +106,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        text = buf.getvalue()
-        for pattern, repl in _UNSTABLE:
-            text = pattern.sub(repl, text)
+        text = stable_plan(buf.getvalue())
         path = Path(out_dir) / f"{name}_{suffix}.txt"
         path.write_text(text)
         print(f"wrote {path} ({len(text)} bytes)")

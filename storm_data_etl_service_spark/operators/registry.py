@@ -2897,18 +2897,7 @@ REGISTRY["embedding_power_iteration"] = QuerySpec(
 
 REGISTRY["crossmodal_dedup_agreement"] = QuerySpec(
     _t(D.crossmodal_dedup_agreement),
-    f"""WITH {_TOKS_CTE},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM shf),
-counts AS (SELECT doc_id, len(shingles) AS ns FROM shf),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-tpairs AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN (SELECT doc_id AS doc_a, ns AS na FROM counts) USING (doc_a)
-  JOIN (SELECT doc_id AS doc_b, ns AS nb FROM counts) USING (doc_b)
-  WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.8),
+    f"""WITH tpairs AS (SELECT doc_a, doc_b FROM ({_NGRAM_JACCARD_ORACLE})),
 eraw AS ({_semdedup_pairs_oracle()}),
 epairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM eraw)
 SELECT CASE WHEN tp.doc_a IS NOT NULL AND ep.doc_a IS NOT NULL THEN 'both'
@@ -3123,15 +3112,7 @@ FROM m""",
 
 REGISTRY["seasonal_anomaly_hours"] = QuerySpec(
     _t(A.seasonal_anomaly_hours),
-    """WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS n
-  FROM events GROUP BY h),
-bounds AS (SELECT min(h) AS lo, max(h) AS hi FROM hourly),
-spine AS (
-  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM bounds),
-filled AS (
-  SELECT spine.h, coalesce(n, 0) AS n
-  FROM spine LEFT JOIN hourly ON spine.h = hourly.h),
+    f"""WITH {_HOURLY_FILLED_CTE},
 cells AS (
   SELECT h, n, cast(isodow(h) AS INTEGER) AS dow_iso,
          cast(hour(h) AS INTEGER) AS hour
@@ -3246,13 +3227,17 @@ FROM r GROUP BY source, n, s""",
     ("analytics", "pandas-udaf", "quality"),
 )
 
-REGISTRY["embedding_quantize_int8"] = QuerySpec(
-    _t(S.embedding_quantize_int8),
-    f"""WITH e AS (
+#: (vec_id, dim, val) rows of every embedding and each dim's int8 scale
+#: max|val| (shared by the int8 quantization and exact-dedup oracles).
+_INT8_SCALE_CTES = f"""e AS (
   SELECT vec_id, cast(pos - 1 AS INTEGER) AS dim,
          embedding[pos]::DOUBLE AS val
   FROM embeddings, range(1, {S.EMBEDDING_DIM} + 1) r(pos)),
-sc AS (SELECT dim, max(abs(val)) AS scale FROM e GROUP BY dim),
+sc AS (SELECT dim, max(abs(val)) AS scale FROM e GROUP BY dim)"""
+
+REGISTRY["embedding_quantize_int8"] = QuerySpec(
+    _t(S.embedding_quantize_int8),
+    f"""WITH {_INT8_SCALE_CTES},
 coded AS (
   SELECT e.dim, e.val, sc.scale,
     CASE WHEN sc.scale = 0 THEN 0
@@ -3287,11 +3272,7 @@ REGISTRY["embedding_exact_dedup"] = QuerySpec(
     # Quantized-code fingerprints are pure integer/sha256 functions of
     # the vector, so the oracle rebuilds every group key bit-for-bit.
     _t(S.embedding_exact_dedup),
-    f"""WITH e AS (
-  SELECT vec_id, cast(pos - 1 AS INTEGER) AS dim,
-         embedding[pos]::DOUBLE AS val
-  FROM embeddings, range(1, {S.EMBEDDING_DIM} + 1) r(pos)),
-sc AS (SELECT dim, max(abs(val)) AS scale FROM e GROUP BY dim),
+    f"""WITH {_INT8_SCALE_CTES},
 codes AS (
   SELECT vec_id,
     string_agg(

@@ -5,11 +5,23 @@ sort, and a UDF-free enrichment path."""
 
 from __future__ import annotations
 
+import hashlib
+import importlib.util
+import json
+import re
 from contextlib import contextmanager
+from pathlib import Path
 
 import pytest
 
 from storm_data_etl_service_spark.operators.registry import REGISTRY
+
+REPO = Path(__file__).resolve().parent.parent
+_spec = importlib.util.spec_from_file_location(
+    "explain_dump", REPO / "scripts" / "explain_dump.py"
+)
+explain_dump = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(explain_dump)
 
 
 def plan_of(name, spark, sf_dir) -> str:
@@ -63,6 +75,8 @@ INTENTIONAL_PYTHON_OPS = [
     "heavy_hitter_bigrams",
     "token_spans_udtf",
     "user_resequence_pandas",
+    # GROUPED_AGG pandas UDAF demonstration (ArrowAggregatePython).
+    "gini_by_source",
     # The three Arrow pair kernels below compute their cosines in one
     # shared core, similarity._cosine_core: blocked, vectorized across
     # pairs, per-scalar fold order bit-identical to the Column/DuckDB
@@ -90,17 +104,150 @@ INTENTIONAL_PYTHON_OPS = [
 ]
 
 
-def test_only_intentional_ops_use_python(spark, sf_dir):
-    python_ops = []
-    for name in REGISTRY:
-        plan = plan_of(name, spark, sf_dir)
-        if (
-            "EvalPython" in plan
-            or "MapInPandas" in plan
-            or "FlatMapGroupsInPandas" in plan
-        ):
-            python_ops.append(name)
+#: The entries allowed a BroadcastNestedLoopJoin, each because its
+#: build side is provably tiny (a 1-row aggregate or a bounded literal
+#: table), which makes the join a broadcast map-side operation, not an
+#: n^2 loop over data.  Exactly these entries have one at sf0.001.
+BNLJ_JUSTIFIED = {
+    # --- 1-row scalar-subquery broadcasts (threshold / total / split
+    #     point)
+    "neardup_triangle_estimate": "1-row kept-edge count x 1-row sampled-census total",
+    "triangle_stats": "1-row kept-edge count x 1-row census total (the "
+    "dispatched estimate rung; the wedge probe itself is join-free)",
+    "tfidf_top_terms": "1-row corpus-size scalar",
+    "bigram_surprisal_scores": "1-row vocab-size scalar",
+    "tpch_q22_idle_customers": "1-row average-balance scalar",
+    "tpch_q11_important_values": "1-row total-value threshold scalar",
+    "tpch_q20_excess_shippers": "1-row avg-qty scalar per partkey probe (non-equi residual)",
+    "distribution_drift_chi2": "1-row totals scalar",
+    "revenue_pareto_curve": "1-row grand-total scalar",
+    "dedup_ladder_report": "1-row per-rung counts union",
+    "vocab_growth_curve": "1-row vocab total",
+    "corpus_dataset_card": "1-row corpus rollup",
+    "equi_depth_histogram": "1-row count scalar for bucket sizing",
+    "balance_deciles": "1-row total-count scalar for the distributed-ntile arithmetic",
+    "curriculum_order": "1-row total-count scalar for the equi-depth band arithmetic",
+    "daily_user_sketch_rollup": "1-row exact-distinct scalar verifying the sketch union",
+    "outlier_filter_count": "1-row quantile-threshold scalar (value > q residual)",
+    "cms_token_frequencies": "1-row sketch-parameter scalar",
+    "join_skew_report": "1-row total-rows scalar for skew ratio",
+    "event_cooccurrence_support": "1-row transaction-count scalar",
+    "rfm_segment_counts": "1-row R/F/M quantile-threshold scalars",
+    "weekly_churn_rate": "1-row max-week scalar (week < max_week residual)",
+    "markov_prediction_accuracy": "1-row time-split scalar (train/test midpoint)",
+    "seasonality_profile": "1-row grand-total scalar",
+    "bm25_doc_ranking": "1-row corpus N + avgdl scalars",
+    "heavy_hitter_bigrams": "1-row exact-threshold scalar gating the recount",
+    "label_top_terms": "1-row corpus-total scalar",
+    "type_weekday_mutual_information": "1-row joint-total scalar",
+    "dedup_incremental_minhash": "1-row batch-boundary scalar (doc_id >= t0 residual)",
+    "eval_semantic_contamination": "1-row id-split scalar (vec_id < / >= t0 residual)",
+    "bloom_dedup_report": "1-row batch-boundary scalar (doc_id < / >= t0 residual)",
+    "embedding_exact_dedup": "1-row per-dim-scales array broadcast",
+    # --- bounded K-row broadcasts: centroid tables / codebooks whose
+    #     cardinality is a fixed hyperparameter
+    "semdedup": "K-row k-means centroid table (fixed K) + 1-row scalars",
+    "semdedup_pairs": "K-row k-means centroid table (fixed K) + 1-row scalars",
+    "semdedup_auto": "K-row centroid table (K derived from one count) + 1-row scalars",
+    "crossmodal_dedup_agreement": "K-row centroid broadcast (semdedup side) + 1-row scalars",
+    "ann_ivf_search": "K-row IVF centroid table broadcast (assign + probe)",
+    "ann_ivf_auto": "K-row IVF centroid table broadcast (K derived from n, assign + probe)",
+    "ann_pq_search": "K-row codebook / distance-LUT broadcasts per subspace",
+    "nearest_centroid_accuracy": "K-row centroid table broadcast",
+    # --- documented brute-force baselines: the bounded query set is the
+    #     broadcast side; the LSH/IVF/PQ entries are the scale path
+    "ann_cosine_topk": "bounded query-set broadcast (brute-force baseline)",
+    "embedding_near_dup": "all-pairs cosine baseline (documented n^2/2 oracle anchor)",
+    # --- bounded literal or source-sized tables
+    "source_divergence_matrix": "S^2/2-row source-pair grid (S = #sources) + 1-row joint-vocab scalar",
+    "dsir_importance_weights": "1-row model-total scalars crossed onto the fixed 4096-row bucket table",
+    "context_fill_efficiency": "3-row literal context-length table crossed onto the doc token counts",
+}
+
+#: Executed-plan operators counted in each plans/manifest.json row.
+PLAN_OPERATORS = {
+    "scans": r"\bFileScan ",
+    "exchanges": r"\bExchange ",
+    "broadcast_joins": r"\bBroadcastHashJoin ",
+    "sort_merge_joins": r"\bSortMergeJoin ",
+    "shuffled_hash_joins": r"\bShuffledHashJoin ",
+    "nested_loop_joins": r"\bBroadcastNestedLoopJoin ",
+    # Arrow-batched Python: pandas/Arrow maps, UDTFs and UDAFs
+    "arrow_python": r"\b(?:ArrowEvalPython|ArrowAggregatePython|ArrowWindowPython"
+    r"|\w*In(?:Pandas|Arrow))\w*",
+    # row-at-a-time pickled Python (UDFs and UDTFs)
+    "batch_python": r"\bBatchEvalPython",
+}
+
+MANIFEST = REPO / "plans" / "manifest.json"
+
+
+def test_stable_plan_orders_multi_distinct_groups():
+    """The two plans Spark prints for distinct_counts, depending on the
+    expression-id counter at build time, canonicalize to one string."""
+    a = """Aggregate [count(user_id#19L) FILTER (WHERE (gid#18 = 1)) AS n_users#8L, count(event_type#20) FILTER (WHERE (gid#18 = 2)) AS n_types#9L]
++- Aggregate [user_id#19L, event_type#20, gid#18], [user_id#19L, event_type#20, gid#18]
+   +- Expand [[user_id#2L, null, 1], [null, event_type#3, 2]], [user_id#19L, event_type#20, gid#18]
+      +- Project [user_id#2L, event_type#3]"""
+    b = """Aggregate [count(user_id#31L) FILTER (WHERE (gid#30 = 2)) AS n_users#8L, count(event_type#32) FILTER (WHERE (gid#30 = 1)) AS n_types#9L]
++- Aggregate [event_type#32, user_id#31L, gid#30], [event_type#32, user_id#31L, gid#30]
+   +- Expand [[event_type#3, null, 1], [null, user_id#2L, 2]], [event_type#32, user_id#31L, gid#30]
+      +- Project [user_id#2L, event_type#3]"""
+    assert explain_dump.stable_plan(a) == explain_dump.stable_plan(b)
+    # lines without the gid column keep their order
+    assert "Project [user_id, event_type]" in explain_dump.stable_plan(a)
+
+
+def test_only_intentional_ops_use_python(spark, sf_dir, tmp_path):
+    """One pass over every registry entry's plans.  It checks the Python
+    whitelist and the hard rules (no CartesianProduct, no row-at-a-time
+    Python, BroadcastNestedLoopJoin exactly on BNLJ_JUSTIFIED), and that
+    each entry's manifest row (a hash of its stable optimized plan and
+    its executed-plan operator counts) equals plans/manifest.json."""
+    # Earlier tests cache some entries' outputs, and a cached relation
+    # replaces the subtree it matches: take every row on an empty cache.
+    spark.catalog.clearCache()
+    rows, cartesian = {}, []
+    for name, spec in REGISTRY.items():
+        qe = spec.build(spark, sf_dir)._jdf.queryExecution()
+        executed = qe.executedPlan().toString()
+        optimized = explain_dump.stable_plan(qe.optimizedPlan().toString())
+        rows[name] = {
+            "plan": hashlib.sha256(optimized.encode()).hexdigest()[:12],
+            **{k: len(re.findall(p, executed)) for k, p in PLAN_OPERATORS.items()},
+        }
+        if "CartesianProduct" in executed:
+            cartesian.append(name)
+    python_ops = [n for n, r in rows.items() if r["arrow_python"] or r["batch_python"]]
     assert sorted(python_ops) == sorted(INTENTIONAL_PYTHON_OPS), python_ops
+    assert not cartesian, f"CartesianProduct in {cartesian}"
+    assert not [n for n in python_ops if rows[n]["batch_python"]]
+    bnlj = sorted(n for n, r in rows.items() if r["nested_loop_joins"])
+    assert bnlj == sorted(BNLJ_JUSTIFIED), (
+        f"unjustified BNLJ: {sorted(set(bnlj) - set(BNLJ_JUSTIFIED))}; "
+        f"stale whitelist keys: {sorted(set(BNLJ_JUSTIFIED) - set(bnlj))}"
+    )
+    committed = json.loads(MANIFEST.read_text()) if MANIFEST.exists() else {}
+    moved = {}  # entry -> {field: (committed, now)}
+    for n in sorted(rows.keys() | committed.keys()):
+        old, new = committed.get(n, {}), rows.get(n, {})
+        if old != new:
+            moved[n] = {
+                k: (old.get(k), new.get(k))
+                for k in sorted(old.keys() | new.keys())
+                if old.get(k) != new.get(k)
+            }
+    if moved:
+        observed = tmp_path / "manifest.json"
+        observed.write_text(
+            "{\n"
+            + ",\n".join(f"{json.dumps(n)}: {json.dumps(rows[n])}" for n in sorted(rows))
+            + "\n}\n"
+        )
+    assert not moved, (
+        f"{len(moved)} plan rows moved: {moved}\n"
+        f"if the plans changed on purpose: cp {observed} {MANIFEST}"
+    )
 
 
 def test_exact_dedup_has_partial_aggregation(spark, sf_dir):
