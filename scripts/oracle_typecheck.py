@@ -73,6 +73,33 @@ def connect_views():
     return con
 
 
+ARTIFACT = Path(__file__).resolve().parent.parent / "ORACLE_TYPES.md"
+
+
+def render(flagged, bound) -> str:
+    """The ``ORACLE_TYPES.md`` text for one ``bind_all`` result."""
+    lines = [
+        "# ORACLE_TYPES — bind-time type sweep",
+        "",
+        "Generated by `scripts/oracle_typecheck.py --write-artifact`.  Every",
+        "`oracle_sql()` entry is bound (not executed) in DuckDB and its final",
+        "output types checked against the Spark-representable set — no",
+        "HUGEINT, DECIMAL, or unsigned columns may survive to the hashed result.",
+        "",
+        f"**{len(bound)} oracles bound; {len(flagged)} flagged.**",
+        "",
+    ]
+    if flagged:
+        lines.append("| query | column | forbidden type |")
+        lines.append("|---|---|---|")
+        for q, cols in sorted(flagged.items()):
+            for c, t in cols:
+                lines.append(f"| `{q}` | `{c}` | {t} |")
+    else:
+        lines.append("No forbidden final-output types in any oracle.")
+    return "\n".join(lines) + "\n"
+
+
 def main():
     import __spark_entry__ as entrymod
 
@@ -80,28 +107,7 @@ def main():
     con = connect_views()
     flagged, bound = bind_all(oracles, con)
     if "--write-artifact" in sys.argv:
-        lines = [
-            "# ORACLE_TYPES — bind-time type sweep",
-            "",
-            "Generated by `scripts/oracle_typecheck.py`.  Every `oracle_sql()`",
-            "entry is bound (not executed) in DuckDB and its final output types",
-            "checked against the Spark-representable set — no HUGEINT, DECIMAL,",
-            "or unsigned columns may survive to the hashed result.",
-            "",
-            f"**{len(bound)} oracles bound; {len(flagged)} flagged.**",
-            "",
-        ]
-        if flagged:
-            lines.append("| query | column | forbidden type |")
-            lines.append("|---|---|---|")
-            for q, cols in sorted(flagged.items()):
-                for c, t in cols:
-                    lines.append(f"| `{q}` | `{c}` | {t} |")
-        else:
-            lines.append("No forbidden final-output types in any oracle.")
-        Path(__file__).resolve().parent.parent.joinpath("ORACLE_TYPES.md").write_text(
-            "\n".join(lines) + "\n"
-        )
+        ARTIFACT.write_text(render(flagged, bound))
         print(f"wrote ORACLE_TYPES.md ({len(bound)} oracles, {len(flagged)} flagged)")
     for q, cols in sorted(flagged.items()):
         for c, t in cols:

@@ -9,7 +9,7 @@ happens inside the Expand operator before the single shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -560,6 +560,18 @@ def join_skew_report(t, top_k: int = 10) -> DataFrame:
     )
 
 
+def _with_next_type(events: DataFrame) -> DataFrame:
+    """Each user's events with ``to_type``, the type of the user's next
+    event in (ts, event_id) order; the last event of each user is
+    dropped.  Twin of ``registry._TRANSITIONS_CTES``."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        events.select("user_id", "ts", "event_id", "event_type")
+        .withColumn("to_type", F.lead("event_type").over(w))
+        .filter(F.col("to_type").isNotNull())
+    )
+
+
 def event_transition_matrix(t) -> DataFrame:
     """Markov transition matrix over per-user event streams: for every
     consecutive (event, next event) pair within a user's timeline,
@@ -573,12 +585,8 @@ def event_transition_matrix(t) -> DataFrame:
     map-side-combined aggregation over at most |types|^2 groups; no
     self-join (the naive pairing join would shuffle the fact table
     twice and explode on active users)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        t["events"]
-        .select("user_id", "ts", "event_id", "event_type")
-        .withColumn("to_type", F.lead("event_type").over(w))
-        .filter(F.col("to_type").isNotNull())
+        _with_next_type(t["events"])
         .groupBy(F.col("event_type").alias("from_type"), "to_type")
         .agg(F.count("*").alias("n"))
     )
@@ -798,6 +806,15 @@ def equi_depth_histogram(t) -> DataFrame:
     )
 
 
+def _mid_us() -> Column:
+    """The event timeline's midpoint in epoch µs, an aggregate over
+    ``ts``.  Twin of ``registry._TIMELINE_MID_CTE``."""
+    return (
+        F.unix_micros(F.min("ts"))
+        + (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 2
+    ).alias("mid_us")
+
+
 def distribution_drift_chi2(t, bin_width: float = 50.0) -> DataFrame:
     """Distribution drift between the first and second half of the
     event timeline: per-event-type chi-square statistic over
@@ -811,12 +828,7 @@ def distribution_drift_chi2(t, bin_width: float = 50.0) -> DataFrame:
     scan); binned counts aggregate map-side to |types|x|bins| rows;
     the chi-square reduce runs over that tiny grid."""
     ev = t["events"].select("event_type", "ts", "value")
-    mid = ev.agg(
-        (
-            F.unix_micros(F.min("ts"))
-            + (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 2
-        ).alias("mid_us")
-    )
+    mid = ev.agg(_mid_us())
     binned = (
         ev.crossJoin(F.broadcast(mid))
         .withColumn(
@@ -1149,20 +1161,10 @@ def markov_prediction_accuracy(t) -> DataFrame:
     (distribution_drift_chi2), sort-free struct-max argmax
     (grouped_top1_spender; ties break to the lexicographically
     larger type).  The predictor table is |types| rows — broadcast."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        t["events"]
-        .select("user_id", "ts", "event_id", "event_type")
-        .withColumn("to_type", F.lead("event_type").over(w))
-        .filter(F.col("to_type").isNotNull())
-        .select("ts", F.col("event_type").alias("from_type"), "to_type")
+    pairs = _with_next_type(t["events"]).select(
+        "ts", F.col("event_type").alias("from_type"), "to_type"
     )
-    mid = t["events"].agg(
-        (
-            F.unix_micros(F.min("ts"))
-            + (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 2
-        ).alias("mid_us")
-    )
+    mid = t["events"].agg(_mid_us())
     staged = pairs.crossJoin(F.broadcast(mid)).withColumn(
         "is_train", F.unix_micros(F.col("ts")) < F.col("mid_us")
     )

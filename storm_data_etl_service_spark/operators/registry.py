@@ -935,6 +935,38 @@ SELECT af.vec_id, af.cid, ev.dup_of, ev.max_cos,
 FROM af LEFT JOIN evidence ev ON af.vec_id = ev.vec_id"""
 
 
+#: The sqrt-temperature source mixture, twin of
+#: ``pipeline_ops.source_mixture_weights``: per-source weight
+#: floor(√n · 1e9) / 1e9, its share, and the boost share / (n / N).
+_MIXTURE_WEIGHT_CTES = """counts AS (
+  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
+staged AS (
+  SELECT source, n_docs,
+         CAST(floor(sqrt(n_docs) * 1000000000.0) AS BIGINT) AS w
+  FROM counts),
+weights AS (
+  SELECT source, n_docs,
+    w / 1000000000.0 AS weight,
+    CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE) AS share,
+    (CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE))
+      / (CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE)) AS boost
+  FROM staged)"""
+
+#: Per-document copy counts, twin of ``pipeline_ops.mixture_sample_assign``:
+#: floor(boost), plus one more iff the doc's sha256 draw u ∈ [0, 1)
+#: falls under frac(boost).
+_MIXTURE_COPIES_CTES = f"""{_MIXTURE_WEIGHT_CTES},
+drawn AS (
+  SELECT doc_id, d.source, boost,
+    CAST({_sha_int_sql("'mix|' || doc_id")} % 1000000000
+         AS DOUBLE) / 1000000000.0 AS u
+  FROM documents d JOIN weights USING (source)),
+copies AS (
+  SELECT doc_id, source, boost,
+    CAST(floor(boost) + (CASE WHEN u < boost - floor(boost) THEN 1 ELSE 0 END)
+         AS BIGINT) AS n_copies
+  FROM drawn)"""
+
 
 # --------------------------------------------------------------------------
 # the registry
@@ -1688,18 +1720,7 @@ FROM num""",
     ),
     "source_mixture_weights": QuerySpec(
         _t(P.source_mixture_weights),
-        """WITH counts AS (
-  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-staged AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(n_docs) * 1000000000.0) AS BIGINT) AS w
-  FROM counts)
-SELECT source, n_docs,
-       w / 1000000000.0 AS weight,
-       CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE) AS share,
-       (CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE))
-         / (CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE)) AS boost
-FROM staged""",
+        f"WITH {_MIXTURE_WEIGHT_CTES}\nSELECT * FROM weights",
         ("pipeline", "mixture"),
     ),
     "corpus_curation_pipeline": QuerySpec(
@@ -1728,7 +1749,10 @@ FROM assigned GROUP BY lang, split""",
     ),
 }
 
-REGISTRY["neardup_components"].oracle = f"""WITH RECURSIVE pairs AS (
+#: The near-dup graph's label spread, the recursive twin of
+#: ``graph.neardup_components``: every node of the symmetric minhash pair
+#: graph paired with every label it reaches (``WITH RECURSIVE`` only).
+_NEARDUP_REACH_CTES = f"""pairs AS (
 {_minhash_oracle()}),
 edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
           UNION SELECT doc_b, doc_a FROM pairs),
@@ -1736,7 +1760,9 @@ reach AS (
   SELECT u AS node, u AS label FROM edges
   UNION
   SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node
-)
+)"""
+
+REGISTRY["neardup_components"].oracle = f"""WITH RECURSIVE {_NEARDUP_REACH_CTES}
 SELECT node AS doc_id, min(label) AS component_id,
        node = min(label) AS is_canonical
 FROM reach GROUP BY node"""
@@ -2241,16 +2267,27 @@ FROM per_dim""",
 )
 
 
-REGISTRY["event_transition_matrix"] = QuerySpec(
-    _t(A.event_transition_matrix),
-    """WITH p AS (
-  SELECT event_type AS from_type,
+#: ``p``: each user's consecutive event pairs (ts, from_type, to_type) in
+#: (ts, event_id) order, twin of ``analytics._with_next_type``.
+_TRANSITIONS_CTES = """pairs AS (
+  SELECT ts, event_type AS from_type,
     lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
       AS to_type
-  FROM events)
+  FROM events),
+p AS (SELECT * FROM pairs WHERE to_type IS NOT NULL)"""
+
+#: ``mid``: the event timeline's midpoint in epoch µs, twin of
+#: ``analytics._mid_us``.
+_TIMELINE_MID_CTE = """mid AS (
+  SELECT epoch_us(min(ts)) + (epoch_us(max(ts)) - epoch_us(min(ts))) / 2
+    AS mid_us
+  FROM events)"""
+
+REGISTRY["event_transition_matrix"] = QuerySpec(
+    _t(A.event_transition_matrix),
+    f"""WITH {_TRANSITIONS_CTES}
 SELECT from_type, to_type, count(*) AS n
-FROM p WHERE to_type IS NOT NULL
-GROUP BY from_type, to_type""",
+FROM p GROUP BY from_type, to_type""",
     ("analytics", "sequence"),
 )
 
@@ -2470,10 +2507,7 @@ GROUP BY doc_id""",
 
 REGISTRY["distribution_drift_chi2"] = QuerySpec(
     _t(A.distribution_drift_chi2),
-    """WITH mid AS (
-  SELECT epoch_us(min(ts)) + (epoch_us(max(ts)) - epoch_us(min(ts))) / 2
-    AS mid_us
-  FROM events),
+    f"""WITH {_TIMELINE_MID_CTE},
 binned AS (
   SELECT event_type,
     CASE WHEN epoch_us(ts) < mid_us THEN 'a' ELSE 'b' END AS half,
@@ -2708,15 +2742,30 @@ GROUP BY r_score, f_score, m_score""",
 )
 
 
+def _tri_sql(edges: str) -> str:
+    """``tri``: every triangle (a, b, c) of the ``edges`` relation's
+    (doc_a < doc_b) rows, by wedge closure — one row per triangle."""
+    return f"""tri AS (
+  SELECT ab.doc_a AS a, ab.doc_b AS b, bc.doc_b AS c
+  FROM {edges} ab
+  JOIN {edges} bc ON ab.doc_b = bc.doc_a
+  WHERE EXISTS (SELECT 1 FROM {edges} ac
+                WHERE ac.doc_a = ab.doc_a AND ac.doc_b = bc.doc_b))"""
+
+
+def _doulion_keep_sql(mod: int) -> str:
+    """The DOULION edge sample over (doc_a, doc_b), twin of
+    ``graph._triangle_estimate_edges``: keep an edge iff the first hex
+    nibble of md5('a|b') is one of the lowest 16/``mod`` values."""
+    allowed = ", ".join(f"'{c}'" for c in "0123456789abcdef"[: 16 // mod])
+    return f"""substr(md5(CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR)), 1, 1)
+        IN ({allowed})"""
+
+
 def _triangle_oracle() -> str:
     return f"""WITH pairs AS (
 {_minhash_oracle()}),
-tri AS (
-  SELECT ab.doc_a AS a, ab.doc_b AS b, bc.doc_b AS c
-  FROM pairs ab
-  JOIN pairs bc ON ab.doc_b = bc.doc_a
-  WHERE EXISTS (SELECT 1 FROM pairs ac
-                WHERE ac.doc_a = ab.doc_a AND ac.doc_b = bc.doc_b))
+{_tri_sql("pairs")}
 SELECT doc_id, count(*) AS n_triangles
 FROM (SELECT unnest([a, b, c]) AS doc_id FROM tri)
 GROUP BY doc_id"""
@@ -2734,19 +2783,12 @@ def _triangle_estimate_oracle(mod: int = 4) -> str:
     sample (PRF keep events — a linear residue rule degenerates to
     ~p² triangle survival, see the operator docstring), wedge-join
     enumeration on the kept edges, 1/p^3 scale-up."""
-    allowed = ", ".join(f"'{c}'" for c in "0123456789abcdef"[: 16 // mod])
     return f"""WITH pairs AS (
 {_minhash_oracle()}),
 kept AS (
   SELECT doc_a, doc_b FROM pairs
-  WHERE substr(md5(CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR)), 1, 1)
-        IN ({allowed})),
-tri AS (
-  SELECT ab.doc_a AS a, ab.doc_b AS b, bc.doc_b AS c
-  FROM kept ab
-  JOIN kept bc ON ab.doc_b = bc.doc_a
-  WHERE EXISTS (SELECT 1 FROM kept ac
-                WHERE ac.doc_a = ab.doc_a AND ac.doc_b = bc.doc_b))
+  WHERE {_doulion_keep_sql(mod)}),
+{_tri_sql("kept")}
 SELECT CAST({mod} AS BIGINT) AS sample_mod,
   (SELECT count(*) FROM kept) AS n_edges_kept,
   (SELECT count(*) FROM tri) AS n_tri_sampled,
@@ -2770,6 +2812,7 @@ def _triangle_stats_oracle(cutover: int | None = None) -> str:
     from storm_data_etl_service_spark.operators.graph import WEDGE_CUTOVER
 
     cut = WEDGE_CUTOVER if cutover is None else cutover
+    mod = 4  # triangle_stats' DOULION rung
     return f"""WITH pairs AS (
 {_minhash_oracle()}),
 sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -2795,23 +2838,17 @@ probe AS (
 kept AS (
   SELECT doc_a, doc_b FROM pairs, probe
   WHERE wedges <= {cut}
-     OR substr(md5(CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR)), 1, 1)
-        IN ('0', '1', '2', '3')),
-tri AS (
-  SELECT ab.doc_a AS a, ab.doc_b AS b, bc.doc_b AS c
-  FROM kept ab
-  JOIN kept bc ON ab.doc_b = bc.doc_a
-  WHERE EXISTS (SELECT 1 FROM kept ac
-                WHERE ac.doc_a = ab.doc_a AND ac.doc_b = bc.doc_b))
+     OR {_doulion_keep_sql(mod)}),
+{_tri_sql("kept")}
 SELECT
   CASE WHEN wedges <= {cut} THEN 'exact_census'
        ELSE 'doulion_estimate' END AS branch,
   wedges AS quotient_wedges,
-  CAST(CASE WHEN wedges <= {cut} THEN 1 ELSE 4 END AS BIGINT) AS sample_mod,
+  CAST(CASE WHEN wedges <= {cut} THEN 1 ELSE {mod} END AS BIGINT) AS sample_mod,
   (SELECT count(*) FROM kept) AS n_edges_kept,
   (SELECT count(*) FROM tri) AS n_tri_sampled,
   CAST((SELECT count(*) FROM tri)
-       * (CASE WHEN wedges <= {cut} THEN 1 ELSE 64 END) AS BIGINT)
+       * (CASE WHEN wedges <= {cut} THEN 1 ELSE {mod ** 3} END) AS BIGINT)
     AS est_triangles
 FROM probe"""
 
@@ -2964,16 +3001,8 @@ LIMIT 25""",
 
 REGISTRY["markov_prediction_accuracy"] = QuerySpec(
     _t(A.markov_prediction_accuracy),
-    """WITH pairs AS (
-  SELECT ts, event_type AS from_type,
-    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      AS to_type
-  FROM events),
-p AS (SELECT * FROM pairs WHERE to_type IS NOT NULL),
-mid AS (
-  SELECT epoch_us(min(ts)) + (epoch_us(max(ts)) - epoch_us(min(ts))) / 2
-    AS mid_us
-  FROM events),
+    f"""WITH {_TRANSITIONS_CTES},
+{_TIMELINE_MID_CTE},
 staged AS (
   SELECT from_type, to_type, epoch_us(ts) < mid_us AS is_train
   FROM p, mid),
@@ -3171,15 +3200,7 @@ FROM cnt, tot WHERE term_freq * {X.HH_CAPACITY + 1} > n_total""",
 
 REGISTRY["neardup_cluster_representative"] = QuerySpec(
     _t(G.neardup_cluster_representative),
-    f"""WITH RECURSIVE pairs AS (
-{_minhash_oracle()}),
-edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION SELECT doc_b, doc_a FROM pairs),
-reach AS (
-  SELECT u AS node, u AS label FROM edges
-  UNION
-  SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node
-),
+    f"""WITH RECURSIVE {_NEARDUP_REACH_CTES},
 comp AS (SELECT node AS doc_id, min(label) AS component_id
          FROM reach GROUP BY node),
 members AS (
@@ -3235,13 +3256,22 @@ _INT8_SCALE_CTES = f"""e AS (
   FROM embeddings, range(1, {S.EMBEDDING_DIM} + 1) r(pos)),
 sc AS (SELECT dim, max(abs(val)) AS scale FROM e GROUP BY dim)"""
 
+
+def _int8_code_sql(val: str, scale: str) -> str:
+    """The symmetric int8 code of ``val`` under its dim's ``scale``
+    (0 on an all-zero dim), twin of ``similarity._int8_code``."""
+    return (
+        f"CASE WHEN {scale} = 0 THEN 0\n"
+        f"         ELSE cast(round({val} / {scale} * 127) AS INTEGER) END"
+    )
+
+
 REGISTRY["embedding_quantize_int8"] = QuerySpec(
     _t(S.embedding_quantize_int8),
     f"""WITH {_INT8_SCALE_CTES},
 coded AS (
   SELECT e.dim, e.val, sc.scale,
-    CASE WHEN sc.scale = 0 THEN 0
-         ELSE cast(round(e.val / sc.scale * 127) AS INTEGER) END AS q
+    {_int8_code_sql("e.val", "sc.scale")} AS q
   FROM e JOIN sc USING (dim)),
 erred AS (
   SELECT dim, scale, q, abs(val - q * scale / 127) AS err FROM coded)
@@ -3275,9 +3305,7 @@ REGISTRY["embedding_exact_dedup"] = QuerySpec(
     f"""WITH {_INT8_SCALE_CTES},
 codes AS (
   SELECT vec_id,
-    string_agg(
-      CASE WHEN scale = 0 THEN '0'
-           ELSE cast(cast(round(val / scale * 127) AS INTEGER) AS VARCHAR) END,
+    string_agg(cast({_int8_code_sql("val", "scale")} AS VARCHAR),
       ',' ORDER BY dim) AS code
   FROM e JOIN sc USING (dim) GROUP BY vec_id)
 SELECT sha256(code) AS code_key, count(*) AS group_size,
@@ -3385,28 +3413,9 @@ REGISTRY["mixture_sample_assign"] = QuerySpec(
     # doc_id draw — bit-identical in both engines, so the oracle
     # re-derives every copy count.
     _t(P.mixture_sample_assign),
-    f"""WITH counts AS (
-  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-staged AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(n_docs) * 1000000000.0) AS BIGINT) AS w
-  FROM counts),
-rates AS (
-  SELECT source,
-    (CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE))
-      / (CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE)) AS boost
-  FROM staged),
-drawn AS (
-  SELECT doc_id, d.source, boost,
-    CAST({_sha_int_sql("'mix|' || doc_id")} % 1000000000
-         AS DOUBLE) / 1000000000.0 AS u
-  FROM documents d JOIN rates USING (source))
-SELECT doc_id, source, boost,
-  CAST(floor(boost) + (CASE WHEN u < boost - floor(boost) THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_copies,
-  floor(boost) + (CASE WHEN u < boost - floor(boost) THEN 1 ELSE 0 END) > 0
-    AS kept
-FROM drawn""",
+    f"""WITH {_MIXTURE_COPIES_CTES}
+SELECT doc_id, source, boost, n_copies, n_copies > 0 AS kept
+FROM copies""",
     ("pipeline", "mixture", "sampling"),
 )
 
@@ -4090,27 +4099,10 @@ FROM banded""",
 
 REGISTRY["epoch_stream_order"] = QuerySpec(
     _t(P.epoch_stream_order),
-    f"""WITH counts AS (
-  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-staged AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(n_docs) * 1000000000.0) AS BIGINT) AS w
-  FROM counts),
-rates AS (
-  SELECT source,
-    (CAST(w AS DOUBLE) / CAST(sum(w) OVER () AS DOUBLE))
-      / (CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE)) AS boost
-  FROM staged),
-drawn AS (
-  SELECT doc_id,
-    CAST(floor(boost) + (CASE WHEN
-      CAST({_sha_int_sql("'mix|' || doc_id")} % 1000000000
-           AS DOUBLE) / 1000000000.0 < boost - floor(boost) THEN 1 ELSE 0 END)
-      AS BIGINT) AS n_copies
-  FROM documents d JOIN rates USING (source)),
+    f"""WITH {_MIXTURE_COPIES_CTES},
 expanded AS (
   SELECT doc_id, unnest(range(n_copies)) AS copy
-  FROM drawn WHERE n_copies > 0),
+  FROM copies WHERE n_copies > 0),
 keyed AS (
   SELECT doc_id, CAST(copy AS INTEGER) AS copy,
     {_sha_int_sql("'epoch|' || cast(copy AS VARCHAR) || '|' || cast(doc_id AS VARCHAR)")}
@@ -4142,41 +4134,48 @@ SELECT source, sample_rank, doc_id FROM ranked WHERE sample_rank <= 10""",
 )
 
 
-REGISTRY["gopher_quality_flags"] = QuerySpec(
-    _t(X.gopher_quality_flags),
-    f"""WITH d AS (
-  SELECT source,
+_GOPHER_STOP_SQL = ",".join(f"'{w}'" for w in X.GOPHER_STOPWORDS)
+
+#: The Gopher rules per document, twin of ``text.gopher_doc_flags``:
+#: ``gflags`` holds (doc_id, source, f_words … f_stop, keep).
+_GOPHER_FLAGS_CTES = f"""gdoc AS (
+  SELECT doc_id, source,
     {_tokens_sql()} AS ts,
     length(text) - length(replace(text, '#', '')) AS hash_chars,
     (length(text) - length(replace(text, '...', ''))) // 3 AS ell
   FROM documents),
-per_doc AS (
-  SELECT source, len(ts) AS n,
+gperdoc AS (
+  SELECT doc_id, source, len(ts) AS n,
     coalesce(list_sum(list_transform(ts, x -> length(x))), 0) AS sum_len,
     len(list_filter(ts, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-    len(list_intersect(ts,
-        ['the','be','to','of','and','that','have','with'])) AS n_stop,
+    len(list_intersect(ts, [{_GOPHER_STOP_SQL}])) AS n_stop,
     hash_chars + ell AS n_sym
-  FROM d),
-flags AS (
-  SELECT source,
-    NOT (n BETWEEN 50 AND 100000) AS f_words,
-    (n > 0 AND NOT (sum_len BETWEEN 3 * n AND 10 * n)) AS f_mean,
-    (n_sym * 10 > n) AS f_sym,
-    (n_alpha * 5 < n * 4) AS f_alpha,
-    (n_stop < 2) AS f_stop
-  FROM per_doc)
+  FROM gdoc),
+grules AS (
+  SELECT doc_id, source,
+    NOT (n BETWEEN {X.GOPHER_MIN_WORDS} AND {X.GOPHER_MAX_WORDS}) AS f_words,
+    (n > 0 AND NOT (sum_len BETWEEN {X.GOPHER_MIN_MEAN_LEN} * n
+                                AND {X.GOPHER_MAX_MEAN_LEN} * n)) AS f_mean,
+    (n_sym * 10 > n * {X.GOPHER_SYMBOL_RATIO_X10}) AS f_sym,
+    (n_alpha * {X.GOPHER_ALPHA_SHARE[1]} < n * {X.GOPHER_ALPHA_SHARE[0]}) AS f_alpha,
+    (n_stop < {X.GOPHER_MIN_STOPWORDS}) AS f_stop
+  FROM gperdoc),
+gflags AS (
+  SELECT *, NOT (f_words OR f_mean OR f_sym OR f_alpha OR f_stop) AS keep
+  FROM grules)"""
+
+REGISTRY["gopher_quality_flags"] = QuerySpec(
+    _t(X.gopher_quality_flags),
+    f"""WITH {_GOPHER_FLAGS_CTES}
 SELECT source, count(*) AS n_docs,
   cast(sum(CASE WHEN f_words THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_words,
   cast(sum(CASE WHEN f_mean THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_mean,
   cast(sum(CASE WHEN f_sym THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_sym,
   cast(sum(CASE WHEN f_alpha THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_alpha,
   cast(sum(CASE WHEN f_stop THEN 1 ELSE 0 END) AS BIGINT) AS n_fail_stop,
-  cast(sum(CASE WHEN NOT (f_words OR f_mean OR f_sym OR f_alpha OR f_stop)
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-  cast(sum(CASE WHEN NOT (f_words OR f_mean OR f_sym OR f_alpha OR f_stop)
-           THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS keep_rate
-FROM flags GROUP BY source""",
+  cast(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+  cast(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS keep_rate
+FROM gflags GROUP BY source""",
     ("text", "quality", "curation", "gopher"),
 )
 
@@ -4415,34 +4414,13 @@ REGISTRY["minhash_band_calibration"] = QuerySpec(
 
 REGISTRY["quality_gate_agreement"] = QuerySpec(
     # Composes the CCNet and linear-score oracles verbatim (nested-CTE
-    # subqueries, the dedup_ladder pattern) plus a doc-granular lift
-    # of gopher_quality_flags' rule CTEs.
+    # subqueries, the dedup_ladder pattern) plus gopher_quality_flags'
+    # per-document rule CTEs.
     _t(X.quality_gate_agreement),
     f"""WITH cc AS ({REGISTRY["ccnet_perplexity_buckets"].oracle}),
 qs AS ({REGISTRY["quality_linear_score"].oracle}),
-gdoc AS (
-  SELECT doc_id,
-    {_tokens_sql()} AS ts,
-    length(text) - length(replace(text, '#', '')) AS hash_chars,
-    (length(text) - length(replace(text, '...', ''))) // 3 AS ell
-  FROM documents),
-gperdoc AS (
-  SELECT doc_id, len(ts) AS n,
-    coalesce(list_sum(list_transform(ts, x -> length(x))), 0) AS sum_len,
-    len(list_filter(ts, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-    len(list_intersect(ts,
-        ['the','be','to','of','and','that','have','with'])) AS n_stop,
-    hash_chars + ell AS n_sym
-  FROM gdoc),
-gd AS (
-  SELECT doc_id,
-    NOT ((NOT (n BETWEEN 50 AND 100000))
-      OR (n > 0 AND NOT (sum_len BETWEEN 3 * n AND 10 * n))
-      OR (n_sym * 10 > n)
-      OR (n_alpha * 5 < n * 4)
-      OR (n_stop < 2)) AS gopher_keep
-  FROM gperdoc)
-SELECT cc.bucket AS ppl_bucket, gd.gopher_keep,
+{_GOPHER_FLAGS_CTES}
+SELECT cc.bucket AS ppl_bucket, gflags.keep AS gopher_keep,
   count(*) AS n_docs,
   cast(sum(cc.ppl_bin) AS DOUBLE) / count(*) AS avg_ppl_bin,
   cast(sum(qs.logit) AS BIGINT) AS sum_logit,
@@ -4450,7 +4428,7 @@ SELECT cc.bucket AS ppl_bucket, gd.gopher_keep,
     AS avg_feat_score,
   cast(sum(CASE WHEN qs.verdict = 'keep' THEN 1 ELSE 0 END) AS BIGINT)
     AS n_verdict_keep
-FROM cc JOIN gd USING (doc_id) JOIN qs USING (doc_id)
+FROM cc JOIN gflags USING (doc_id) JOIN qs USING (doc_id)
 GROUP BY 1, 2""",
     ("text", "quality", "curation", "calibration"),
 )

@@ -704,6 +704,14 @@ def nearest_centroid_accuracy(t) -> DataFrame:
     )
 
 
+def _int8_code(val: Column, scale: Column) -> Column:
+    """The symmetric int8 code of ``val`` under its dim's ``scale``
+    (0 on an all-zero dim).  Twin of ``registry._int8_code_sql``."""
+    return F.when(scale == 0, F.lit(0)).otherwise(
+        F.round(val / scale * 127).cast("int")
+    )
+
+
 def embedding_quantize_int8(t) -> DataFrame:
     """Per-dimension symmetric int8 quantization report: scale
     (max |v_d|), code range check, and mean absolute reconstruction
@@ -725,12 +733,7 @@ def embedding_quantize_int8(t) -> DataFrame:
     scales = e.groupBy("dim").agg(F.max(F.abs("val")).alias("scale"))
     coded = (
         e.join(F.broadcast(scales), "dim")
-        .withColumn(
-            "q",
-            F.when(F.col("scale") == 0, F.lit(0))
-            .otherwise(F.round(F.col("val") / F.col("scale") * 127))
-            .cast("int"),
-        )
+        .withColumn("q", _int8_code(F.col("val"), F.col("scale")))
         .withColumn("err", F.abs(F.col("val") - F.col("q") * F.col("scale") / 127))
     )
     return coded.groupBy("dim").agg(
@@ -1061,9 +1064,7 @@ def embedding_exact_dedup(t) -> DataFrame:
     code = F.zip_with(
         _vec(F.col("embedding")),
         F.col("scales"),
-        lambda x, s: F.when(s == 0, F.lit(0))
-        .otherwise(F.round(x / s * 127).cast("int"))
-        .cast("string"),
+        lambda x, s: _int8_code(x, s).cast("string"),
     )
     return (
         e.crossJoin(F.broadcast(scales))

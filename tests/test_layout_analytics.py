@@ -33,17 +33,22 @@ def test_cohort_retention_week_zero_covers_cohort(t):
     """Week offset 0 exists for every cohort and counts every user of
     that cohort (everyone is active in their own first week)."""
     out = A.cohort_retention(t).cache()
-    week0 = {r["cohort_week"]: r["n_users"] for r in out.filter("week_offset = 0").collect()}
-    cohort_sizes = (
-        t["events"]
-        .groupBy("user_id")
-        .agg(F.date_trunc("week", F.min("ts")).alias("cohort_week"))
-        .groupBy("cohort_week")
-        .agg(F.countDistinct("user_id").alias("size"))
-    )
-    for r in cohort_sizes.collect():
-        assert week0[r["cohort_week"]] == r["size"]
-    assert out.filter("week_offset < 0").count() == 0
+    try:
+        week0 = {
+            r["cohort_week"]: r["n_users"] for r in out.filter("week_offset = 0").collect()
+        }
+        cohort_sizes = (
+            t["events"]
+            .groupBy("user_id")
+            .agg(F.date_trunc("week", F.min("ts")).alias("cohort_week"))
+            .groupBy("cohort_week")
+            .agg(F.countDistinct("user_id").alias("size"))
+        )
+        for r in cohort_sizes.collect():
+            assert week0[r["cohort_week"]] == r["size"]
+        assert out.filter("week_offset < 0").count() == 0
+    finally:
+        out.unpersist()
 
 
 def test_linear_interpolate_bounds_and_passthrough(t):
@@ -125,11 +130,14 @@ def test_zorder_value_matches_python_reference(spark):
 
 def test_zorder_cluster_accounts_all_rows(t):
     out = P.zorder_cluster(t).cache()
-    assert out.agg(F.sum("n")).first()[0] == t["events"].count()
-    # prefix ranges are disjoint and ordered: prefix = z >> shift
-    for r in out.collect():
-        assert r["min_z"] >> P.ZORDER_PREFIX_SHIFT == r["z_prefix"]
-        assert r["max_z"] >> P.ZORDER_PREFIX_SHIFT == r["z_prefix"]
+    try:
+        assert out.agg(F.sum("n")).first()[0] == t["events"].count()
+        # prefix ranges are disjoint and ordered: prefix = z >> shift
+        for r in out.collect():
+            assert r["min_z"] >> P.ZORDER_PREFIX_SHIFT == r["z_prefix"]
+            assert r["max_z"] >> P.ZORDER_PREFIX_SHIFT == r["z_prefix"]
+    finally:
+        out.unpersist()
 
 
 def test_mad_outliers_match_numpy(t):
@@ -152,10 +160,13 @@ def test_mad_outliers_match_numpy(t):
 
 def test_ratio_to_report_shares_sum_to_one(t):
     out = A.ratio_to_report(t).cache()
-    per_region = out.groupBy("r_name").agg(F.sum("region_share").alias("s"))
-    for r in per_region.collect():
-        assert abs(r["s"] - 1.0) < 1e-9
-    assert out.filter("region_share < 0 OR region_share > 1").count() == 0
+    try:
+        per_region = out.groupBy("r_name").agg(F.sum("region_share").alias("s"))
+        for r in per_region.collect():
+            assert abs(r["s"] - 1.0) < 1e-9
+        assert out.filter("region_share < 0 OR region_share > 1").count() == 0
+    finally:
+        out.unpersist()
 
 
 def test_equi_depth_bins_are_balanced(t):
@@ -176,9 +187,12 @@ def test_centroid_similarity_pair_coverage(t):
 
     n_labels = t["embeddings"].select("label").distinct().count()
     out = S.centroid_similarity_matrix(t).cache()
-    assert out.count() == n_labels * (n_labels - 1) // 2
-    assert out.filter("cosine < -1.0 OR cosine > 1.0").count() == 0
-    assert out.filter("label_a >= label_b").count() == 0
+    try:
+        assert out.count() == n_labels * (n_labels - 1) // 2
+        assert out.filter("cosine < -1.0 OR cosine > 1.0").count() == 0
+        assert out.filter("label_a >= label_b").count() == 0
+    finally:
+        out.unpersist()
 
 
 def test_pagerank_matches_python_model(spark):
@@ -288,14 +302,17 @@ def test_minhash_accuracy_report_bounds(t):
     from storm_data_etl_service_spark.operators import dedup as D
 
     out = D.minhash_accuracy_report(t).cache()
-    assert out.count() == D.dedup_minhash_lsh(t).count()
-    bad = out.filter(
-        "est_jaccard < 0 OR est_jaccard > 1 OR exact_jaccard < 0 "
-        "OR exact_jaccard > 1 OR abs_error < 0 OR abs_error > 1"
-    ).count()
-    assert bad == 0
-    # LSH candidates at threshold 0.8 should estimate high similarity
-    assert out.agg(F.min("est_jaccard")).first()[0] >= 0.5
+    try:
+        assert out.count() == D.dedup_minhash_lsh(t).count()
+        bad = out.filter(
+            "est_jaccard < 0 OR est_jaccard > 1 OR exact_jaccard < 0 "
+            "OR exact_jaccard > 1 OR abs_error < 0 OR abs_error > 1"
+        ).count()
+        assert bad == 0
+        # LSH candidates at threshold 0.8 should estimate high similarity
+        assert out.agg(F.min("est_jaccard")).first()[0] >= 0.5
+    finally:
+        out.unpersist()
 
 
 def test_weekly_active_users_dominates_daily(t):
@@ -340,13 +357,16 @@ def test_conversion_latency_consistent_with_funnel(t):
 
 def test_rfm_segments_cover_all_customers(t):
     out = A.rfm_segment_counts(t).cache()
-    n_cust = t["orders"].select("o_custkey").distinct().count()
-    assert out.agg(F.sum("n_customers")).first()[0] == n_cust
-    bad = out.filter(
-        "r_score NOT BETWEEN 1 AND 4 OR f_score NOT BETWEEN 1 AND 4 "
-        "OR m_score NOT BETWEEN 1 AND 4"
-    ).count()
-    assert bad == 0
+    try:
+        n_cust = t["orders"].select("o_custkey").distinct().count()
+        assert out.agg(F.sum("n_customers")).first()[0] == n_cust
+        bad = out.filter(
+            "r_score NOT BETWEEN 1 AND 4 OR f_score NOT BETWEEN 1 AND 4 "
+            "OR m_score NOT BETWEEN 1 AND 4"
+        ).count()
+        assert bad == 0
+    finally:
+        out.unpersist()
 
 
 def _brute_triangles(edges):
@@ -712,14 +732,17 @@ def test_float_results_are_partition_count_independent(spark, sf_dir):
 
 def test_markov_eval_accounts_all_eval_transitions(t):
     out = A.markov_prediction_accuracy(t).cache()
-    for r in out.collect():
-        assert 0 <= r["n_correct"] <= r["n_eval"]
-        assert abs(r["accuracy"] - r["n_correct"] / r["n_eval"]) < 1e-12
-    # majority-class predictor must beat 1/|types| on average
-    total_eval = out.agg(F.sum("n_eval")).first()[0]
-    total_hit = out.agg(F.sum("n_correct")).first()[0]
-    n_types = t["events"].select("event_type").distinct().count()
-    assert total_hit / total_eval >= 1.0 / n_types * 0.8
+    try:
+        for r in out.collect():
+            assert 0 <= r["n_correct"] <= r["n_eval"]
+            assert abs(r["accuracy"] - r["n_correct"] / r["n_eval"]) < 1e-12
+        # majority-class predictor must beat 1/|types| on average
+        total_eval = out.agg(F.sum("n_eval")).first()[0]
+        total_hit = out.agg(F.sum("n_correct")).first()[0]
+        n_types = t["events"].select("event_type").distinct().count()
+        assert total_hit / total_eval >= 1.0 / n_types * 0.8
+    finally:
+        out.unpersist()
 
 
 def test_nearest_centroid_eval_accounting(t):
@@ -730,19 +753,26 @@ def test_nearest_centroid_eval_accounting(t):
     from storm_data_etl_service_spark.operators import similarity as S
 
     out = S.nearest_centroid_accuracy(t).cache()
-    n_odd = t["embeddings"].filter("vec_id % 2 = 1").count()
-    assert out.agg(F.sum("n_test")).first()[0] == n_odd
-    for r in out.collect():
-        assert 0 <= r["n_correct"] <= r["n_test"]
-        assert 0.0 <= r["accuracy"] <= 1.0
+    try:
+        n_odd = t["embeddings"].filter("vec_id % 2 = 1").count()
+        assert out.agg(F.sum("n_test")).first()[0] == n_odd
+        for r in out.collect():
+            assert 0 <= r["n_correct"] <= r["n_test"]
+            assert 0.0 <= r["accuracy"] <= 1.0
+    finally:
+        out.unpersist()
 
 
 def test_seasonality_covers_full_grid_and_sums_to_one(t):
     out = A.seasonality_profile(t).cache()
-    assert out.count() <= 7 * 24
-    assert abs(out.agg(F.sum("share")).first()[0] - 1.0) < 1e-9
-    assert out.filter("dow_iso < 1 OR dow_iso > 7 OR hour < 0 OR hour > 23").count() == 0
-    assert out.agg(F.sum("n")).first()[0] == t["events"].count()
+    try:
+        assert out.count() <= 7 * 24
+        assert abs(out.agg(F.sum("share")).first()[0] - 1.0) < 1e-9
+        bad = out.filter("dow_iso < 1 OR dow_iso > 7 OR hour < 0 OR hour > 23")
+        assert bad.count() == 0
+        assert out.agg(F.sum("n")).first()[0] == t["events"].count()
+    finally:
+        out.unpersist()
 
 
 def test_jackknife_ci_contains_mean_and_is_calibrated(t):

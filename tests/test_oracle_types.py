@@ -31,10 +31,13 @@ def test_all_oracles_bind_with_spark_representable_types():
 
     con = otc.connect_views()
     flagged, bound = otc.bind_all(entrymod.oracle_sql(), con)
-    assert len(bound) >= 180
+    assert len(bound) == len(entrymod.queries())  # every entry has an oracle
     assert not flagged, (
         "oracles with HUGEINT/DECIMAL/unsigned final columns "
         f"(driver hash will red these): {flagged}"
+    )
+    assert otc.ARTIFACT.read_text() == otc.render(flagged, bound), (
+        "ORACLE_TYPES.md is stale; run scripts/oracle_typecheck.py --write-artifact"
     )
 
 

@@ -1069,6 +1069,87 @@ def test_incremental_gates_are_spelled_once():
     }
 
 
+def _repeated_sql_windows(source: str, n: int = 3) -> dict:
+    """Each window of ``n`` consecutive SQL lines that appears at two or
+    more source positions of ``source``, mapped to the 1-based line of
+    each occurrence.  Only multi-line string literals (f-strings
+    included, their ``{…}`` fields verbatim) holding ``SELECT`` or
+    ``WITH`` are read; each line is whitespace-normalized, and blank
+    and quote-only lines are dropped."""
+    import ast
+    from collections import defaultdict
+
+    strings = [
+        node
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.JoinedStr)
+        or (isinstance(node, ast.Constant) and isinstance(node.value, str))
+    ]
+    inner = {  # an f-string's literal parts and fields are read with it
+        id(c)
+        for s in strings
+        if isinstance(s, ast.JoinedStr)
+        for c in ast.walk(s)
+        if c is not s
+    }
+    sites = defaultdict(list)
+    for node in strings:
+        text = ast.get_source_segment(source, node)
+        if id(node) in inner or node.lineno == node.end_lineno:
+            continue
+        if not re.search(r"\b(SELECT|WITH)\b", text):
+            continue
+        lines = [
+            (node.lineno + i, " ".join(ln.split()))
+            for i, ln in enumerate(text.splitlines())
+        ]
+        lines = [
+            (i, ln) for i, ln in lines if not re.fullmatch(r"(?:[rbfuRBFU]*[\"']+)?", ln)
+        ]
+        for k in range(len(lines) - n + 1):
+            sites[tuple(ln for _, ln in lines[k : k + n])].append(lines[k][0])
+    return {w: sorted(at) for w, at in sites.items() if len(at) > 1}
+
+
+#: The 3-line SQL windows that two registry literals may share, each
+#: with the reason the repeat is not one decision spelled twice.
+SHARED_SQL_WINDOWS = {
+    (
+        "FROM lineitem",
+        "JOIN part ON l_partkey = p_partkey",
+        "JOIN supplier ON l_suppkey = s_suppkey",
+    ): "TPC-H q8 and q9 each spell their own spec's join chain",
+    ('f"""WITH {_TOKS_CTE},', "hashed AS (", "SELECT doc_id,"): (
+        "simhash and the fingerprint hash the tokens differently; only the"
+        " CTE name and its key column match"
+    ),
+}
+
+
+def test_oracle_sql_is_spelled_once():
+    """No three consecutive SQL lines of ``registry.py`` are spelled at
+    two source positions: a decision both oracles need gets one builder
+    (``_tri_sql``, ``_MIXTURE_WEIGHT_CTES``, ``_GOPHER_FLAGS_CTES`` …)
+    that each oracle composes.  The scan reads the source, not the
+    rendered oracles, since composing a builder rightly repeats its
+    output.  A repeat that is not a copied decision goes in
+    ``SHARED_SQL_WINDOWS`` with its reason."""
+    # negative control: a shared 3-line window is flagged, a 2-line one is not
+    twice = 'q = f"""\nSELECT a,\n  b\nFROM t"""\nr = f"""\nSELECT a,\n  b\nFROM t"""\n'
+    assert _repeated_sql_windows(twice) == {("SELECT a,", "b", 'FROM t"""'): [2, 6]}
+    assert _repeated_sql_windows(twice.replace("FROM t", "FROM u", 1)) == {}
+
+    import storm_data_etl_service_spark.operators as ops
+
+    registry = Path(ops.__file__).parent / "registry.py"
+    repeats = _repeated_sql_windows(registry.read_text())
+    unexplained = {w: at for w, at in repeats.items() if w not in SHARED_SQL_WINDOWS}
+    assert not unexplained, "\n".join(
+        f"{at}: {' | '.join(w)}" for w, at in sorted(unexplained.items(), key=lambda i: i[1])
+    )
+    assert set(repeats) == set(SHARED_SQL_WINDOWS), set(SHARED_SQL_WINDOWS) - set(repeats)
+
+
 @contextmanager
 def _job_count(spark, group):
     """Run the block under job group ``group``; yields a callable that
